@@ -11,20 +11,20 @@ import graft.sources.{Footprints, Pages}
 
 /** Geospatial join + inventory operators — the engine's heart (SURVEY.md §2
   * C/D/E). Each public method returns a DataFrame whose plan is the one
-  * we'd want on a 1000-executor cluster:
+  * we'd want on a 1000-executor cluster.
   *
-  *  - footprint side is always tiny -> exploded to covering cells and
-  *    BROADCAST (no shuffle of the pages side at all for D1);
-  *  - the equi-join key is the cell id (row-major surrogate — pure integer
-  *    arithmetic on the big side), so the join is a hash join on a long,
-  *    never a nested-loop over box predicates;
-  *  - the exact geometry check runs only on cell-matched candidates
-  *    (classic filter-and-refine);
-  *  - for the partitioned variant both sides shuffle once on the cell key
-  *    and sort-merge join;
-  *  - for the skew variant the hot cells are salted explicitly (AQE's skew
-  *    handling can't split a single hot key within one join key — salting
-  *    can).
+  * Every point-in-footprint join (D1/D2/D3 and their synthetic-input
+  * variants) runs one filter-and-refine core, `refinedJoin`: pages get a
+  * cell id at [[JoinLevel]] (row-major surrogate — pure integer arithmetic
+  * on the big side) and hash-join the footprints' covering cells on that
+  * long, never a nested loop over box predicates; the exact
+  * [[graft.sources.Footprints.contains]] test then refines the candidates.
+  * The variants differ only in (a) footprint validity kept or widened to
+  * forever (`widenTime`) and (b) distribution: broadcast footprint side (no
+  * pages-side shuffle), both sides shuffled once on the cell key into a
+  * sort-merge join, or the same with every cell salted (AQE's skew
+  * handling can't split a single hot key within one join key — salting
+  * can).
   */
 object GeoQueries {
 
@@ -33,6 +33,10 @@ object GeoQueries {
     * any scale), fine enough that the refine step sees few false
     * candidates. */
   final val JoinLevel = 6
+
+  /** Salt fan-out of the D3 skew join: each footprint cell is replicated
+    * this many times, splitting a hot cell's partition as many ways. */
+  final val Salts = 16
 
   /** Footprints exploded to covering cells at `level` (tiny; broadcast side).
     * One row per (footprint, cell). The quadtree cover runs on Morton ids;
@@ -56,35 +60,53 @@ object GeoQueries {
   private def timeless(fp: DataFrame): DataFrame =
     fp.withColumn("tfrom", lit(0L)).withColumn("tto", lit(Long.MaxValue / 4))
 
+  /** How `refinedJoin` brings pages and footprint cells together:
+    * broadcast the cells; hash-partition the pages by cell and sort-merge;
+    * or the same keyed on (cell, doc-id-hash salt), cells replicated
+    * x [[Salts]]. */
+  private sealed trait Distribution
+  private case object Broadcast extends Distribution
+  private case object Partitioned extends Distribution
+  private case object Salted extends Distribution
+
+  /** The filter-and-refine core of every PIP join: cell-key equi-join of
+    * `pagesIn` against the footprint cover, then the exact containment
+    * refine. `widenTime` swaps in forever-valid footprints. The shuffled
+    * distributions carry a `shuffle_merge` hint: the footprint side is
+    * small enough that the planner would otherwise broadcast it. */
+  private def refinedJoin(spark: SparkSession, pagesIn: DataFrame, widenTime: Boolean,
+      dist: Distribution): DataFrame = {
+    val pages = pagesIn.withColumn("cell", pageCell(JoinLevel))
+    val cover = footprintCells(spark)
+    val (big, fp, keys) = dist match {
+      case Broadcast => (pages, cover, Seq("cell"))
+      case Partitioned => (pages.repartition(col("cell")), cover, Seq("cell"))
+      case Salted =>
+        (pages.withColumn("salt", pmod(xxhash64(col("doc_id")), lit(Salts)).cast("int"))
+            .repartition(col("cell"), col("salt")),
+          cover.withColumn("salt", explode(sequence(lit(0), lit(Salts - 1)))),
+          Seq("cell", "salt"))
+    }
+    val fpTimed = if (widenTime) timeless(fp) else fp
+    val small = if (dist == Broadcast) broadcast(fpTimed) else fpTimed.hint("shuffle_merge")
+    big.join(small, keys).filter(Footprints.contains)
+  }
+
   /** D1 — broadcast PIP join: pages x footprint-cover cells, hash join on
     * the cell id, exact box+time refine. Zero shuffle on the pages side. */
-  def pipJoin(spark: SparkSession, sfDir: String, level: Int = JoinLevel): DataFrame =
-    pipJoinOn(spark, Pages.fromDocuments(spark, sfDir), level)
+  def pipJoin(spark: SparkSession, sfDir: String): DataFrame =
+    pipJoinOn(spark, Pages.fromDocuments(spark, sfDir))
 
   /** Same join over any pages-shaped frame (the bench runs it over the
     * large synthetic table). */
-  def pipJoinOn(spark: SparkSession, pagesIn: DataFrame, level: Int = JoinLevel): DataFrame = {
-    GraftFunctions.register(spark)
-    val pages = pagesIn.withColumn("cell", pageCell(level))
-    pages.join(broadcast(footprintCells(spark, level)), Seq("cell"))
-      .filter(col("ilat").between(col("ilat0"), col("ilat1")) &&
-        col("ilon").between(col("ilon0"), col("ilon1")) &&
-        col("ts_sec").between(col("tfrom"), col("tto")))
-  }
+  def pipJoinOn(spark: SparkSession, pagesIn: DataFrame): DataFrame =
+    refinedJoin(spark, pagesIn, widenTime = false, Broadcast)
 
   /** Bench variant: validity windows widened to forever, so join
     * selectivity is scale-free (the fixture windows would otherwise reject
     * every synthetic doc past ~14.6M as warc_ts grows with doc_id). */
-  def pipJoinTimelessOn(spark: SparkSession, pagesIn: DataFrame,
-      level: Int = JoinLevel): DataFrame = {
-    GraftFunctions.register(spark)
-    val fp = timeless(footprintCells(spark, level))
-    pagesIn.withColumn("cell", pageCell(level))
-      .join(broadcast(fp), Seq("cell"))
-      .filter(col("ilat").between(col("ilat0"), col("ilat1")) &&
-        col("ilon").between(col("ilon0"), col("ilon1")) &&
-        col("ts_sec").between(col("tfrom"), col("tto")))
-  }
+  def pipJoinTimelessOn(spark: SparkSession, pagesIn: DataFrame): DataFrame =
+    refinedJoin(spark, pagesIn, widenTime = true, Broadcast)
 
   /** Flagship: D1 + E1 — per-footprint inventory aggregation
     * (GIPS DataInventory analog: what coverage exists per site). */
@@ -114,52 +136,30 @@ object GeoQueries {
     * side is explicitly hash-partitioned by cell and the join is forced to
     * shuffle (sort-merge) instead of broadcast — the plan shape that
     * co-locates by spatial key at 100 TB. Output aggregated per cell. */
-  def partitionedPip(spark: SparkSession, sfDir: String, level: Int = JoinLevel): DataFrame =
-    partitionedPipOn(spark, Pages.fromDocuments(spark, sfDir), level)
+  def partitionedPip(spark: SparkSession, sfDir: String): DataFrame =
+    partitionedPipOn(spark, Pages.fromDocuments(spark, sfDir))
       .orderBy(col("fp_id"))
 
-  def partitionedPipOn(spark: SparkSession, pagesIn: DataFrame, level: Int = JoinLevel,
-      widenTime: Boolean = false): DataFrame = {
-    GraftFunctions.register(spark)
-    val pages = pagesIn
-      .withColumn("cell", pageCell(level))
-      .repartition(col("cell"))
-    val fpCells0 = footprintCells(spark, level)
-    val fpCells = (if (widenTime) timeless(fpCells0) else fpCells0).hint("shuffle_merge")
-    pages.join(fpCells, Seq("cell"))
-      .filter(col("ilat").between(col("ilat0"), col("ilat1")) &&
-        col("ilon").between(col("ilon0"), col("ilon1")) &&
-        col("ts_sec").between(col("tfrom"), col("tto")))
+  def partitionedPipOn(spark: SparkSession, pagesIn: DataFrame,
+      widenTime: Boolean = false): DataFrame =
+    refinedJoin(spark, pagesIn, widenTime, Partitioned)
       .groupBy(col("fp_id"))
       .agg(count(lit(1)).as("n_pages"), countDistinct(col("source")).as("n_sources"))
-  }
 
   /** D3 — salted skew join: the hot cell (10% of all pages, FIXTURES.md §3)
     * would make one shuffle partition ~400x the median. Pages get a salt
-    * from the doc-id hash; the (tiny) footprint-cell side is replicated x S.
-    * Same result set as the unsalted join — the oracle checks that. */
-  def saltedPipJoin(spark: SparkSession, sfDir: String, salts: Int = 16,
-      level: Int = JoinLevel): DataFrame =
-    saltedPipJoinOn(spark, Pages.fromDocuments(spark, sfDir), salts, level)
+    * from the doc-id hash; the (tiny) footprint-cell side is replicated
+    * x [[Salts]]. Same result set as the unsalted join — the oracle checks
+    * that. */
+  def saltedPipJoin(spark: SparkSession, sfDir: String): DataFrame =
+    saltedPipJoinOn(spark, Pages.fromDocuments(spark, sfDir))
       .orderBy(col("fp_id"))
 
-  def saltedPipJoinOn(spark: SparkSession, pagesIn: DataFrame, salts: Int = 16,
-      level: Int = JoinLevel, widenTime: Boolean = false): DataFrame = {
-    GraftFunctions.register(spark)
-    val pages = pagesIn
-      .withColumn("cell", pageCell(level))
-      .withColumn("salt", pmod(xxhash64(col("doc_id")), lit(salts)).cast("int"))
-    val fpCells0 = footprintCells(spark, level)
-      .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-    val fpCells = (if (widenTime) timeless(fpCells0) else fpCells0).hint("shuffle_merge")
-    pages.repartition(col("cell"), col("salt"))
-      .join(fpCells, Seq("cell", "salt"))
-      .filter(col("ilat").between(col("ilat0"), col("ilat1")) &&
-        col("ilon").between(col("ilon0"), col("ilon1")) &&
-        col("ts_sec").between(col("tfrom"), col("tto")))
+  def saltedPipJoinOn(spark: SparkSession, pagesIn: DataFrame,
+      widenTime: Boolean = false): DataFrame =
+    refinedJoin(spark, pagesIn, widenTime, Salted)
       .groupBy(col("fp_id"))
       .agg(count(lit(1)).as("n_pages"), countDistinct(col("lang")).as("n_langs"))
-  }
 
   /** D4 — range/interval join: equi on cell + non-equi residual on the
     * footprint validity window (narrow-window footprints only select pages
@@ -180,9 +180,7 @@ object GeoQueries {
     val pages = Pages.fromDocuments(spark, sfDir)
       .withColumn("cell", pageCell(JoinLevel))
     pages.join(broadcast(footprintCells(spark, JoinLevel)), Seq("cell"))
-      .filter(col("ilat").between(col("ilat0"), col("ilat1")) &&
-        col("ilon").between(col("ilon0"), col("ilon1")) &&
-        col("ts_sec") <= col("tto"))
+      .filter(Footprints.inBox && col("ts_sec") <= col("tto"))
       .groupBy(col("fp_id"), col("source"))
       // ts_sec = doc_id*137 + epoch is unique per doc -> max_by deterministic
       .agg(max(col("ts_sec")).as("asof_ts"),

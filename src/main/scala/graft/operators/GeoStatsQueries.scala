@@ -489,10 +489,7 @@ object GeoStatsQueries {
     val p = 1L << ArealLevel
     val fp = Footprints.boxesDf(spark)
     val pg = pages(spark, sfDir)
-    val counts = pg.join(broadcast(fp),
-        col("ilat").between(col("ilat0"), col("ilat1")) &&
-        col("ilon").between(col("ilon0"), col("ilon1")) &&
-        col("ts_sec").between(col("tfrom"), col("tto")))
+    val counts = pg.join(broadcast(fp), Footprints.contains)
       .groupBy(col("fp_id")).agg(count(lit(1)).as("n_pages"))
     // scaled space: box spans [a·p, (a1+1)·p), cell k spans
     // [k·1800 − 900p, (k+1)·1800 − 900p) on lat (lon analogous with 3600)

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Footprint fixtures — the engine's analog of GIPS site vectors / tile
   * footprints (SURVEY.md §1.2). Two sets:
@@ -16,6 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Box semantics: a point (ilat, ilon) is inside iff
   * ilat0 <= ilat <= ilat1 AND ilon0 <= ilon <= ilon1 (inclusive integer
   * bounds), valid at time t iff tfrom <= t <= tto (epoch seconds).
+  * [[inBox]] and [[contains]] are that rule as Spark predicates; every
+  * footprint join refines with them.
   */
 object Footprints {
   final case class Box(fpId: Int, ilat0: Int, ilon0: Int, ilat1: Int, ilon1: Int,
@@ -51,6 +54,15 @@ object Footprints {
     Box(14, 820, -1700, 879, -1501, E, FAR),
     Box(15, -850, -300, -701, -101, E + 20000, E + 40000),
   )
+
+  /** Inclusive box test of a row's (ilat, ilon) against its footprint's
+    * (ilat0, ilon0, ilat1, ilon1). */
+  def inBox: Column =
+    col("ilat").between(col("ilat0"), col("ilat1")) &&
+      col("ilon").between(col("ilon0"), col("ilon1"))
+
+  /** Full containment: inside the box AND ts_sec inside [tfrom, tto]. */
+  def contains: Column = inBox && col("ts_sec").between(col("tfrom"), col("tto"))
 
   /** Spark DataFrame of the boxes. Tiny (16 rows) — always broadcast. */
   def boxesDf(spark: SparkSession): DataFrame = {

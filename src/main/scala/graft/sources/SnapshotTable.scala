@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -1168,6 +1167,4 @@ object SnapshotTable {
         Option(n.get("data_path")).map(_.asText()).getOrElse("")))
     }
   }
-
-  def bytesUtf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 }

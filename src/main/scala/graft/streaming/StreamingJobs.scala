@@ -53,20 +53,11 @@ object StreamingJobs {
     * against the BROADCAST footprint covers, then windowed per footprint.
     * Stream-static broadcast joins need no state store for the static
     * side — the exact batch D1 shape lifted onto a stream. */
-  def streamingPipInventory(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    val fpCells = graft.operators.GeoQueries.footprintCells(spark)
-    pages
-      .withColumn("cell", Pages.cellCol(col("ilat"), col("ilon"),
-        graft.operators.GeoQueries.JoinLevel))
-      .join(org.apache.spark.sql.functions.broadcast(fpCells), Seq("cell"))
-      .filter(col("ilat").between(col("ilat0"), col("ilat1")) &&
-        col("ilon").between(col("ilon0"), col("ilon1")) &&
-        col("ts_sec").between(col("tfrom"), col("tto")))
+  def streamingPipInventory(pages: DataFrame): DataFrame =
+    graft.operators.GeoQueries.pipJoinOn(pages.sparkSession, pages)
       .groupBy(window(col("warc_ts"), "6 hours"), col("fp_id"))
       .agg(count(lit(1)).as("n_pages"))
       .select(col("window.start").as("w_start"), col("fp_id"), col("n_pages"))
-  }
 
   /** H-session — streaming SESSION windows: gap-based sessions per source
     * via the built-in session_window (adjacent windows merge in the state
@@ -192,6 +183,25 @@ object StreamingJobs {
       }
   }
 
+  /** Geofence input: one (source, ts_sec, doc_id, fp_id) row per page and
+    * containing fence — the stream-static broadcast box join, LEFT so a
+    * page outside every fence still arrives, with fp_id -1. */
+  private def fenceTagged(pages: DataFrame): org.apache.spark.sql.Dataset[(String, Long, Long, Int)] = {
+    val spark = pages.sparkSession
+    import spark.implicits._
+    val fp = graft.sources.Footprints.boxesDf(spark)
+    pages.join(broadcast(fp), graft.sources.Footprints.contains, "left")
+      .select(col("source").as[String], col("ts_sec").as[Long],
+        col("doc_id").as[Long], coalesce(col("fp_id"), lit(-1)).as[Int])
+  }
+
+  /** One source's tagged rows grouped back to per-page fence sets
+    * (ts, doc_id, fences), in (ts, doc_id) order. */
+  private def fenceEvents(rows: Iterator[(String, Long, Long, Int)]): Seq[(Long, Long, Set[Int])] =
+    rows.toArray.groupBy(r => (r._2, r._3)).toSeq
+      .map { case ((ts, id), xs) => (ts, id, xs.map(_._4).filter(_ >= 0).toSet) }
+      .sortBy(e => (e._1, e._2))
+
   final case class GeoAlert(source: String, ts_sec: Long, doc_id: Long,
       fp_id: Int, kind: String)
   final case class AlertState(lastTs: Long, lastId: Long, fps: Seq[Int])
@@ -209,15 +219,7 @@ object StreamingJobs {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = pages.sparkSession
     import spark.implicits._
-    val fp = graft.sources.Footprints.boxesDf(spark)
-    val tagged = pages.join(broadcast(fp),
-        col("ilat").between(col("ilat0"), col("ilat1")) &&
-        col("ilon").between(col("ilon0"), col("ilon1")) &&
-        col("ts_sec").between(col("tfrom"), col("tto")), "left")
-      .select(col("source").as[String], col("ts_sec").as[Long],
-        col("doc_id").as[Long],
-        coalesce(col("fp_id"), lit(-1)).as[Int])
-    tagged.groupByKey(_._1)
+    fenceTagged(pages).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout()) {
         (source: String, rows: Iterator[(String, Long, Long, Int)],
             state: GroupState[AlertState]) =>
@@ -231,9 +233,7 @@ object StreamingJobs {
           // The guard keys on the full (ts, doc_id) tiebreak, NOT ts
           // alone, so same-timestamp events within one batch still
           // replay exactly like the brute oracle (r6 review).
-          val events = rows.toArray.groupBy(r => (r._2, r._3)).toSeq
-            .map { case ((ts, id), xs) => (ts, id, xs.map(_._4).filter(_ >= 0).toSet) }
-            .sortBy(e => (e._1, e._2))
+          val events = fenceEvents(rows)
           val st = state.getOption.getOrElse(AlertState(Long.MinValue, Long.MinValue, Nil))
           var cur = st.fps.toSet
           var lastTs = st.lastTs
@@ -268,20 +268,11 @@ object StreamingJobs {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = pages.sparkSession
     import spark.implicits._
-    val fp = graft.sources.Footprints.boxesDf(spark)
-    val tagged = pages.join(broadcast(fp),
-        col("ilat").between(col("ilat0"), col("ilat1")) &&
-        col("ilon").between(col("ilon0"), col("ilon1")) &&
-        col("ts_sec").between(col("tfrom"), col("tto")), "left")
-      .select(col("source").as[String], col("ts_sec").as[Long],
-        col("doc_id").as[Long], coalesce(col("fp_id"), lit(-1)).as[Int])
-    tagged.groupByKey(_._1)
+    fenceTagged(pages).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout()) {
         (source: String, rows: Iterator[(String, Long, Long, Int)],
             state: GroupState[DwellState]) =>
-          val events = rows.toArray.groupBy(r => (r._2, r._3)).toSeq
-            .map { case ((ts, id), xs) => (ts, id, xs.map(_._4).filter(_ >= 0).toSet) }
-            .sortBy(e => (e._1, e._2))
+          val events = fenceEvents(rows)
           var st = state.getOption.getOrElse(DwellState(Long.MinValue, Nil, Map.empty))
           var dwell = st.dwell
           var lastTs = st.lastTs

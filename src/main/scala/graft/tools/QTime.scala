@@ -3,8 +3,9 @@ package graft.tools
 import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
 /** Per-query wall-time probe at sf0.1/local[32] with JVM warm-up —
-  * `runMain graft.tools.QTime <query ids...>`. Complements Probes
-  * (HeadlineProbe/SkewProbe) for suite-query profiling. */
+  * `runMain graft.tools.QTime <query ids...>`. The headline and skew-join
+  * paths are timed by perfbench instead
+  * (`python3 perfbench/run.py --workload pip_tile|skew_join ...`). */
 object QTime {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[32]")

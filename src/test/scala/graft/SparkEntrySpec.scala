@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.functions.GraftFunctions._
 import graft.operators.GeoQueries
-import graft.sources.Pages
+import graft.sources.{Footprints, Pages}
 import graft.testutil.SparkTestBase
 
 class SparkEntrySpec extends SparkTestBase {
@@ -56,6 +57,24 @@ class SparkEntrySpec extends SparkTestBase {
       .agg(count(lit(1)).as("n_pages"), countDistinct(col("lang")).as("n_langs"))
       .orderBy(col("fp_id")).collect().map(_.toSeq).toSeq
     assert(salted === plain)
+
+    // timeless (widenTime) path over the synthetic frame: every distribution
+    // agrees per footprint, and with a brute count over the box rule alone.
+    // 10% of the rows sit at (405, -740), on fp0's inclusive ilon1 edge.
+    val pages = Pages.synthetic(spark, 20000, 4)
+    def perFp(df: DataFrame) = df.select("fp_id", "n_pages").orderBy("fp_id")
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq
+    val broadcastJoin = perFp(GeoQueries.pipJoinTimelessOn(spark, pages)
+      .groupBy(col("fp_id")).agg(count(lit(1)).as("n_pages")))
+    val points = pages.select("ilat", "ilon").collect().map(r => (r.getInt(0), r.getInt(1)))
+    val brute = Footprints.boxes.map { b =>
+      b.fpId -> points.count { case (lat, lon) =>
+        b.ilat0 <= lat && lat <= b.ilat1 && b.ilon0 <= lon && lon <= b.ilon1 }.toLong
+    }.filter(_._2 > 0).sortBy(_._1)
+    assert(brute.toMap.getOrElse(0, 0L) >= 2000, "hot-cell rows missing from fp0")
+    assert(broadcastJoin === brute)
+    assert(perFp(GeoQueries.partitionedPipOn(spark, pages, widenTime = true)) === brute)
+    assert(perFp(GeoQueries.saltedPipJoinOn(spark, pages, widenTime = true)) === brute)
   }
 
   test("plan shape: q01 uses BroadcastHashJoin (no pages-side shuffle join)") {
@@ -66,6 +85,14 @@ class SparkEntrySpec extends SparkTestBase {
   test("plan shape: q03 uses SortMergeJoin on the cell key") {
     val plan = GeoQueries.partitionedPip(spark, sf0001).queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), plan.take(2000))
+  }
+
+  test("plan shape: q04 keeps the salted join a SortMergeJoin") {
+    // without the shuffle_merge hint the 16x-replicated footprint side is
+    // small enough to broadcast, which would silently turn q04 into q01
+    val plan = GeoQueries.saltedPipJoin(spark, sf0001).queryExecution.executedPlan.toString
+    assert(plan.contains("SortMergeJoin"), plan.take(2000))
+    assert(!plan.contains("BroadcastHashJoin"), plan.take(2000))
   }
 
   test("plan shape: pages scan prunes columns (no html in q01 scan)") {
