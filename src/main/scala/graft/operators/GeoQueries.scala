@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.CellIndex
+import graft.core.{CellIndex, Geo}
 import graft.functions.GraftFunctions
 import graft.functions.GraftFunctions._
 import graft.sources.{Footprints, Pages}
@@ -39,18 +39,23 @@ object GeoQueries {
   final val Salts = 16
 
   /** Footprints exploded to covering cells at `level` (tiny; broadcast side).
-    * One row per (footprint, cell). The quadtree cover runs on Morton ids;
-    * the emitted join key is the row-major surrogate (bijective at a fixed
-    * level) so the BIG side's key stays pure codegen'd integer arithmetic —
-    * a CodegenFallback expression on the page side would break whole-stage
-    * codegen for 10^12 rows (measured 2x on the bench). */
+    * One row per (footprint, cell): the box columns plus `cell`, the
+    * row-major surrogate (bijective at a fixed level) of each Morton cell of
+    * the quadtree cover ([[graft.core.Geo.cover]]), so the BIG side's key
+    * stays pure codegen'd integer arithmetic. The boxes are the constant
+    * [[Footprints.boxes]], so the cover is computed on the driver once per
+    * level and the frame is a local relation: the broadcast side of every
+    * PIP join runs no JTS explode and no CodegenFallback expression. */
   def footprintCells(spark: SparkSession, level: Int = JoinLevel): DataFrame = {
-    GraftFunctions.register(spark)
-    Footprints.boxesWktDf(spark)
-      .withColumn("mcell", explode(cell_cover(col("wkt"), lit(level))))
-      .withColumn("cell", cell_rowmajor(col("mcell")))
-      .drop("wkt", "mcell")
+    import spark.implicits._
+    coverRows.getOrElseUpdate(level, Footprints.boxes.flatMap { b =>
+      Geo.cover(b.wkt, level).map(c =>
+        (b.fpId, b.ilat0, b.ilon0, b.ilat1, b.ilon1, b.tfrom, b.tto, CellIndex.rowMajor(c)))
+    }).toDF("fp_id", "ilat0", "ilon0", "ilat1", "ilon1", "tfrom", "tto", "cell")
   }
+
+  private val coverRows =
+    scala.collection.concurrent.TrieMap.empty[Int, Seq[(Int, Int, Int, Int, Int, Long, Long, Long)]]
 
   /** Page-side cell key: built-in arithmetic only (whole-stage codegen). */
   private def pageCell(level: Int): Column =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.CellIndex.{GridH, GridW}
 import graft.sources.{Footprints, Pages}
 
 /** Spatial-statistics operators — round-4 geo wave (SURVEY.md §2.R5):
@@ -36,8 +37,8 @@ object GeoStatsQueries {
     * explode (points aggregate BEFORE the kernel scatter). */
   def kdeHeatmap(spark: SparkSession, sfDir: String, topK: Int = 15): DataFrame = {
     val p = 1L << KdeLevel
-    val cy = floor((col("ilat") + 900) * p / 1800).cast("long")
-    val cx = floor((col("ilon") + 1800) * p / 3600).cast("long")
+    val cy = Pages.cellAxis(col("ilat"), GridH, KdeLevel)
+    val cx = Pages.cellAxis(col("ilon"), GridW, KdeLevel)
     // grid-sized but corpus-scan-derived; feeds the kernel scatter AND the
     // raw-count join back — persist once (released via CacheBag)
     val occ = pages(spark, sfDir)
@@ -161,14 +162,12 @@ object GeoStatsQueries {
     // r6 (guide §2.3/§2.4): ONE corpus scan + grid agg at the FINEST
     // level; coarser levels roll up from it arithmetically. The grids
     // nest exactly — floor(floor(a/b)/c) = floor(a/(b·c)) makes
-    // cy_l = cy_fine div 2^(fine−l) (operands non-negative, and the
-    // double images of (ilat+900)·side ≤ 57600 are exact, so the float
-    // floor equals the integer one) — so the rollup shuffles ≤ 4^fine
-    // grid rows where r5 re-scanned and re-shuffled the corpus per level.
+    // cy_l = cy_fine div 2^(fine−l) (operands non-negative) — so the
+    // rollup shuffles ≤ 4^fine grid rows where r5 re-scanned and
+    // re-shuffled the corpus per level.
     val fineL = MoranLevels.max
-    val fineSide = 1L << fineL
-    val fineCy = floor((col("ilat") + 900) * fineSide / 1800).cast("long")
-    val fineCx = floor((col("ilon") + 1800) * fineSide / 3600).cast("long")
+    val fineCy = Pages.cellAxis(col("ilat"), GridH, fineL)
+    val fineCx = Pages.cellAxis(col("ilon"), GridW, fineL)
     val occFine = pg.select(fineCy.as("cy"), fineCx.as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
       .persist()
@@ -246,8 +245,8 @@ object GeoStatsQueries {
     import spark.implicits._
     val side = 1L << LisaLevel
     val nc = side * side
-    val cy = floor((col("ilat") + 900) * side / 1800).cast("long")
-    val cx = floor((col("ilon") + 1800) * side / 3600).cast("long")
+    val cy = Pages.cellAxis(col("ilat"), GridH, LisaLevel)
+    val cx = Pages.cellAxis(col("ilon"), GridW, LisaLevel)
     // grid-sized but corpus-scan-derived; feeds totals, deviations and the
     // scatter join — persist once (released via CacheBag)
     val occ = pages(spark, sfDir)
@@ -317,8 +316,7 @@ object GeoStatsQueries {
         col("cx") < col("cx0") || col("cx") > col("cx1"))
       .select(col("fp_id"), (col("cy") * p + col("cx")).as("cell6"))
     val pageCells = pages(spark, sfDir).select(
-      (floor((col("ilat") + 900) * p / 1800).cast("long") * p +
-        floor((col("ilon") + 1800) * p / 3600).cast("long")).as("cell6"),
+      Pages.cellCol(col("ilat"), col("ilon"), BufferLevel).as("cell6"),
       col("doc_id"), col("lang"))
     halo.join(pageCells, Seq("cell6"), "left")
       .groupBy(col("fp_id"))
@@ -347,8 +345,8 @@ object GeoStatsQueries {
   def idwSurface(spark: SparkSession, sfDir: String): DataFrame = {
     val p = 1L << KdeLevel
     val occ = pages(spark, sfDir)
-      .select(floor((col("ilat") + 900) * p / 1800).cast("long").as("cy"),
-        floor((col("ilon") + 1800) * p / 3600).cast("long").as("cx"), col("n_chars"))
+      .select(Pages.cellAxis(col("ilat"), GridH, KdeLevel).as("cy"),
+        Pages.cellAxis(col("ilon"), GridW, KdeLevel).as("cx"), col("n_chars"))
       .groupBy(col("cy"), col("cx"))
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("s"))
     val offsets = Seq(
@@ -390,8 +388,8 @@ object GeoStatsQueries {
       expr(s"((ilat0 + ilat1 + 1800) div 2) * $p div 1800").as("ccy"),
       expr(s"((ilon0 + ilon1 + 3600) div 2) * $p div 3600").as("ccx"))
     val occ = pages(spark, sfDir)
-      .select(floor((col("ilat") + 900) * p / 1800).cast("long").as("cy"),
-        floor((col("ilon") + 1800) * p / 3600).cast("long").as("cx"))
+      .select(Pages.cellAxis(col("ilat"), GridH, KdeLevel).as("cy"),
+        Pages.cellAxis(col("ilon"), GridW, KdeLevel).as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
     occ.crossJoin(broadcast(centers))
       .withColumn("d", greatest(abs(col("cy") - col("ccy")), abs(col("cx") - col("ccx"))))
@@ -537,7 +535,6 @@ object GeoStatsQueries {
     // collect is no longer driver-bounded — take the row-identical
     // distributed twin instead of silently collecting it.
     if (maxLevel > 6) return adaptiveGridDistributed(spark, sfDir, maxLevel, split)
-    val p = 1L << maxLevel
     // ONE corpus shuffle to the ≤ 4^maxLevel occupied-cell frame; the
     // pyramid + refinement then run driver-side on the grid rows (the
     // documented q69/q94/q104 convention: grid-sized BY CONSTRUCTION —
@@ -546,8 +543,8 @@ object GeoStatsQueries {
     // maxLevel ≥ 8 use [[adaptiveGridDistributed]], the identical-output
     // scale path below, gated equal by GeoStatsSpec).
     val fine = pages(spark, sfDir)
-      .select(floor((col("ilat") + 900) * p / 1800).cast("long").as("cy"),
-        floor((col("ilon") + 1800) * p / 3600).cast("long").as("cx"))
+      .select(Pages.cellAxis(col("ilat"), GridH, maxLevel).as("cy"),
+        Pages.cellAxis(col("ilon"), GridW, maxLevel).as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val counts = new Array[Map[(Long, Long), Long]](maxLevel + 1)
@@ -578,10 +575,9 @@ object GeoStatsQueries {
     * row-identity with the driver-assembled default). */
   def adaptiveGridDistributed(spark: SparkSession, sfDir: String,
       maxLevel: Int = AdaptLevel, split: Long = AdaptSplit): DataFrame = {
-    val p = 1L << maxLevel
     val fine = pages(spark, sfDir)
-      .select(floor((col("ilat") + 900) * p / 1800).cast("long").as("cy"),
-        floor((col("ilon") + 1800) * p / 3600).cast("long").as("cx"))
+      .select(Pages.cellAxis(col("ilat"), GridH, maxLevel).as("cy"),
+        Pages.cellAxis(col("ilon"), GridW, maxLevel).as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("n"))
     val counts = new Array[DataFrame](maxLevel + 1)
     counts(maxLevel) = fine
@@ -631,8 +627,8 @@ object GeoStatsQueries {
     val pg = pages(spark, sfDir)
     val bounds = pg.agg(min(col("ts_sec")).as("mn"), max(col("ts_sec")).as("mx"))
     val counts = pg.crossJoin(broadcast(bounds))
-      .select(floor((col("ilat") + 900) * p / 1800).cast("long").as("cy"),
-        floor((col("ilon") + 1800) * p / 3600).cast("long").as("cx"),
+      .select(Pages.cellAxis(col("ilat"), GridH, MkLevel).as("cy"),
+        Pages.cellAxis(col("ilon"), GridW, MkLevel).as("cx"),
         expr(s"(ts_sec - mn) * $MkBuckets div (mx - mn + 1)").as("b"))
       .groupBy(col("cy"), col("cx"), col("b")).agg(count(lit(1)).as("c"))
     import spark.implicits._
@@ -677,8 +673,8 @@ object GeoStatsQueries {
       expr(s"((ilat0 + ilat1 + 1800) div 2) * $p div 1800").as("ccy"),
       expr(s"((ilon0 + ilon1 + 3600) div 2) * $p div 3600").as("ccx"))
     val occ = pages(spark, sfDir)
-      .select(floor((col("ilat") + 900) * p / 1800).cast("long").as("cy"),
-        floor((col("ilon") + 1800) * p / 3600).cast("long").as("cx"))
+      .select(Pages.cellAxis(col("ilat"), GridH, TerrLevel).as("cy"),
+        Pages.cellAxis(col("ilon"), GridW, TerrLevel).as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
     occ.crossJoin(broadcast(centers))
       .withColumn("d2",
@@ -712,8 +708,8 @@ object GeoStatsQueries {
   def densityGradient(spark: SparkSession, sfDir: String, topK: Int = GradTopK): DataFrame = {
     val p = 1L << KdeLevel
     val occ = pages(spark, sfDir)
-      .select(floor((col("ilat") + 900) * p / 1800).cast("long").as("cy"),
-        floor((col("ilon") + 1800) * p / 3600).cast("long").as("cx"))
+      .select(Pages.cellAxis(col("ilat"), GridH, KdeLevel).as("cy"),
+        Pages.cellAxis(col("ilon"), GridW, KdeLevel).as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
     // (dy, dx, wx, wy): Sobel-x weights and Sobel-y weights per offset
     val offsets = Seq(
@@ -770,8 +766,8 @@ object GeoStatsQueries {
   def locationQuotient(spark: SparkSession, sfDir: String): DataFrame = {
     val p = 1L << LqLevel
     val cl = pages(spark, sfDir)
-      .select(floor((col("ilat") + 900) * p / 1800).cast("long").as("cy"),
-        floor((col("ilon") + 1800) * p / 3600).cast("long").as("cx"), col("lang"))
+      .select(Pages.cellAxis(col("ilat"), GridH, LqLevel).as("cy"),
+        Pages.cellAxis(col("ilon"), GridW, LqLevel).as("cx"), col("lang"))
       .groupBy(col("cy"), col("cx"), col("lang"))
       .agg(count(lit(1)).as("n"))
       .persist()

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.core.CellIndex
 import graft.functions.GraftFunctions
 import graft.functions.GraftFunctions._
 import graft.sources.Pages
@@ -85,55 +86,55 @@ object Tiling {
   }
 
   /** Pages with tile cell + in-tile pixel coordinates (integer math shared
-    * with the oracle: pixel = (coord - lo) * W / extent, floor division). */
+    * with the oracle: pixel = (coord - lo) * W div extent). */
   def pixelized(spark: SparkSession, sfDir: String): DataFrame =
     pixelizedOn(spark, Pages.fromDocuments(spark, sfDir))
 
-  /** Pixelize any pages-shaped frame (bench path). Pure built-in integer
-    * arithmetic — this runs per page row, so it must stay inside
-    * whole-stage codegen (no CodegenFallback expressions here; the Morton
-    * id is not needed: the row-major tile surrogate is the output anyway).
-    * Level-4 boundary arithmetic: xlo = cx*225 exact; ylo = ceil-div. */
+  /** Pixelize any pages-shaped frame (bench path). Integer arithmetic only —
+    * this runs per page row, so it must stay inside whole-stage codegen and
+    * do no double division or floor: the tile is [[Pages.cellAxis]] per
+    * axis, the tile bounds are the ceil-divs of `CellIndex.boundary` (a
+    * shift: 2^L is a power of two), and the in-tile pixel is
+    * `(g - lo) * W div (hi - lo)` with g the offset coordinate. g - lo is
+    * never negative (the tile is the exact floor), so `div` equals the
+    * oracle's floor. When the grid divides evenly the tile extent is a
+    * plan-time CONSTANT (divisions by constants codegen far cheaper than by
+    * a per-row column). */
   def pixelizedOn(spark: SparkSession, pages: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
     val p = 1 << TileLevel
-    val (gw, gh) = (graft.core.CellIndex.GridW, graft.core.CellIndex.GridH)
-    val gx = col("ilon") + gw / 2
-    val gy = col("ilat") + gh / 2
-    val cx = floor(gx * p / gw).cast("long")
-    val cy = floor(gy * p / gh).cast("long")
-    // ceil-div boundaries, same formula as CellIndex.boundary; when the
-    // grid divides evenly the stride is a plan-time CONSTANT (divisions by
-    // constants codegen far cheaper than by a per-row column)
-    def lo(c: org.apache.spark.sql.Column, dim: Int) =
-      floor((c * dim + (p - 1)) / p).cast("long")
-    val base = pages.withColumn("tile", cy * p + cx)
-    val withPx =
-      if (gw % p == 0)
-        base.withColumn("px", floor((gx - cx * (gw / p)) * W / (gw / p)).cast("int"))
-      else base.withColumn("xlo", lo(cx, gw)).withColumn("xhi", lo(cx + 1, gw))
-        .withColumn("px", floor((gx - col("xlo")) * W / (col("xhi") - col("xlo"))).cast("int"))
-        .drop("xlo", "xhi")
-    val withPy =
-      if (gh % p == 0)
-        withPx.withColumn("py", floor((gy - cy * (gh / p)) * H / (gh / p)).cast("int"))
-      else withPx.withColumn("ylo", lo(cy, gh)).withColumn("yhi", lo(cy + 1, gh))
-        .withColumn("py", floor((gy - col("ylo")) * H / (col("yhi") - col("ylo"))).cast("int"))
-        .drop("ylo", "yhi")
-    withPy.withColumn("pxy", (col("py") * W + col("px")).cast("long"))
+    def div(a: Column, b: Column): Column = call_function("div", a, b)
+    def axis(coord: String, dim: Int, n: Int): (Column, Column) = {
+      val c = Pages.cellAxis(col(coord), dim, TileLevel)
+      val g = col(coord) + dim / 2
+      val pix =
+        if (dim % p == 0) div((g - c * (dim / p)) * n, lit(dim / p))
+        else {
+          def lo(k: Column) = shiftright(k * dim + (p - 1), TileLevel)
+          div((g - lo(c)) * n, lo(c + 1) - lo(c))
+        }
+      (c, pix.cast("int"))
+    }
+    val (cx, px) = axis("ilon", CellIndex.GridW, W)
+    val (cy, py) = axis("ilat", CellIndex.GridH, H)
+    pages.withColumn("tile", cy * p + cx)
+      .withColumn("px", px)
+      .withColumn("py", py)
+      .withColumn("pxy", (col("py") * W + col("px")).cast("long"))
   }
 
   /** Sparse per-pixel counts: the codegen'd hot path. The grouping key is
     * ONE fused long (tile*W*H + pxy) — a single-column long key halves the
     * hash/compare cost per row vs a two-column composite and keeps the
     * partial-agg map as small as possible (it's per-core L2-resident; the
-    * map size, not CPU, limits scaling on this leg). */
+    * map size, not CPU, limits scaling on this leg). The key decodes with
+    * integer `div`/`pmod` (k is non-negative). */
   def sparseCounts(spark: SparkSession, pages: DataFrame): DataFrame =
     pixelizedOn(spark, pages)
       .withColumn("k", col("tile") * (W * H) + col("pxy"))
       .groupBy(col("k"))
       .agg(count(lit(1)).as("n"))
-      .select((col("k") / (W * H)).cast("long").as("tile"),
+      .select(call_function("div", col("k"), lit(W * H)).as("tile"),
         pmod(col("k"), lit(W * H)).as("pxy"), col("n"))
 
   /** Long-form rasterize (tile, px, py, n). */
@@ -145,15 +146,6 @@ object Tiling {
       .select(col("tile"), (col("pxy") % W).cast("int").as("px"),
         (col("pxy") / W).cast("int").as("py"), col("n"))
       .orderBy(col("tile"), col("py"), col("px"))
-
-  /** Dense grids per tile (the raster artifact consumed by mosaicking and
-    * export), densified from the sparse counts via RasterAgg. */
-  def rasterizeGrids(spark: SparkSession, pages: DataFrame): DataFrame = {
-    val raster = udaf(new RasterAgg, Encoders.product[SparsePix])
-    sparseCounts(spark, pages)
-      .groupBy(col("tile"))
-      .agg(raster(col("pxy"), col("n")).as("grid"))
-  }
 
   /** Mosaic: two synthetic crawl snapshots (doc_id parity), rasterized
     * separately, merged with newest-snapshot-wins per pixel. Long form. */

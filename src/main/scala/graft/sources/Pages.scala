@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The Common-Crawl-style pages table (BASELINE.json:input_hint shape:
@@ -113,16 +113,36 @@ object Pages {
         lit("</p></body></html>")).cast("binary"))
   }
 
-  /** Row-major surrogate cell at `level` as a Column — integer-exact,
-    * mirrored by `sqlCell` for the oracle. cy*2^L + cx over the
-    * 3600x1800 deci-degree grid. */
-  def cellCol(ilat: org.apache.spark.sql.Column, ilon: org.apache.spark.sql.Column, level: Int): org.apache.spark.sql.Column = {
-    val p = 1L << level
-    (floor((ilat + 900) * p / 1800).cast("long") * p +
-      floor((ilon + 1800) * p / 3600).cast("long"))
+  /** Cell index along one axis at `level` as a Column:
+    * floor((x + extent/2) * 2^level / extent), `extent` =
+    * [[graft.core.CellIndex.GridH]] for ilat, `GridW` for ilon — the ids of
+    * `CellIndex.cyOf`/`cxOf`, in integer arithmetic only (no double
+    * division, no floor call). Spark's `div` truncates toward zero, which
+    * is floor only for a non-negative operand, so the operand is lifted by
+    * `m` whole cells (m * extent > 2^31 * 2^level) and `m` is taken off
+    * the quotient.
+    *
+    * Domain: ilat in [-900, 900], ilon in [-1800, 1800] (the upper edge maps
+    * to 2^level, one past the last cell). Outside it the result is still
+    * the exact floor for every int coordinate, so an out-of-range point
+    * gets the floor formula's cell id, never a different one; NULL stays
+    * NULL. */
+  def cellAxis(x: Column, extent: Int, level: Int): Column = {
+    require(level >= 0 && level <= graft.core.CellIndex.MaxLevel,
+      s"level $level out of [0,${graft.core.CellIndex.MaxLevel}]")
+    val m = (1L << (31 + level)) / extent + 1
+    call_function("div", (x + extent / 2) * (1L << level) + m * extent, lit(extent)) - m
   }
 
-  /** DuckDB twin of `cellCol`. */
+  /** Row-major surrogate cell `cy * 2^L + cx` at `level` as a Column over the
+    * 3600x1800 deci-degree grid, built from [[cellAxis]] (same domain).
+    * Its oracle twin `sqlCell` keeps DuckDB's floor form, which is
+    * identical for every int coordinate. */
+  def cellCol(ilat: Column, ilon: Column, level: Int): Column =
+    cellAxis(ilat, graft.core.CellIndex.GridH, level) * (1L << level) +
+      cellAxis(ilon, graft.core.CellIndex.GridW, level)
+
+  /** DuckDB twin of `cellCol`: the floor of a double division. */
   def sqlCell(ilatExpr: String, ilonExpr: String, level: Int): String = {
     val p = 1L << level
     s"(CAST(floor((($ilatExpr) + 900) * $p / 1800.0) AS BIGINT) * $p + " +

@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Divide, Floor}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import graft.operators.{GeoQueries, SimilarityQueries, Tiling}
 import graft.sources.Pages
@@ -14,6 +20,13 @@ class PlanShapeSpec extends SparkTestBase {
   private def executed(df: org.apache.spark.sql.DataFrame): String = {
     df.collect() // force AQE to finalize
     df.queryExecution.executedPlan.toString
+  }
+
+  /** Every node of an executed plan, looking through AQE and query stages. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => planNodes(q.plan)
+    case _ => p +: p.children.flatMap(planNodes)
   }
 
   test("broadcast PIP join: zero Exchange on the pages side before the join") {
@@ -36,6 +49,14 @@ class PlanShapeSpec extends SparkTestBase {
     assert(plan.contains("*(1)") || plan.contains("WholeStageCodegen"), plan.take(1500))
     // our Morton expressions are CodegenFallback; they must not appear here
     assert(!plan.toLowerCase.contains("cell_id"), "Morton cell_id on the hot path")
+    // nor anywhere else: the footprint cover is a driver-built local
+    // relation, so the broadcast side runs no JTS explode either
+    val nodes = planNodes(df.queryExecution.executedPlan)
+    val fallbacks = nodes.flatMap(_.expressions.flatMap(_.collect { case f: CodegenFallback => f }))
+    assert(fallbacks.isEmpty, s"CodegenFallback expressions: ${fallbacks.mkString(", ")}")
+    val broadcastSides = nodes.collect { case b: BroadcastExchangeExec => b.child }
+    assert(broadcastSides.nonEmpty && broadcastSides.forall(_.isInstanceOf[LocalTableScanExec]),
+      broadcastSides.mkString("\n"))
   }
 
   test("tile rasterization: partial aggregation before the single shuffle") {
@@ -45,6 +66,17 @@ class PlanShapeSpec extends SparkTestBase {
     val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(shuffles === 1, s"expected exactly one shuffle:\n${plan.take(2000)}")
     assert("HashAggregate".r.findAllIn(plan).length >= 2, "no map-side partial agg")
+  }
+
+  test("tile rasterization: page-side keys use no double Divide or FLOOR") {
+    val optimized = Tiling.sparseCounts(spark,
+      Pages.synthetic(spark, 10000, 4).select("doc_id", "ts_sec", "ilat", "ilon"))
+      .queryExecution.optimizedPlan
+    val pageSide = optimized.collectFirst { case a: Aggregate => a.child }
+    assert(pageSide.isDefined, optimized.toString.take(1500))
+    val doubleMath = pageSide.get.collect { case n => n.expressions }.flatten
+      .flatMap(_.collect { case e @ (_: Divide | _: Floor) => e })
+    assert(doubleMath.isEmpty, s"double division on the page side: ${doubleMath.mkString(", ")}")
   }
 
   test("parquet scan prunes columns: inventory never reads html/text") {

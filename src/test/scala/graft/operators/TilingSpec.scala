@@ -1,15 +1,23 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import graft.testutil.SparkTestBase
 
 class TilingSpec extends SparkTestBase {
 
+  /** Dense grid per tile, densified from the sparse counts via RasterAgg. */
+  private def rasterizeGrids(pages: DataFrame): DataFrame = {
+    val raster = udaf(new Tiling.RasterAgg, Encoders.product[Tiling.SparsePix])
+    Tiling.sparseCounts(spark, pages)
+      .groupBy(col("tile"))
+      .agg(raster(col("pxy"), col("n")).as("grid"))
+  }
+
   test("dense grids (RasterAgg) exploded == long-form counts") {
     import spark.implicits._
     val viaLong = Tiling.rasterizeLong(spark, sf001).collect().map(_.toSeq)
-    val viaGrid = Tiling.rasterizeGrids(spark,
-        graft.sources.Pages.fromDocuments(spark, sf001))
+    val viaGrid = rasterizeGrids(graft.sources.Pages.fromDocuments(spark, sf001))
       .select($"tile", posexplode($"grid"))
       .filter($"col" > 0)
       .select($"tile", ($"pos" % Tiling.W).cast("int").as("px"),
