@@ -201,23 +201,6 @@ object IngestJob {
     RunReport(jobId, committed.seq, stale.size, skipped, byCell.map(_._2).sum)
   }
 
-  /** G1 — bulk archive fast path: ONE pass, spatially clustered write.
-    * `repartitionByRange(p_cell, p_date)` range-partitions by the spatial
-    * bucket (sampled bounds), so each output partition dir is written by
-    * few tasks and files are cell-clustered — the layout that co-locates
-    * later partitioned joins. No per-bucket resume (use `run` for that);
-    * this is the shape for initial 100 TB backfills where the job is
-    * all-or-nothing anyway. */
-  def bulkArchive(spark: SparkSession, sfDir: String, root: String): Long = {
-    val pages = pagesWithPartitions(spark, sfDir)
-    pages
-      .repartitionByRange(col("p_cell"), col("p_date"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("p_cell", "p_date")
-      .parquet(s"$root/data")
-    spark.read.parquet(s"$root/data").count()
-  }
-
   /** G1z — z-order clustered archive: rows sorted by the MORTON cell id
     * at `level` (bit-interleaved lat/lon — `cell_id` IS the z-order key)
     * before writing, so each output file covers a compact spatial square
@@ -239,26 +222,6 @@ object IngestJob {
       .drop("zkey")
       .write.mode(SaveMode.Overwrite).parquet(out)
     spark.read.parquet(out).count()
-  }
-
-  /** G1b — bucketed archive: persist pages as a BUCKETED table on the
-    * level-6 cell key (hash-bucketed + sorted within buckets). Spark's
-    * bucketing metadata makes every later equi-join/aggregation on the
-    * cell key read pre-shuffled data — ZERO exchange at query time
-    * (plan-gated in PlanShapeSpec). At 100 TB this is the difference
-    * between shuffling the corpus once at WRITE time and shuffling it on
-    * every join: the layout the brief's "bucketing for co-located joins"
-    * names. Uses the session catalog (saveAsTable) because file-based
-    * parquet carries no bucketing metadata. */
-  def bulkArchiveBucketed(spark: SparkSession, sfDir: String, table: String,
-      buckets: Int = 16): Long = {
-    Pages.fromDocuments(spark, sfDir)
-      .withColumn("cell", Pages.cellCol(col("ilat"), col("ilon"), 6))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "cell")
-      .sortBy("cell")
-      .saveAsTable(table)
-    spark.table(table).count()
   }
 
   /** A2/G-diff — snapshot diff ("what's new since"): builds a two-snapshot
@@ -407,10 +370,11 @@ object IngestJob {
     val targetKeys = updates.select(col("p_cell"), col("p_date")).distinct()
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val updKeys = updates.select(col(key))
+    lazy val schema = SnapshotTable.readSchema(spark, current)
     val staleKeys: Set[(Long, String)] = bloomScanSet(current.parts, updKeys, key)
       .groupBy(_.pDate).toSeq
       .sortBy(_._1).flatMap { case (d, es) =>
-        SnapshotTable.applyDeletes(spark, es)
+        SnapshotTable.applyDeletes(spark, es, schema)
           .select(col(key), col("p_cell"))
           .join(updKeys, Seq(key), "left_semi")
           .select(col("p_cell")).distinct()
@@ -434,8 +398,9 @@ object IngestJob {
     // APPLY here: a rewrite that read raw files would resurrect deleted
     // rows (the rewritten entries carry no delete refs — the rewrite
     // materializes them).
+    lazy val schema = SnapshotTable.readSchema(spark, current)
     val oldRows = touched.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
-      SnapshotTable.applyDeletes(spark, es)
+      SnapshotTable.applyDeletes(spark, es, schema)
         .withColumn("p_date", lit(d))
     }.reduceOption(_.unionByName(_))
     val updCols = updates.columns.toSeq
@@ -601,8 +566,9 @@ object IngestJob {
       beforeCommit: () => Unit = () => ()): Snapshot = {
     val current = SnapshotTable.currentSnapshot(root).getOrElse(
       throw new IllegalStateException(s"no snapshot under $root"))
+    lazy val schema = SnapshotTable.readSchema(spark, current)
     val byDate = current.parts.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
-      SnapshotTable.applyDeletes(spark, es).withColumn("p_date", lit(d))
+      SnapshotTable.applyDeletes(spark, es, schema).withColumn("p_date", lit(d))
     }.reduceOption(_.unionByName(_))
       .getOrElse(return current) // zero-partition snapshot: nothing to delete
     val hits = byDate.filter(cond).select(col("doc_id"), col("p_cell"), col("p_date"))
@@ -718,11 +684,12 @@ object IngestJob {
       throw new IllegalStateException(s"no snapshot under $root"))
     val updates = updates0.persist()
     val updKeys = updates.select(col(key))
+    lazy val schema = SnapshotTable.readSchema(spark, current)
     // old LIVE locations of updated keys -> one delete vector per
     // partition; the discovery scan is bloom-pruned for small key sets
     val hits0 = bloomScanSet(current.parts, updKeys, key)
       .groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
-      SnapshotTable.applyDeletes(spark, es)
+      SnapshotTable.applyDeletes(spark, es, schema)
         .select(col(key), col("p_cell"))
         .join(updKeys, Seq(key), "left_semi")
         .withColumn("p_date", lit(d))

@@ -89,8 +89,7 @@ object IndexStoreQueries {
   def servedCosineTopK(spark: SparkSession, sfDir: String, k: Int = 5,
       nQueries: Int = 10): DataFrame = {
     val root = indexRoot(spark, sfDir)
-    val snap = SnapshotTable.snapshotAt(root, 2).get
-    val lists = spark.read.parquet(snap.parts.map(_.path): _*)
+    val lists = SnapshotTable.readAt(spark, root, 2)._1
     val cents = spark.read.parquet(s"$root/artifacts/centroids")
     val q = SimilarityQueries.normalizedEmb(spark, sfDir)
       .filter(col("vec_id") < nQueries)
@@ -105,8 +104,7 @@ object IndexStoreQueries {
     * centroid artifact + the delta rows only. */
   def indexDeltaAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val root = indexRoot(spark, sfDir)
-    val snap1 = SnapshotTable.snapshotAt(root, 1).get
-    val base = spark.read.parquet(snap1.parts.map(_.path): _*)
+    val base = SnapshotTable.readAt(spark, root, 1)._1
       .groupBy(col("cid")).agg(count(lit(1)).as("n_base"))
     val cents = spark.read.parquet(s"$root/artifacts/centroids")
     val added = SimilarityQueries.assignToCentroids(
@@ -200,8 +198,7 @@ object IndexStoreQueries {
     * materialized additions (it IS the refresh). */
   def chunkRegistryAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val root = registryRoot(spark, sfDir)
-    val snap1 = SnapshotTable.snapshotAt(root, 1).get
-    val stored = spark.read.parquet(snap1.parts.map(_.path): _*)
+    val stored = SnapshotTable.readAt(spark, root, 1)._1
       .select(col("h"), lit(1L).as("in_reg"))
     val w = Window.partitionBy(col("h")).orderBy(col("ts_sec"), col("doc_id"), col("cidx"))
     chunkStream(spark, sfDir).filter(isDocHoldout)

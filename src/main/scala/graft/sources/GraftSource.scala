@@ -455,18 +455,17 @@ private[sources] class GraftRelation(ctx: SQLContext, snap: SnapshotTable.Snapsh
     val keep = SnapshotTable.prunedParts(snap, pruning)
     GraftSource.lastPlanned = (keep.length, snap.parts.length)
     val cols = required.fieldNames.toSeq
+    // the read schema is the snapshot's recorded DDL contract, NOT footer
+    // inference: after an additive ALTER a date group mixes old and new
+    // files, and a single-footer inference would drop the new column for
+    // the whole group
+    lazy val contract = SnapshotTable.readSchema(spark, snap)
     val df =
       if (keep.isEmpty)
         spark.createDataFrame(new java.util.ArrayList[Row](), required)
       else keep.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
         // merge-on-read deletes apply BEFORE column pruning (the
-        // doc_id identity column need not be in the required set).
-        // The read schema is the snapshot's recorded DDL contract, NOT
-        // footer inference: after an additive ALTER the group mixes old
-        // and new files, and a single-footer inference would drop the new
-        // column for the whole group
-        val contract = Option(snap.schemaDdl).filter(_.nonEmpty)
-          .map(StructType.fromDDL)
+        // doc_id identity column need not be in the required set)
         val part = SnapshotTable.applyDeletes(spark, es, contract)
           .withColumn("p_date", lit(d))
         // schema-on-read: files written BEFORE an ALTER TABLE ADD COLUMN

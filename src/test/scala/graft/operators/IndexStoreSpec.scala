@@ -9,8 +9,10 @@ import graft.testutil.SparkTestBase
   * refresh plan touches only the delta. */
 class IndexStoreSpec extends SparkTestBase {
 
-  /** Root paths of every file scan in the query (the plan STRING truncates
-    * multi-path InMemoryFileIndex listings, so assert on the file index). */
+  /** Root paths of every file scan in the query: the input paths of a
+    * plain parquet read, the kept entry directories of a snapshot read
+    * (its `ManifestFileIndex`). The plan STRING truncates multi-path
+    * listings, so assert on the file index. */
   private def scanRoots(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.queryExecution.optimizedPlan.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
