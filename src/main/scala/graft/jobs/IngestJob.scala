@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Pages, SnapshotTable}
@@ -107,33 +108,31 @@ object IngestJob {
   def runPages(spark: SparkSession, pages: DataFrame, root: String, jobId: String,
       failAfter: Option[Int] = None): RunReport = {
 
-    // pass 1 — single stats aggregation; tiny (bucket x date) metadata rows
+    // pass 1 — single stats aggregation; tiny (bucket x date) metadata
+    // rows: the shared manifest stats, then fingerprint inputs and bloom.
+    // Computed from the input, not read back from the written files: the
+    // fingerprints decide which buckets get written at all.
+    val geo = SnapshotTable.hasGeo(pages.schema)
+    val stats = SnapshotTable.statsAgg(geo)
     val bloomUdaf = org.apache.spark.sql.functions.udaf(DocBloomAgg)
     val cellDate = pages.groupBy(col("p_cell"), col("p_date"))
-      .agg(count(lit(1)).as("rows"),
-        min(col("ilat")).as("mina"), max(col("ilat")).as("maxa"),
-        min(col("ilon")).as("mino"), max(col("ilon")).as("maxo"),
-        min(col("ts_sec")).as("mint"), max(col("ts_sec")).as("maxt"),
+      .agg(stats.head, stats.tail ++ Seq(
         min(col("doc_id")).as("mind"), max(col("doc_id")).as("maxd"),
         sum(col("doc_id")).as("sumd"), sum(col("n_chars")).as("sumc"),
-        bloomUdaf(col("doc_id")).as("bloom"))
+        bloomUdaf(col("doc_id")).as("bloom")): _*)
       .collect()
 
     // per-bucket fingerprints: driver-side fold of the stats rows
     val byCell: Seq[(Long, Long, String)] = cellDate.groupBy(_.getLong(0)).toSeq
       .map { case (cell, rs) =>
-        val rows = rs.map(_.getLong(2)).sum
-        (cell, rows, fingerprint(rows, rs.map(_.getLong(9)).min,
-          rs.map(_.getLong(10)).max, rs.map(_.getLong(11)).sum,
-          rs.map(_.getLong(12)).sum))
+        def f(c: String) = rs.map(_.getAs[Long](c))
+        val rows = f("rows").sum
+        (cell, rows, fingerprint(rows, f("mind").min, f("maxd").max, f("sumd").sum,
+          f("sumc").sum))
       }
       .sortBy(_._1)
 
-    // next seq from the committed-manifest list, not CURRENT: a crash
-    // between the manifest CAS and the CURRENT flip must not make the
-    // next run re-claim an already-taken seq
-    val seq = SnapshotTable.snapshotSeqs(root).lastOption.getOrElse(0L) + 1
-    val attemptDir = s"$root/data/$jobId/a$seq"
+    val dir = attemptDir(root, jobId)
 
     val priorLineage: Map[Long, Lineage] = byCell.flatMap { case (cell, _, _) =>
       SnapshotTable.readLineage(root, jobId, cell).map(cell -> _)
@@ -155,13 +154,13 @@ object IngestJob {
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("pc", "p_date")
-        .parquet(attemptDir)
+        .parquet(dir)
       val wallMs = (System.nanoTime() - t0) / 1000000
       // bucket-level lineage marks durability; wallMs is the write job's
       // wall (one job writes all stale buckets — attempt-level metric)
       stale.foreach { case (cell, rows, fp) =>
         SnapshotTable.writeLineage(root,
-          Lineage(jobId, cell, rows, wallMs, fp, s"$attemptDir/pc=$cell"))
+          Lineage(jobId, cell, rows, wallMs, fp, s"$dir/pc=$cell"))
       }
     }
     failAfter.foreach { n =>
@@ -171,15 +170,16 @@ object IngestJob {
     // manifest: stats from pass 1, paths from the (just-written or prior)
     // bucket lineage — snapshots may span attempts
     val cellPath: Map[Long, String] =
-      stale.map { case (cell, _, _) => cell -> s"$attemptDir/pc=$cell" }.toMap ++
+      stale.map { case (cell, _, _) => cell -> s"$dir/pc=$cell" }.toMap ++
         priorLineage.collect { case (cell, l) if l.dataPath.nonEmpty &&
           !stale.exists(_._1 == cell) => cell -> l.dataPath }
-    val stats = cellDate
+    // (the p_date directory name is escaped exactly as Spark names it)
+    val entries = cellDate
       .map { r =>
         val (cell, date) = (r.getLong(0), r.getString(1))
-        PartitionEntry(cell, date, s"${cellPath(cell)}/p_date=$date",
-          r.getLong(2), r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6),
-          r.getLong(7), r.getLong(8), bloom = Option(r.getAs[Array[Byte]]("bloom"))
+        SnapshotTable.statsEntry(cell, date,
+          s"${cellPath(cell)}/p_date=${escapePathName(date)}", r, 2, geo)
+          .copy(bloom = Option(r.getAs[Array[Byte]]("bloom"))
             .map(java.util.Base64.getEncoder.encodeToString))
       }
       .sortBy(e => (e.pCell, e.pDate))
@@ -192,9 +192,9 @@ object IngestJob {
     // survive, any prior version of this ingest's own (p_cell, p_date)
     // partitions is superseded — and only manifests holding superseded
     // keys are rewritten (metadata cost ∝ touched partitions).
-    val ownKeys = stats.map(e => (e.pCell, e.pDate)).toSet
+    val ownKeys = entries.map(e => (e.pCell, e.pDate)).toSet
     val committed = SnapshotTable.commitDeltaWithRetry(root)(
-      stats, p => ownKeys((p.pCell, p.pDate)),
+      entries, p => ownKeys((p.pCell, p.pDate)),
       removePCells = Some(ownKeys.map(_._1)),
       schemaVer = Some(1), schemaDdl = Some(schemaDdl),
       resolveResult = false) // only the seq is reported
@@ -241,16 +241,17 @@ object IngestJob {
     * published by atomic dir rename: two fresh JVMs racing the build can't
     * see (or delete) each other's half-built table — the loser keeps the
     * winner's. A failed build cleans its stage up instead of accumulating
-    * in the tmp dir. `build` receives (stagingRoot, finalRoot): WRITE under
-    * the staging root, RECORD the final root in manifests (the rename makes
-    * those paths real). Returns the final root once the table under it has
+    * in the tmp dir. `build` receives the staging root and writes and
+    * commits under it; manifests and lineage record the staged paths,
+    * which are translated to the final root before the rename. Returns
+    * the final root once the table under it has
     * snapshot `wantSeq` committed. `ver` is the BUILDER-LOGIC version and
     * is part of the cache key: bump it whenever the build closure's
     * semantics change, or a warm /tmp keeps serving the previous
     * semantics' table (the source-listing fingerprint only detects INPUT
     * changes). */
   private[graft] def cachedTable(prefix: String, sfDir: String, wantSeq: Long,
-      ver: Int = 1)(build: (String, String) => Unit): String = {
+      ver: Int = 1)(build: String => Unit): String = {
     val digest = java.security.MessageDigest.getInstance("MD5")
     val src = Paths.get(sfDir, "documents.parquet")
     val listing = {
@@ -265,12 +266,11 @@ object IngestJob {
     if (SnapshotTable.currentSeq(root) != Some(wantSeq)) {
       val stage = Files.createTempDirectory(s"$prefix-stage").toString
       try {
-        build(stage, root)
-        // builds that derive data paths from the root they were handed
-        // (runPages, mergeInto) recorded STAGE-absolute paths in manifests
-        // and lineage; translate them to their post-rename locations.
-        // Stage paths are tmp-dir names ([A-Za-z0-9/_.-]) — plain string
-        // replacement inside the JSON is escaping-safe.
+        build(stage)
+        // every writer records the STAGE-absolute paths it wrote in
+        // manifests and lineage; translate them to their post-rename
+        // locations. Stage paths are tmp-dir names ([A-Za-z0-9/_.-]) —
+        // plain string replacement inside the JSON is escaping-safe.
         val walk = Files.walk(Paths.get(stage))
         try walk.iterator().asScala
           .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".json"))
@@ -301,16 +301,11 @@ object IngestJob {
   def snapshotDiff(spark: SparkSession, sfDir: String): DataFrame = {
     val pages = Pages.fromDocuments(spark, sfDir)
       .select("doc_id", "url", "lang", "source", "ts_sec", "ilat", "ilon", "n_chars")
-    val root = cachedTable("graft-snapdiff", sfDir, 2L, ver = 2) { (stage, finalRoot) =>
-      def commit(seq: Long, df: DataFrame): Unit = {
-        df.write.mode(SaveMode.Overwrite).parquet(s"$stage/data/s$seq")
-        val st = df.agg(count(lit(1)), min(col("ilat")), max(col("ilat")),
-          min(col("ilon")), max(col("ilon")), min(col("ts_sec")), max(col("ts_sec"))).collect()(0)
+    val root = cachedTable("graft-snapdiff", sfDir, 2L, ver = 2) { stage =>
+      def commit(seq: Long, df: DataFrame): Unit =
         SnapshotTable.commitSnapshot(stage, Snapshot(seq, 1,
-          IndexedSeq(PartitionEntry(seq, "all", s"$finalRoot/data/s$seq", st.getLong(0),
-            st.getInt(1), st.getInt(2), st.getInt(3), st.getInt(4),
-            st.getLong(5), st.getLong(6))), df.schema.toDDL))
-      }
+          IndexedSeq(SnapshotTable.writeEntry(df, s"$stage/data/s$seq", seq, "all")),
+          df.schema.toDDL))
       commit(1, pages.filter(col("doc_id") % 3 =!= 0))
       commit(2, pages)
     }
@@ -404,34 +399,15 @@ object IngestJob {
         .withColumn("p_date", lit(d))
     }.reduceOption(_.unionByName(_))
     val updCols = updates.columns.toSeq
-    val merged = (oldRows match {
+    val merged = oldRows match {
       case Some(o) =>
         o.select(updCols.map(col): _*)
           .join(updates.select(col(key)), Seq(key), "left_anti")
           .unionByName(updates.select(updCols.map(col): _*))
       case None => updates
-    }).persist()
-
-    val seq = SnapshotTable.snapshotSeqs(root).lastOption.getOrElse(0L) + 1
-    val attemptDir = s"$root/data/$jobId/a$seq"
-    merged.withColumn("pc", col("p_cell"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pc", "p_date")
-      .parquet(attemptDir)
-    val stats = merged.groupBy(col("p_cell"), col("p_date"))
-      .agg(count(lit(1)).as("rows"),
-        min(col("ilat")), max(col("ilat")), min(col("ilon")), max(col("ilon")),
-        min(col("ts_sec")), max(col("ts_sec")))
-      .collect()
-      .map { r =>
-        PartitionEntry(r.getLong(0), r.getString(1),
-          s"$attemptDir/pc=${r.getLong(0)}/p_date=${r.getString(1)}",
-          r.getLong(2), r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6),
-          r.getLong(7), r.getLong(8))
-      }
-      .sortBy(e => (e.pCell, e.pDate)).toIndexedSeq
+    }
+    val stats = SnapshotTable.writePartitioned(merged, attemptDir(root, jobId))
     updates.unpersist(false)
-    merged.unpersist(false)
     // supersede everything rewritten OR touched: a touched partition whose
     // rows ALL moved away (global merge) produces no stats entry but its
     // old entry must still drop, or stale rows resurrect
@@ -479,7 +455,7 @@ object IngestJob {
     // not a (bucket x date) grid — the oracle math is date-independent
     def prepared = pagesWithPartitions(spark, sfDir)
       .withColumn("p_date", lit("all"))
-    val root = cachedTable("graft-merge", sfDir, 2L, ver = 2) { (stage, _) =>
+    val root = cachedTable("graft-merge", sfDir, 2L, ver = 2) { stage =>
       runPages(spark, prepared.filter(col("doc_id") % 3 =!= 0), stage, "base")
       mergeInto(spark, stage,
         prepared.filter(col("doc_id") % 2 === 0)
@@ -506,15 +482,9 @@ object IngestJob {
   def incrementalInventory(spark: SparkSession, sfDir: String): DataFrame = {
     val pages = Pages.fromDocuments(spark, sfDir)
       .select("doc_id", "lang", "ts_sec", "ilat", "ilon", "n_chars")
-    val root = cachedTable("graft-incr", sfDir, 2L, ver = 1) { (stage, finalRoot) =>
-      def part(seq: Long, df: DataFrame): PartitionEntry = {
-        df.write.mode(SaveMode.Overwrite).parquet(s"$stage/data/s$seq")
-        val st = df.agg(count(lit(1)), min(col("ilat")), max(col("ilat")),
-          min(col("ilon")), max(col("ilon")), min(col("ts_sec")), max(col("ts_sec"))).collect()(0)
-        PartitionEntry(seq, "all", s"$finalRoot/data/s$seq", st.getLong(0),
-          st.getInt(1), st.getInt(2), st.getInt(3), st.getInt(4),
-          st.getLong(5), st.getLong(6))
-      }
+    val root = cachedTable("graft-incr", sfDir, 2L, ver = 2) { stage =>
+      def part(seq: Long, df: DataFrame): PartitionEntry =
+        SnapshotTable.writeEntry(df, s"$stage/data/s$seq", seq, "all")
       val a = part(1, pages.filter(col("doc_id") % 3 =!= 0))
       SnapshotTable.commitSnapshot(stage, Snapshot(1, 1, IndexedSeq(a), pages.schema.toDDL))
       // materialize snapshot 1's inventory next to the snapshot (the
@@ -531,7 +501,8 @@ object IngestJob {
     val snap2 = SnapshotTable.snapshotAt(root, 2).get
     val newParts = snap2.parts.filterNot(p => snap1.parts.exists(_.path == p.path))
     val storedInv = spark.read.parquet(s"$root/inv/s1")
-    val deltaInv = spark.read.parquet(newParts.map(_.path): _*)
+    val deltaInv = SnapshotTable
+      .applyDeletes(spark, newParts, SnapshotTable.readSchema(spark, snap2))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
     storedInv.unionByName(deltaInv)
@@ -580,8 +551,7 @@ object IngestJob {
     // deleteWhere layers refs without moving the path — committing our
     // stale copy would drop its refs and resurrect its deleted rows
     val baseSet = current.parts.filter(p => touched((p.pCell, p.pDate))).toSet
-    val updated = baseSet.toSeq.sortBy(e => (e.pCell, e.pDate))
-      .map(p => p.copy(deletes = p.deletes :+ s"$dir/pc=${p.pCell}/pd=${p.pDate}"))
+    val updated = baseSet.toSeq.sortBy(e => (e.pCell, e.pDate)).map(withDeleteRef(_, dir))
     beforeCommit() // test hook: interleave a concurrent writer here
     SnapshotTable.commitDeltaWithRetry(root)(
       updated, p => touched((p.pCell, p.pDate)),
@@ -589,6 +559,19 @@ object IngestJob {
       schemaVer = Some(current.schemaVer), schemaDdl = Some(current.schemaDdl),
       validate = morConflictValidator(touched, baseSet, "delete"))
   }
+
+  /** Data dir of a writer's commit attempt, versioned by the seq it will
+    * commit (a committed path is never rewritten). The seq comes from the
+    * committed-snapshot list, not CURRENT: a crash between the snapshot
+    * CAS and the CURRENT flip must not make the next run re-claim an
+    * already-taken seq. */
+  private def attemptDir(root: String, jobId: String): String =
+    s"$root/data/$jobId/a${SnapshotTable.snapshotSeqs(root).lastOption.getOrElse(0L) + 1}"
+
+  /** `p` with the delete vector [[writeDeleteVectors]] wrote for it under
+    * commit dir `dir` layered on (`pd=` escaped as Spark names the dir). */
+  private def withDeleteRef(p: PartitionEntry, dir: String): PartitionEntry =
+    p.copy(deletes = p.deletes :+ s"$dir/pc=${p.pCell}/pd=${escapePathName(p.pDate)}")
 
   /** Write one delete-vector file per touched partition for `hits`
     * (doc_id, p_cell, p_date) under a FRESH uuid-tokenized commit dir (a
@@ -703,28 +686,12 @@ object IngestJob {
           val (dir, touched) = writeDeleteVectors(spark, root, h, jobId)
           h.unpersist(false)
           val refs = current.parts.filter(p => touched((p.pCell, p.pDate)))
-            .sortBy(e => (e.pCell, e.pDate))
-            .map(p => p.copy(deletes = p.deletes :+ s"$dir/pc=${p.pCell}/pd=${p.pDate}"))
+            .sortBy(e => (e.pCell, e.pDate)).map(withDeleteRef(_, dir))
           (refs, touched)
         }
     }
     // appended update partitions (attempt-versioned like every data write)
-    val seq = SnapshotTable.snapshotSeqs(root).lastOption.getOrElse(0L) + 1
-    val attemptDir = s"$root/data/$jobId/a$seq"
-    updates.withColumn("pc", col("p_cell"))
-      .write.mode(SaveMode.Overwrite).partitionBy("pc", "p_date").parquet(attemptDir)
-    val newEntries = updates.groupBy(col("p_cell"), col("p_date"))
-      .agg(count(lit(1)).as("rows"),
-        min(col("ilat")), max(col("ilat")), min(col("ilon")), max(col("ilon")),
-        min(col("ts_sec")), max(col("ts_sec")))
-      .collect()
-      .map { r =>
-        PartitionEntry(r.getLong(0), r.getString(1),
-          s"$attemptDir/pc=${r.getLong(0)}/p_date=${r.getString(1)}",
-          r.getLong(2), r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6),
-          r.getLong(7), r.getLong(8))
-      }
-      .sortBy(e => (e.pCell, e.pDate)).toIndexedSeq
+    val newEntries = SnapshotTable.writePartitioned(updates, attemptDir(root, jobId))
     updates.unpersist(false)
     val baseSet = current.parts.filter(p => touchedDel((p.pCell, p.pDate))).toSet
     beforeCommit() // test hook: interleave a concurrent writer here
@@ -743,7 +710,7 @@ object IngestJob {
   def morUpsertQuery(spark: SparkSession, sfDir: String): DataFrame = {
     def prepared = pagesWithPartitions(spark, sfDir)
       .withColumn("p_date", lit("all"))
-    val root = cachedTable("graft-morups", sfDir, 2L, ver = 1) { (stage, _) =>
+    val root = cachedTable("graft-morups", sfDir, 2L, ver = 1) { stage =>
       runPages(spark, prepared.filter(col("doc_id") % 3 =!= 0), stage, "base")
       mergeUpsertMor(spark, stage,
         prepared.filter(col("doc_id") % 2 === 0)
@@ -767,7 +734,7 @@ object IngestJob {
   def changelogQuery(spark: SparkSession, sfDir: String): DataFrame = {
     def prepared = pagesWithPartitions(spark, sfDir)
       .withColumn("p_date", lit("all"))
-    val root = cachedTable("graft-cdc", sfDir, 3L, ver = 1) { (stage, _) =>
+    val root = cachedTable("graft-cdc", sfDir, 3L, ver = 1) { stage =>
       runPages(spark, prepared.filter(col("doc_id") % 3 =!= 0), stage, "base")
       mergeUpsertMor(spark, stage,
         prepared.filter(col("doc_id") % 2 === 0)
@@ -788,7 +755,7 @@ object IngestJob {
     * read back CURRENT and aggregate. The oracle recomputes the surviving
     * set arithmetically — hash equality proves the MOR read path exact. */
   def morDeleteQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = cachedTable("graft-mor", sfDir, 2L, ver = 1) { (stage, _) =>
+    val root = cachedTable("graft-mor", sfDir, 2L, ver = 1) { stage =>
       runPages(spark, pagesWithPartitions(spark, sfDir), stage, "base")
       deleteWhere(spark, stage, col("doc_id") % 10 === 3, "del")
       ()
@@ -803,7 +770,7 @@ object IngestJob {
   /** Build-once root of the DSv2-read fixture table (shared by q76 and
     * `GraftSourceSpec`). */
   def dsv2TableRoot(spark: SparkSession, sfDir: String): String =
-    cachedTable("graft-dsv2", sfDir, 1L, ver = 1) { (stage, _) =>
+    cachedTable("graft-dsv2", sfDir, 1L, ver = 1) { stage =>
       runPages(spark, pagesWithPartitions(spark, sfDir), stage, "dsv2build")
       ()
     }

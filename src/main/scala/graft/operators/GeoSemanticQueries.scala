@@ -181,12 +181,10 @@ object GeoSemanticQueries {
     import graft.sources.SnapshotTable.{PartitionEntry, Snapshot}
     val vecSum = udaf(new VecSumAgg, ExpressionEncoder[Seq[Long]]())
     val ec = embCells(spark, sfDir, level).select(col("cell"), col("vec_id"), col("qv"))
-    val root = graft.jobs.IngestJob.cachedTable("graft-incr-vec", sfDir, 2L, ver = 1) {
-      (stage, finalRoot) =>
-        def part(seq: Long, df: org.apache.spark.sql.DataFrame): PartitionEntry = {
-          df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$stage/data/s$seq")
-          PartitionEntry(seq, "all", s"$finalRoot/data/s$seq", df.count(), 0, 0, 0, 0, 0L, 0L)
-        }
+    val root = graft.jobs.IngestJob.cachedTable("graft-incr-vec", sfDir, 2L, ver = 2) {
+      stage =>
+        def part(seq: Long, df: org.apache.spark.sql.DataFrame): PartitionEntry =
+          SnapshotTable.writeEntry(df, s"$stage/data/s$seq", seq, "all")
         val a = part(1, ec.filter(col("vec_id") % 3 =!= 0))
         SnapshotTable.commitSnapshot(stage, Snapshot(1, 1, IndexedSeq(a), ec.schema.toDDL))
         // the stored aggregate: per-cell count + elementwise vector SUM
@@ -202,7 +200,8 @@ object GeoSemanticQueries {
     val snap2 = SnapshotTable.snapshotAt(root, 2).get
     val newParts = snap2.parts.filterNot(p => snap1.parts.exists(_.path == p.path))
     val stored = spark.read.parquet(s"$root/agg/s1")
-    val delta = spark.read.parquet(newParts.map(_.path): _*)
+    val delta = SnapshotTable
+      .applyDeletes(spark, newParts, SnapshotTable.readSchema(spark, snap2))
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n"), vecSum(col("qv")).as("sv"))
     stored.unionByName(delta)

@@ -54,8 +54,8 @@ object IndexStoreQueries {
 
   /** Build-once persisted IVF index table for `sfDir`; returns its root. */
   private def indexRoot(spark: SparkSession, sfDir: String): String =
-    graft.jobs.IngestJob.cachedTable("graft-ivf-store", sfDir, 2L, ver = 1) {
-      (stage, finalRoot) =>
+    graft.jobs.IngestJob.cachedTable("graft-ivf-store", sfDir, 2L, ver = 2) {
+      stage =>
         val e = SimilarityQueries.normalizedEmb(spark, sfDir).persist()
         try {
           val train = e.filter(!isHoldout)
@@ -63,10 +63,8 @@ object IndexStoreQueries {
           val cents = SimilarityQueries.kmeansCentroids(
             train.select(col("vec_id"), col("qv")), c, SimilarityQueries.IvfIters)
           cents.write.mode(SaveMode.Overwrite).parquet(s"$stage/artifacts/centroids")
-          def part(seq: Long, df: DataFrame, name: String): PartitionEntry = {
-            df.write.mode(SaveMode.Overwrite).parquet(s"$stage/data/$name")
-            PartitionEntry(seq, name, s"$finalRoot/data/$name", df.count(), 0, 0, 0, 0, 0L, 0L)
-          }
+          def part(seq: Long, df: DataFrame, name: String): PartitionEntry =
+            SnapshotTable.writeEntry(df, s"$stage/data/$name", seq, name)
           val baseLists = SimilarityQueries.assignToCentroids(train, cents)
           val a = part(1, baseLists, "base")
           SnapshotTable.commitSnapshot(stage,
@@ -124,11 +122,10 @@ object IndexStoreQueries {
   /** Build-once persisted BPE merge table: q113's bounded trainer runs
     * ONCE per fixture and the merge list commits to the snapshot layer. */
   private def bpeRoot(spark: SparkSession, sfDir: String): String =
-    graft.jobs.IngestJob.cachedTable("graft-bpe-store", sfDir, 1L, ver = 1) {
-      (stage, finalRoot) =>
+    graft.jobs.IngestJob.cachedTable("graft-bpe-store", sfDir, 1L, ver = 2) {
+      stage =>
         val m = CurationQueries.bpeMerges(spark, sfDir).coalesce(1)
-        m.write.mode(SaveMode.Overwrite).parquet(s"$stage/data/merges")
-        val e = PartitionEntry(1, "merges", s"$finalRoot/data/merges", m.count(), 0, 0, 0, 0, 0L, 0L)
+        val e = SnapshotTable.writeEntry(m, s"$stage/data/merges", 1, "merges")
         SnapshotTable.commitSnapshot(stage, Snapshot(1, 1, IndexedSeq(e), m.schema.toDDL))
     }
 
@@ -167,13 +164,11 @@ object IndexStoreQueries {
     * snapshot 2 appends the delta's NEW digests (anti-joined against the
     * stored set — the registry only ever grows by what it hasn't seen). */
   private def registryRoot(spark: SparkSession, sfDir: String): String =
-    graft.jobs.IngestJob.cachedTable("graft-chunk-registry", sfDir, 2L, ver = 1) {
-      (stage, finalRoot) =>
+    graft.jobs.IngestJob.cachedTable("graft-chunk-registry", sfDir, 2L, ver = 2) {
+      stage =>
         val cs = chunkStream(spark, sfDir)
-        def part(seq: Long, df: DataFrame, name: String): PartitionEntry = {
-          df.write.mode(SaveMode.Overwrite).parquet(s"$stage/data/$name")
-          PartitionEntry(seq, name, s"$finalRoot/data/$name", df.count(), 0, 0, 0, 0, 0L, 0L)
-        }
+        def part(seq: Long, df: DataFrame, name: String): PartitionEntry =
+          SnapshotTable.writeEntry(df, s"$stage/data/$name", seq, name)
         val base = cs.filter(!isDocHoldout).select(col("h")).distinct()
         val a = part(1, base, "base")
         SnapshotTable.commitSnapshot(stage, Snapshot(1, 1, IndexedSeq(a), base.schema.toDDL))

@@ -78,7 +78,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
     SnapshotTable.currentSnapshot(root) match {
       case Some(snap) =>
         // snapshot pinned at load: one SELECT sees one snapshot throughout
-        new GraftTable(root, GraftSource.tableSchema(root), Some(snap))
+        new GraftTable(root, GraftSource.schemaOf(root, snap), Some(snap))
       case None =>
         // Iceberg-style metadata tables: graft.`t`.partitions / .snapshots
         // / .manifests — the inspection surface every table format needs
@@ -179,8 +179,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
     // check sees its own shape
     val base = StructType(schema.fields.filterNot(_.name == "p_date"))
     val ddlStruct =
-      if (Seq("ilat", "ilon", "ts_sec").forall(base.fieldNames.contains) &&
-          !base.fieldNames.contains("p_cell"))
+      if (SnapshotTable.hasGeo(base) && !base.fieldNames.contains("p_cell"))
         base.add("p_cell", org.apache.spark.sql.types.LongType, nullable = false)
       else base
     SnapshotTable.commitSnapshot(root,
@@ -200,24 +199,17 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
     * NOT NULL) stays refused — those rewrite data or break old readers. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val root = rootOf(ident)
-    // Read-recompute-retry (ADVICE r5 + r6 review): the schema must be
-    // RE-DERIVED from the snapshot current at each attempt — retrying a
-    // DDL computed from a stale read would silently drop a column a
-    // concurrent ALTER just added (and reuse its schemaVer for a
-    // different DDL). Each attempt delegates the seq/orphan handling to
-    // commitDeltaWithRetry (maxRetries = 0 — one attempt, conflicts come
-    // back here so the schema recomputes); removePCells = Some(empty) +
-    // resolveResult = false keep the schema-only commit's metadata I/O at
-    // zero manifests read (the CLAUDE.md ∝-touched-manifests rule — a
-    // schema bump touches none).
-    var attempts = 0
-    var done = false
-    while (!done) {
-      val cur = SnapshotTable.currentSnapshot(root).getOrElse(
+    // Read-recompute-retry: each attempt RE-DERIVES the schema from the
+    // snapshot current at that attempt — retrying a DDL computed from a
+    // stale read would silently drop a column a concurrent ALTER just
+    // added (and reuse its schemaVer for a different DDL). The level-1
+    // view carries the manifest refs over verbatim (as rollback does), so
+    // the schema-only commit reads no manifest.
+    SnapshotTable.commitWithRetry(root) { seq =>
+      val cur = SnapshotTable.currentSnapshotMeta(root).getOrElse(
         throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
           Seq(catalogName) ++ ident.namespace() :+ ident.name()))
-      val base = StructType.fromDDL(cur.schemaDdl)
-      val updated = changes.foldLeft(base) {
+      val updated = changes.foldLeft(StructType.fromDDL(cur.schemaDdl)) {
         case (sch, add: TableChange.AddColumn)
             if add.fieldNames().length == 1 && add.isNullable =>
           val name = add.fieldNames().head
@@ -228,17 +220,8 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog {
           readOnly(s"ALTER TABLE ${ch.getClass.getSimpleName} — only additive " +
             "nullable top-level ADD COLUMN evolves in place")
       }
-      try {
-        SnapshotTable.commitDeltaWithRetry(root, maxRetries = 0)(
-          Seq.empty, _ => false, removePCells = Some(Set.empty),
-          schemaVer = Some(cur.schemaVer + 1), schemaDdl = Some(updated.toDDL),
-          resolveResult = false)
-        done = true
-      } catch {
-        case e: SnapshotTable.SnapshotConflictException =>
-          attempts += 1
-          if (attempts > 10) throw e
-      }
+      SnapshotTable.Snapshot(seq, cur.schemaVer + 1, cur.parts, updated.toDDL,
+        cur.manifestRefs)
     }
     loadTable(ident)
   }

@@ -89,7 +89,7 @@ object GraftSource {
     }
 
   def tableSchema(root: String): StructType =
-    schemaOf(root, SnapshotTable.currentSnapshot(root).getOrElse(
+    schemaOf(root, SnapshotTable.currentSnapshotMeta(root).getOrElse(
       throw new IllegalStateException(s"no CURRENT snapshot under $root")))
 
   def schemaOf(root: String, snap: SnapshotTable.Snapshot): StructType = {
@@ -223,15 +223,14 @@ private[sources] object GraftTableWriter {
 
   def append(data: org.apache.spark.sql.DataFrame, root: String,
       overwrite: Boolean): Unit = {
-    val spark = data.sparkSession
     // Geo-bearing frames get the full (p_cell, p_date) layout + manifest
     // stats; frames WITHOUT the ilat/ilon/ts_sec trio (generic SQL
     // CREATE TABLE + INSERT) degrade to a single pc=0 layout cell with
     // WIDE-OPEN stats — pruning keeps everything (never wrongly drops),
     // and geo pushdowns can't exist because the columns don't.
-    val hasGeo = Seq("ilat", "ilon", "ts_sec").forall(data.columns.contains)
     val withParts = (
-      if (hasGeo) data.withColumn("p_cell", Pages.cellCol(col("ilat"), col("ilon"), 2))
+      if (SnapshotTable.hasGeo(data.schema))
+        data.withColumn("p_cell", Pages.cellCol(col("ilat"), col("ilon"), 2))
       else data)
       // null warc_ts degrades to a named partition, never a null dir key
       .withColumn("p_date",
@@ -245,8 +244,8 @@ private[sources] object GraftTableWriter {
     // appends — the DDL carry FORWARD so reader-side migrations keyed on
     // schema_ver keep applying exactly once. OVERWRITE replaces the
     // contents wholly and records the new frame's DDL at the table's
-    // current version.
-    val base = SnapshotTable.currentSnapshot(root)
+    // current version. The contract needs only the level-1 snapshot.
+    val base = SnapshotTable.currentSnapshotMeta(root)
     // contract compares names/types/order, NOT nullability: a NOT NULL
     // frame is a valid append into a nullable column (SQL CREATE TABLE
     // declares nullable; Spark's output resolver enforces the reverse
@@ -263,50 +262,8 @@ private[sources] object GraftTableWriter {
     val ver = base.map(_.schemaVer).getOrElse(1)
     val ddl = if (overwrite) writtenDdl else base.map(_.schemaDdl).filter(_.nonEmpty)
       .getOrElse(writtenDdl)
-    val dir = s"$root/data/insert-${java.util.UUID.randomUUID().toString.take(8)}"
-    withParts.withColumn("pc", if (hasGeo) col("p_cell") else lit(0L))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("pc", "p_date")
-      .parquet(dir)
-    // manifest stats from the FILES JUST WRITTEN, not a re-evaluation of
-    // the input plan: a non-deterministic input (rand-derived columns,
-    // order-dependent limits) must not produce stats describing rows the
-    // files don't hold — pruning on wrong min/max silently loses rows.
-    // Grouping keys come from the DATA columns (p_cell is stored; p_date
-    // is re-derived by the same deterministic expression), sidestepping
-    // partition-column type inference on the pc=/p_date= dir keys.
-    val readBack = spark.read.parquet(dir)
-    val rederivedDate =
-      if (readBack.columns.contains("warc_ts"))
-        coalesce(date_format(col("warc_ts"), "yyyy-MM-dd"), lit("unknown"))
-      else lit("all")
-    val entries = (
-      if (hasGeo)
-        readBack
-          .withColumn("p_date", rederivedDate)
-          .groupBy(col("p_cell"), col("p_date"))
-          .agg(count(lit(1)), min(col("ilat")), max(col("ilat")),
-            min(col("ilon")), max(col("ilon")), min(col("ts_sec")), max(col("ts_sec")))
-          .collect()
-          .map { r =>
-            val (pc, d) = (r.getLong(0), r.getString(1))
-            SnapshotTable.PartitionEntry(pc, d,
-              s"$dir/pc=$pc/p_date=$d", r.getLong(2),
-              r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6),
-              r.getLong(7), r.getLong(8))
-          }
-      else
-        readBack
-          .withColumn("p_date", rederivedDate)
-          .groupBy(col("p_date")).agg(count(lit(1)))
-          .collect()
-          .map { r =>
-            val d = r.getString(0)
-            SnapshotTable.PartitionEntry(0L, d, s"$dir/pc=0/p_date=$d", r.getLong(1),
-              Int.MinValue, Int.MaxValue, Int.MinValue, Int.MaxValue,
-              Long.MinValue, Long.MaxValue)
-          }
-      ).toIndexedSeq.sortBy(e => (e.pCell, e.pDate))
+    val entries = SnapshotTable.writePartitioned(withParts,
+      s"$root/data/insert-${java.util.UUID.randomUUID().toString.take(8)}")
     SnapshotTable.commitDeltaWithRetry(root)(
       entries,
       removeKey = if (overwrite) _ => true else _ => false,
@@ -411,25 +368,22 @@ private[sources] class GraftScan(snap: SnapshotTable.Snapshot,
     * pruned partition set) — without this the V1 execution path defaults
     * to "huge", and a small snapshot table would never be broadcast by
     * the join planner. sizeInBytes comes from the ACTUAL on-disk bytes of
-    * the pruned files (a schema-width estimate prices a 2 KB text column
-    * at 20 bytes and would trick the planner into broadcasting hundreds
-    * of MB); a missing path degrades to the conservative width estimate.
-    * The walk touches only pruned entries at plan time — at very high
-    * partition counts per-entry byte stats belong IN the manifest (the
-    * Iceberg layout); ceiling documented, not hidden. */
+    * the pruned files, listed under the scan's own rule
+    * ([[org.apache.spark.sql.graft.ManifestFileIndex]]: hidden `_SUCCESS`
+    * and `.crc` files do not count); a schema-width estimate prices a
+    * 2 KB text column at 20 bytes and would trick the planner into
+    * broadcasting hundreds of MB. A missing path degrades to that
+    * conservative width estimate. The listing touches only pruned entries
+    * at plan time — at very high partition counts per-entry byte stats
+    * belong IN the manifest (the Iceberg layout); ceiling documented, not
+    * hidden. */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
     val keep = SnapshotTable.prunedParts(snap, pruning)
     val rows = keep.map(_.rows).sum
     val bytes = keep.map { e =>
-      val p = java.nio.file.Paths.get(e.path)
-      if (java.nio.file.Files.exists(p)) {
-        val s = java.nio.file.Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size).sum
-        } finally s.close()
-      } else e.rows * math.max(1L, required.defaultSize.toLong)
+      if (java.nio.file.Files.exists(java.nio.file.Paths.get(e.path)))
+        new org.apache.spark.sql.graft.ManifestFileIndex(Seq(e.path)).sizeInBytes
+      else e.rows * math.max(1L, required.defaultSize.toLong)
     }.sum
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
 import org.apache.spark.sql.graft.ManifestFileIndex
 import org.apache.spark.sql.types.StructType
 
@@ -33,9 +34,23 @@ import org.apache.spark.sql.types.StructType
   * older files. Only a snapshot that records no DDL (legacy files,
   * hand-built snapshots) infers its schema, once, from its first entry.
   *
+  * Write path: every writer turns written rows into manifest entries
+  * through [[writePartitioned]] (frames carrying `p_cell`/`p_date`) or
+  * [[writeEntry]] (one directory). Both take each entry's path, row count
+  * and min/max stats from the files just written, so an entry describes
+  * exactly the directory Spark created (partition values escaped as Spark
+  * names them). Rows without (ilat, ilon, ts_sec) get bounds that prune
+  * nothing. The ingest's pass-1 aggregate reuses the same [[statsAgg]]
+  * columns and [[statsEntry]] decoder.
+  *
   * Commit protocol: write snap-<seq>.json, then move CURRENT into place via
   * an atomic rename — readers see the old or the new snapshot, never a
-  * partial one. Snapshots are immutable; history stays readable.
+  * partial one. Snapshots are immutable; history stays readable. Main
+  * commits retry through one optimistic loop, [[commitWithRetry]]: delta
+  * commits, compaction, rollback and schema changes rebuild their
+  * snapshot against the latest CURRENT inside it. Only [[commitToBranch]]
+  * keeps its own loop, because its attempt must also win the branch-ref
+  * CAS.
   */
 object SnapshotTable {
 
@@ -239,6 +254,11 @@ object SnapshotTable {
   def currentSnapshot(root: String): Option[Snapshot] =
     currentSeq(root).flatMap(snapshotAt(root, _))
 
+  /** Level-1 view of the CURRENT snapshot ([[parseSnapshotMeta]]): schema
+    * and manifest refs without reading any manifest file. */
+  def currentSnapshotMeta(root: String): Option[Snapshot] =
+    currentSeq(root).flatMap(snapshotMetaAt(root, _))
+
   /** Time travel: any committed snapshot stays readable by seq (snapshots
     * are immutable; data files are attempt-versioned and never rewritten
     * once referenced — see IngestJob). */
@@ -347,10 +367,10 @@ object SnapshotTable {
   private val currentAdvanceLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Retry loop for contended tables: re-resolve the latest committed seq,
-    * rebuild the snapshot through `build` (which must re-merge against the
-    * now-current state), and commit — the standard optimistic-concurrency
-    * pattern over the CAS above. */
+  /** The one retry loop of main commits: re-resolve the latest committed
+    * seq, rebuild the snapshot through `build` (which must re-merge
+    * against the now-current state), and commit — the standard
+    * optimistic-concurrency pattern over the CAS above. */
   def commitWithRetry(root: String, maxRetries: Int = 10)(build: Long => Snapshot): Snapshot = {
     var attempt = 0
     while (true) {
@@ -401,14 +421,12 @@ object SnapshotTable {
       validate: Seq[PartitionEntry] => Unit = _ => (),
       resolveResult: Boolean = true): Snapshot = {
     val newRef = if (newEntries.nonEmpty) Some(writeManifest(root, newEntries)) else None
-    var attempt = 0
-    while (true) {
-      val seq = snapshotSeqs(root).lastOption.getOrElse(0L) + 1
+    commitWithRetry(root, maxRetries) { seq =>
       // base on MAIN's CURRENT ref, NEVER the latest seq file: branch
       // commits (and orphaned lost-race branch snapshots) share the seq
       // space without advancing CURRENT — basing on seq-1 would silently
       // merge unpublished branch content into the next main commit
-      val base = currentSeq(root).flatMap(snapshotMetaAt(root, _))
+      val base = currentSnapshotMeta(root)
       val baseRefs: Seq[ManifestRef] = base match {
         case Some(b) if b.manifestRefs.nonEmpty => b.manifestRefs
         case Some(b) if b.parts.nonEmpty => Seq(writeManifest(root, b.parts))
@@ -435,21 +453,89 @@ object SnapshotTable {
           case Some(None) => None // fully superseded
         }
       } ++ newRef.map(_ -> Some(newEntries))
-      val refs = keptRefs.map(_._1)
       val parts =
         if (!resolveResult) Seq.empty
         else keptRefs.flatMap { case (r, es) => es.getOrElse(readManifest(r.path)) }
-      val snap = Snapshot(seq,
-        schemaVer.orElse(base.map(_.schemaVer)).getOrElse(1), parts,
-        schemaDdl.orElse(base.map(_.schemaDdl)).getOrElse(""), refs)
-      try { commitSnapshot(root, snap); return snap }
-      catch {
-        case e: SnapshotConflictException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+      Snapshot(seq, schemaVer.orElse(base.map(_.schemaVer)).getOrElse(1), parts,
+        schemaDdl.orElse(base.map(_.schemaDdl)).getOrElse(""), keptRefs.map(_._1))
     }
-    throw new IllegalStateException("unreachable")
+  }
+
+  // ---- write path: written files -> manifest entries -----------------------
+
+  /** Does a frame of `schema` carry the (ilat, ilon, ts_sec) trio the
+    * manifest stats describe? */
+  private[graft] def hasGeo(schema: StructType): Boolean =
+    Seq("ilat", "ilon", "ts_sec").forall(schema.fieldNames.contains)
+
+  /** The manifest stats of a row group as aggregate columns: the row
+    * count, then — when `geo` — min/max of ilat, ilon and ts_sec.
+    * [[statsEntry]] decodes them. */
+  private[graft] def statsAgg(geo: Boolean): Seq[Column] = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    count(lit(1)).as("rows") +: (if (!geo) Nil else Seq(
+      min(col("ilat")), max(col("ilat")), min(col("ilon")), max(col("ilon")),
+      min(col("ts_sec")), max(col("ts_sec"))))
+  }
+
+  /** The entry whose [[statsAgg]] columns start at `r(i)`. Without geo
+    * stats the bounds prune nothing. */
+  private[graft] def statsEntry(pCell: Long, pDate: String, path: String, r: Row, i: Int,
+      geo: Boolean): PartitionEntry =
+    if (geo) PartitionEntry(pCell, pDate, path, r.getLong(i),
+      r.getInt(i + 1), r.getInt(i + 2), r.getInt(i + 3), r.getInt(i + 4),
+      r.getLong(i + 5), r.getLong(i + 6))
+    else PartitionEntry(pCell, pDate, path, r.getLong(i),
+      Int.MinValue, Int.MaxValue, Int.MinValue, Int.MaxValue, Long.MinValue, Long.MaxValue)
+
+  /** Write `df` under `dir`, one directory per (p_cell, p_date) —
+    * `pc=<p_cell>/p_date=<p_date>`, `pc=0` for a frame without `p_cell`;
+    * `p_cell` stays a data column, `p_date` is only the directory key —
+    * and return one entry per directory written (none for an empty
+    * frame). Stats come from the files just written, never from
+    * re-evaluating `df`: a non-deterministic input must not produce stats
+    * describing rows the files don't hold. */
+  def writePartitioned(df: DataFrame, dir: String): Seq[PartitionEntry] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    df.withColumn("pc", if (df.columns.contains("p_cell")) col("p_cell") else lit(0L))
+      .write.mode(SaveMode.Overwrite).partitionBy("pc", "p_date").parquet(dir)
+    writtenEntries(df.sparkSession, dir, df.drop("p_date").schema)
+  }
+
+  /** Write `df` as the one entry (pCell, pDate) at `dir`, stats from the
+    * files just written (0 rows and prune-nothing bounds when empty). */
+  def writeEntry(df: DataFrame, dir: String, pCell: Long, pDate: String): PartitionEntry = {
+    df.write.mode(SaveMode.Overwrite).parquet(dir)
+    writtenEntries(df.sparkSession, dir, df.schema).headOption
+      .getOrElse(statsEntry(pCell, pDate, Paths.get(dir).toAbsolutePath.normalize.toString,
+        Row(0L), 0, geo = false))
+      .copy(pCell = pCell, pDate = pDate)
+  }
+
+  /** One entry per directory holding files under `dir`, from one
+    * aggregate over a manifest scan of `dir` (no listing or inference
+    * job) grouped by the directory of each row's file. The path is the
+    * directory Spark created; `pCell`/`pDate` are its `pc=`/`p_date=` keys,
+    * unescaped. */
+  private def writtenEntries(spark: SparkSession, dir: String,
+      fileSchema: StructType): Seq[PartitionEntry] = {
+    import org.apache.spark.sql.functions.{col, regexp_replace}
+    val geo = hasGeo(fileSchema)
+    val agg = statsAgg(geo)
+    ManifestFileIndex.scan(spark, Seq(dir), fileSchema)
+      .groupBy(regexp_replace(col("_metadata.file_path"), "/[^/]*$", ""))
+      .agg(agg.head, agg.tail: _*)
+      .collect().toSeq
+      .map { r =>
+        val path = new java.net.URI(r.getString(0)).getPath
+        val keys = path.split('/').toSeq.flatMap(_.split("=", 2) match {
+          case Array(k, v) => Some(k -> unescapePathName(v))
+          case _ => None
+        }).toMap
+        statsEntry(keys.get("pc").fold(0L)(_.toLong), keys.getOrElse("p_date", ""),
+          path, r, 1, geo)
+      }
+      .sortBy(e => (e.pCell, e.pDate))
   }
 
   // ---- pruned read ---------------------------------------------------------
@@ -1081,8 +1167,10 @@ object SnapshotTable {
 
   /** Compaction (the Iceberg rewrite-data-files analog): merge the
     * partitions selected by `pick` — one rewritten dir PER pDate group, so
-    * date-pruning semantics survive — and commit a snapshot where the
-    * merged entries replace them. Streaming sinks land one small dir per
+    * date-pruning semantics survive — and delta-commit the merged entries
+    * in their place, so only the manifests holding merged entries are
+    * rewritten; the merged entries' stats are exact, read from the
+    * rewritten files. Streaming sinks land one small dir per
     * micro-batch; compaction keeps read amplification bounded no matter
     * how long the stream runs. Old snapshots still reference the original
     * dirs (time travel intact) until `expire` collects them. Returns the
@@ -1104,45 +1192,30 @@ object SnapshotTable {
     val mergedPaths = merge.map(_.path).toSet
     // unique rewrite paths: concurrent compacts can never overwrite each
     // other's output (and a committed compact dir is never rewritten)
-    val token = java.util.UUID.randomUUID().toString.take(8)
+    val out = s"$root/data/compact-${java.util.UUID.randomUUID().toString.take(8)}"
     val entries = merge.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (date, g) =>
-      val outPath = s"$root/data/compact-$token/p_date=$date"
       // compaction APPLIES merge-on-read deletes: the rewritten files hold
       // only live rows and the merged entry carries no delete refs
-      applyDeletes(spark, g, schema)
-        .coalesce(math.max(1, (g.map(_.rows).sum / 1000000L).toInt))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(outPath)
-      val rows =
-        if (g.forall(_.deletes.isEmpty)) g.map(_.rows).sum
-        else spark.read.parquet(outPath).count() // physical rows shrank
-      PartitionEntry(g.map(_.pCell).min, date, outPath, rows,
-        g.map(_.minIlat).min, g.map(_.maxIlat).max,
-        g.map(_.minIlon).min, g.map(_.maxIlon).max,
-        g.map(_.minTs).min, g.map(_.maxTs).max)
+      writeEntry(applyDeletes(spark, g, schema)
+        .coalesce(math.max(1, (g.map(_.rows).sum / 1000000L).toInt)),
+        s"$out/p_date=${escapePathName(date)}", g.map(_.pCell).min, date)
     }
-    var attempt = 0
-    while (attempt <= 10) {
-      val seq = snapshotSeqs(root).lastOption.getOrElse(0L) + 1
-      // MAIN's CURRENT, never seq-1: an unpublished branch snapshot at the
-      // top of the seq space must not leak into the compacted main state
-      val latest = currentSnapshot(root).getOrElse(snap)
-      // abort (and clean up our orphaned rewrite) if a concurrent writer
-      // changed ANY selected entry — full case-class equality, not path
-      // equality: a deleteWhere layers delete refs WITHOUT moving the
-      // data path, and committing this rewrite over it would resurrect
-      // the concurrently-deleted rows
-      if (!merge.toSet.subsetOf(latest.parts.toSet)) {
-        recursiveDelete(Paths.get(s"$root/data/compact-$token"))
-        return None
-      }
-      // schemaVer/Ddl from the LATEST snapshot, not the stale entry read:
-      // a racing schema-evolving writer must not be reverted by a retry
-      val next = Snapshot(seq, latest.schemaVer,
-        latest.parts.filterNot(p => mergedPaths(p.path)) ++ entries, latest.schemaDdl)
-      try { commitSnapshot(root, next); return Some(next) }
-      catch { case _: SnapshotConflictException => attempt += 1 }
+    // abort (and clean up our orphaned rewrite) if a concurrent writer
+    // changed ANY selected entry — full case-class equality, not path
+    // equality: a deleteWhere layers delete refs WITHOUT moving the data
+    // path, and committing this rewrite over it would resurrect the
+    // concurrently-deleted rows. Schema ver/DDL carry forward from the
+    // latest snapshot, so a racing schema change is never reverted.
+    try Some(commitDeltaWithRetry(root)(entries, p => mergedPaths(p.path),
+      removePCells = Some(merge.map(_.pCell).toSet),
+      validate = affected => if (!merge.toSet.subsetOf(affected.toSet))
+        throw new java.util.ConcurrentModificationException(
+          s"compact conflict: a merged entry changed under $root")))
+    catch {
+      case _: java.util.ConcurrentModificationException =>
+        recursiveDelete(Paths.get(out))
+        None
     }
-    throw new IllegalStateException(s"compact lost $attempt commit races under $root")
   }
 
   // ---- lineage -------------------------------------------------------------

@@ -114,28 +114,20 @@ object StreamingJobs {
 
   /** One micro-batch → one immutable partition + one delta snapshot
     * commit (shared by the foreachBatch helper above and the
-    * `writeStream.format("graft")` sink). Stats BEFORE the write
-    * (cached, one source evaluation) so empty batches skip both the
-    * orphan dir and the commit. Idempotent under engine retries: a
-    * re-run batchId replaces its previous entry (same path) instead of
-    * duplicating. The delta commit writes one new manifest per batch,
-    * other writers' manifests re-referenced untouched. */
+    * `writeStream.format("graft")` sink). The batch is cached (one source
+    * evaluation) and an empty batch writes no dir and commits nothing.
+    * Idempotent under engine retries: a re-run batchId replaces its
+    * previous entry (same path) instead of duplicating. The delta commit
+    * writes one new manifest per batch, other writers' manifests
+    * re-referenced untouched. */
   def commitBatchToTable(batch: DataFrame, batchId: Long, root: String): Unit = {
     import graft.sources.SnapshotTable
-    import graft.sources.SnapshotTable.PartitionEntry
-    val path = s"$root/data/batch=$batchId"
     val cached = batch.persist()
-    val st = cached.agg(
-      count(lit(1)), min(col("ilat")), max(col("ilat")),
-      min(col("ilon")), max(col("ilon")),
-      min(col("ts_sec")), max(col("ts_sec"))).collect()(0)
-    if (st.getLong(0) > 0) {
-      cached.write.mode("overwrite").parquet(path)
-      val entry = PartitionEntry(batchId, "stream", path, st.getLong(0),
-        st.getInt(1), st.getInt(2), st.getInt(3), st.getInt(4),
-        st.getLong(5), st.getLong(6))
+    if (!cached.isEmpty) {
+      val entry = SnapshotTable.writeEntry(cached, s"$root/data/batch=$batchId",
+        batchId, "stream")
       SnapshotTable.commitDeltaWithRetry(root)(
-        Seq(entry), _.path == path, removePCells = Some(Set(entry.pCell)),
+        Seq(entry), _.path == entry.path, removePCells = Some(Set(batchId)),
         schemaVer = Some(1), schemaDdl = Some(cached.schema.toDDL),
         resolveResult = false) // per-batch commit must stay O(delta)
       ()
