@@ -337,8 +337,7 @@ object IngestJob {
   def mergeInto(spark: SparkSession, root: String, updates0: DataFrame,
       jobId: String, key: String = "doc_id",
       beforeCommit: () => Unit = () => ()): Snapshot = {
-    val current = SnapshotTable.currentSnapshot(root).getOrElse(
-      throw new IllegalStateException(s"no snapshot under $root"))
+    val current = SnapshotTable.requireCurrent(root)
     val updates = updates0.persist()
     val touchedKeys = updates.select(col("p_cell"), col("p_date")).distinct()
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -352,29 +351,21 @@ object IngestJob {
     * semi-join of the table's (key, partition) projection against the
     * update keys — those partitions are rewritten too, so the old-location
     * row is dropped, not duplicated. Cost shape at 100 TB: one
-    * column-pruned scan of (key, p_cell) per date group semi-joined
-    * against the (typically broadcastable) update keys — the unavoidable
-    * price of not knowing where keys live; everything downstream rewrites
-    * only the touched partitions, same as [[mergeInto]]. */
+    * column-pruned scan of (key, p_cell, p_date) semi-joined against the
+    * (typically broadcastable) update keys and collected in one job — the
+    * unavoidable price of not knowing where keys live; everything
+    * downstream rewrites only the touched partitions, same as
+    * [[mergeInto]]. */
   def mergeIntoGlobal(spark: SparkSession, root: String, updates0: DataFrame,
       jobId: String, key: String = "doc_id",
       beforeCommit: () => Unit = () => ()): Snapshot = {
-    val current = SnapshotTable.currentSnapshot(root).getOrElse(
-      throw new IllegalStateException(s"no snapshot under $root"))
+    val current = SnapshotTable.requireCurrent(root)
     val updates = updates0.persist()
     val targetKeys = updates.select(col("p_cell"), col("p_date")).distinct()
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val updKeys = updates.select(col(key))
-    lazy val schema = SnapshotTable.readSchema(spark, current)
-    val staleKeys: Set[(Long, String)] = bloomScanSet(current.parts, updKeys, key)
-      .groupBy(_.pDate).toSeq
-      .sortBy(_._1).flatMap { case (d, es) =>
-        SnapshotTable.applyDeletes(spark, es, schema)
-          .select(col(key), col("p_cell"))
-          .join(updKeys, Seq(key), "left_semi")
-          .select(col("p_cell")).distinct()
-          .collect().map(r => (r.getLong(0), d))
-      }.toSet
+    val staleKeys = keyLocations(spark, current, updates.select(col(key)), key)
+      .select(col("p_cell"), col("p_date")).distinct()
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     mergeRewrite(spark, root, current, updates, targetKeys ++ staleKeys,
       jobId, key, beforeCommit)
   }
@@ -386,26 +377,14 @@ object IngestJob {
       updates: DataFrame, touchedKeys: Set[(Long, String)], jobId: String,
       key: String, beforeCommit: () => Unit): Snapshot = {
     val touched = current.parts.filter(p => touchedKeys((p.pCell, p.pDate)))
-    // old rows of rewritten partitions; p_date is a directory key in the
-    // layout, re-attach it from the manifest entry. One multi-path scan
-    // per DATE (not per partition): a merge touching thousands of buckets
-    // must not plan thousands of single-file scans. Merge-on-read deletes
-    // APPLY here: a rewrite that read raw files would resurrect deleted
-    // rows (the rewritten entries carry no delete refs — the rewrite
-    // materializes them).
-    lazy val schema = SnapshotTable.readSchema(spark, current)
-    val oldRows = touched.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
-      SnapshotTable.applyDeletes(spark, es, schema)
-        .withColumn("p_date", lit(d))
-    }.reduceOption(_.unionByName(_))
-    val updCols = updates.columns.toSeq
-    val merged = oldRows match {
-      case Some(o) =>
-        o.select(updCols.map(col): _*)
-          .join(updates.select(col(key)), Seq(key), "left_anti")
-          .unionByName(updates.select(updCols.map(col): _*))
-      case None => updates
-    }
+    // old LIVE rows of rewritten partitions, p_date included: a rewrite
+    // that read raw files would resurrect deleted rows (the rewritten
+    // entries carry no delete refs — the rewrite materializes them)
+    val updCols = updates.columns.toSeq.map(col)
+    val merged = SnapshotTable.readDated(spark, touched, SnapshotTable.readSchema(spark, current))
+      .select(updCols: _*)
+      .join(updates.select(col(key)), Seq(key), "left_anti")
+      .unionByName(updates.select(updCols: _*))
     val stats = SnapshotTable.writePartitioned(merged, attemptDir(root, jobId))
     updates.unpersist(false)
     // supersede everything rewritten OR touched: a touched partition whose
@@ -417,30 +396,12 @@ object IngestJob {
     // TOUCHED partition since, committing would silently discard that
     // writer's rows — conflict must abort, not win. (Foreign partitions —
     // keys the merge does not touch — are merged in, never conflicted.)
-    // FULL-entry base set: conflicts include a concurrent deleteWhere
-    // layering refs on a touched partition (path unchanged) — this merge
-    // read its rows under the OLD delete set
-    val baseSet = touched.toSet
     beforeCommit() // test hook: interleave a concurrent writer here
     SnapshotTable.commitDeltaWithRetry(root)(
       stats, p => newKeys((p.pCell, p.pDate)),
       removePCells = Some(newKeys.map(_._1)),
       schemaVer = Some(current.schemaVer), schemaDdl = Some(current.schemaDdl),
-      // `affected` = entries of every manifest that may hold a newKeys
-      // cell — a superset of all entries this merge supersedes, so every
-      // conflicting concurrent write is visible here
-      validate = affected => affected.foreach { p =>
-        val k = (p.pCell, p.pDate)
-        // conflict if a touched key's partition was REWRITTEN (path
-        // moved), DELETE-layered (refs changed), or CREATED (absent from
-        // the base snapshot) by a concurrent writer: either way this
-        // merge's rows for that key were derived without seeing the other
-        // writer's rows
-        if (newKeys(k) && !baseSet.contains(p))
-          throw new java.util.ConcurrentModificationException(
-            s"merge conflict: partition $k was written (now ${p.path}) after this " +
-              "merge read its base rows — re-run the merge against the new snapshot")
-      })
+      validate = conflictValidator(newKeys, touched.toSet, "merge"))
   }
 
   /** MERGE-upsert end to end (oracle-gated q61): base snapshot = the
@@ -497,9 +458,9 @@ object IngestJob {
       val b = part(2, pages.filter(col("doc_id") % 3 === 0))
       SnapshotTable.commitSnapshot(stage, Snapshot(2, 1, IndexedSeq(a, b), pages.schema.toDDL))
     }
-    val snap1 = SnapshotTable.snapshotAt(root, 1).get
-    val snap2 = SnapshotTable.snapshotAt(root, 2).get
-    val newParts = snap2.parts.filterNot(p => snap1.parts.exists(_.path == p.path))
+    val snap2 = SnapshotTable.requireSnapshot(root, 2)
+    val newParts =
+      SnapshotTable.addedBetween(Some(SnapshotTable.requireSnapshot(root, 1)), snap2)
     val storedInv = spark.read.parquet(s"$root/inv/s1")
     val deltaInv = SnapshotTable
       .applyDeletes(spark, newParts, SnapshotTable.readSchema(spark, snap2))
@@ -535,14 +496,10 @@ object IngestJob {
   def deleteWhere(spark: SparkSession, root: String,
       cond: org.apache.spark.sql.Column, jobId: String,
       beforeCommit: () => Unit = () => ()): Snapshot = {
-    val current = SnapshotTable.currentSnapshot(root).getOrElse(
-      throw new IllegalStateException(s"no snapshot under $root"))
-    lazy val schema = SnapshotTable.readSchema(spark, current)
-    val byDate = current.parts.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
-      SnapshotTable.applyDeletes(spark, es, schema).withColumn("p_date", lit(d))
-    }.reduceOption(_.unionByName(_))
-      .getOrElse(return current) // zero-partition snapshot: nothing to delete
-    val hits = byDate.filter(cond).select(col("doc_id"), col("p_cell"), col("p_date"))
+    val current = SnapshotTable.requireCurrent(root)
+    val hits = SnapshotTable.readDated(spark, current.parts,
+        SnapshotTable.readSchema(spark, current))
+      .filter(cond).select(col("doc_id"), col("p_cell"), col("p_date"))
       .persist()
     if (hits.isEmpty) { hits.unpersist(false); return current } // nothing matched
     val (dir, touched) = writeDeleteVectors(spark, root, hits, jobId)
@@ -557,7 +514,7 @@ object IngestJob {
       updated, p => touched((p.pCell, p.pDate)),
       removePCells = Some(touched.map(_._1)),
       schemaVer = Some(current.schemaVer), schemaDdl = Some(current.schemaDdl),
-      validate = morConflictValidator(touched, baseSet, "delete"))
+      validate = conflictValidator(touched, baseSet, "delete"))
   }
 
   /** Data dir of a writer's commit attempt, versioned by the seq it will
@@ -577,7 +534,8 @@ object IngestJob {
     * (doc_id, p_cell, p_date) under a FRESH uuid-tokenized commit dir (a
     * reused jobId must not overwrite vector files a committed snapshot
     * still references), and read the touched keys back from the files
-    * actually written (data columns — dir keys are type-inference
+    * actually written, under a pinned (p_cell, p_date) schema with no
+    * listing or inference job (data columns — dir keys are type-inference
     * hazards). The pc=/pd= layout under ONE commit dir is load-bearing:
     * `applyDeletes` scopes delete sequencing by the commit dir (the ref's
     * parent), while per-entry refs point at the pc/pd leaf. Shared by
@@ -587,11 +545,26 @@ object IngestJob {
     val dir = s"$root/data/deletes/$jobId-${java.util.UUID.randomUUID().toString.take(8)}"
     hits.withColumn("pc", col("p_cell")).withColumn("pd", col("p_date"))
       .write.mode(SaveMode.Overwrite).partitionBy("pc", "pd").parquet(dir)
-    val touched = spark.read.parquet(dir)
-      .select(col("p_cell"), col("p_date")).distinct()
+    val touched = org.apache.spark.sql.graft.ManifestFileIndex.scan(spark, Seq(dir), KeySchema)
+      .distinct()
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     (dir, touched)
   }
+
+  /** The (p_cell, p_date) columns of a delete-vector file. */
+  private val KeySchema =
+    org.apache.spark.sql.types.StructType.fromDDL("p_cell BIGINT, p_date STRING")
+
+  /** Live (key, p_cell, p_date) rows of `current` whose `key` is among
+    * `updKeys`: where the updated keys live now, found globally so
+    * partition-moving keys are caught. The scan is bloom-pruned for small
+    * key sets ([[bloomScanSet]]). */
+  private def keyLocations(spark: SparkSession, current: Snapshot, updKeys: DataFrame,
+      key: String): DataFrame =
+    SnapshotTable.readDated(spark, bloomScanSet(current.parts, updKeys, key),
+        SnapshotTable.readSchema(spark, current))
+      .select(col(key), col("p_cell"), col("p_date"))
+      .join(updKeys, Seq(key), "left_semi")
 
   /** Key-skipping via per-partition blooms: when the update key set is
     * small enough to collect (point lookups — exactly where skipping
@@ -619,10 +592,14 @@ object IngestJob {
     }
   }
 
-  /** Shared MOR optimistic-concurrency rule: a touched partition whose
-    * FULL entry changed since this writer computed its row set (rewritten,
-    * delete-layered, or created concurrently) aborts the commit. */
-  private def morConflictValidator(touched: Set[(Long, String)],
+  /** The optimistic-concurrency rule of the merge, delete and MOR upsert
+    * writers: a touched partition whose FULL entry is not in the base set
+    * this writer read — rewritten (path moved), delete-layered (refs
+    * changed) or created concurrently — aborts the commit, since this
+    * writer's rows for it were derived without the other writer's.
+    * `affected` (from the delta commit) holds every entry of every manifest
+    * that may hold a touched cell, so each such write is visible. */
+  private def conflictValidator(touched: Set[(Long, String)],
       baseSet: Set[PartitionEntry],
       what: String): Seq[PartitionEntry] => Unit =
     affected => affected.foreach { p =>
@@ -663,33 +640,18 @@ object IngestJob {
       s"mergeUpsertMor requires key=doc_id (got '$key'): delete vectors are " +
         "doc_id row-identity sets (SnapshotTable.applyDeletes). Use " +
         "mergeIntoGlobal for non-doc_id merge keys (copy-on-write, key-generic).")
-    val current = SnapshotTable.currentSnapshot(root).getOrElse(
-      throw new IllegalStateException(s"no snapshot under $root"))
+    val current = SnapshotTable.requireCurrent(root)
     val updates = updates0.persist()
-    val updKeys = updates.select(col(key))
-    lazy val schema = SnapshotTable.readSchema(spark, current)
-    // old LIVE locations of updated keys -> one delete vector per
-    // partition; the discovery scan is bloom-pruned for small key sets
-    val hits0 = bloomScanSet(current.parts, updKeys, key)
-      .groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
-      SnapshotTable.applyDeletes(spark, es, schema)
-        .select(col(key), col("p_cell"))
-        .join(updKeys, Seq(key), "left_semi")
-        .withColumn("p_date", lit(d))
-    }.reduceOption(_.unionByName(_))
-    val (withRefs, touchedDel) = hits0 match {
-      case None => (Seq.empty[PartitionEntry], Set.empty[(Long, String)])
-      case Some(h0) =>
-        val h = h0.persist()
-        if (h.isEmpty) { h.unpersist(false); (Seq.empty[PartitionEntry], Set.empty[(Long, String)]) }
-        else {
-          val (dir, touched) = writeDeleteVectors(spark, root, h, jobId)
-          h.unpersist(false)
-          val refs = current.parts.filter(p => touched((p.pCell, p.pDate)))
-            .sortBy(e => (e.pCell, e.pDate)).map(withDeleteRef(_, dir))
-          (refs, touched)
-        }
-    }
+    // old LIVE locations of updated keys -> one delete vector per partition
+    val hits = keyLocations(spark, current, updates.select(col(key)), key).persist()
+    val (withRefs, touchedDel) =
+      if (hits.isEmpty) (Seq.empty[PartitionEntry], Set.empty[(Long, String)])
+      else {
+        val (dir, touched) = writeDeleteVectors(spark, root, hits, jobId)
+        (current.parts.filter(p => touched((p.pCell, p.pDate)))
+          .sortBy(e => (e.pCell, e.pDate)).map(withDeleteRef(_, dir)), touched)
+      }
+    hits.unpersist(false)
     // appended update partitions (attempt-versioned like every data write)
     val newEntries = SnapshotTable.writePartitioned(updates, attemptDir(root, jobId))
     updates.unpersist(false)
@@ -700,7 +662,7 @@ object IngestJob {
       removePCells = if (touchedDel.isEmpty) Some(Set.empty[Long])
         else Some(touchedDel.map(_._1)),
       schemaVer = Some(current.schemaVer), schemaDdl = Some(current.schemaDdl),
-      validate = morConflictValidator(touchedDel, baseSet, "MOR upsert"))
+      validate = conflictValidator(touchedDel, baseSet, "MOR upsert"))
   }
 
   /** MOR upsert end to end (oracle-gated q91): SAME base + update sets as

@@ -196,9 +196,9 @@ object GeoSemanticQueries {
         val b = part(2, ec.filter(col("vec_id") % 3 === 0))
         SnapshotTable.commitSnapshot(stage, Snapshot(2, 1, IndexedSeq(a, b), ec.schema.toDDL))
     }
-    val snap1 = SnapshotTable.snapshotAt(root, 1).get
-    val snap2 = SnapshotTable.snapshotAt(root, 2).get
-    val newParts = snap2.parts.filterNot(p => snap1.parts.exists(_.path == p.path))
+    val snap2 = SnapshotTable.requireSnapshot(root, 2)
+    val newParts =
+      SnapshotTable.addedBetween(Some(SnapshotTable.requireSnapshot(root, 1)), snap2)
     val stored = spark.read.parquet(s"$root/agg/s1")
     val delta = SnapshotTable
       .applyDeletes(spark, newParts, SnapshotTable.readSchema(spark, snap2))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Row, SQLContext}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -32,8 +32,9 @@ import graft.sources.SnapshotTable.Pruning
   * filtering).
   *
   * `p_date` is a directory key in the layout (not stored in files); the
-  * scan re-attaches it per partition group from the manifest entry, so it
-  * is both a queryable column and an exact prune key. */
+  * scan reads through [[SnapshotTable.readDated]], which takes it from
+  * each manifest entry, so it is both a queryable column and an exact
+  * prune key. */
 class GraftSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft"
 
@@ -48,8 +49,7 @@ class GraftSource extends TableProvider with DataSourceRegister {
     Option(options.get("snapshot")) match {
       case Some(seqStr) =>
         val seq = GraftSource.parseSnapshotOption(seqStr)
-        GraftSource.schemaOf(r, SnapshotTable.snapshotAt(r, seq).getOrElse(
-          throw new IllegalStateException(s"no snapshot $seq under $r")))
+        GraftSource.schemaOf(r, SnapshotTable.requireSnapshot(r, seq))
       case None => GraftSource.tableSchema(r)
     }
   }
@@ -67,8 +67,7 @@ class GraftSource extends TableProvider with DataSourceRegister {
     val pinned = Option(properties.get("snapshot")) match {
       case Some(seqStr) =>
         val seq = GraftSource.parseSnapshotOption(seqStr)
-        Some(SnapshotTable.snapshotAt(r, seq).getOrElse(
-          throw new IllegalStateException(s"no snapshot $seq under $r")))
+        Some(SnapshotTable.requireSnapshot(r, seq))
       case None => SnapshotTable.currentSnapshot(r)
     }
     new GraftTable(r, schema, pinned)
@@ -89,8 +88,7 @@ object GraftSource {
     }
 
   def tableSchema(root: String): StructType =
-    schemaOf(root, SnapshotTable.currentSnapshotMeta(root).getOrElse(
-      throw new IllegalStateException(s"no CURRENT snapshot under $root")))
+    schemaOf(root, SnapshotTable.requireCurrent(root, SnapshotTable.currentSnapshotMeta(root)))
 
   def schemaOf(root: String, snap: SnapshotTable.Snapshot): StructType = {
     val base =
@@ -125,8 +123,7 @@ private[sources] class GraftTable(root: String, schema0: StructType,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
   override def schema(): StructType = schema0
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(snap.getOrElse(
-      throw new IllegalStateException(s"no CURRENT snapshot under $root")), schema0)
+    new GraftScanBuilder(SnapshotTable.requireCurrent(root, snap), schema0)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -395,10 +392,10 @@ private[sources] class GraftScan(snap: SnapshotTable.Snapshot,
     new GraftRelation(context, snap, required, pruning).asInstanceOf[T]
 }
 
-/** V1 execution bridge: reads exactly the manifest-pruned file set with
-  * Spark's parquet source, re-attaching the p_date directory key per date
-  * group (one multi-path scan per DATE, bounded — never one per
-  * partition). */
+/** V1 execution bridge: reads exactly the manifest-pruned file set
+  * through [[SnapshotTable.readDated]] (delete vectors applied, `p_date`
+  * from each entry, one multi-path scan per DATE — never one per
+  * partition), then projects the required columns. */
 private[sources] class GraftRelation(ctx: SQLContext, snap: SnapshotTable.Snapshot,
     required: StructType, pruning: Pruning) extends BaseRelation with TableScan {
   override def sqlContext: SQLContext = ctx
@@ -408,29 +405,18 @@ private[sources] class GraftRelation(ctx: SQLContext, snap: SnapshotTable.Snapsh
     val spark = ctx.sparkSession
     val keep = SnapshotTable.prunedParts(snap, pruning)
     GraftSource.lastPlanned = (keep.length, snap.parts.length)
-    val cols = required.fieldNames.toSeq
     // the read schema is the snapshot's recorded DDL contract, NOT footer
     // inference: after an additive ALTER a date group mixes old and new
     // files, and a single-footer inference would drop the new column for
-    // the whole group
-    lazy val contract = SnapshotTable.readSchema(spark, snap)
-    val df =
-      if (keep.isEmpty)
-        spark.createDataFrame(new java.util.ArrayList[Row](), required)
-      else keep.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
-        // merge-on-read deletes apply BEFORE column pruning (the
-        // doc_id identity column need not be in the required set)
-        val part = SnapshotTable.applyDeletes(spark, es, contract)
-          .withColumn("p_date", lit(d))
-        // schema-on-read: files written BEFORE an ALTER TABLE ADD COLUMN
-        // lack the column — surface typed nulls so every snapshot reads
-        // through the current schema
-        val widened = required.fields.foldLeft(part) { (acc, f) =>
-          if (acc.columns.contains(f.name)) acc
-          else acc.withColumn(f.name, lit(null).cast(f.dataType))
-        }
-        widened.select(cols.map(col): _*)
-      }.reduce(_.unionByName(_))
-    df.rdd
+    // the whole group. A required column the contract lacks is scanned
+    // too: absent from every file, it reads as typed nulls.
+    val contract = SnapshotTable.readSchema(spark, snap)
+    val scanSchema = required.fields
+      .filterNot(f => f.name == "p_date" || contract.fieldNames.contains(f.name))
+      .foldLeft(contract)(_.add(_))
+    // merge-on-read deletes apply BEFORE column pruning (the doc_id
+    // identity column need not be in the required set)
+    SnapshotTable.readDated(spark, keep, scanSchema)
+      .select(required.fieldNames.toSeq.map(col): _*).rdd
   }
 }

@@ -34,6 +34,13 @@ import org.apache.spark.sql.types.StructType
   * older files. Only a snapshot that records no DDL (legacy files,
   * hand-built snapshots) infers its schema, once, from its first entry.
   *
+  * `p_date` is a directory key, not a file column. Every frame that
+  * carries it — merge and delete writers, `changesBetween`, the DSv2
+  * scan, the file-level stream — comes from one reader, [[readDated]]:
+  * delete vectors applied, one scan per date, the key taken from each
+  * entry, and the same typed shape when no entry is left. "Entries added
+  * between two snapshots" has one definition too, [[addedBetween]].
+  *
   * Write path: every writer turns written rows into manifest entries
   * through [[writePartitioned]] (frames carrying `p_cell`/`p_date`) or
   * [[writeEntry]] (one directory). Both take each entry's path, row count
@@ -266,6 +273,20 @@ object SnapshotTable {
     val p = Paths.get(root, "meta", s"snap-$seq.json")
     if (!Files.exists(p)) None else Some(parseSnapshot(Files.readString(p)))
   }
+
+  /** Snapshot `seq`; fails loudly when it was never committed or has
+    * been expired. */
+  def requireSnapshot(root: String, seq: Long): Snapshot =
+    snapshotAt(root, seq).getOrElse(
+      throw new IllegalStateException(s"no snapshot $seq under $root"))
+
+  /** The CURRENT snapshot; fails loudly when the root holds none. */
+  def requireCurrent(root: String): Snapshot = requireCurrent(root, currentSnapshot(root))
+
+  /** `snap`, a view of CURRENT the caller resolved itself (level-1 or
+    * pinned at load), failing like [[requireCurrent]] when absent. */
+  def requireCurrent(root: String, snap: Option[Snapshot]): Snapshot =
+    snap.getOrElse(throw new IllegalStateException(s"no CURRENT snapshot under $root"))
 
   /** Bottom-up recursive delete with closed streams — the ONE copy of the
     * walk-reverse-delete idiom (expire, snapshotDiff rebuilds). */
@@ -572,14 +593,12 @@ object SnapshotTable {
     * Returns (dataframe, partitionsRead, partitionsTotal). */
   def read(spark: SparkSession, root: String, p: Pruning = Pruning(),
       migrations: Migrations = Map.empty): (DataFrame, Int, Int) =
-    readSnapshot(spark, currentSnapshot(root).getOrElse(
-      throw new IllegalStateException(s"no CURRENT snapshot under $root")), p, migrations)
+    readSnapshot(spark, requireCurrent(root), p, migrations)
 
   /** Time-travel read of snapshot `seq` with the same pruning surface. */
   def readAt(spark: SparkSession, root: String, seq: Long,
       p: Pruning = Pruning(), migrations: Migrations = Map.empty): (DataFrame, Int, Int) =
-    readSnapshot(spark, snapshotAt(root, seq).getOrElse(
-      throw new IllegalStateException(s"no snapshot $seq under $root")), p, migrations)
+    readSnapshot(spark, requireSnapshot(root, seq), p, migrations)
 
   private def readSnapshot(spark: SparkSession, snap: Snapshot,
       p: Pruning, migrations: Migrations = Map.empty): (DataFrame, Int, Int) = {
@@ -649,6 +668,26 @@ object SnapshotTable {
       }.reduce(_.unionByName(_))
   }
 
+  /** The one reader of rows with their `p_date` directory key: the live
+    * rows of `entries` read under `schema` ([[applyDeletes]], one scan per
+    * date), `p_date` set from each entry's manifest key. No entries: the
+    * typed empty frame of the same shape. */
+  def readDated(spark: SparkSession, entries: Seq[PartitionEntry],
+      schema: StructType): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    entries.groupBy(_.pDate).toSeq.sortBy(_._1)
+      .map { case (d, es) => applyDeletes(spark, es, schema).withColumn("p_date", lit(d)) }
+      .reduceOption(_.unionByName(_))
+      .getOrElse(ManifestFileIndex.scan(spark, Nil, schema).withColumn("p_date", lit("")))
+  }
+
+  /** Entries `to` references that `from` does not — the files appended or
+    * rewritten between two snapshots; every entry of `to` without `from`. */
+  def addedBetween(from: Option[Snapshot], to: Snapshot): Seq[PartitionEntry] = {
+    val old = from.fold(Set.empty[String])(_.parts.map(_.path).toSet)
+    to.parts.filterNot(e => old(e.path))
+  }
+
   /** ROW-level CDC (the Iceberg changelog-view analog, on top of the
     * file-level [[changesBetween]]): the NET per-key changes between two
     * snapshots as (op, row) with op ∈ I/U/D — insert, update (content
@@ -669,19 +708,14 @@ object SnapshotTable {
       cache: Boolean = true): DataFrame = {
     import org.apache.spark.sql.functions._
     require(fromSeq < toSeq, s"fromSeq $fromSeq must precede toSeq $toSeq")
-    val from = snapshotAt(root, fromSeq).getOrElse(
-      throw new IllegalStateException(s"no snapshot $fromSeq under $root"))
-    val to = snapshotAt(root, toSeq).getOrElse(
-      throw new IllegalStateException(s"no snapshot $toSeq under $root"))
-    val fromPaths = from.parts.map(_.path).toSet
-    val toPaths = to.parts.map(_.path).toSet
+    val (from, to) = (requireSnapshot(root, fromSeq), requireSnapshot(root, toSeq))
     // candidate keys: everything a file-level change between the two
     // snapshots can possibly touch — rows of ADDED files, rows of REMOVED
     // files (a compact that materialized deletes, a rollback that dropped
     // an append), and ids in delete vectors layered OR un-layered in the
     // window (an un-layered vector = a rollback resurrecting rows).
-    val added = to.parts.filterNot(e => fromPaths(e.path)).map(_.path)
-    val removed = from.parts.filterNot(e => toPaths(e.path)).map(_.path)
+    val added = addedBetween(Some(from), to).map(_.path)
+    val removed = addedBetween(Some(to), from).map(_.path)
     val fromDelRefs = from.parts.flatMap(_.deletes).toSet
     val toDelRefs = to.parts.flatMap(_.deletes).toSet
     val changedDels =
@@ -794,38 +828,16 @@ object SnapshotTable {
     * included — the consumer dedups on its key if it needs row-level
     * changes (same caveat Iceberg documents for non-append commits).
     * Bytes read ∝ delta, never table size. Returns (frame, deltaParts,
-    * totalParts); p_date re-attached per date group. */
+    * totalParts); rows come from [[readDated]], `p_date` included, and an
+    * empty delta is the typed empty frame of the same shape. */
   def changesBetween(spark: SparkSession, root: String, fromSeq: Long,
       toSeq: Long): (DataFrame, Int, Int) = {
     require(fromSeq < toSeq, s"fromSeq $fromSeq must precede toSeq $toSeq")
-    val from = snapshotAt(root, fromSeq).getOrElse(
-      throw new IllegalStateException(s"no snapshot $fromSeq under $root"))
-    val to = snapshotAt(root, toSeq).getOrElse(
-      throw new IllegalStateException(s"no snapshot $toSeq under $root"))
-    val fromPaths = from.parts.map(_.path).toSet
-    val delta = to.parts.filterNot(p => fromPaths(p.path))
-    val df =
-      if (delta.isEmpty) {
-        if (to.schemaDdl.nonEmpty) {
-          val base = org.apache.spark.sql.types.StructType.fromDDL(to.schemaDdl)
-          // guard like GraftSource.tableSchema: a writer that recorded the
-          // full frame DDL already carries p_date — don't duplicate it
-          val withDate =
-            if (base.fieldNames.contains("p_date")) base
-            else base.add("p_date", org.apache.spark.sql.types.StringType)
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            withDate)
-        } else spark.emptyDataFrame
-      } else {
-        val schema = readSchema(spark, to)
-        delta.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
-          // delivered rows honor the TO snapshot's delete vectors — a
-          // delta file never surfaces rows already deleted as of `toSeq`
-          applyDeletes(spark, es, schema)
-            .withColumn("p_date", org.apache.spark.sql.functions.lit(d))
-        }.reduce(_.unionByName(_))
-      }
-    (df, delta.length, to.parts.length)
+    val (from, to) = (requireSnapshot(root, fromSeq), requireSnapshot(root, toSeq))
+    val delta = addedBetween(Some(from), to)
+    // delivered rows honor the TO snapshot's delete vectors — a delta
+    // file never surfaces rows already deleted as of `toSeq`
+    (readDated(spark, delta, readSchema(spark, to)), delta.length, to.parts.length)
   }
 
   /** DELETIONS between two snapshots: the doc_ids of every delete file
@@ -836,10 +848,7 @@ object SnapshotTable {
   def deleteDeltaBetween(spark: SparkSession, root: String, fromSeq: Long,
       toSeq: Long): DataFrame = {
     require(fromSeq < toSeq, s"fromSeq $fromSeq must precede toSeq $toSeq")
-    val from = snapshotAt(root, fromSeq).getOrElse(
-      throw new IllegalStateException(s"no snapshot $fromSeq under $root"))
-    val to = snapshotAt(root, toSeq).getOrElse(
-      throw new IllegalStateException(s"no snapshot $toSeq under $root"))
+    val (from, to) = (requireSnapshot(root, fromSeq), requireSnapshot(root, toSeq))
     val old = from.parts.flatMap(_.deletes).toSet
     val fresh = to.parts.flatMap(_.deletes).distinct.filterNot(old)
     if (fresh.isEmpty)
@@ -1184,8 +1193,7 @@ object SnapshotTable {
     * its idempotency key is the original partition path. */
   def compact(spark: SparkSession, root: String)
       (pick: PartitionEntry => Boolean): Option[Snapshot] = {
-    val snap = currentSnapshot(root).getOrElse(
-      throw new IllegalStateException(s"no CURRENT snapshot under $root"))
+    val snap = requireCurrent(root)
     val merge = snap.parts.filter(pick)
     if (merge.length < 2) return None
     val schema = readSchema(spark, snap)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Microbench for the cell-expression codegen (verdict r3 #8):
@@ -10,14 +9,12 @@ import org.apache.spark.sql.functions._
   * which is what every row paid under CodegenFallback, minus the
   * fallback's extra boxing) and once with the default codegen path —
   * and prints the per-row gap. Median of 3 timed passes after a
-  * warm-up pass, same input both modes. */
+  * warm-up pass, same input both modes. The session is
+  * `GraftSession.build`: local[`SPARK_GRAFT_CPUS`] (default 4). */
 object CellCodegenBench {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(20000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.GraftSession.build("graft-cell-codegen-bench")
     graft.functions.GraftFunctions.register(spark)
 
     def cellIdScan() = spark.range(rows)

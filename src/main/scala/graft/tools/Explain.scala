@@ -1,13 +1,13 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
+
+/** Plan summary per query — `runMain graft.tools.Explain <qid>...`: hash
+  * exchanges, nested-loop joins and codegen spans of the executed plan,
+  * on SPARK_GRAFT_SF_DIR (default sf0.01). The session is
+  * `GraftSession.build`: local[`SPARK_GRAFT_CPUS`] (default 4). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.GraftSession.build("graft-explain")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     for (q <- args) {
       val df = SparkEntry.queries(q)(spark, sf)

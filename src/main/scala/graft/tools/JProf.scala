@@ -1,20 +1,16 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Job/stage profile for one suite query at sf0.1 — how many jobs and
   * stages an action schedules and where the wall time goes (fixed
   * stage-latency diagnosis; round-2 verdict). Usage:
-  * `runMain graft.tools.JProf <qid> [<qid>...]`. */
+  * `runMain graft.tools.JProf <qid> [<qid>...]`. The session is
+  * `GraftSession.build`: local[`SPARK_GRAFT_CPUS`] (default 4). */
 object JProf {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.GraftSession.build("graft-jprof")
     val sf = "/root/testdata/sf0.1"
     SparkEntry.queries("q10_pricing_summary")(spark, sf).count() // warm-up
     for (q <- args) {

@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -15,21 +14,16 @@ import graft.SparkEntry
   *   SPARK_GRAFT_PLAN_TAG=before SPARK_GRAFT_REPS=3 \
   *     sbt -batch "runMain graft.tools.QProf q106_page_rank ..."
   *
-  * Mirrors the Bench session exactly (local[32], shuffle.partitions=32,
-  * AQE on) so plan shapes match what the driver measures.
+  * The session is `GraftSession.build` (local[`SPARK_GRAFT_CPUS`],
+  * default 4; shuffle partitions = cores, AQE on), the settings Bench
+  * uses, so plan shapes match what Bench measures at the same core count.
   */
 object QProf {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.GraftSession.build("graft-qprof")
 
     @volatile var jobs = 0
     @volatile var stages = 0

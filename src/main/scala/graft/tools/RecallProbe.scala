@@ -1,19 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.SimilarityQueries
 
 /** Measures q41 banded-LSH recall@20 vs brute force and the bucket-share
   * cap at both verify sfs — the tuning probe for the NumTables /
-  * BandPlanes / BucketCap knobs. */
+  * BandPlanes / BucketCap knobs. The session is `GraftSession.build`:
+  * local[`SPARK_GRAFT_CPUS`] (default 4). */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.GraftSession.build("graft-recall-probe")
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     for (sf <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {

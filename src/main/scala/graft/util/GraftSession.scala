@@ -2,9 +2,11 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Single source of truth for the engine's session configuration (Bench,
-  * CLI, any future main). Verify.scala keeps its own driver-authored
-  * builder — that file is the harness contract and stays untouched. */
+/** Single source of truth for the engine's session configuration: the
+  * CLI, the `graft.tools` mains and any future main build their session
+  * here, with the core count from `SPARK_GRAFT_CPUS` (default 4).
+  * Bench.scala and Verify.scala keep their own builders with the same
+  * settings — those files are the harness contract and stay untouched. */
 object GraftSession {
   def build(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

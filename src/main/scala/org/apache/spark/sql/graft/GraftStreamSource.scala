@@ -167,15 +167,11 @@ private[graft] class GraftCdcSource(sqlContext: SQLContext, root: String,
     val hi = seqOf(end)
     val payload = schema.fieldNames.toSeq.drop(2)
     val df0 =
-      if (lo == 0L) {
+      if (lo == 0L)
         // initial snapshot: every live row as 'I' (the CDF convention)
-        val to = SnapshotTable.snapshotAt(root, hi).getOrElse(
-          throw new IllegalStateException(s"no snapshot $hi under $root"))
-        if (to.parts.isEmpty)
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        else SnapshotTable.applyDeletes(spark, to.parts, SnapshotTable.readSchema(spark, to))
+        SnapshotTable.readAt(spark, root, hi)._1
           .select(Seq(lit("I").as("op"), col("doc_id")) ++ payload.map(col): _*)
-      } else
+      else
         // cache=false is deliberate: the candidate set is delta-bounded,
         // so the double scan (one per endpoint semi-join) is cheap, while
         // a per-batch cache in a long-running stream has no release point
@@ -205,30 +201,20 @@ private[graft] class GraftStreamSource(sqlContext: SQLContext, root: String,
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val lo = start.map(seqOf).getOrElse(fromSeq)
     val hi = seqOf(end)
-    val basePaths: Set[String] =
-      if (lo == 0L) Set.empty
-      else SnapshotTable.snapshotAt(root, lo).getOrElse(
+    val spark = sqlContext.sparkSession
+    val base =
+      if (lo == 0L) None
+      else Some(SnapshotTable.snapshotAt(root, lo).getOrElse(
         throw new IllegalStateException(
-          s"snapshot $lo under $root was expired while a stream still needed it"))
-        .parts.map(_.path).toSet
-    val to = SnapshotTable.snapshotAt(root, hi).getOrElse(
-      throw new IllegalStateException(s"no snapshot $hi under $root"))
-    val delta = to.parts.filterNot(p => basePaths(p.path))
-    val cols = schema.fieldNames.toSeq
-    lazy val readSchema = SnapshotTable.readSchema(sqlContext.sparkSession, to)
-    val df =
-      if (delta.isEmpty)
-        sqlContext.sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else delta.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (d, es) =>
-        // honor the batch snapshot's delete vectors on delivered rows.
-        // NOTE: delete-ONLY commits advance the offset with an empty
-        // batch (file-level CDC) — replicas additionally consume
-        // SnapshotTable.deleteDeltaBetween for the removed ids.
-        SnapshotTable.applyDeletes(sqlContext.sparkSession, es, readSchema)
-          .withColumn("p_date", lit(d))
-          .select(cols.map(col): _*)
-      }.reduce(_.unionByName(_))
+          s"snapshot $lo under $root was expired while a stream still needed it")))
+    val to = SnapshotTable.requireSnapshot(root, hi)
+    // honor the batch snapshot's delete vectors on delivered rows.
+    // NOTE: delete-ONLY commits advance the offset with an empty batch
+    // (file-level CDC) — replicas additionally consume
+    // SnapshotTable.deleteDeltaBetween for the removed ids.
+    val df = SnapshotTable.readDated(spark, SnapshotTable.addedBetween(base, to),
+        SnapshotTable.readSchema(spark, to))
+      .select(schema.fieldNames.toSeq.map(col): _*)
     // V1 streaming contract: the batch frame must carry isStreaming=true
     sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
       .internalCreateDataFrame(df.queryExecution.toRdd, schema, isStreaming = true)

@@ -174,4 +174,30 @@ class ManifestScanSpec extends SparkTestBase {
       assert(sql === post.orderBy("k").select("k", "score").collect().toSeq)
     } finally SnapshotTable.recursiveDelete(java.nio.file.Paths.get(wh))
   }
+
+  test("deleteWhere and mergeUpsertMor read touched keys back with no listing or inference job") {
+    val root = tmpRoot("manifest-scan-dv")
+    val pages = IngestJob.pagesWithPartitions(spark, sf0001)
+    IngestJob.runPages(spark, pages, root, "dv")
+    val (_, delJobs) = jobsOf(IngestJob.deleteWhere(spark, root, col("doc_id") % 7 === 2, "dvdel"))
+    val upd = pages.filter(col("doc_id") % 5 === 1).withColumn("n_chars", col("n_chars") + 1L)
+    val (_, morJobs) = jobsOf(IngestJob.mergeUpsertMor(spark, root, upd, "dvmor"))
+    // a footer-inferred read-back of the vectors adds one job to each
+    // (5 and 13 jobs)
+    assert(delJobs <= 4, s"deleteWhere ran $delJobs jobs")
+    assert(morJobs <= 12, s"mergeUpsertMor ran $morJobs jobs")
+    // the vectors mask exactly the deleted rows and the upserted keys' old
+    // rows; upserted keys deleted earlier come back
+    val (df, _, _) = SnapshotTable.read(spark, root)
+    val upKey = col("doc_id") % 5 === 1
+    assert(df.count() ===
+      pages.filter(col("doc_id") % 7 =!= 2).count() + pages.filter(upKey && col("doc_id") % 7 === 2).count())
+    def chars(d: DataFrame): (Long, Long) = {
+      val r = d.filter(upKey).agg(count(lit(1)), sum("n_chars")).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val (n, c) = chars(pages)
+    assert(chars(df) === ((n, c + n)))
+    SnapshotTable.recursiveDelete(java.nio.file.Paths.get(root))
+  }
 }
