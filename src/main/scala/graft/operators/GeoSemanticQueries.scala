@@ -63,10 +63,7 @@ object GeoSemanticQueries {
     * via the pages equi-join on doc_id (vec_id ≡ doc_id in the fixture).
     * Column pruning keeps the pages side at (doc_id, ilat, ilon, ts). */
   private def embCells(spark: SparkSession, sfDir: String, level: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => floor(x.cast("double") * 1000).cast("long")).as("qv"))
+    val e = SimilarityQueries.vectors(spark, sfDir)
     val p = Pages.fromDocuments(spark, sfDir)
       .select(col("doc_id"), col("ts_sec"),
         Pages.cellCol(col("ilat"), col("ilon"), level).as("cell"))
@@ -99,17 +96,17 @@ object GeoSemanticQueries {
   /** q100 — geo-semantic outliers: top-k per cell by distance from the
     * cell's own centroid (ties → lower vec_id). The centroid side is
     * ≤ 4^level rows — broadcast; the corpus-side work is one scan + the
-    * per-cell ranking window. */
+    * bounded per-cell top-k aggregate on (-dist, vec_id) — ORDER BY dist
+    * DESC, vec_id (dist is a non-negative BIGINT, so its negation cannot
+    * overflow). */
   def geoOutliers(spark: SparkSession, sfDir: String, level: Int = Level,
       k: Int = OutlierK): DataFrame = {
     val c = centroids(spark, sfDir, level).select(col("cell"), col("centroid"))
-    val w = Window.partitionBy(col("cell")).orderBy(col("dist").desc, col("vec_id"))
-    embCells(spark, sfDir, level)
+    val scored = embCells(spark, sfDir, level)
       .join(broadcast(c), Seq("cell"))
       .withColumn("dist", graft.functions.GraftFunctions.l2_dist(col("qv"), col("centroid")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("cell"), col("rnk"), col("vec_id"), col("dist"))
+    SimilarityQueries.topKByGroup(scored, "cell", -col("dist"), col("vec_id"), k)
+      .select(col("cell"), col("rnk"), col("b").as("vec_id"), (-col("a")).as("dist"))
       .orderBy(col("cell"), col("rnk"))
   }
 

@@ -234,14 +234,4 @@ object MultiModal {
         "CAST(sum(CASE WHEN id % 13 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupt " +
         "FROM d GROUP BY kind ORDER BY kind"),
   )
-
-  /** Metadata inventory over the decoded table — the relational surface a
-    * training pipeline filters on (dims, frame counts, per-kind stats). */
-  def mediaInventory(spark: SparkSession, n: Long): DataFrame =
-    decodeAll(mediaTable(spark, n))
-      .groupBy(col("kind"))
-      .agg(count(lit(1)).as("n_media"), sum(col("n_frames")).as("sum_frames"),
-        min(col("width")).as("min_w"), max(col("width")).as("max_w"),
-        countDistinct(col("checksum")).as("n_distinct_payloads"))
-      .orderBy(col("kind"))
 }

@@ -10,14 +10,19 @@ import org.apache.spark.sql.expressions.{Aggregator, Window}
   * Metric determinism: vectors are quantized to integer milli-units
   * (floor(x * 1000) on the double-widened float — bit-identical in Spark
   * and DuckDB), so distances are exact BIGINTs and rankings are fully
-  * reproducible across engines. Float cosine lives in the ScalaTest layer.
+  * reproducible across engines.
   *
-  *  - `l2TopK`: brute-force exact top-k (the correctness baseline; at
-  *    scale this is the per-probe re-rank step, broadcast the queries).
-  *  - `lshTopK`: random-hyperplane LSH — 8 deterministic integer
-  *    hyperplanes -> 8-bit bucket signature; candidates only within the
-  *    same bucket (the scale path: the self-join is an equi-join on the
-  *    bucket key, shuffled by bucket, never an all-pairs product).
+  * Every search runs candidate -> score -> top-k through one path per
+  * step:
+  *  - candidates: [[vectors]] is the one embedding reader; the scans are
+  *    brute force (q31/q96/q121/q124), LSH buckets (q32), SQ8/PQ codes
+  *    (q93/q63) and IVF probes ([[probeRank]]: q46/q98/q127);
+  *  - scores: `l2_dist` ([[l2Rank]]) or the exact integer cosine
+  *    ([[cosineRank]]);
+  *  - top-k: [[topKByGroup]], the bounded partial top-k aggregate — no
+  *    per-query ranking window ever holds candidate rows. The one window
+  *    left is the IVF probe's, over nQueries x sqrt(n) centroid rows.
+  * Near-dup pairs (q41) rank globally through a distributed top-N.
   */
 object SimilarityQueries {
 
@@ -28,14 +33,21 @@ object SimilarityQueries {
     * the LSH worst case. More planes only pay off when vectors cluster. */
   final val NumPlanes = 4
 
-  private def emb(spark: SparkSession, sfDir: String) = {
+  /** (vec_id, carry..., qv): the embeddings with `qv` = floor(1000 * x)
+    * per element as BIGINT — the one embedding reader of the family.
+    * Registers the Graft kernels (`l2_dist`, `argmin_l2`, ...). */
+  private[operators] def vectors(spark: SparkSession, sfDir: String, carry: String*): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
+    spark.read.parquet(s"$sfDir/embeddings.parquet").select((col("vec_id") +: carry.map(col)) :+
+      transform(col("embedding"), e => floor(e.cast("double") * 1000).cast("long")).as("qv"): _*)
   }
 
-  /** floor(1000 * x) per element, as BIGINT. */
-  private def quantize(v: Column): Column =
-    transform(v, e => floor(e.cast("double") * 1000).cast("long"))
+  /** Adds nn = |v|² and drops zero-norm vectors: they have no cosine
+    * (mirrored in the oracles), and 0/0 -> NaN would abort the ANSI
+    * BIGINT cast. */
+  private def withNorm(e: DataFrame, v: String): DataFrame =
+    e.withColumn("nn", expr(s"aggregate($v, CAST(0 AS BIGINT), (a, x) -> a + x * x)"))
+      .filter(col("nn") > 0)
 
   /** Squared L2 over quantized vectors — the codegen'd L2DistExpr (a
     * zip_with/aggregate lambda chain here is interpreted and dominated
@@ -83,21 +95,82 @@ object SimilarityQueries {
     override def merge(a: Seq[TopPair], b: Seq[TopPair]): Seq[TopPair] =
       (a ++ b).sortBy(p => (p.a, p.b)).take(k)
     override def finish(r: Seq[TopPair]): Seq[TopPair] = r
-    override def bufferEncoder: Encoder[Seq[TopPair]] = ExpressionEncoder[Seq[TopPair]]()
-    override def outputEncoder: Encoder[Seq[TopPair]] = ExpressionEncoder[Seq[TopPair]]()
+    override def bufferEncoder: Encoder[Seq[TopPair]] = TopKAgg.pairs
+    override def outputEncoder: Encoder[Seq[TopPair]] = TopKAgg.pairs
   }
 
-  /** groupBy(gid).agg(top-k of (a, b)) -> exploded (gid, rnk, a, b).
-    * Shared with TextQueries.tfidfPairSim (q97) — same bounded-ranking
-    * discipline for every corpus-scan top-k stage. */
+  /** Encoders derived once per JVM: reflection-based derivation is
+    * otherwise a fixed planning cost of every top-k query. */
+  object TopKAgg {
+    private val pairs: Encoder[Seq[TopPair]] = ExpressionEncoder[Seq[TopPair]]()
+    private[SimilarityQueries] val pair: Encoder[TopPair] = Encoders.product[TopPair]
+  }
+
+  /** groupBy(gid).agg(top-k of (a, b)) -> exploded (gid, rnk, a, b): the
+    * one per-group top-k — every ranking here, q97's TF-IDF pairs
+    * (TextQueries) and q100's per-cell outliers (GeoSemanticQueries). */
   private[operators] def topKByGroup(df: DataFrame, gid: String, a: Column, b: Column,
       k: Int): DataFrame = {
-    val top = udaf(new TopKAgg(k), Encoders.product[TopPair])
+    val top = udaf(new TopKAgg(k), TopKAgg.pair)
     df.groupBy(col(gid))
       .agg(top(a, b).as("top"))
       .select(col(gid), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col(gid), (col("pos") + 1).cast("int").as("rnk"),
         col("t.a").as("a"), col("t.b").as("b"))
+  }
+
+  /** Exact L2 ranking: per qid the k candidates nearest to `qvec` by
+    * squared L2 to `qv`, ties to the lower vec_id (the bounded
+    * [[topKByGroup]], never a qid window). `cands` carries (qid, qvec,
+    * vec_id, qv); returns (qid, rnk, vec_id, dist). */
+  private def l2Rank(cands: DataFrame, k: Int): DataFrame =
+    topKByGroup(cands.withColumn("dist", l2(col("qvec"), col("qv"))),
+      "qid", col("dist"), col("vec_id"), k)
+      .select(col("qid"), col("rnk"), col("b").as("vec_id"), col("a").as("dist"))
+
+  /** Exact L2 re-rank of a bounded survivor set (q63's ADC and q93's SQ8
+    * candidates): join the corpus vectors (vec_id, qv) back by key onto
+    * `cands` (qid, qvec, vec_id) and rank them with [[l2Rank]]. */
+  private def rerankL2(cands: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    l2Rank(cands.join(corpus, Seq("vec_id")), k).orderBy(col("qid"), col("rnk"))
+
+  /** q96's exact integer cosine ranking: cos_m = floor(1e6 · dot·|dot| /
+    * (nq·nn)) — monotone in cos = dot/(|q||v|) for a fixed query, needs
+    * NO square root, and both engines compute it as exact integer
+    * products, ONE IEEE double division, a 1e6 scale and a floor (the
+    * integer inputs are ≤ 4e15 < 2^53 so their double images are exact;
+    * the division MUST precede the scale, or the scaled numerator leaves
+    * the exact range and self-cos floors to 999999). The top k per qid
+    * rank on (-cos_m, vec_id) — ORDER BY cos_m DESC, vec_id ASC (cos_m
+    * is in [-1e6, 1e6], the negation is overflow-safe). `cands` carries
+    * the query's (qid, qvec, nq) and the candidate's (vec_id, nn) plus
+    * its vector in column `v`; returns (qid, rnk, vec_id, cos_m). */
+  private def cosineRank(cands: DataFrame, v: String, k: Int): DataFrame = {
+    val scored = cands
+      .withColumn("dot", expr(
+        s"aggregate(zip_with(qvec, $v, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
+      .withColumn("cos_m", expr(
+        "CAST(floor(CAST(dot * abs(dot) AS DOUBLE) / CAST(nq * nn AS DOUBLE) * 1000000) AS BIGINT)"))
+    topKByGroup(scored, "qid", -col("cos_m"), col("vec_id"), k)
+      .select(col("qid"), col("rnk"), col("b").as("vec_id"), (-col("a")).as("cos_m"))
+  }
+
+  /** The IVF probe-and-rank stage of q46/q98/q127: each query (a row of
+    * `q`, keyed by qid) probes the IvfProbes centroids nearest to its
+    * `probe` vector, and `rank` scores the candidates of the probed
+    * inverted lists (`lists`, keyed by cid). The probe window holds
+    * nQueries x sqrt(n) centroid rows, never candidate rows; the
+    * candidates go through `rank` ([[l2Rank]] or [[cosineRank]]). */
+  private def probeRank(q: DataFrame, probe: Column, cents: DataFrame,
+      lists: DataFrame)(rank: DataFrame => DataFrame): DataFrame = {
+    val wProbe = Window.partitionBy(col("qid")).orderBy(col("cd"), col("cid"))
+    val probes = q
+      .crossJoin(broadcast(cents))
+      .withColumn("cd", l2(probe, col("cv")))
+      .withColumn("prn", row_number().over(wProbe))
+      .filter(col("prn") <= IvfProbes)
+      .drop("cv", "cd", "prn")
+    rank(probes.join(lists, Seq("cid"))).orderBy(col("qid"), col("rnk"))
   }
 
   /** q93 — SQ8 scalar-quantized ANN (the FAISS SQ8 index shape,
@@ -117,8 +190,7 @@ object SimilarityQueries {
     // persist: e0 feeds the min/max training agg, the query side AND the
     // corpus side of the scan — quantization must run once per vector
     // (the q46 pattern), not three times
-    val e0 = emb(spark, sfDir).select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .persist()
+    val e0 = vectors(spark, sfDir).persist()
     graft.util.CacheBag.register(e0)
     val mm = e0.agg(
       array((0 until Dims).map(i => min(element_at(col("qv"), i + 1))): _*).as("mn"),
@@ -142,54 +214,24 @@ object SimilarityQueries {
         .withColumn("approx", approx),
       "qid", col("approx"), col("vec_id"), SqCand * k)
       .select(col("qid"), col("b").as("vec_id"))
-    // exact re-rank of the BOUNDED survivor set (SqCand*k per qid): join
-    // the vectors back by key — the candidate side is tiny, broadcast it
-    val wR = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-    broadcast(cands)
-      .join(q.select(col("qid"), col("qvec")), Seq("qid"))
-      .join(enc.select(col("vec_id"), col("qv")), Seq("vec_id"))
-      .withColumn("dist", l2(col("qvec"), col("qv")))
-      .withColumn("rnk", row_number().over(wR))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("dist"))
-      .orderBy(col("qid"), col("rnk"))
+    // exact re-rank of the BOUNDED survivor set (SqCand*k per qid) — the
+    // candidate side is tiny, broadcast it
+    rerankL2(broadcast(cands).join(q.select(col("qid"), col("qvec")), Seq("qid")),
+      enc.select(col("vec_id"), col("qv")), k)
   }
 
   /** q96 — COSINE top-k (the metric the brief names for embedding
-    * similarity; everything else here ranks by L2): rank = signed
-    * dot²/|v|² — `d·|d| / nn` is monotone in cos = d/(|q||v|) for a fixed
-    * query, needs NO square root, and both engines compute it as exact
-    * integer products, ONE IEEE double division, a 1e6 scale and a floor
-    * (the q49 pattern; the integer inputs are ≤ 4e15 < 2^53 so their
-    * double images are exact — the division MUST precede the scale, or
-    * the 1e6-scaled numerator leaves the exact range and self-cos floors
-    * to 999999). Ties after the permicro floor collapse identically in both
-    * engines (ORDER BY cos_m DESC, vec_id). Self-match reports exactly
-    * 1e6. */
+    * similarity): brute-force scan ranked by [[cosineRank]]'s exact
+    * integer cosine (the q49 pattern). Ties after the permicro floor
+    * collapse identically in both engines (ORDER BY cos_m DESC, vec_id).
+    * Self-match reports exactly 1e6. The corpus scan map-side-combines to
+    * k rows per qid per task (verdict r3 #5). */
   def cosineTopK(spark: SparkSession, sfDir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val e = emb(spark, sfDir).select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("nn", expr("aggregate(qv, CAST(0 AS BIGINT), (a, x) -> a + x * x)"))
-      // zero-norm vectors have no cosine: exclude them (mirrored in the
-      // oracle) rather than let 0/0 -> NaN abort the ANSI BIGINT cast
-      .filter(col("nn") > 0)
-      .persist()
+    val e = withNorm(vectors(spark, sfDir), "qv").persist()
     graft.util.CacheBag.register(e)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("qv").as("qvec"), col("nn").as("nq"))
-    // ranking: bounded partial top-k per qid on (-cos_m, vec_id) — the
-    // lexicographic sort key reproduces ORDER BY cos_m DESC, vec_id ASC
-    // (cos_m is in [-1e6, 1e6], negation is overflow-safe). The corpus
-    // scan map-side-combines to k rows per qid per task; no window ever
-    // sees corpus-proportional rows (verdict r3 #5).
-    topKByGroup(
-      q.crossJoin(e)
-        .withColumn("dot", expr(
-          "aggregate(zip_with(qvec, qv, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
-        .withColumn("cos_m", expr(
-          "CAST(floor(CAST(dot * abs(dot) AS DOUBLE) / CAST(nq * nn AS DOUBLE) * 1000000) AS BIGINT)")),
-      "qid", -col("cos_m"), col("vec_id"), k)
-      .select(col("qid"), col("rnk"), col("b").as("vec_id"), (-col("a")).as("cos_m"))
-      .orderBy(col("qid"), col("rnk"))
+    cosineRank(q.crossJoin(e), "qv", k).orderBy(col("qid"), col("rnk"))
   }
 
   /** Normalization scale for the cosine->L2 bridge: unit vectors in
@@ -198,25 +240,11 @@ object SimilarityQueries {
     * correctly-rounded in both engines, floor collapses identically). */
   final val NormScale = 100000L
 
-  /** q98 — cosine ANN through the IVF index (verdict r3 #4): on UNIT
-    * vectors L2² = 2·S²(1 − cos), so the normalize-then-L2 bridge lets
-    * the trained coarse quantizer (same deterministic k-means as q46,
-    * sqrt(n) centroids, sublinear probe cost) serve the brief's named
-    * metric — candidate generation is IVF probes over integer-normalized
-    * vectors, final ranking is q96's EXACT integer cosine (dot·|dot|/nq·nn
-    * permicro floor) of the original quantized vectors, so output columns
-    * and tie rules match q96's row-for-row wherever recall hits. Ranking
-    * is the bounded partial top-k aggregate (TopKAgg), never a
-    * qid-partitioned window over probed lists. Fully mirrored by the
-    * DuckDB oracle (iterated-CTE k-means like q46 + the q96 cosine);
-    * recall@5 vs the exact q96 is additionally ST-gated. */
   /** (vec_id, qv0 quantized, nn = |qv0|², qv integer-normalized) — the
     * shared vector frame of the cosine family (q96/q98/q127/q128).
     * Zero-norm vectors have no cosine and are excluded (q96 rule). */
   private[operators] def normalizedEmb(spark: SparkSession, sfDir: String): DataFrame =
-    emb(spark, sfDir).select(col("vec_id"), quantize(col("embedding")).as("qv0"))
-      .withColumn("nn", expr("aggregate(qv0, CAST(0 AS BIGINT), (a, x) -> a + x * x)"))
-      .filter(col("nn") > 0)
+    withNorm(vectors(spark, sfDir).withColumnRenamed("qv", "qv0"), "qv0")
       .withColumn("qv", expr(
         s"transform(qv0, x -> CAST(floor(CAST(x AS DOUBLE) * $NormScale / sqrt(CAST(nn AS DOUBLE))) AS BIGINT))"))
 
@@ -233,61 +261,43 @@ object SimilarityQueries {
       .select(col("vec_id"), col("best.cid").as("cid"), col("best.qv0").as("qv0"), col("best.nn").as("nn"))
 
   /** The IVF cosine SERVING stage shared by q98 (train-in-query) and q127
-    * (served from the persisted index): probe the IvfProbes nearest
-    * centroids per query, score candidates from the probed inverted
-    * lists with q96's exact integer cosine, rank through the bounded
-    * TopKAgg. `q` = (qid, qnorm, qvec, nq); `lists` = (cid, vec_id, qv0, nn). */
+    * (served from the persisted index): [[probeRank]] on the normalized
+    * query vector, candidates ranked by [[cosineRank]] on the original
+    * quantized vectors. `q` = (qid, qnorm, qvec, nq); `lists` = (cid,
+    * vec_id, qv0, nn). */
   private[operators] def cosineProbeRank(q: DataFrame, cents: DataFrame,
-      lists: DataFrame, k: Int): DataFrame = {
-    val wProbe = Window.partitionBy(col("qid")).orderBy(col("cd"), col("cid"))
-    val probes = q
-      .crossJoin(broadcast(cents))
-      .withColumn("cd", l2(col("qnorm"), col("cv")))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= IvfProbes)
-      .select(col("qid"), col("qvec"), col("nq"), col("cid"))
-    val scored = probes.join(lists, Seq("cid"))
-      .withColumn("dot", expr(
-        "aggregate(zip_with(qvec, qv0, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
-      .withColumn("cos_m", expr(
-        "CAST(floor(CAST(dot * abs(dot) AS DOUBLE) / CAST(nq * nn AS DOUBLE) * 1000000) AS BIGINT)"))
-    topKByGroup(scored, "qid", -col("cos_m"), col("vec_id"), k)
-      .select(col("qid"), col("rnk"), col("b").as("vec_id"), (-col("a")).as("cos_m"))
-      .orderBy(col("qid"), col("rnk"))
-  }
+      lists: DataFrame, k: Int): DataFrame =
+    probeRank(q, col("qnorm"), cents, lists)(cosineRank(_, "qv0", k))
 
+  /** q98 — cosine ANN through the IVF index (verdict r3 #4): on UNIT
+    * vectors L2² = 2·S²(1 − cos), so the normalize-then-L2 bridge lets
+    * the trained coarse quantizer (same deterministic k-means as q46,
+    * sqrt(n) centroids, sublinear probe cost) serve the brief's named
+    * metric — candidate generation is IVF probes over integer-normalized
+    * vectors, final ranking is q96's EXACT integer cosine (dot·|dot|/nq·nn
+    * permicro floor) of the original quantized vectors, so output columns
+    * and tie rules match q96's row-for-row wherever recall hits. Ranking
+    * is the bounded partial top-k aggregate (TopKAgg), never a
+    * qid-partitioned window over probed lists. Fully mirrored by the
+    * DuckDB oracle (iterated-CTE k-means like q46 + the q96 cosine);
+    * recall@5 vs the exact q96 is additionally ST-gated. */
   def cosineIvfTopK(spark: SparkSession, sfDir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
     // e feeds k-means, assignment AND the probes: persist so quantization
     // + normalization run once per vector (the q46 pattern)
     val e = normalizedEmb(spark, sfDir).persist()
-    val c = ivfCentroidCount(emb(spark, sfDir).count())
-    val centsLocal = kmeansLocalDist(e.select(col("vec_id"), col("qv")), c, IvfIters)
-    val cents = { import spark.implicits._; centsLocal.toDF("cid", "cv") }
-    // zero-shuffle list assignment (r6): nearestCid projection instead of
-    // the broadcast crossJoin + corpus-wide groupBy(vec_id) argmin
-    val assigned = e.select(col("vec_id"),
-      nearestCid(col("qv"), centsLocal).as("cid"), col("qv0"), col("nn"))
+    val (cents, lists) = trainIvf(spark, sfDir, e, "qv0", "nn")
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("qv").as("qnorm"),
         col("qv0").as("qvec"), col("nn").as("nq"))
-    val out = cosineProbeRank(q, cents, assigned, k).persist()
-    out.count() // materialize the tiny result, then drop the big cache
-    e.unpersist(false)
-    graft.util.CacheBag.register(out)
+    graft.util.CacheBag.materialize(cosineProbeRank(q, cents, lists, k), e)
   }
 
   /** Brute-force exact L2 top-k for query vectors (vec_id < nQueries). */
   def l2TopK(spark: SparkSession, sfDir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val e = emb(spark, sfDir).select(col("vec_id"), quantize(col("embedding")).as("qv"))
+    val e = vectors(spark, sfDir)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("qv").as("qvec"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-    q.crossJoin(e)
-      .withColumn("dist", l2(col("qvec"), col("qv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("dist"))
-      .orderBy(col("qid"), col("rnk"))
+    l2Rank(q.crossJoin(e), k).orderBy(col("qid"), col("rnk"))
   }
 
   /** q121 — hard-negative mining (contrastive-dataset construction): for
@@ -300,15 +310,11 @@ object SimilarityQueries {
     * Self-exclusion is implied (the query's own label always equals
     * itself). */
   def hardNegatives(spark: SparkSession, sfDir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val e = emb(spark, sfDir)
-      .select(col("vec_id"), col("label"), quantize(col("embedding")).as("qv"))
+    val e = vectors(spark, sfDir, "label")
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("label").as("qlabel"), col("qv").as("qvec"))
-    val scored = q.crossJoin(e.select(col("vec_id"), col("label"), col("qv")))
-      .filter(col("label") =!= col("qlabel"))
-      .withColumn("dist", l2(col("qvec"), col("qv")))
-    topKByGroup(scored, "qid", col("dist"), col("vec_id"), k)
-      .select(col("qid"), col("rnk"), col("b").as("neg_id"), col("a").as("dist"))
+    l2Rank(q.crossJoin(e).filter(col("label") =!= col("qlabel")), k)
+      .withColumnRenamed("vec_id", "neg_id")
       .orderBy(col("qid"), col("rnk"))
   }
 
@@ -325,9 +331,7 @@ object SimilarityQueries {
   def bitextMining(spark: SparkSession, sfDir: String, nQueries: Int = 50): DataFrame = {
     val langs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("lang"))
-    val e = emb(spark, sfDir).select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("nn", expr("aggregate(qv, CAST(0 AS BIGINT), (a, x) -> a + x * x)"))
-      .filter(col("nn") > 0)
+    val e = withNorm(vectors(spark, sfDir), "qv")
       .join(langs, col("vec_id") === col("doc_id")).drop("doc_id")
       .persist()
     graft.util.CacheBag.register(e)
@@ -335,13 +339,7 @@ object SimilarityQueries {
       .select(col("vec_id").as("qid"), col("lang").as("src_lang"),
         col("qv").as("qvec"), col("nn").as("nq"))
     val cand = e.filter(col("lang") === "en").select(col("vec_id"), col("qv"), col("nn"))
-    val scored = q.crossJoin(cand)
-      .withColumn("dot", expr(
-        "aggregate(zip_with(qvec, qv, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)"))
-      .withColumn("cos_m", expr(
-        "CAST(floor(CAST(dot * abs(dot) AS DOUBLE) / CAST(nq * nn AS DOUBLE) * 1000000) AS BIGINT)"))
-    val top = topKByGroup(scored, "qid", -col("cos_m"), col("vec_id"), 3)
-      .select(col("qid"), col("rnk"), col("b").as("en_id"), (-col("a")).as("cos_m"))
+    val top = cosineRank(q.crossJoin(cand), "qv", 3).withColumnRenamed("vec_id", "en_id")
     top.groupBy(col("qid"))
       .agg(max(when(col("rnk") === 1, col("en_id"))).as("best_en"),
         max(when(col("rnk") === 1, col("cos_m"))).as("cos1_m"),
@@ -360,20 +358,12 @@ object SimilarityQueries {
     * corpus once by bucket at scale. Deterministic, exactly mirrored by
     * the oracle; recall vs brute force asserted in ScalaTest. */
   def lshTopK(spark: SparkSession, sfDir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val e = emb(spark, sfDir)
-      .select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("bucket", bucketOf(col("qv")))
+    val e = vectors(spark, sfDir).withColumn("bucket", bucketOf(col("qv")))
     val masks = 0L +: (0 until NumPlanes).map(b => 1L << b)
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("qv").as("qvec"), col("bucket").as("qbucket"))
       .withColumn("bucket", explode(array(masks.map(m => col("qbucket").bitwiseXOR(lit(m))): _*)))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-    q.join(e, Seq("bucket"))
-      .withColumn("dist", l2(col("qvec"), col("qv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("dist"))
-      .orderBy(col("qid"), col("rnk"))
+    l2Rank(q.join(e, Seq("bucket")), k).orderBy(col("qid"), col("rnk"))
   }
 
   // ---- banded multi-table LSH (near-dup pairs) ----------------------------
@@ -452,8 +442,7 @@ object SimilarityQueries {
     // the quantized frame feeds 4 plan branches (both self-join sides, two
     // verify joins) and the keyed frame feeds 2 — persist so the 80-plane
     // signature computation runs once per vector, not once per branch
-    val e = emb(spark, sfDir).select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .persist()
+    val e = vectors(spark, sfDir).persist()
     val keyed = bandedKeys(e).select("vec_id", "tbl", "key").persist()
     val pairs = keyed.as("x").join(keyed.as("y"),
         col("x.tbl") === col("y.tbl") && col("x.key") === col("y.key") &&
@@ -466,19 +455,13 @@ object SimilarityQueries {
       .select(col("v1"), col("v2"), l2(col("xq"), col("yq")).as("dist"))
       .orderBy(col("dist"), col("v1"), col("v2"))
       .limit(topK)
-      .persist()
-    out.count() // materialize the tiny result, then drop the big caches
-    keyed.unpersist(false)
-    e.unpersist(false)
-    // the returned plan reads the materialized cache (its inputs are
-    // unpersisted) — register it so the driver releases it after use
-    graft.util.CacheBag.register(out)
+    graft.util.CacheBag.materialize(out, keyed, e)
   }
 
   /** Banded-table bucket diagnostics (ST gate: max bucket share, refinement
     * coverage). One row per (tbl, key) bucket. */
   def bandedBucketStats(spark: SparkSession, sfDir: String): DataFrame =
-    bandedKeys(emb(spark, sfDir).select(col("vec_id"), quantize(col("embedding")).as("qv")))
+    bandedKeys(vectors(spark, sfDir))
       .groupBy(col("tbl"), col("key"))
       .agg(count(lit(1)).as("n_vecs"), max(col("cnt")).as("band_cnt"))
       .orderBy(col("tbl"), col("key"))
@@ -486,7 +469,7 @@ object SimilarityQueries {
   /** Exact closest-`topK` pairs by brute force — the recall oracle for
     * `nearDupPairs` (ST only; never run on a full corpus). */
   def nearDupBruteForce(spark: SparkSession, sfDir: String, topK: Int = 20): DataFrame = {
-    val e = emb(spark, sfDir).select(col("vec_id"), quantize(col("embedding")).as("qv"))
+    val e = vectors(spark, sfDir)
     e.as("x").join(e.as("y"), col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("v1"), col("y.vec_id").as("v2"),
         l2(col("x.qv"), col("y.qv")).as("dist"))
@@ -568,41 +551,30 @@ object SimilarityQueries {
     * partitions. Recall@5 vs brute force: 0.94-0.96 across sfs (the
     * round-1 fixed-16-centroid variant measured 0.74). */
   def ivfTopK(spark: SparkSession, sfDir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    import spark.implicits._
     // e feeds k-means, assignment AND the query probes — persist so the
     // quantization runs once per vector.
-    val e = emb(spark, sfDir).select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .persist()
-    // corpus size: parquet-footer count, metadata not data
-    val c = ivfCentroidCount(emb(spark, sfDir).count())
-    val centsLocal = kmeansLocalDist(e, c, IvfIters)
-    val cents = centsLocal.toDF("cid", "cv")
-    // inverted-list assignment: nearest trained centroid per vector —
-    // the zero-shuffle nearestCid projection (r6; the r5 broadcast
-    // crossJoin + groupBy(vec_id) argmin shuffled the corpus once here)
-    val assigned = e.select(col("vec_id"),
-      nearestCid(col("qv"), centsLocal).as("cid"), col("qv"))
-    // probe set: the IvfProbes nearest centroids per query vector
-    val wProbe = Window.partitionBy(col("qid")).orderBy(col("cd"), col("cid"))
-    val probes = e.filter(col("vec_id") < nQueries)
+    val e = vectors(spark, sfDir).persist()
+    val (cents, lists) = trainIvf(spark, sfDir, e, "qv")
+    val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("qv").as("qvec"))
-      .crossJoin(broadcast(cents))
-      .withColumn("cd", l2(col("qvec"), col("cv")))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= IvfProbes)
-      .select(col("qid"), col("qvec"), col("cid"))
-    // candidates from probed lists, exact re-rank
-    val wRank = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-    val out = probes.join(assigned, Seq("cid"))
-      .withColumn("dist", l2(col("qvec"), col("qv")))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("dist"))
-      .orderBy(col("qid"), col("rnk"))
-      .persist()
-    out.count() // materialize the tiny result, then drop the big caches
-    e.unpersist(false)
-    graft.util.CacheBag.register(out)
+    graft.util.CacheBag.materialize(probeRank(q, col("qvec"), cents, lists)(l2Rank(_, k)), e)
+  }
+
+  /** IVF training and list assignment of q46/q98 over `e`'s (vec_id, qv):
+    * the deterministic k-means with ceil(sqrt(n)) centroids, then each
+    * vector's inverted list = its nearest trained centroid, a
+    * [[nearestCid]] projection that never shuffles the corpus. Returns
+    * the centroids (cid, cv) and the lists (vec_id, cid, carry...). */
+  private def trainIvf(spark: SparkSession, sfDir: String, e: DataFrame,
+      carry: String*): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    // n = corpus rows counted on the raw file (parquet footers): a count
+    // over `vectors` would hit q46's cache of that same plan and fill it
+    // in a job of its own
+    val c = ivfCentroidCount(spark.read.parquet(s"$sfDir/embeddings.parquet").count())
+    val centsLocal = kmeansLocalDist(e.select(col("vec_id"), col("qv")), c, IvfIters)
+    (centsLocal.toDF("cid", "cv"),
+      e.select(Seq(col("vec_id"), nearestCid(col("qv"), centsLocal).as("cid")) ++ carry.map(col): _*))
   }
 
   final val PqSubspaces = 4
@@ -631,8 +603,7 @@ object SimilarityQueries {
     * recall ST vs brute force (like every ANN recall property) and a
     * rows-only driver check. */
   def pqTopK(spark: SparkSession, sfDir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val e = emb(spark, sfDir).select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .persist()
+    val e = vectors(spark, sfDir).persist()
     // per-subspace codebooks: deterministic k-means on the 16-dim slices;
     // cid is the code, cv the codeword. Tiny (PqSubspaces*PqCodes rows).
     // ONE subspace frame feeds both codebook training and encoding (the
@@ -695,17 +666,7 @@ object SimilarityQueries {
       .join(broadcast(dtab.select(col("qid"), col("qvec"))), Seq("qid"))
       .select(col("qid"), col("qvec"), col("b").as("vec_id"))
     // exact re-rank of the ADC survivors
-    val wRank = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-    val out = cands.join(e, Seq("vec_id"))
-      .withColumn("dist", l2(col("qvec"), col("qv")))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("dist"))
-      .orderBy(col("qid"), col("rnk"))
-      .persist()
-    out.count()
-    e.unpersist(false)
-    graft.util.CacheBag.register(out)
+    graft.util.CacheBag.materialize(rerankL2(cands, e, k), e)
   }
 
   /** Driver-side Lloyd over a bounded sample — same seed/tie/update rules
@@ -736,33 +697,11 @@ object SimilarityQueries {
 
   /** Bucket histogram — distribution diagnostics for the LSH index. */
   def bucketStats(spark: SparkSession, sfDir: String): DataFrame =
-    emb(spark, sfDir)
-      .select(col("vec_id"), quantize(col("embedding")).as("qv"))
+    vectors(spark, sfDir)
       .withColumn("bucket", bucketOf(col("qv")))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("min_vec"))
       .orderBy(col("bucket"))
-
-  /** Float cosine top-k (ST-only; float-sum order is engine-specific —
-    * q96's integer/one-division formulation is the oracle-gated one, and
-    * the ST asserts the two agree on ranking). */
-  def cosineTopKFloat(spark: SparkSession, sfDir: String, k: Int = 5, nQueries: Int = 10): DataFrame = {
-    val e = emb(spark, sfDir).select(col("vec_id"),
-      transform(col("embedding"), _.cast("double")).as("v"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qvec"))
-    val dot = aggregate(zip_with(col("qvec"), col("v"), (x, y) => x * y),
-      lit(0.0), (acc, x) => acc + x)
-    val nq = sqrt(aggregate(transform(col("qvec"), x => x * x), lit(0.0), (a, x) => a + x))
-    val nv = sqrt(aggregate(transform(col("v"), x => x * x), lit(0.0), (a, x) => a + x))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-    q.crossJoin(e)
-      .withColumn("cos", dot / (nq * nv))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("cos"))
-      .orderBy(col("qid"), col("rnk"))
-  }
 
   // ---- oracle twins -------------------------------------------------------
 

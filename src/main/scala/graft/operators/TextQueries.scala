@@ -182,7 +182,6 @@ object TextQueries {
       .withColumn("jac_m", floor(inter.cast("long") * 1000 / uni).cast("long"))
       .filter(col("jac_m") >= minJacM)
       .select(col("d1"), col("d2"), col("jac_m"))
-      .persist()
     // Materialize the pair result (stays DISTRIBUTED — its size is
     // data-dependent and must not be collected to the driver), then
     // release the big shingle/signature caches. Only the far smaller pair
@@ -190,10 +189,8 @@ object TextQueries {
     // per-query release point (note: q29's public return is an orderBy
     // WRAPPER over this cache, so unpersisting the returned frame would
     // NOT release it; CacheBag is the release path).
-    out.count()
-    sig.unpersist(false)
-    if (keepSh) graft.util.CacheBag.register(sh) else sh.unpersist(false)
-    (graft.util.CacheBag.register(out), sh)
+    if (keepSh) graft.util.CacheBag.register(sh)
+    (graft.util.CacheBag.materialize(out, (if (keepSh) Seq(sig) else Seq(sig, sh)): _*), sh)
   }
 
   /** 16-bit SimHash over token hashes (majority vote per bit). */
@@ -250,10 +247,8 @@ object TextQueries {
       .select(col("x.lang").as("lang"), col("x.doc_id").as("d1"),
         col("y.doc_id").as("d2"), col("jac_m"))
       .orderBy(col("lang"), col("d1"), col("d2"))
-      .persist()
-    out.count() // materialize (distributed) before releasing the block cache
-    blocked.unpersist(false)
-    graft.util.CacheBag.register(out)
+    // materialize (distributed) before releasing the block cache
+    graft.util.CacheBag.materialize(out, blocked)
   }
 
   final val WinnowWindow = 4
@@ -459,18 +454,14 @@ object TextQueries {
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
       .filter(col("df") * 1000 <= col("n_docs") * dfCapPm)
-    val w = tf.join(dfreq, Seq("token"))
-      .select(col("doc_id"), col("token"), expr("tf * 1000000 div df").as("w"))
-      .persist()
-    graft.util.CacheBag.register(w)
     // Materialize-then-release (guide §5, the q29/q41 pattern): every
     // downstream consumer reads only w, so once w is materialized the tf
     // posting cache is dead weight — peak memory holds ONE
     // posting-list-sized cache, not two. (tf stays CacheBag-registered:
     // double-unpersist is a no-op, and the bag remains the exception-path
     // cleanup.)
-    w.count()
-    tf.unpersist(false)
+    val w = graft.util.CacheBag.materialize(tf.join(dfreq, Seq("token"))
+      .select(col("doc_id"), col("token"), expr("tf * 1000000 div df").as("w")), tf)
     val q = w.filter(col("doc_id") < nQueries)
       .select(col("doc_id").as("qid"), col("token"), col("w").as("qw"))
     val sims = q

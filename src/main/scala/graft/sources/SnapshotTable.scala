@@ -861,11 +861,6 @@ object SnapshotTable {
 
   // ---- named refs (Iceberg tag analog) -------------------------------------
 
-  /** Tag a committed snapshot with a stable name (`meta/refs/<name>`,
-    * atomic-rename write). Tags pin snapshots against [[expire]] (tagged
-    * seqs are always retained) and resolve in [[readTag]] /
-    * `option("snapshot", ...)`-style flows — the "models trained on
-    * corpus-v3" reproducibility handle. */
   /** Iceberg-style rollback (set-current-snapshot): commit a NEW snapshot
     * whose content is snapshot `seq`'s. History is preserved — the bad
     * snapshots stay time-travelable until `expire` GCs them — and the
@@ -884,9 +879,16 @@ object SnapshotTable {
     }
   }
 
+  /** Tag a committed snapshot with a stable name (`meta/refs/<name>`,
+    * atomic-rename write). Tags pin snapshots against [[expire]] (tagged
+    * seqs are always retained) and resolve in [[readTag]] /
+    * `option("snapshot", ...)`-style flows — the "models trained on
+    * corpus-v3" reproducibility handle. */
   def tagSnapshot(root: String, name: String, seq: Long): Unit = {
     require(name.matches("[A-Za-z0-9._-]+"), s"invalid tag name '$name'")
-    require(snapshotAt(root, seq).isDefined, s"no snapshot $seq under $root")
+    // an existence check, as in rollback: reads no manifest
+    require(Files.exists(Paths.get(root, "meta", s"snap-$seq.json")),
+      s"no snapshot $seq under $root")
     val dir = Paths.get(root, "meta", "refs")
     Files.createDirectories(dir)
     val tmp = dir.resolve(s".$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -930,7 +932,8 @@ object SnapshotTable {
     * every branch head. */
   def createBranch(root: String, name: String, fromSeq: Long): Unit = {
     require(name.matches("[A-Za-z0-9._-]+"), s"invalid branch name '$name'")
-    require(snapshotAt(root, fromSeq).isDefined, s"no snapshot $fromSeq under $root")
+    require(Files.exists(Paths.get(root, "meta", s"snap-$fromSeq.json")),
+      s"no snapshot $fromSeq under $root")
     val dir = Paths.get(root, "meta", "branches")
     Files.createDirectories(dir)
     val tmp = dir.resolve(s".$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")

@@ -12,16 +12,28 @@ import org.apache.spark.sql.Dataset
   * query's result has been consumed; the cache-hygiene ST asserts the
   * CacheManager is empty afterwards.
   *
-  * Frames persisted-and-already-unpersisted inside an operator (the
-  * materialize-then-release pattern of the iterative ANN trainers) don't
-  * need the bag; it exists for caches whose lifetime must outlive plan
-  * construction because the RESULT plan references them.
+  * Operators whose big intermediate caches only feed a small result go
+  * through [[materialize]] (materialize-then-release): the result is
+  * cached and filled by one count, the intermediates are dropped, and only
+  * the result cache outlives the call.
   */
 object CacheBag {
   private val bag = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
 
   /** Register a persisted frame for later release; returns it unchanged. */
   def register[T](ds: Dataset[T]): Dataset[T] = { bag.add(ds); ds }
+
+  /** Materialize-then-release: persist `out` and register it, fill its
+    * cache with ONE count (a construction-time job — only for COVERAGE.md's
+    * documented exceptions), then unpersist `inputs` (non-blocking): the
+    * returned frame reads the filled cache, so their caches are dead
+    * weight from here on. */
+  def materialize[T](out: Dataset[T], inputs: Dataset[_]*): Dataset[T] = {
+    register(out.persist())
+    out.count()
+    inputs.foreach(_.unpersist(false))
+    out
+  }
 
   /** Unpersist every registered frame (non-blocking) and empty the bag. */
   def release(): Unit = {

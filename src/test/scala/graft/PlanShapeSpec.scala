@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import graft.operators.{GeoQueries, SimilarityQueries, Tiling}
@@ -22,11 +23,26 @@ class PlanShapeSpec extends SparkTestBase {
     df.queryExecution.executedPlan.toString
   }
 
-  /** Every node of an executed plan, looking through AQE and query stages. */
+  /** Every node of an executed plan, looking through AQE, query stages
+    * and the plans of persisted frames. */
   private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
     case q: QueryStageExec => planNodes(q.plan)
+    case m: InMemoryTableScanExec => m +: planNodes(m.relation.cachedPlan)
     case _ => p +: p.children.flatMap(planNodes)
+  }
+
+  /** Spark jobs started while `f` runs (listener-bus drained). */
+  private def jobsOf(f: => Unit): Int = {
+    val counter = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { f; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(l)
+    counter.get()
   }
 
   test("broadcast PIP join: zero Exchange on the pages side before the join") {
@@ -433,17 +449,6 @@ class PlanShapeSpec extends SparkTestBase {
     // up 10-20x under host steal. Now the only distributed work is the
     // scan -> per-cell agg (the corpus-proportional part); adjacency +
     // union-find + rollup run on the ≤ side² collected grid rows.
-    def jobsOf(f: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { f; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(l)
-      counter.get()
-    }
     // parquet footer/schema listing may add a metadata job; the agg under
     // AQE is 2 jobs (map + final); LocalRelation result collects job-free
     assert(jobsOf(GeoQueries.denseCellClusters(spark, sf0001).collect()) <= 4)
@@ -469,5 +474,51 @@ class PlanShapeSpec extends SparkTestBase {
     // data); the round-1 ring loop ran full compute+collect jobs per pass
     assert(counter.get() <= 4, s"plan construction ran ${counter.get()} jobs")
     assert(df.collect().nonEmpty)
+  }
+
+  test("ANN family (q31/q32/q46/q63/q93/q100): every per-query top-k ranks through TopKAgg") {
+    // One ranker for the embedding family: a row_number window over the
+    // candidate rows holds every candidate of a query in one partition.
+    // Each plan must hold the TopKAgg partial/final ObjectHashAggregate
+    // pair and no Window, except q46's IVF probe window (nQueries x
+    // sqrt(n) centroid rows, never candidates). Persisted results (q46,
+    // q63) are walked through their cached plan.
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, ScalaAggregator}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val expectedWindows = Map("q46_ann_ivf" -> 1).withDefaultValue(0)
+    for (q <- Seq("q31_ann_l2", "q32_ann_lsh", "q46_ann_ivf", "q63_ann_pq", "q93_ann_sq8",
+        "q100_geo_outliers")) {
+      val plan = SparkEntry.queries(q)(spark, sf0001).queryExecution.executedPlan
+      val all = planNodes(plan)
+      val topKModes = all.collect { case a: ObjectHashAggregateExec => a.aggregateExpressions }
+        .flatten.collect { case e if (e.aggregateFunction match {
+          case s: ScalaAggregator[_, _, _] => s.agg.isInstanceOf[SimilarityQueries.TopKAgg]
+          case _ => false
+        }) => e.mode }
+      assert(topKModes.contains(Partial) && topKModes.contains(Final),
+        s"$q: no partial/final TopKAgg pair:\n${plan.toString.take(3000)}")
+      assert(all.count(_.isInstanceOf[WindowExec]) === expectedWindows(q),
+        s"$q: ranking window over candidate rows:\n${plan.toString.take(3000)}")
+      graft.util.CacheBag.release()
+    }
+  }
+
+  test("construction jobs pinned: q41/q46/q63/q97/q98 materialize exactly once") {
+    // Building these plans runs Spark jobs by design (COVERAGE.md's
+    // eager-construction exceptions): q46/q98 train k-means and q63 its
+    // codebooks, and each of the five fills one cache with ONE
+    // materialize count (CacheBag.materialize) — the ANN result, q41's
+    // near-dup pairs, q97's posting weights. Pinned at the measured
+    // totals, so a duplicated or dropped materialize fails here.
+    val pinned = Map("q41_embedding_neardup" -> 11, "q46_ann_ivf" -> 17,
+      "q63_ann_pq" -> 14, "q97_tfidf_pairs" -> 12, "q98_cosine_ann" -> 17)
+    graft.util.CacheBag.release()
+    val got = pinned.keys.toSeq.sorted.map { q =>
+      val n = jobsOf(SparkEntry.queries(q)(spark, sf0001))
+      graft.util.CacheBag.release()
+      q -> n
+    }.toMap
+    assert(got === pinned)
   }
 }

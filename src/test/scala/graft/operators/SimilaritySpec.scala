@@ -1,8 +1,34 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
 import graft.testutil.SparkTestBase
 
 class SimilaritySpec extends SparkTestBase {
+
+  /** Float cosine top-k: an independent reference with its own ranking
+    * window (float-sum order is engine-specific — q96's integer
+    * one-division formulation is the oracle-gated one, and the test below
+    * asserts the two agree on ranking). */
+  private def cosineTopKFloat(sfDir: String): DataFrame = {
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet").select(col("vec_id"),
+      transform(col("embedding"), _.cast("double")).as("v"))
+    val q = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("v").as("qvec"))
+    val dot = aggregate(zip_with(col("qvec"), col("v"), (x, y) => x * y),
+      lit(0.0), (acc, x) => acc + x)
+    val nq = sqrt(aggregate(transform(col("qvec"), x => x * x), lit(0.0), (a, x) => a + x))
+    val nv = sqrt(aggregate(transform(col("v"), x => x * x), lit(0.0), (a, x) => a + x))
+    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
+    q.crossJoin(e)
+      .withColumn("cos", dot / (nq * nv))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= 5)
+      .select(col("qid"), col("rnk"), col("vec_id"), col("cos"))
+      .orderBy(col("qid"), col("rnk"))
+  }
 
   test("brute-force L2: rank 1 is the query itself at distance 0") {
     val rows = SimilarityQueries.l2TopK(spark, sf001).collect()
@@ -163,7 +189,7 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("float cosine top-k: self-similarity is 1.0 at rank 1; agrees with q96 ranking") {
-    val rows = SimilarityQueries.cosineTopKFloat(spark, sf001).collect()
+    val rows = cosineTopKFloat(sf001).collect()
     val r1 = rows.filter(_.getInt(1) == 1)
     assert(r1.forall(r => r.getLong(0) === r.getLong(2) && math.abs(r.getDouble(3) - 1.0) < 1e-9))
     // the oracle-gated integer formulation must produce the same top-k

@@ -146,4 +146,23 @@ class ManifestScaleSpec extends AnyFunSuite {
     recursiveDelete(Paths.get(root))
     recursiveDelete(Paths.get(wh))
   }
+
+  test("tagging and branching read no manifests") {
+    val root = Files.createTempDirectory("manifest-refs").toString
+    commitSnapshot(root, Snapshot(1, 1, (0 until 3000).map(entry(_)), "doc_id BIGINT"))
+    assert(currentSnapshotMeta(root).get.manifestRefs.length == 3)
+    // the seq check is an existence test on meta/snap-<seq>.json — a
+    // two-level table's manifests stay unread however many there are
+    val r0 = manifestReads.get()
+    tagSnapshot(root, "v1", 1)
+    createBranch(root, "audit", 1)
+    assert(manifestReads.get() === r0,
+      s"tag + branch read ${manifestReads.get() - r0} manifests")
+    assert(resolveTag(root, "v1").contains(1L) && resolveBranch(root, "audit").contains(1L))
+    val noTag = intercept[IllegalArgumentException](tagSnapshot(root, "v9", 9))
+    assert(noTag.getMessage.contains(s"no snapshot 9 under $root"))
+    val noBranch = intercept[IllegalArgumentException](createBranch(root, "b9", 9))
+    assert(noBranch.getMessage.contains(s"no snapshot 9 under $root"))
+    recursiveDelete(Paths.get(root))
+  }
 }
