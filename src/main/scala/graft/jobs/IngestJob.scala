@@ -60,7 +60,12 @@ object IngestJob {
     *     manifest stats AND the per-bucket input fingerprints;
     *  2. one `partitionBy(pc, p_date)` write covering exactly the stale
     *     buckets (dynamic partition overwrite — already-durable buckets of
-    *     a crashed attempt survive the resume's write untouched).
+    *     a crashed attempt survive the resume's write untouched). The
+    *     stale rows are first rebalanced on (pc, p_date), so each entry
+    *     directory gets one file rather than one per input task holding
+    *     its key (AQE's rebalance splits an oversized key into a few
+    *     files and merges small ones; a plain repartition would put a hot
+    *     key in one task).
     *
     * Data paths are versioned by the snapshot seq the run will commit
     * (`data/<jobId>/a<seq>/`): a crash-before-commit retry recomputes the
@@ -146,18 +151,19 @@ object IngestJob {
 
     if (stale.nonEmpty) {
       val t0 = System.nanoTime()
-      // pass 2 — ONE write job for every stale bucket. `pc` duplicates
-      // p_cell as the partition column so p_cell itself stays a DATA
-      // column in the files (the table schema readers see is stable).
+      // pass 2 — ONE rebalanced write for every stale bucket. `pc`
+      // duplicates p_cell as the partition column so p_cell itself stays
+      // a DATA column in the files (the table schema readers see is stable).
       pages.filter(col("p_cell").isin(stale.map(_._1): _*))
         .withColumn("pc", col("p_cell"))
+        .hint("rebalance", col("pc"), col("p_date"))
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("pc", "p_date")
         .parquet(dir)
       val wallMs = (System.nanoTime() - t0) / 1000000
-      // bucket-level lineage marks durability; wallMs is the write job's
-      // wall (one job writes all stale buckets — attempt-level metric)
+      // bucket-level lineage marks durability; wallMs is the write's wall
+      // (one write covers all stale buckets — attempt-level metric)
       stale.foreach { case (cell, rows, fp) =>
         SnapshotTable.writeLineage(root,
           Lineage(jobId, cell, rows, wallMs, fp, s"$dir/pc=$cell"))

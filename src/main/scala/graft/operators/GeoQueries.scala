@@ -78,10 +78,16 @@ object GeoQueries {
     * `pagesIn` against the footprint cover, then the exact containment
     * refine. `widenTime` swaps in forever-valid footprints. The shuffled
     * distributions carry a `shuffle_merge` hint: the footprint side is
-    * small enough that the planner would otherwise broadcast it. */
+    * small enough that the planner would otherwise broadcast it.
+    *
+    * The key and the refine are total (never NULL): otherwise the
+    * optimizer infers `isnotnull` filters on them and pushes those below
+    * the page-side projection, so every page row computes the geotag and
+    * cell arithmetic twice. Cover cells are >= 0, so a NULL coordinate's
+    * -1 key still matches nothing. */
   private def refinedJoin(spark: SparkSession, pagesIn: DataFrame, widenTime: Boolean,
       dist: Distribution): DataFrame = {
-    val pages = pagesIn.withColumn("cell", pageCell(JoinLevel))
+    val pages = pagesIn.withColumn("cell", coalesce(pageCell(JoinLevel), lit(-1L)))
     val cover = footprintCells(spark)
     val (big, fp, keys) = dist match {
       case Broadcast => (pages, cover, Seq("cell"))
@@ -94,7 +100,7 @@ object GeoQueries {
     }
     val fpTimed = if (widenTime) timeless(fp) else fp
     val small = if (dist == Broadcast) broadcast(fpTimed) else fpTimed.hint("shuffle_merge")
-    big.join(small, keys).filter(Footprints.contains)
+    big.join(small, keys).filter(coalesce(Footprints.contains, lit(false)))
   }
 
   /** D1 — broadcast PIP join: pages x footprint-cover cells, hash join on

@@ -33,12 +33,19 @@ object SimilarityQueries {
     * the LSH worst case. More planes only pay off when vectors cluster. */
   final val NumPlanes = 4
 
+  /** `embeddings.parquet` under its fixed schema (the same at every
+    * scale factor), so building a plan over it runs no schema-inference
+    * job. */
+  private def embeddings(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+      .parquet(s"$sfDir/embeddings.parquet")
+
   /** (vec_id, carry..., qv): the embeddings with `qv` = floor(1000 * x)
     * per element as BIGINT — the one embedding reader of the family.
     * Registers the Graft kernels (`l2_dist`, `argmin_l2`, ...). */
   private[operators] def vectors(spark: SparkSession, sfDir: String, carry: String*): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(s"$sfDir/embeddings.parquet").select((col("vec_id") +: carry.map(col)) :+
+    embeddings(spark, sfDir).select((col("vec_id") +: carry.map(col)) :+
       transform(col("embedding"), e => floor(e.cast("double") * 1000).cast("long")).as("qv"): _*)
   }
 
@@ -571,7 +578,7 @@ object SimilarityQueries {
     // n = corpus rows counted on the raw file (parquet footers): a count
     // over `vectors` would hit q46's cache of that same plan and fill it
     // in a job of its own
-    val c = ivfCentroidCount(spark.read.parquet(s"$sfDir/embeddings.parquet").count())
+    val c = ivfCentroidCount(embeddings(spark, sfDir).count())
     val centsLocal = kmeansLocalDist(e.select(col("vec_id"), col("qv")), c, IvfIters)
     (centsLocal.toDF("cid", "cv"),
       e.select(Seq(col("vec_id"), nearestCid(col("qv"), centsLocal).as("cid")) ++ carry.map(col): _*))

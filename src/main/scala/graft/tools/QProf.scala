@@ -7,12 +7,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import graft.SparkEntry
 
 /** Round-6 optimization profiler: for each query id, dump the
-  * `.explain("formatted")` plan to plans/r06/<qid>_<tag>.txt and time
-  * REPS warm `count()` runs while counting Spark jobs/stages — the
-  * guide-§1 "measure first" loop in one command.
+  * `.explain("formatted")` plan and time REPS warm `count()` runs while
+  * counting Spark jobs/stages — the guide-§1 "measure first" loop in one
+  * command.
   *
-  *   SPARK_GRAFT_PLAN_TAG=before SPARK_GRAFT_REPS=3 \
-  *     sbt -batch "runMain graft.tools.QProf q106_page_rank ..."
+  *   SPARK_GRAFT_REPS=3 sbt -batch "runMain graft.tools.QProf q106_page_rank ..."
+  *
+  * The dumps go to the git-ignored target/qprof/<qid>.txt. Only a run
+  * with `SPARK_GRAFT_PLAN_TAG` set writes plans/r06/<qid>_<tag>.txt, the
+  * committed before/after evidence, so a plain run never overwrites it.
   *
   * The session is `GraftSession.build` (local[`SPARK_GRAFT_CPUS`],
   * default 4; shuffle partitions = cores, AQE on), the settings Bench
@@ -20,7 +23,8 @@ import graft.SparkEntry
   */
 object QProf {
   def main(args: Array[String]): Unit = {
-    val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
+    val (planDir, suffix) = sys.env.get("SPARK_GRAFT_PLAN_TAG")
+      .fold(("target/qprof", ""))(t => ("plans/r06", s"_$t"))
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.util.GraftSession.build("graft-qprof")
@@ -37,14 +41,14 @@ object QProf {
     SparkEntry.queries("q31_ann_l2")(spark, sf).count()
     graft.util.CacheBag.release()
 
-    Files.createDirectories(Paths.get("plans/r06"))
+    Files.createDirectories(Paths.get(planDir))
     for (q <- args) {
       // plan dump (pre-execution formatted plan, driver-checkable)
       try {
         val df = SparkEntry.queries(q)(spark, sf)
         val planStr = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        Files.write(Paths.get(s"plans/r06/${q}_$tag.txt"), planStr.getBytes("UTF-8"))
+        Files.write(Paths.get(s"$planDir/$q$suffix.txt"), planStr.getBytes("UTF-8"))
         val exch = "Exchange".r.findAllIn(planStr).length
         graft.util.CacheBag.release()
         val times = (1 to reps).map { _ =>

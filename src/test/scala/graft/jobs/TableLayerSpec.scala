@@ -116,9 +116,10 @@ class TableLayerSpec extends SparkTestBase {
       Thread.sleep(1500)
       spark.sparkContext.removeSparkListener(l)
     }
-    // one stats aggregation + one partitionBy write (each may spawn a
-    // couple of AQE sub-jobs). The round-1 implementation ran one filtered
-    // write PER bucket: ~20 jobs at 16 buckets, growing with bucket count.
+    // one stats aggregation + one rebalanced partitionBy write (each may
+    // spawn a couple of AQE sub-jobs: 5 jobs in all here). The round-1
+    // implementation ran one filtered write PER bucket: ~20 jobs at 16
+    // buckets, growing with bucket count.
     assert(counter.get() <= 8, s"ingest spawned ${counter.get()} jobs")
   }
 

@@ -74,6 +74,39 @@ class WritePathSpec extends SparkTestBase {
     SnapshotTable.recursiveDelete(Paths.get(root))
   }
 
+  test("runPages writes one parquet file per entry from a many-task input, also on re-ingest") {
+    val root = tmpRoot("write-one-file")
+    def parquetFiles(dir: Path) = files(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+    /** The attempt dir `entries` were written to holds exactly one parquet
+      * file per entry, inside the entry's own directory. */
+    def assertOneFilePerEntry(entries: Seq[SnapshotTable.PartitionEntry]): Unit = {
+      val attempts = entries.map(e => Paths.get(e.path).getParent.getParent).distinct
+      assert(attempts.size === 1, attempts)
+      entries.foreach { e =>
+        assert(parquetFiles(Paths.get(e.path)).size === 1, s"entry ${e.path}")
+      }
+      assert(parquetFiles(attempts.head).size === entries.size, attempts.head)
+    }
+    // round-robin: every input task holds rows of every (p_cell, p_date) key
+    IngestJob.runPages(spark, pages.repartition(4), root, "one")
+    val first = SnapshotTable.currentSnapshot(root).get.parts
+    assert(first.map(_.pCell).distinct.size > 4, first.map(_.pCell))
+    assertOneFilePerEntry(first)
+    assertEntriesExact(root)
+
+    val changed = first.map(_.pCell).distinct.sorted.take(4)
+    IngestJob.runPages(spark, pages.withColumn("n_chars",
+        when(col("p_cell").isin(changed: _*), col("n_chars") + 1L).otherwise(col("n_chars")))
+      .repartition(4), root, "one")
+    val second = SnapshotTable.currentSnapshot(root).get.parts
+    val rewritten = second.filterNot(e => first.exists(_.path == e.path))
+    assert(rewritten.map(_.pCell).distinct.sorted === changed)
+    assert(rewritten.size === first.count(e => changed.contains(e.pCell)))
+    assertOneFilePerEntry(rewritten)
+    assertEntriesExact(root)
+    SnapshotTable.recursiveDelete(Paths.get(root))
+  }
+
   test("runPages, mergeInto, mergeIntoGlobal and mergeUpsertMor commit exact entries") {
     val root = tmpRoot("write-merges")
     IngestJob.runPages(spark, pages.filter(col("doc_id") % 3 =!= 0), root, "base")
