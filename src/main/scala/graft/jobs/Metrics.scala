@@ -1,10 +1,14 @@
 package graft.jobs
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.ListenerBusBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Run-metrics sink (SURVEY.md §2 A5): a QueryExecutionListener that
@@ -39,5 +43,38 @@ object MetricsCollector {
     val c = new MetricsCollector
     spark.listenerManager.register(c)
     c
+  }
+}
+
+/** Spark jobs started and stages completed while a block ran, with the
+  * wall seconds of each finished job in job-id order (from the events'
+  * own timestamps, so listener delivery lag does not count). */
+final case class JobCounts(jobs: Int, stages: Int, jobSeconds: Seq[Double])
+
+object JobCounts {
+  /** Runs `f` and counts the jobs and stages it schedules: the one job
+    * counter behind `graft.tools.Profile` and every job-count spec. The
+    * listener bus is drained before the listener attaches, so no earlier
+    * action's late events count, and again after `f`, so none of its own
+    * are missed — the counts are exact, not a race against a sleep. */
+  def during[A](spark: SparkSession)(f: => A): (A, JobCounts) = {
+    val sc = spark.sparkContext
+    val starts = new ConcurrentHashMap[Int, Long]()
+    val ends = new ConcurrentHashMap[Int, Long]()
+    val stages = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { starts.put(j.jobId, j.time); () }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = { ends.put(j.jobId, j.time); () }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
+    }
+    ListenerBusBridge.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = f
+      ListenerBusBridge.drain(sc)
+      val ids = starts.keySet.asScala.toSeq.sorted
+      val secs = ids.filter(ends.containsKey).map(id => (ends.get(id) - starts.get(id)) / 1000.0)
+      (a, JobCounts(ids.size, stages.get, secs))
+    } finally sc.removeSparkListener(l)
   }
 }

@@ -5,7 +5,7 @@ import graft.util.CacheBag
 
 /** Cache hygiene (round-2 verdict #9): after a query's result is consumed
   * and the driver calls CacheBag.release() — exactly what Bench/Verify/
-  * QTime do per query — the session CacheManager must be EMPTY. Operators
+  * Profile do per query — the session CacheManager must be EMPTY. Operators
   * may persist subtrees, but every persist must either be unpersisted
   * before returning (materialize-then-release) or registered with
   * CacheBag; a cache relying on LRU eviction is a leak. The only

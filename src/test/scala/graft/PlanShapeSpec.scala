@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import graft.jobs.JobCounts
 import graft.operators.{GeoQueries, SimilarityQueries, Tiling}
 import graft.sources.Pages
 import graft.testutil.SparkTestBase
@@ -34,18 +35,8 @@ class PlanShapeSpec extends SparkTestBase {
     case _ => p +: p.children.flatMap(planNodes)
   }
 
-  /** Spark jobs started while `f` runs (listener-bus drained). */
-  private def jobsOf(f: => Unit): Int = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { f; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(l)
-    counter.get()
-  }
+  /** Spark jobs started while `f` runs. */
+  private def jobsOf(f: => Any): Int = JobCounts.during(spark)(f)._2.jobs
 
   test("broadcast PIP join: zero Exchange on the pages side before the join") {
     val plan = GeoQueries.pipJoinOn(spark,
@@ -475,21 +466,11 @@ class PlanShapeSpec extends SparkTestBase {
   test("exact kNN plan is fully distributed: no collect between scan and result") {
     // the two-phase plan must be a single lazy DataFrame; building it must
     // not run any Spark job (the round-1 version collected per ring pass)
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val df = try {
-      val d = GeoQueries.knnJoinExact(spark, sf0001, k = 25, initRings = 1)
-      Thread.sleep(500) // listener bus drain
-      d
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (df, construction) =
+      JobCounts.during(spark)(GeoQueries.knnJoinExact(spark, sf0001, k = 25, initRings = 1))
     // spark.read.parquet runs footer/schema-listing jobs (metadata, not
     // data); the round-1 ring loop ran full compute+collect jobs per pass
-    assert(counter.get() <= 4, s"plan construction ran ${counter.get()} jobs")
+    assert(construction.jobs <= 4, s"plan construction ran ${construction.jobs} jobs")
     assert(df.collect().nonEmpty)
   }
 

@@ -2,8 +2,10 @@ package graft.jobs
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
-import graft.jobs.{IngestJob, MetricsCollector}
+import org.apache.spark.sql.graft.ListenerBusBridge
+import graft.jobs.{IngestJob, JobCounts, MetricsCollector}
 import graft.testutil.SparkTestBase
 
 class MetricsSpec extends SparkTestBase {
@@ -25,14 +27,34 @@ class MetricsSpec extends SparkTestBase {
   test("metrics collector records completed actions with durations") {
     val c = MetricsCollector.attach(spark)
     spark.read.parquet(s"$sf0001/documents.parquet").count()
-    // listener bus is async — poll until the event lands
-    val deadline = System.currentTimeMillis() + 30000
-    while (c.snapshot().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+    // listener bus is async — let the event land
+    ListenerBusBridge.drain(spark.sparkContext)
     val ms = c.snapshot()
     assert(ms.nonEmpty)
     assert(ms.forall(_.durationMs >= 0))
     assert(ms.exists(_.action.nonEmpty))
     spark.listenerManager.unregister(c)
+  }
+
+  test("JobCounts.during counts exactly the jobs and stages its block runs") {
+    val sc = spark.sparkContext
+    // a listener that lags on every job end and stage completion keeps
+    // those events queued after each action returns, so only the drains
+    // around the block make these counts exact
+    val lag = new SparkListener {
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = Thread.sleep(100)
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = Thread.sleep(100)
+    }
+    sc.addSparkListener(lag)
+    try {
+      // just before the block, a two-stage job: not counted
+      sc.parallelize(1 to 10, 2).map(i => (i % 3, i)).reduceByKey(_ + _).count()
+      val (_, c) = JobCounts.during(spark) {
+        (1 to 3).foreach(_ => sc.parallelize(1 to 10, 2).count())
+      }
+      assert(c.jobs === 3 && c.stages === 3, c)
+      assert(c.jobSeconds.size === 3 && c.jobSeconds.forall(_ >= 0), c)
+    } finally sc.removeSparkListener(lag)
   }
 
   test("bulk archive: range-clustered write lands all rows partitioned by cell/date") {

@@ -103,24 +103,12 @@ class TableLayerSpec extends SparkTestBase {
 
   test("ingest runs a constant number of jobs, independent of bucket count") {
     val root = tmpRoot("scans")
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try IngestJob.run(spark, sf0001, root, "jobS")
-    finally {
-      // listener bus is async — let queued job-start events land
-      Thread.sleep(1500)
-      spark.sparkContext.removeSparkListener(l)
-    }
+    val (_, ingest) = JobCounts.during(spark)(IngestJob.run(spark, sf0001, root, "jobS"))
     // one stats aggregation + one rebalanced partitionBy write (each may
     // spawn a couple of AQE sub-jobs: 5 jobs in all here). The round-1
     // implementation ran one filtered write PER bucket: ~20 jobs at 16
     // buckets, growing with bucket count.
-    assert(counter.get() <= 8, s"ingest spawned ${counter.get()} jobs")
+    assert(ingest.jobs <= 8, s"ingest spawned ${ingest.jobs} jobs")
   }
 
   test("time travel: committed snapshots stay readable after a changed-input rerun") {

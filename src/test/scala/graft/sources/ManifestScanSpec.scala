@@ -1,13 +1,12 @@
 package graft.sources
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.jobs.IngestJob
+import graft.jobs.{IngestJob, JobCounts}
 import graft.sources.SnapshotTable.{PartitionEntry, Pruning, Snapshot}
 import graft.testutil.SparkTestBase
 
@@ -19,27 +18,10 @@ class ManifestScanSpec extends SparkTestBase {
 
   private def tmpRoot(p: String): String = Files.createTempDirectory(p).toString
 
-  /** Spark jobs started by `f` on this thread (tagged by a job group, so
-    * a late event of an earlier suite cannot leak into the count). */
+  /** `f`'s result and the Spark jobs it started. */
   private def jobsOf[A](f: => A): (A, Int) = {
-    val group = s"manifest-scan-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(group, group)
-    try {
-      val a = f
-      // listener bus is async — let queued job-start events land
-      Thread.sleep(1000)
-      (a, n.get())
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
-    }
+    val (a, c) = JobCounts.during(spark)(f)
+    (a, c.jobs)
   }
 
   /** Rows as comparable sorted strings (binary columns by content). */
