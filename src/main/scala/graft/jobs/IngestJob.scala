@@ -456,7 +456,7 @@ object IngestJob {
       SnapshotTable.commitSnapshot(stage, Snapshot(1, 1, IndexedSeq(a), pages.schema.toDDL))
       // materialize snapshot 1's inventory next to the snapshot (the
       // stored aggregate an incremental refresh starts from)
-      spark.read.parquet(s"$stage/data/s1")
+      SnapshotTable.readAt(spark, stage, 1)._1
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
         .write.mode(SaveMode.Overwrite).parquet(s"$stage/inv/s1")

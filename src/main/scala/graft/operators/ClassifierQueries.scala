@@ -20,9 +20,6 @@ import graft.sources.Pages
   * smoothing) with none of IEEE log's cross-engine risk. */
 object ClassifierQueries {
 
-  private def docs(spark: SparkSession, sfDir: String) =
-    Pages.fromDocuments(spark, sfDir)
-
   // -------------------------------------------------------------------------
   // q132 — Naive-Bayes-surrogate language classifier (train/serve split)
   // -------------------------------------------------------------------------
@@ -44,7 +41,7 @@ object ClassifierQueries {
     * over ≤ nLangs rows — bounded by construction; the confusion agg is
     * nLangs². No corpus-wide window anywhere. */
   def nbConfusion(spark: SparkSession, sfDir: String): DataFrame = {
-    val tok = docs(spark, sfDir)
+    val tok = Pages.fromDocuments(spark, sfDir)
       .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("token"))
       .persist()
     graft.util.CacheBag.register(tok)
@@ -114,7 +111,7 @@ object ClassifierQueries {
     * partial agg to PackBins rows; the spread window runs over PackBins
     * rows. */
   def packingBalance(spark: SparkSession, sfDir: String, bins: Int = PackBins): DataFrame = {
-    val d = docs(spark, sfDir)
+    val d = Pages.fromDocuments(spark, sfDir)
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tok"))
     val ranked = Ranks.distributed(d, col("n_tok").desc, col("doc_id"))
     val perBin = ranked
@@ -150,7 +147,7 @@ object ClassifierQueries {
     * rides the lazy one-row broadcast. */
   def vocabCoverage(spark: SparkSession, sfDir: String): DataFrame = {
     val vocab = Ranks.distributed(
-      docs(spark, sfDir)
+      Pages.fromDocuments(spark, sfDir)
         .select(explode(split(col("text"), " ")).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("c")),
       col("c").desc, col("token"))
@@ -194,7 +191,7 @@ object ClassifierQueries {
     * one-row total broadcast; top-k is a TakeOrdered, never a global
     * sort. */
   def collocations(spark: SparkSession, sfDir: String): DataFrame = {
-    val tok = docs(spark, sfDir)
+    val tok = Pages.fromDocuments(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
     val uni = tok.select(explode(col("ws")).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("n"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.sources.Inputs
+
 /** Corpus-shaping operators — the steps between "deduplicated documents"
   * and "training shards" in a large-scale training-data pipeline:
   * token-stream shard packing, benchmark decontamination, PII scrubbing,
@@ -12,9 +14,6 @@ import org.apache.spark.sql.expressions.Window
   * ORDER BY with unique tiebreaks).
   */
 object CorpusQueries {
-
-  private def docs(spark: SparkSession, sfDir: String) =
-    spark.read.parquet(s"$sfDir/documents.parquet")
 
   final val ShardTokens = 4096L
   final val PackBucket = 100L
@@ -35,7 +34,7 @@ object CorpusQueries {
     * prefix sum exact. */
   def shardPacking(spark: SparkSession, sfDir: String,
       shardTokens: Long = ShardTokens, bucket: Long = PackBucket): DataFrame = {
-    val d = docs(spark, sfDir)
+    val d = Inputs.documents(spark, sfDir)
       .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))
       .withColumn("bucket", expr(s"doc_id div $bucket"))
     val wB = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
@@ -69,7 +68,7 @@ object CorpusQueries {
     * (the expensive stage) feeds both sides — persisted lazily + CacheBag
     * so it runs once per execution, not once per branch. */
   private def sharedWithBenchmark(spark: SparkSession, sfDir: String): DataFrame = {
-    val withSh = TextQueries.withShingleHashes(docs(spark, sfDir))
+    val withSh = TextQueries.withShingleHashes(Inputs.documents(spark, sfDir))
       .select(col("doc_id"), array_distinct(col("h0raw")).as("shd"))
       .persist()
     graft.util.CacheBag.register(withSh)
@@ -91,7 +90,7 @@ object CorpusQueries {
 
   def decontaminate(spark: SparkSession, sfDir: String,
       minShared: Int = ContamShared): DataFrame = {
-    docs(spark, sfDir).filter(col("doc_id") % 97 =!= 0)
+    Inputs.documents(spark, sfDir).filter(col("doc_id") % 97 =!= 0)
       .select(col("doc_id"), col("lang"))
       .join(sharedWithBenchmark(spark, sfDir), Seq("doc_id"), "left")
       .withColumn("n_shared", coalesce(col("n_shared"), lit(0L)))
@@ -113,7 +112,7 @@ object CorpusQueries {
     * the final agg; patterns restricted to syntax RE2 (DuckDB) and Java
     * regex interpret identically. */
   def piiScrub(spark: SparkSession, sfDir: String): DataFrame = {
-    val planted = docs(spark, sfDir).withColumn("text2", concat(
+    val planted = Inputs.documents(spark, sfDir).withColumn("text2", concat(
       col("text"),
       when(col("doc_id") % 7 === 0,
         concat(lit(" contact user"), col("doc_id").cast("string"), lit("@example.com")))
@@ -143,7 +142,7 @@ object CorpusQueries {
     * the heavy-domain skew is exactly what the cap removes. */
   def domainCap(spark: SparkSession, sfDir: String, cap: Int = DomainCap): DataFrame = {
     val w = Window.partitionBy(col("source")).orderBy(col("n_chars").desc, col("doc_id"))
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= cap)
       .groupBy(col("source"))
@@ -166,7 +165,7 @@ object CorpusQueries {
     * inventory. */
   def corpusPipeline(spark: SparkSession, sfDir: String,
       shardTokens: Long = ShardTokens): DataFrame = {
-    val d = docs(spark, sfDir)
+    val d = Inputs.documents(spark, sfDir)
       .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))
       .filter(col("n_tok") >= 5 && col("n_tok") <= 10000 && col("n_chars") < 100000)
       .filter(col("lang").isin("en", "de", "fr"))

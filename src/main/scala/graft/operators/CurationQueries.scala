@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.sources.Inputs
+
 /** Web-corpus curation operators — round-4 wave of the training-data
   * surface (SURVEY.md §2.R5): duplicated-span removal, link-graph
   * centrality + degree audit, URL canonicalization, frequency-rank and
@@ -17,9 +19,6 @@ import org.apache.spark.sql.expressions.Window
   * Spark `div` and DuckDB `//` agree).
   */
 object CurationQueries {
-
-  private def docs(spark: SparkSession, sfDir: String) =
-    spark.read.parquet(s"$sfDir/documents.parquet")
 
   // 60-bit md5-derived portable hash: the single source of truth is
   // TextQueries.tokHash / sqlTokHash (salted variants) — no local copy.
@@ -47,7 +46,7 @@ object CurationQueries {
   def spanDedup(spark: SparkSession, sfDir: String, w: Int = SpanGram): DataFrame = {
     // feeds BOTH the gram pipeline and the final per-doc join — persist so
     // the scan+tokenize runs once per query (released via CacheBag)
-    val base = docs(spark, sfDir)
+    val base = Inputs.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= w)
       .persist()
@@ -105,7 +104,7 @@ object CurationQueries {
     * N comes from a ONE-row broadcast count (the q102 lazy-scalar shape,
     * allow-listed in PlanShapeSpec). */
   private def linkEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir).select(col("doc_id"))
+    val d = Inputs.documents(spark, sfDir).select(col("doc_id"))
     val n = d.groupBy().agg(count(lit(1)).as("n"))
     val strides = array(
       struct(lit(1L).as("s"), lit(0).as("minMod")),
@@ -154,7 +153,7 @@ object CurationQueries {
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
     val contribs = edges.join(outdeg, "src").repartition(col("src")).persist()
     graft.util.CacheBag.register(contribs)
-    var r = docs(spark, sfDir).select(col("doc_id").as("v"), lit(PrInit).as("r"))
+    var r = Inputs.documents(spark, sfDir).select(col("doc_id").as("v"), lit(PrInit).as("r"))
     for (_ <- 1 to iters) {
       r = contribs.join(r, col("src") === col("v"))
         .select(col("dst"), expr("r div od").as("c"))
@@ -195,7 +194,7 @@ object CurationQueries {
         "WHEN 1 THEN concat('https://src', CAST((doc_id div 2) % 20 AS STRING), '.example.com/doc/', CAST(doc_id div 2 AS STRING), '/') " +
         "WHEN 2 THEN concat('https://src', CAST((doc_id div 2) % 20 AS STRING), '.example.com/doc/', CAST(doc_id div 2 AS STRING), '?b=2&a=1&utm_c=x') " +
         "ELSE concat('https://src', CAST((doc_id div 2) % 20 AS STRING), '.example.com/doc/', CAST(doc_id div 2 AS STRING), '?a=1&b=2') END"
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .selectExpr("doc_id", s"$raw AS raw")
       .selectExpr("doc_id", "raw",
         "lower(split_part(raw, '://', 1)) AS scheme",
@@ -249,7 +248,7 @@ object CurationQueries {
   def tokenRankQuality(spark: SparkSession, sfDir: String): DataFrame = {
     // the token stream feeds both the vocabulary agg and the score join —
     // persist so the scan+explode runs once (released via CacheBag)
-    val tok = docs(spark, sfDir)
+    val tok = Inputs.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("token"))
       .persist()
     graft.util.CacheBag.register(tok)
@@ -287,7 +286,7 @@ object CurationQueries {
     * the same counts arithmetically (Σ copies) — agreement proves the
     * explode materialization. */
   def langRebalance(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
+    val d = Inputs.documents(spark, sfDir)
     val cnts = d.groupBy(col("lang")).agg(count(lit(1)).as("docs_in"))
       .withColumn("total", sum(col("docs_in")).over(Window.partitionBy()))
       .select(col("lang"), col("docs_in"), expr("(total * 200) div docs_in").as("factor_pm"))
@@ -340,7 +339,7 @@ object CurationQueries {
     val qt = Phrases.toDF("qid", "phrase")
       .select(col("qid"), col("phrase"), posexplode(split(col("phrase"), " ")).as(Seq("idx", "term")))
       .withColumn("n_terms", count(lit(1)).over(Window.partitionBy(col("qid"))))
-    val postings = docs(spark, sfDir)
+    val postings = Inputs.documents(spark, sfDir)
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
     val occ = postings.join(broadcast(qt), col("token") === col("term"))
       .groupBy(col("qid"), col("phrase"), col("doc_id"), (col("pos") - col("idx")).as("base"))
@@ -371,7 +370,7 @@ object CurationQueries {
   def bigramCoverage(spark: SparkSession, sfDir: String): DataFrame = {
     // the bigram stream feeds both the LM-count agg and the score join —
     // persist so the scan+explode runs once (released via CacheBag)
-    val bg = docs(spark, sfDir)
+    val bg = Inputs.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("doc_id"), col("lang"),
@@ -408,7 +407,7 @@ object CurationQueries {
   def webgraphAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val edges = linkEdges(spark, sfDir).persist()
     graft.util.CacheBag.register(edges)
-    val nodes = docs(spark, sfDir).select(col("doc_id"))
+    val nodes = Inputs.documents(spark, sfDir).select(col("doc_id"))
     val indeg = edges.groupBy(col("dst")).agg(count(lit(1)).as("indeg"))
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val recip = edges.as("a").join(edges.as("b"),
@@ -481,7 +480,7 @@ object CurationQueries {
     * joins to attach sources + one matrix-sized agg. */
   def syndicationMatrix(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = TextQueries.lshNearDupPairsAnd(spark, sfDir)._1
-    val src = docs(spark, sfDir).select(col("doc_id"), col("source"))
+    val src = Inputs.documents(spark, sfDir).select(col("doc_id"), col("source"))
     pairs
       .join(src.as("a"), col("d1") === col("a.doc_id"))
       .join(src.as("b"), col("d2") === col("b.doc_id"))
@@ -540,13 +539,13 @@ object CurationQueries {
     // silently drop pages out of the inner join; CurationSpec asserts
     // sum(n_pages) == corpus rows. The distinct is source-cardinality
     // sized → broadcast-safe.
-    val rules = docs(spark, sfDir).select(col("source")).distinct()
+    val rules = Inputs.documents(spark, sfDir).select(col("source")).distinct()
       .withColumn("sfx", substring(col("source"), 4, 10).cast("int") % 10)
       .select(col("source"), explode(array(
         struct(lit("/doc/").as("prefix"), lit(1).as("allow")),
         struct(concat(lit("/doc/"), col("sfx")).as("prefix"), lit(0).as("allow")))).as("r"))
       .select(col("source"), col("r.prefix").as("prefix"), col("r.allow").as("allow"))
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .select(col("doc_id"), col("source"),
         concat(lit("/doc/"), col("doc_id").cast("string")).as("path"))
       .join(broadcast(rules), Seq("source"))
@@ -581,7 +580,7 @@ object CurationQueries {
     * Scale shape: pure per-row projection + ONE global aggregate row,
     * unpivoted with stack — no shuffle before the final 4-row agg. */
   def filterCascade(spark: SparkSession, sfDir: String): DataFrame = {
-    val flags = docs(spark, sfDir)
+    val flags = Inputs.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .withColumn("n_tok", size(col("ws")).cast("long"))
       .withColumn("grams", expr(
@@ -633,7 +632,7 @@ object CurationQueries {
     * metadata-sized driver state both BPE entry points share. */
   private def wordVocab(spark: SparkSession, sfDir: String): Array[(String, Long)] = {
     import spark.implicits._
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("w")).limit(BpeVocabCap)
@@ -678,7 +677,7 @@ object CurationQueries {
       merges: Seq[(String, String)]): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val spec = graft.functions.GraftFunctions.bpeMergeSpec(merges)
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .select(col("lang"), explode(split(col("text"), " ")).as("w"))
       .select(col("lang"), length(col("w")).cast("long").as("n_chars_w"),
         graft.functions.GraftFunctions.bpe_subtokens(col("w"), lit(spec))

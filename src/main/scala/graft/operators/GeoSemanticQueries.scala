@@ -186,7 +186,7 @@ object GeoSemanticQueries {
         SnapshotTable.commitSnapshot(stage, Snapshot(1, 1, IndexedSeq(a), ec.schema.toDDL))
         // the stored aggregate: per-cell count + elementwise vector SUM
         // (sums, not means — only sums merge associatively with a delta)
-        spark.read.parquet(s"$stage/data/s1")
+        SnapshotTable.readAt(spark, stage, 1)._1
           .groupBy(col("cell"))
           .agg(count(lit(1)).as("n"), vecSum(col("qv")).as("sv"))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$stage/agg/s1")

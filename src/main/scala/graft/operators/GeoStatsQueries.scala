@@ -16,9 +16,6 @@ import graft.sources.{Footprints, Pages}
   */
 object GeoStatsQueries {
 
-  private def pages(spark: SparkSession, sfDir: String) =
-    Pages.fromDocuments(spark, sfDir)
-
   // -------------------------------------------------------------------------
   // q111 — kernel-smoothed density heatmap (KDE on the cell grid)
   // -------------------------------------------------------------------------
@@ -41,7 +38,7 @@ object GeoStatsQueries {
     val cx = Pages.cellAxis(col("ilon"), GridW, KdeLevel)
     // grid-sized but corpus-scan-derived; feeds the kernel scatter AND the
     // raw-count join back — persist once (released via CacheBag)
-    val occ = pages(spark, sfDir)
+    val occ = Pages.fromDocuments(spark, sfDir)
       .select(cy.as("cy"), cx.as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
       .persist()
@@ -158,7 +155,7 @@ object GeoStatsQueries {
     * formula is homogeneous, so the REPORTED ratio num/den is unchanged. */
   def moranComponents(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val pg = pages(spark, sfDir)
+    val pg = Pages.fromDocuments(spark, sfDir)
     // r6 (guide §2.3/§2.4): ONE corpus scan + grid agg at the FINEST
     // level; coarser levels roll up from it arithmetically. The grids
     // nest exactly — floor(floor(a/b)/c) = floor(a/(b·c)) makes
@@ -249,7 +246,7 @@ object GeoStatsQueries {
     val cx = Pages.cellAxis(col("ilon"), GridW, LisaLevel)
     // grid-sized but corpus-scan-derived; feeds totals, deviations and the
     // scatter join — persist once (released via CacheBag)
-    val occ = pages(spark, sfDir)
+    val occ = Pages.fromDocuments(spark, sfDir)
       .select(cy.as("cy"), cx.as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
       .persist()
@@ -315,7 +312,7 @@ object GeoStatsQueries {
       .filter(col("cy") < col("cy0") || col("cy") > col("cy1") ||
         col("cx") < col("cx0") || col("cx") > col("cx1"))
       .select(col("fp_id"), (col("cy") * p + col("cx")).as("cell6"))
-    val pageCells = pages(spark, sfDir).select(
+    val pageCells = Pages.fromDocuments(spark, sfDir).select(
       Pages.cellCol(col("ilat"), col("ilon"), BufferLevel).as("cell6"),
       col("doc_id"), col("lang"))
     halo.join(pageCells, Seq("cell6"), "left")
@@ -344,7 +341,7 @@ object GeoStatsQueries {
     * grid-sized agg. */
   def idwSurface(spark: SparkSession, sfDir: String): DataFrame = {
     val p = 1L << KdeLevel
-    val occ = pages(spark, sfDir)
+    val occ = Pages.fromDocuments(spark, sfDir)
       .select(Pages.cellAxis(col("ilat"), GridH, KdeLevel).as("cy"),
         Pages.cellAxis(col("ilon"), GridW, KdeLevel).as("cx"), col("n_chars"))
       .groupBy(col("cy"), col("cx"))
@@ -387,7 +384,7 @@ object GeoStatsQueries {
     val centers = Footprints.boxesDf(spark).select(col("fp_id"),
       expr(s"((ilat0 + ilat1 + 1800) div 2) * $p div 1800").as("ccy"),
       expr(s"((ilon0 + ilon1 + 3600) div 2) * $p div 3600").as("ccx"))
-    val occ = pages(spark, sfDir)
+    val occ = Pages.fromDocuments(spark, sfDir)
       .select(Pages.cellAxis(col("ilat"), GridH, KdeLevel).as("cy"),
         Pages.cellAxis(col("ilon"), GridW, KdeLevel).as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
@@ -424,7 +421,7 @@ object GeoStatsQueries {
     val che = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
         c: org.apache.spark.sql.Column, d: org.apache.spark.sql.Column) =>
       greatest(abs(a - c), abs(b - d))
-    val p0 = pages(spark, sfDir)
+    val p0 = Pages.fromDocuments(spark, sfDir)
       .select(col("source"), col("ts_sec"), col("doc_id"), col("ilat"), col("ilon"))
       .withColumn("bkt", expr(s"(ts_sec - ${Pages.Epoch}) div $TrajBucket"))
     val wIn = Window.partitionBy(col("source"), col("bkt")).orderBy(col("ts_sec"), col("doc_id"))
@@ -486,7 +483,7 @@ object GeoStatsQueries {
   def arealInterpolation(spark: SparkSession, sfDir: String): DataFrame = {
     val p = 1L << ArealLevel
     val fp = Footprints.boxesDf(spark)
-    val pg = pages(spark, sfDir)
+    val pg = Pages.fromDocuments(spark, sfDir)
     val counts = pg.join(broadcast(fp), Footprints.contains)
       .groupBy(col("fp_id")).agg(count(lit(1)).as("n_pages"))
     // scaled space: box spans [a·p, (a1+1)·p), cell k spans
@@ -542,7 +539,7 @@ object GeoStatsQueries {
     // the corpus agg per level while AQE stage latency dominated; at
     // maxLevel ≥ 8 use [[adaptiveGridDistributed]], the identical-output
     // scale path below, gated equal by GeoStatsSpec).
-    val fine = pages(spark, sfDir)
+    val fine = Pages.fromDocuments(spark, sfDir)
       .select(Pages.cellAxis(col("ilat"), GridH, maxLevel).as("cy"),
         Pages.cellAxis(col("ilon"), GridW, maxLevel).as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("n"))
@@ -575,7 +572,7 @@ object GeoStatsQueries {
     * row-identity with the driver-assembled default). */
   def adaptiveGridDistributed(spark: SparkSession, sfDir: String,
       maxLevel: Int = AdaptLevel, split: Long = AdaptSplit): DataFrame = {
-    val fine = pages(spark, sfDir)
+    val fine = Pages.fromDocuments(spark, sfDir)
       .select(Pages.cellAxis(col("ilat"), GridH, maxLevel).as("cy"),
         Pages.cellAxis(col("ilon"), GridW, maxLevel).as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("n"))
@@ -624,7 +621,7 @@ object GeoStatsQueries {
     * lazy one-row broadcast (the q102 scalar shape). */
   def emergingHotspots(spark: SparkSession, sfDir: String): DataFrame = {
     val p = 1L << MkLevel
-    val pg = pages(spark, sfDir)
+    val pg = Pages.fromDocuments(spark, sfDir)
     val bounds = pg.agg(min(col("ts_sec")).as("mn"), max(col("ts_sec")).as("mx"))
     val counts = pg.crossJoin(broadcast(bounds))
       .select(Pages.cellAxis(col("ilat"), GridH, MkLevel).as("cy"),
@@ -672,7 +669,7 @@ object GeoStatsQueries {
     val centers = Footprints.boxesDf(spark).select(col("fp_id"),
       expr(s"((ilat0 + ilat1 + 1800) div 2) * $p div 1800").as("ccy"),
       expr(s"((ilon0 + ilon1 + 3600) div 2) * $p div 3600").as("ccx"))
-    val occ = pages(spark, sfDir)
+    val occ = Pages.fromDocuments(spark, sfDir)
       .select(Pages.cellAxis(col("ilat"), GridH, TerrLevel).as("cy"),
         Pages.cellAxis(col("ilon"), GridW, TerrLevel).as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
@@ -707,7 +704,7 @@ object GeoStatsQueries {
     * one grid-sized agg. */
   def densityGradient(spark: SparkSession, sfDir: String, topK: Int = GradTopK): DataFrame = {
     val p = 1L << KdeLevel
-    val occ = pages(spark, sfDir)
+    val occ = Pages.fromDocuments(spark, sfDir)
       .select(Pages.cellAxis(col("ilat"), GridH, KdeLevel).as("cy"),
         Pages.cellAxis(col("ilon"), GridW, KdeLevel).as("cx"))
       .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
@@ -765,7 +762,7 @@ object GeoStatsQueries {
     * factor-join shape). */
   def locationQuotient(spark: SparkSession, sfDir: String): DataFrame = {
     val p = 1L << LqLevel
-    val cl = pages(spark, sfDir)
+    val cl = Pages.fromDocuments(spark, sfDir)
       .select(Pages.cellAxis(col("ilat"), GridH, LqLevel).as("cy"),
         Pages.cellAxis(col("ilon"), GridW, LqLevel).as("cx"), col("lang"))
       .groupBy(col("cy"), col("cx"), col("lang"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Inputs
+
 /** Graph operators over dedup candidate pairs — the step after near-dup
   * pair generation in a training-data pipeline: pairs are only edges; the
   * deliverable is CLUSTERS (keep one representative per component).
@@ -149,7 +151,7 @@ object GraphQueries {
     val pairs = TextQueries.lshNearDupPairsAnd(spark, sfDir)._1
     val comps = connectedComponents(
       pairs.select(col("d1").as("src"), col("d2").as("dst")))
-    val d = spark.read.parquet(s"$sfDir/documents.parquet").select(col("doc_id"))
+    val d = Inputs.documents(spark, sfDir).select(col("doc_id"))
     val hpm = TextQueries.tokHash(col("comp").cast("string"), "split") % 1000
     d.join(comps, col("doc_id") === col("node"), "left")
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))

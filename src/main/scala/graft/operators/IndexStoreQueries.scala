@@ -135,7 +135,7 @@ object IndexStoreQueries {
     * q123 (`IndexStoreSpec`). */
   def bpeEncodeServed(spark: SparkSession, sfDir: String): DataFrame = {
     val root = bpeRoot(spark, sfDir)
-    val merges = spark.read.parquet(s"$root/data/merges")
+    val merges = SnapshotTable.readAt(spark, root, 1)._1
       .orderBy(col("rank")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
     CurationQueries.encodeWithMerges(spark, sfDir, merges)
@@ -172,7 +172,7 @@ object IndexStoreQueries {
         val base = cs.filter(!isDocHoldout).select(col("h")).distinct()
         val a = part(1, base, "base")
         SnapshotTable.commitSnapshot(stage, Snapshot(1, 1, IndexedSeq(a), base.schema.toDDL))
-        val stored = spark.read.parquet(s"$stage/data/base")
+        val stored = SnapshotTable.readAt(spark, stage, 1)._1
         val newH = cs.filter(isDocHoldout).select(col("h")).distinct()
           .join(stored, Seq("h"), "left_anti")
         val b = part(2, newH, "delta")

@@ -5,6 +5,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Inputs
+
 /** Multimodal column plumbing: image/audio/video carried as opaque `binary`
   * columns with typed metadata, plus decode / feature-extract / resize /
   * frame-sample stages.
@@ -117,7 +119,7 @@ object MultiModal {
     * leniently, count ok vs quarantined per kind (oracle = arithmetic
     * corruption pattern). */
   def quarantineQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val n = spark.read.parquet(s"$sfDir/documents.parquet").count()
+    val n = Inputs.documents(spark, sfDir).count()
     decodeLenient(mediaTableCorrupted(spark, n))
       .groupBy(col("kind"))
       .agg(count(lit(1)).as("n_media"),
@@ -175,7 +177,7 @@ object MultiModal {
     * (the multimodal pillar's only previously ST-only surface). Checksums
     * stay ST-gated (byte-rolling hash has no practical SQL twin). */
   def mediaInventoryQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val n = spark.read.parquet(s"$sfDir/documents.parquet").count()
+    val n = Inputs.documents(spark, sfDir).count()
     decodeAll(mediaTable(spark, n))
       .groupBy(col("kind"))
       .agg(count(lit(1)).as("n_media"), sum(col("n_frames")).as("sum_frames"),
@@ -188,7 +190,7 @@ object MultiModal {
     * sampled-count `(nf + 2) // 3`. Gates the sampling stride through the
     * driver's hash compare, not just the ST. */
   def frameSampleQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val n = spark.read.parquet(s"$sfDir/documents.parquet").count()
+    val n = Inputs.documents(spark, sfDir).count()
     sampleFrames(mediaTable(spark, n), step = 3)
       .groupBy(col("n_frames"))
       .agg(countDistinct(col("media_id")).as("n_videos"),
@@ -200,7 +202,7 @@ object MultiModal {
     * through the mapPartitions codec path; per-kind pixel budgets before
     * and after, oracle = pure dimension arithmetic. */
   def resizeQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val n = spark.read.parquet(s"$sfDir/documents.parquet").count()
+    val n = Inputs.documents(spark, sfDir).count()
     resizeAll(mediaTable(spark, n))
       .groupBy(col("kind"))
       .agg(count(lit(1)).as("n_media"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.sources.Pages
+import graft.sources.{Inputs, Pages}
 
 /** Relational breadth (SURVEY.md §2 B/E/F/G): projections, windows,
   * grouping sets, set ops, dedup-pick, JSON/url/date functions — each the
@@ -17,22 +17,11 @@ import graft.sources.Pages
   */
 object RelationalQueries {
 
-  private def li(spark: SparkSession, sfDir: String) =
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-  private def orders(spark: SparkSession, sfDir: String) =
-    spark.read.parquet(s"$sfDir/orders.parquet")
-  private def customer(spark: SparkSession, sfDir: String) =
-    spark.read.parquet(s"$sfDir/customer.parquet")
-  private def events(spark: SparkSession, sfDir: String) =
-    spark.read.parquet(s"$sfDir/events.parquet")
-  private def docs(spark: SparkSession, sfDir: String) =
-    spark.read.parquet(s"$sfDir/documents.parquet")
-
   private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
 
   /** E1/B8 — pricing summary (TPC-H Q1 shape) in exact integer cents. */
   def pricingSummary(spark: SparkSession, sfDir: String): DataFrame =
-    li(spark, sfDir)
+    Inputs.lineitem(spark, sfDir)
       .filter(col("l_shipdate") < lit("1998-09-01").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -47,7 +36,7 @@ object RelationalQueries {
   def topOrdersPerCust(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    orders(spark, sfDir)
+    Inputs.orders(spark, sfDir)
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 3)
       .select(col("o_custkey"), col("rnk"), col("o_orderkey"),
@@ -58,7 +47,7 @@ object RelationalQueries {
   /** F2 — lag: inter-event (recrawl-cadence analog) gaps per user. */
   def eventGaps(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_sec"), col("event_id"))
-    events(spark, sfDir)
+    Inputs.events(spark, sfDir)
       .withColumn("ts_sec", unix_timestamp(col("ts")))
       .withColumn("gap", col("ts_sec") - lag(col("ts_sec"), 1).over(w))
       .groupBy(col("user_id"))
@@ -70,7 +59,7 @@ object RelationalQueries {
   /** F3 — frames: rolling 4-row sum of event value per user. */
   def rollingValue(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_sec"), col("event_id"))
-    events(spark, sfDir)
+    Inputs.events(spark, sfDir)
       .withColumn("ts_sec", unix_timestamp(col("ts")))
       .withColumn("value_c", cents(col("value")))
       .withColumn("roll_c", sum(col("value_c")).over(w.rowsBetween(-3, 0)))
@@ -81,7 +70,7 @@ object RelationalQueries {
 
   /** E4 — rollup over (lang, source): the inventory-rollup analog. */
   def langSourceRollup(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .rollup(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       .select(coalesce(col("lang"), lit("ALL")).as("lang"),
@@ -91,8 +80,8 @@ object RelationalQueries {
 
   /** D7 — semi/anti: customers with vs without orders. */
   def custOrderActivity(spark: SparkSession, sfDir: String): DataFrame = {
-    val c = customer(spark, sfDir)
-    val o = orders(spark, sfDir)
+    val c = Inputs.customer(spark, sfDir)
+    val o = Inputs.orders(spark, sfDir)
     val withO = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
       .agg(count(lit(1)).as("n_cust")).withColumn("kind", lit("with_orders"))
     val withoutO = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
@@ -102,7 +91,7 @@ object RelationalQueries {
 
   /** G4 — set ops: source-set intersect/except between two langs. */
   def sourceSetDiff(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
+    val d = Inputs.documents(spark, sfDir)
     val en = d.filter(col("lang") === "en").select(col("source")).distinct()
     val de = d.filter(col("lang") === "de").select(col("source")).distinct()
     val ex = en.except(de).agg(count(lit(1)).as("n")).withColumn("op", lit("except"))
@@ -141,7 +130,7 @@ object RelationalQueries {
 
   /** B10 — JSON props extraction + aggregation per event type. */
   def eventProps(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
+    Inputs.events(spark, sfDir)
       .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
@@ -159,7 +148,7 @@ object RelationalQueries {
 
   /** B7 — day-of-year window filter (the GIPS %j temporal filter analog). */
   def doyWindow(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
+    Inputs.events(spark, sfDir)
       .filter(dayofyear(col("ts")).between(1, 15))
       .withColumn("day", to_date(col("ts")))
       .groupBy(col("event_type"), col("day"))
@@ -168,7 +157,7 @@ object RelationalQueries {
 
   /** E3 — exact percentiles (zonal-stats analog) per event type. */
   def valuePercentiles(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
+    Inputs.events(spark, sfDir)
       .withColumn("value_c", cents(col("value")))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -180,7 +169,7 @@ object RelationalQueries {
   def rangeFrameCounts(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_sec"))
       .rangeBetween(-600, 0)
-    events(spark, sfDir)
+    Inputs.events(spark, sfDir)
       .withColumn("ts_sec", unix_timestamp(col("ts")))
       .withColumn("n_10min", count(lit(1)).over(w))
       .filter(col("user_id") < 10)
@@ -190,7 +179,7 @@ object RelationalQueries {
 
   /** B9 — explode/UNNEST: global top-20 tokens. */
   def topTokens(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("n"))
@@ -199,7 +188,7 @@ object RelationalQueries {
 
   /** E4 — full cube over (lang, source). */
   def langSourceCube(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .cube(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"))
       .select(coalesce(col("lang"), lit("ALL")).as("lang"),
@@ -235,7 +224,7 @@ object RelationalQueries {
 
   /** B6 — string functions: levenshtein / case / substring over sources. */
   def stringFns(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .groupBy(col("lang"))
       .agg(
         sum(levenshtein(col("source"), lit("src0"))).as("sum_lev"),
@@ -250,7 +239,7 @@ object RelationalQueries {
     * reuses that clustering. Crawl analog: recrawl bursts per host. */
   def sessionize(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_sec"), col("event_id"))
-    events(spark, sfDir)
+    Inputs.events(spark, sfDir)
       .withColumn("ts_sec", unix_timestamp(col("ts")))
       .withColumn("value_c", cents(col("value")))
       .withColumn("is_new",
@@ -271,7 +260,7 @@ object RelationalQueries {
     * with conditional partials — no per-value scan, no second shuffle). */
   def eventPivot(spark: SparkSession, sfDir: String): DataFrame = {
     val types = Seq("click", "error", "purchase", "signup", "view")
-    val e = events(spark, sfDir).withColumn("value_c", cents(col("value")))
+    val e = Inputs.events(spark, sfDir).withColumn("value_c", cents(col("value")))
     val aggs = types.flatMap { t =>
       Seq(sum(when(col("event_type") === t, 1L).otherwise(0L)).as(s"n_$t"),
         sum(when(col("event_type") === t, col("value_c")).otherwise(0L)).as(s"v_$t"))
@@ -344,7 +333,7 @@ object RelationalQueries {
     * 2,1,2,1 against ntile's 2,2,1,1.) n arrives as a one-row broadcast;
     * RelationalSpec pins row-identity against the window formulation. */
   def custQuartiles(spark: SparkSession, sfDir: String): DataFrame = {
-    val totals = orders(spark, sfDir)
+    val totals = Inputs.orders(spark, sfDir)
       .groupBy(col("o_custkey"))
       .agg(sum(cents(col("o_totalprice"))).as("total_c"))
     val n1 = totals.agg(count(lit(1)).as("n"))
@@ -364,7 +353,7 @@ object RelationalQueries {
   /** E+hist — fixed-width value histogram per event type (width_bucket
     * analog in exact integer cents; one aggregation). */
   def valueHistogram(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
+    Inputs.events(spark, sfDir)
       .withColumn("value_c", cents(col("value")))
       .withColumn("bin", expr("value_c div 5000")) // 50-unit buckets
       .groupBy(col("event_type"), col("bin"))
@@ -377,7 +366,7 @@ object RelationalQueries {
     * internals are engine-specific (no DuckDB hash twin — driver records
     * rows-only); the ±1% rank-error-vs-exact property is ST-gated. */
   def valuePercentilesApprox(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
+    Inputs.events(spark, sfDir)
       .withColumn("value_c", cents(col("value")))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),

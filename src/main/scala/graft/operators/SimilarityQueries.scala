@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 
+import graft.sources.Inputs
+
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
   * Metric determinism: vectors are quantized to integer milli-units
@@ -33,19 +35,12 @@ object SimilarityQueries {
     * the LSH worst case. More planes only pay off when vectors cluster. */
   final val NumPlanes = 4
 
-  /** `embeddings.parquet` under its fixed schema (the same at every
-    * scale factor), so building a plan over it runs no schema-inference
-    * job. */
-  private def embeddings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
-      .parquet(s"$sfDir/embeddings.parquet")
-
   /** (vec_id, carry..., qv): the embeddings with `qv` = floor(1000 * x)
     * per element as BIGINT — the one embedding reader of the family.
     * Registers the Graft kernels (`l2_dist`, `argmin_l2`, ...). */
   private[operators] def vectors(spark: SparkSession, sfDir: String, carry: String*): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    embeddings(spark, sfDir).select((col("vec_id") +: carry.map(col)) :+
+    Inputs.embeddings(spark, sfDir).select((col("vec_id") +: carry.map(col)) :+
       transform(col("embedding"), e => floor(e.cast("double") * 1000).cast("long")).as("qv"): _*)
   }
 
@@ -336,7 +331,7 @@ object SimilarityQueries {
     * surrogate, same bounded TopKAgg ranking); at index scale candidates
     * come from the cosine-IVF probes (q98) instead of the full scan. */
   def bitextMining(spark: SparkSession, sfDir: String, nQueries: Int = 50): DataFrame = {
-    val langs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val langs = Inputs.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"))
     val e = withNorm(vectors(spark, sfDir), "qv")
       .join(langs, col("vec_id") === col("doc_id")).drop("doc_id")
@@ -578,7 +573,7 @@ object SimilarityQueries {
     // n = corpus rows counted on the raw file (parquet footers): a count
     // over `vectors` would hit q46's cache of that same plan and fill it
     // in a job of its own
-    val c = ivfCentroidCount(embeddings(spark, sfDir).count())
+    val c = ivfCentroidCount(Inputs.embeddings(spark, sfDir).count())
     val centsLocal = kmeansLocalDist(e.select(col("vec_id"), col("qv")), c, IvfIters)
     (centsLocal.toDF("cid", "cv"),
       e.select(Seq(col("vec_id"), nearestCid(col("qv"), centsLocal).as("cid")) ++ carry.map(col): _*))

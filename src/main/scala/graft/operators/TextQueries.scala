@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.sources.Inputs
+
 /** Text-analysis + deduplication operators over the `documents` table —
   * the training-data-pipeline surface: token stats, quality scoring,
   * language-ID heuristic, document fingerprinting (rolling hash), exact
@@ -18,9 +20,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object TextQueries {
 
-  private def docs(spark: SparkSession, sfDir: String) =
-    spark.read.parquet(s"$sfDir/documents.parquet")
-
   /** 60-bit token hash from the md5 hex prefix — portable across engines.
     * Shared (with its SQL twin below) by every operator needing a
     * deterministic cross-engine hash — do NOT re-derive the idiom. */
@@ -32,7 +31,7 @@ object TextQueries {
 
   /** B11 — token counting per language. */
   def tokenStats(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .withColumn("n_tok", size(split(col("text"), " ")))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("sum_tok"),
@@ -44,7 +43,7 @@ object TextQueries {
     val toks = split(col("text"), " ")
     val sw = size(filter(toks, t => t === "the" || t === "a"))
     val swrM = floor(sw.cast("long") * 1000 / size(toks)).cast("long")
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .withColumn("swr_m", swrM)
       .withColumn("bucket",
         when(col("swr_m") < 50, "low").when(col("swr_m") < 80, "mid").otherwise("high"))
@@ -59,7 +58,7 @@ object TextQueries {
     val padded = concat(lit(" "), col("text"), lit(" "))
     val pred = when(instr(padded, " the ") > 0 || instr(padded, " a ") > 0, "en")
       .otherwise("und")
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .withColumn("predicted", pred)
       .groupBy(col("lang"), col("predicted"))
       .agg(count(lit(1)).as("n_docs"))
@@ -72,7 +71,7 @@ object TextQueries {
     val fp = aggregate(
       transform(split(col("text"), " "), t => tokHash(t)),
       lit(0L), (acc, h) => (acc * 31 + h) % 1000000007L)
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .withColumn("fp", fp)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), countDistinct(col("fp")).as("n_fp"))
@@ -81,7 +80,7 @@ object TextQueries {
 
   /** Exact dedup via content hash: per (lang, source) duplicate stats. */
   def exactDedup(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .withColumn("h", md5(col("text")))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -128,7 +127,7 @@ object TextQueries {
     minhashSigsUnsorted(spark, sfDir).orderBy(col("doc_id"))
 
   private def minhashSigsUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = withShingleHashes(docs(spark, sfDir))
+    val base = withShingleHashes(Inputs.documents(spark, sfDir))
       .withColumn("h0", transform(col("h0raw"), h => h % P))
     val sigs = (0 until NumSigs).map(i =>
       array_min(transform(col("h0"), h => (h * HashA(i) + HashB(i)) % P)).as(s"s$i"))
@@ -171,7 +170,7 @@ object TextQueries {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
       .distinct()
-    val sh = withShingleHashes(docs(spark, sfDir))
+    val sh = withShingleHashes(Inputs.documents(spark, sfDir))
       .select(col("doc_id"), array_distinct(col("h0raw")).as("shd"))
       .persist()
     val inter = size(array_intersect(col("x.shd"), col("y.shd")))
@@ -195,7 +194,7 @@ object TextQueries {
 
   /** 16-bit SimHash over token hashes (majority vote per bit). */
   def simhash(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
+    val d = Inputs.documents(spark, sfDir)
       .withColumn("toks", split(col("text"), " "))
       .withColumn("n_tok", size(col("toks")))
       .withColumn("th", transform(col("toks"), t => tokHash(t)))
@@ -226,7 +225,7 @@ object TextQueries {
     * 4710 from sf0.01 → sf0.1 (max block 7 rows), and near-dup recall of
     * true jac>=0.15 pairs is 0.84/0.95 — blocking work is ~linear in n. */
   def blockedJaccard(spark: SparkSession, sfDir: String, minJacM: Int = 150): DataFrame = {
-    val base = withShingleHashes(docs(spark, sfDir))
+    val base = withShingleHashes(Inputs.documents(spark, sfDir))
       .withColumn("h0", col("h0raw"))
     val sigs = (0 until BlockA.length).map(i =>
       array_min(transform(col("h0"), h => ((h % P) * BlockA(i) + BlockB(i)) % P)).as(s"s$i"))
@@ -267,7 +266,7 @@ object TextQueries {
     val hExpr = transform(col("h0raw"), h => h % P)
     val printsExpr = array_distinct(flatten(transform(array(hExpr), hh =>
       transform(sequence(lit(0), size(hh) - w), i => array_min(slice(hh, i + 1, lit(w)))))))
-    val base = withShingleHashes(docs(spark, sfDir))
+    val base = withShingleHashes(Inputs.documents(spark, sfDir))
       .filter(size(col("h0raw")) >= w) // n shingles >= window
       .withColumn("prints", printsExpr)
     base
@@ -282,7 +281,7 @@ object TextQueries {
   /** BPE-ish token counting: alpha runs, digit runs, and single other
     * chars each count as one token (regex shared with the oracle). */
   def regexTokens(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .withColumn("n_re", size(regexp_extract_all(col("text"), lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0))))
       .withColumn("n_ws", size(split(col("text"), " ")))
       .groupBy(col("lang"))
@@ -298,7 +297,7 @@ object TextQueries {
     * side shuffles once on token for the join. The doc filter applies
     * AFTER df so idf reflects the whole corpus. */
   def tfidfTopTerms(spark: SparkSession, sfDir: String, topK: Int = 3): DataFrame = {
-    val tok = docs(spark, sfDir)
+    val tok = Inputs.documents(spark, sfDir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
     // df stays CORPUS-wide; tf only needs the docs being ranked, so the
     // doc filter pushes into the tf branch — the token join then carries
@@ -328,7 +327,7 @@ object TextQueries {
     * (token counts, md5 content hash, md5-permille sampling), and the
     * whole chain is mirrored in one DuckDB CTE pipeline. */
   def cleanCorpus(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
+    val d = Inputs.documents(spark, sfDir)
       .withColumn("n_tok", size(split(col("text"), " ")))
       // quality gate: degenerate docs out (token count + char bounds)
       .filter(col("n_tok") >= 5 && col("n_tok") <= 10000 && col("n_chars") < 100000)
@@ -373,7 +372,7 @@ object TextQueries {
       s"transform(sequence(0, int((size(split(text, ' ')) - 1) div $width)), " +
         s"i -> array_join(slice(split(text, ' '), i * $width + 1, $width), ' '))")
     val w = Window.partitionBy(col("chunk")).orderBy(col("doc_id"), col("cidx"))
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .select(col("doc_id"), posexplode(chunks).as(Seq("cidx", "chunk")))
       .withColumn("rn", row_number().over(w))
       .groupBy(col("doc_id"))
@@ -399,7 +398,7 @@ object TextQueries {
     * fewer than 2 tokens carry no 2-gram signal and are excluded (the
     * oracle's inner join drops them identically). */
   def repetitionSignals(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Inputs.documents(spark, sfDir)
       .selectExpr("doc_id", "split(text, ' ') AS ws")
       .filter(size(col("ws")) >= 2)
       .selectExpr(
@@ -441,7 +440,7 @@ object TextQueries {
     *    any real cap — the monotone-subsetting law is ST-gated instead. */
   def tfidfPairSim(spark: SparkSession, sfDir: String, topK: Int = 3,
       nQueries: Int = 20, dfCapPm: Int = 1000): DataFrame = {
-    val tok = docs(spark, sfDir)
+    val tok = Inputs.documents(spark, sfDir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
     // r6 (guide §2.3 — aggregate before you shuffle): tf already holds one
     // row per (doc, token), so df = its per-token row count; deriving it
@@ -450,7 +449,7 @@ object TextQueries {
     val tf = tok.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
       .persist()
     graft.util.CacheBag.register(tf)
-    val nDocs = docs(spark, sfDir).agg(count(lit(1)).as("n_docs"))
+    val nDocs = Inputs.documents(spark, sfDir).agg(count(lit(1)).as("n_docs"))
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
       .filter(col("df") * 1000 <= col("n_docs") * dfCapPm)

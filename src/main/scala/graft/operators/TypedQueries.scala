@@ -18,11 +18,6 @@ object TypedQueries {
   final case class SourceLatest(source: String, nDocs: Long, latestDoc: Long, latestTs: Long)
   final case class LangStats(lang: String, nDocs: Long, sumChars: Long)
 
-  def pages(spark: SparkSession, sfDir: String): Dataset[Page] = {
-    import spark.implicits._
-    Pages.fromDocuments(spark, sfDir).as[Page]
-  }
-
   /** Typed Aggregator: (count, arg-max-by-ts doc, max ts) in one pass. */
   private object LatestAgg extends Aggregator[Page, (Long, Long, Long), (Long, Long, Long)] {
     def zero: (Long, Long, Long) = (0L, Long.MinValue, Long.MinValue)
@@ -46,7 +41,7 @@ object TypedQueries {
     * arg_max. Parity with `RelationalQueries.latestPerSource` is ST-gated. */
   def latestPerSourceTyped(spark: SparkSession, sfDir: String): Dataset[SourceLatest] = {
     import spark.implicits._
-    pages(spark, sfDir)
+    Pages.typed(spark, sfDir)
       .groupByKey(_.source)
       .agg(LatestAgg.toColumn.name("agg"))
       .map { case (src, (n, doc, ts)) => SourceLatest(src, n, doc, ts) }
@@ -57,7 +52,7 @@ object TypedQueries {
     * the Dataset[T] composition style (filter + groupByKey + mapGroups). */
   def langStatsTyped(spark: SparkSession, sfDir: String): Dataset[LangStats] = {
     import spark.implicits._
-    pages(spark, sfDir)
+    Pages.typed(spark, sfDir)
       .filter(p => p.n_chars >= 10 && p.lang.nonEmpty)
       .groupByKey(_.lang)
       .mapGroups { (lang, ps) =>

@@ -57,7 +57,7 @@ object Pages {
     regexp_replace(regexp_replace(regexp_replace(text, "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
 
   def fromDocuments(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
+    val d = Inputs.documents(spark, sfDir)
     val docId = col("doc_id")
     d.select(
       docId,

@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
@@ -20,22 +21,27 @@ import graft.util.{CacheBag, GraftSession}
   * target/qprof/<qid>.txt, or with `SPARK_GRAFT_PLAN_TAG` set to the
   * committed plans/r06/<qid>_<tag>.txt), then times `SPARK_GRAFT_REPS`
   * (default 3) warm build + `count()` runs on `SPARK_GRAFT_SF_DIR`
-  * (default sf0.1), each counted by [[JobCounts.during]], and prints one
-  * `PROFILE` line. exchanges are the dumped plan's distinct `Exchange`
-  * nodes, a reused one counted once (perfbench's `plans.exchanges`
-  * rule); codegen counts the whole-stage spans of the last run's executed
-  * plan, as the pre-execution adaptive plan has none yet. */
+  * (default sf0.1), and prints one `PROFILE` line. Each run's build and
+  * its `count()` are counted by separate [[JobCounts.during]] blocks:
+  * cjobs are the jobs the build ran (0 for a lazy plan; COVERAGE.md lists
+  * the eager exceptions), jobs/stages/jobSecs those of the count.
+  * exchanges are the dumped plan's distinct `Exchange` nodes, a reused
+  * one counted once (perfbench's `plans.exchanges` rule), with a cached
+  * result's own plan walked too; codegen counts the whole-stage spans of
+  * the last run's executed plan, as the pre-execution adaptive plan has
+  * none yet. */
 object Profile {
   final case class Settings(queries: Seq[String], reps: Int, sf: String, tag: Option[String]) {
     def dump(q: String): String = tag.fold(s"target/qprof/$q.txt")(t => s"plans/r06/${q}_$t.txt")
   }
 
   final case class Record(query: String, construct: Seq[Double], runs: Seq[Double],
-      counts: Seq[JobCounts], rows: Long, exchanges: Int, hashExchanges: Int,
-      nestedLoop: Boolean, codegen: Int) {
+      constructJobs: Seq[Int], counts: Seq[JobCounts], rows: Long, exchanges: Int,
+      hashExchanges: Int, nestedLoop: Boolean, codegen: Int) {
     private def secs(xs: Seq[Double]) = if (xs.isEmpty) "-" else xs.map(x => f"$x%.2f").mkString(",")
     def line: String = f"PROFILE $query construct=${median(construct)}%.2f med=${median(runs)}%.2f " +
-      s"runs=${secs(runs)} jobs=${counts.map(_.jobs).mkString(",")} " +
+      s"runs=${secs(runs)} cjobs=${constructJobs.mkString(",")} " +
+      s"jobs=${counts.map(_.jobs).mkString(",")} " +
       s"stages=${counts.map(_.stages).mkString(",")} jobSecs=${secs(counts.last.jobSeconds)} " +
       s"rows=$rows exchanges=$exchanges hashExchanges=$hashExchanges " +
       s"nestedLoop=$nestedLoop codegen=$codegen"
@@ -55,12 +61,13 @@ object Profile {
       env.get("SPARK_GRAFT_PLAN_TAG"))
   }
 
-  /** Every node of a physical plan, looking through adaptive wrappers and
-    * query stages, subqueries included; a reused exchange is listed once,
-    * not walked again. */
-  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+  /** Every node of a physical plan, looking through adaptive wrappers,
+    * query stages and the plans of persisted frames, subqueries included;
+    * a reused exchange is listed once, not walked again. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
     case q: QueryStageExec => planNodes(q.plan)
+    case m: InMemoryTableScanExec => m +: planNodes(m.relation.cachedPlan)
     case r: ReusedExchangeExec => Seq(r)
     case _ => p +: (p.children ++ p.subqueries).flatMap(planNodes)
   }
@@ -75,20 +82,20 @@ object Profile {
     val nodes = planNodes(qe.executedPlan)
     val exchanges = nodes.collect { case e: Exchange => e }.distinctBy(_.canonicalized)
     CacheBag.release()
+    def timed[A](f: => A): (A, Double) = {
+      val t0 = System.nanoTime()
+      (f, (System.nanoTime() - t0) / 1e9)
+    }
     val runs = (1 to s.reps).map { _ =>
       // count() is exactly this aggregate, collected; its frame keeps the executed plan
-      val ((construct, total, rows, plan), counts) = JobCounts.during(spark) {
-        val t0 = System.nanoTime()
-        val counted = build(spark, s.sf).groupBy().count()
-        val t1 = System.nanoTime()
-        val rows = counted.collect().head.getLong(0)
-        ((t1 - t0) / 1e9, (System.nanoTime() - t0) / 1e9, rows, counted.queryExecution.executedPlan)
-      }
+      val ((counted, construct), built) =
+        JobCounts.during(spark)(timed(build(spark, s.sf).groupBy().count()))
+      val ((rows, run), counts) = JobCounts.during(spark)(timed(counted.collect().head.getLong(0)))
       CacheBag.release()
-      (construct, total, counts, rows, plan)
+      (construct, construct + run, built.jobs, counts, rows, counted.queryExecution.executedPlan)
     }
-    val (_, _, _, rows, executed) = runs.last
-    Record(q, runs.map(_._1), runs.map(_._2), runs.map(_._3), rows, exchanges.size,
+    val (_, _, _, _, rows, executed) = runs.last
+    Record(q, runs.map(_._1), runs.map(_._2), runs.map(_._3), runs.map(_._4), rows, exchanges.size,
       exchanges.count(_.outputPartitioning.isInstanceOf[HashPartitioning]),
       nodes.exists { case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => true; case _ => false },
       planNodes(executed).count(_.isInstanceOf[WholeStageCodegenExec]))

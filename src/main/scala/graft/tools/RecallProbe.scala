@@ -19,7 +19,7 @@ object RecallProbe {
       println(f"RECALL $sf: ${(brute & banded).size.toDouble / brute.size}%.3f (banded $sec%.1f s)")
       graft.util.CacheBag.release()
     }
-    val n = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet").count()
+    val n = graft.sources.Inputs.embeddings(spark, "/root/testdata/sf0.1").count()
     val buckets = SimilarityQueries.bandedBucketStats(spark, "/root/testdata/sf0.1").collect()
     println(f"MAXSHARE ${buckets.map(_.getLong(2)).max.toDouble / n}%.4f")
     spark.stop()

@@ -47,12 +47,26 @@ class ProfileSpec extends SparkTestBase {
     assert(text.startsWith("== Physical Plan =="))
     assert("Exchange".r.findAllIn(text).size === 2 * r.exchanges)
 
-    val (rows, one) = JobCounts.during(spark)(SparkEntry.queries(q)(spark, sf0001).count())
+    val (df, built) = JobCounts.during(spark)(SparkEntry.queries(q)(spark, sf0001))
+    val (rows, one) = JobCounts.during(spark)(df.count())
     CacheBag.release()
+    assert(r.constructJobs === Seq(built.jobs) && built.jobs === 0)
     assert(r.counts.map(_.jobs) === Seq(one.jobs))
     assert(r.rows === rows && r.runs.size === 1)
-    assert(r.line.matches(s"PROFILE $q construct=\\S+ med=\\S+ runs=\\S+ jobs=\\d+ stages=\\d+ " +
+    assert(r.line.matches(s"PROFILE $q construct=\\S+ med=\\S+ runs=\\S+ cjobs=\\d+ jobs=\\d+ stages=\\d+ " +
       "jobSecs=\\S+ rows=\\d+ exchanges=\\d+ hashExchanges=\\d+ nestedLoop=(true|false) codegen=\\d+"),
       r.line)
+  }
+
+  test("Profile walks a filled cache's plan: q46's cached ANN result reports its exchanges") {
+    // q46 materializes its result at construction, so the plan Profile
+    // dumps is an InMemoryTableScan over the cache; the shuffles that
+    // filled it live in the cached plan
+    val q = "q46_ann_ivf"
+    val s = Profile.settings(Seq(q),
+      Map("SPARK_GRAFT_REPS" -> "1", "SPARK_GRAFT_SF_DIR" -> sf0001))
+    val r = Profile.profile(spark, s, q)
+    assert(r.exchanges > 0 && r.hashExchanges > 0, r.line)
+    assert(r.constructJobs.forall(_ > 0), r.line)
   }
 }
