@@ -230,13 +230,6 @@ object IngestJob {
     spark.read.parquet(out).count()
   }
 
-  /** A2/G-diff — snapshot diff ("what's new since"): builds a two-snapshot
-    * table (snapshot 1 = an earlier partial crawl, snapshot 2 = the full
-    * crawl) through the REAL commit + time-travel machinery, then
-    * anti-joins the two reads — the most common archive question over an
-    * Iceberg-style table, oracle-gated end to end. The anti join is an
-    * equi-join on doc_id: at scale both sides shuffle once on the id (or
-    * co-locate via the shared table layout). */
   /** Build-once cache for tables derived from one input dir. One table per
     * input CONTENT, built once and reused: repeated invocations (bench
     * passes, tests) must not re-write it — and a regenerated fixture at the
@@ -304,6 +297,13 @@ object IngestJob {
     root
   }
 
+  /** A2/G-diff — snapshot diff ("what's new since"): builds a two-snapshot
+    * table (snapshot 1 = an earlier partial crawl, snapshot 2 = the full
+    * crawl) through the REAL commit + time-travel machinery, then
+    * anti-joins the two reads — the most common archive question over an
+    * Iceberg-style table, oracle-gated end to end. The anti join is an
+    * equi-join on doc_id: at scale both sides shuffle once on the id (or
+    * co-locate via the shared table layout). */
   def snapshotDiff(spark: SparkSession, sfDir: String): DataFrame = {
     val pages = Pages.fromDocuments(spark, sfDir)
       .select("doc_id", "url", "lang", "source", "ts_sec", "ilat", "ilon", "n_chars")
@@ -436,6 +436,11 @@ object IngestJob {
       .orderBy(col("lang"))
   }
 
+  /** Schema of q75's stored snapshot-1 inventory (`inv/s1`): the refresh
+    * reads it under this schema, so building the query runs no
+    * schema-inference job (`InputsSpec` gates it against the files). */
+  private[graft] final val StoredInvDdl = "lang STRING, n_docs BIGINT, sum_chars BIGINT"
+
   /** Incremental inventory refresh (IVM — q75): the per-lang inventory of
     * snapshot 2 computed WITHOUT rescanning the archive. Snapshot 1's
     * inventory was materialized at commit time; the refresh reads that
@@ -467,7 +472,7 @@ object IngestJob {
     val snap2 = SnapshotTable.requireSnapshot(root, 2)
     val newParts =
       SnapshotTable.addedBetween(Some(SnapshotTable.requireSnapshot(root, 1)), snap2)
-    val storedInv = spark.read.parquet(s"$root/inv/s1")
+    val storedInv = spark.read.schema(StoredInvDdl).parquet(s"$root/inv/s1")
     val deltaInv = SnapshotTable
       .applyDeletes(spark, newParts, SnapshotTable.readSchema(spark, snap2))
       .groupBy(col("lang"))
@@ -478,15 +483,6 @@ object IngestJob {
       .orderBy(col("lang"))
   }
 
-  /** DSv2-read inventory (oracle-gated q76): builds the (p_cell, p_date)-
-    * partitioned snapshot table through the REAL resumable-ingest
-    * machinery, then reads it back through `spark.read.format("graft")`
-    * with plain Column filters — the manifest prune comes from DSv2
-    * filter pushdown (`GraftScanBuilder`), not a caller-side `Pruning`
-    * struct. The ilat predicate prunes the southern p_cell buckets at the
-    * manifest (gated in `GraftSourceSpec`), and `p_date` — a directory
-    * key, not a file column — is both aggregated and exactly re-attached
-    * by the scan. */
   /** Merge-on-read DELETE (the Iceberg v2 delete-vector shape): rows
     * matching `cond` are removed from the table WITHOUT rewriting any
     * data file — a commit-scoped delete file (parquet of doc_ids,
@@ -743,6 +739,15 @@ object IngestJob {
       ()
     }
 
+  /** DSv2-read inventory (oracle-gated q76): builds the (p_cell, p_date)-
+    * partitioned snapshot table through the REAL resumable-ingest
+    * machinery, then reads it back through `spark.read.format("graft")`
+    * with plain Column filters — the manifest prune comes from DSv2
+    * filter pushdown (`GraftScanBuilder`), not a caller-side `Pruning`
+    * struct. The ilat predicate prunes the southern p_cell buckets at the
+    * manifest (gated in `GraftSourceSpec`), and `p_date` — a directory
+    * key, not a file column — is both aggregated and exactly re-attached
+    * by the scan. */
   def dsv2Inventory(spark: SparkSession, sfDir: String): DataFrame = {
     val root = dsv2TableRoot(spark, sfDir)
     spark.read.format("graft").load(root)

@@ -55,22 +55,14 @@ object CorpusQueries {
 
   final val ContamShared = 5
 
-  /** q78 — benchmark decontamination: documents sharing >= `minShared`
-    * distinct 3-gram shingle hashes with the benchmark set (fixture:
-    * every 97th doc) are flagged. The corpus side explodes its distinct
-    * shingle hashes and equi-joins the (small, broadcast) benchmark hash
-    * set — at 10^12 docs this is one shuffle-free hash join per shingle,
-    * never a doc×doc product; a billion-doc benchmark would bucket-join
-    * instead of broadcasting. */
   /** Shared contamination core (q78 + the q86 pipeline): per non-benchmark
     * doc, the count of distinct 3-gram shingle hashes shared with the
-    * benchmark set (docs absent = zero shared). The shingle-hash pipeline
-    * (the expensive stage) feeds both sides — persisted lazily + CacheBag
-    * so it runs once per execution, not once per branch. */
+    * benchmark set (docs absent = zero shared). The shingle sets
+    * ([[TextQueries.shingleSets]], the expensive stage) feed both sides —
+    * persisted lazily + CacheBag so they are built once per execution, not
+    * once per branch. */
   private def sharedWithBenchmark(spark: SparkSession, sfDir: String): DataFrame = {
-    val withSh = TextQueries.withShingleHashes(Inputs.documents(spark, sfDir))
-      .select(col("doc_id"), array_distinct(col("h0raw")).as("shd"))
-      .persist()
+    val withSh = TextQueries.shingleSets(spark, sfDir).persist()
     graft.util.CacheBag.register(withSh)
     val benchHashes = withSh.filter(col("doc_id") % 97 === 0)
       .select(explode(col("shd")).as("h")).distinct()
@@ -88,6 +80,13 @@ object CorpusQueries {
       .filter(col("n_shared") >= minShared)
       .select(col("doc_id"))
 
+  /** q78 — benchmark decontamination: documents sharing >= `minShared`
+    * distinct 3-gram shingle hashes with the benchmark set (fixture:
+    * every 97th doc) are flagged. The corpus side explodes its distinct
+    * shingle hashes and equi-joins the (small, broadcast) benchmark hash
+    * set — at 10^12 docs this is one shuffle-free hash join per shingle,
+    * never a doc×doc product; a billion-doc benchmark would bucket-join
+    * instead of broadcasting. */
   def decontaminate(spark: SparkSession, sfDir: String,
       minShared: Int = ContamShared): DataFrame = {
     Inputs.documents(spark, sfDir).filter(col("doc_id") % 97 =!= 0)

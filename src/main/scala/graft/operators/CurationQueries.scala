@@ -440,31 +440,19 @@ object CurationQueries {
     * alone under-reports). Candidates come from the q29 banding at a low
     * Jaccard floor; pairs where either direction ≥ [[ContMinM]] survive.
     *
-    * Scale shape: identical to q29 (banded equi-join candidates, two
-    * bounded shingle-set joins); the containment math adds two
-    * projections to the verified-pair stage. */
+    * Scale shape: identical to q29 ([[TextQueries.minhashPairs]]); the
+    * containment math is two projections over the core's intersection
+    * and set sizes. */
   def containmentPairs(spark: SparkSession, sfDir: String,
-      minContM: Int = ContMinM): DataFrame = {
-    // r6: take the UNSORTED pairs plus the pipeline's own shingle-set
-    // cache (keepSh) — the r5 version re-ran the shingle+hash kernel over
-    // the corpus and re-sorted pairs it was about to re-key (guide §2.4)
-    val (pairs, sh) = TextQueries.lshNearDupPairsAnd(spark, sfDir,
-      minJacM = ContCandJacM, keepSh = true)
-    pairs
-      .join(sh.as("x"), col("d1") === col("x.doc_id"))
-      .join(sh.as("y"), col("d2") === col("y.doc_id"))
-      .select(col("d1"), col("d2"), col("jac_m"),
-        size(array_intersect(col("x.shd"), col("y.shd"))).cast("long").as("inter"),
-        size(col("x.shd")).cast("long").as("sz_a"),
-        size(col("y.shd")).cast("long").as("sz_b"))
+      minContM: Int = ContMinM): DataFrame =
+    TextQueries.minhashPairs(spark, sfDir, TextQueries.LshFamily, ContCandJacM)
       // integer floor division end to end (FIXTURES §3) — operands are
       // non-negative, so `div` here ≡ DuckDB's `//` with no IEEE detour
-      .withColumn("cont_ab_m", expr("(inter * 1000) div sz_a"))
-      .withColumn("cont_ba_m", expr("(inter * 1000) div sz_b"))
+      .withColumn("cont_ab_m", expr("(inter * 1000) div n1"))
+      .withColumn("cont_ba_m", expr("(inter * 1000) div n2"))
       .filter(greatest(col("cont_ab_m"), col("cont_ba_m")) >= minContM)
       .select(col("d1"), col("d2"), col("jac_m"), col("cont_ab_m"), col("cont_ba_m"))
       .orderBy(col("d1"), col("d2"))
-  }
 
   // -------------------------------------------------------------------------
   // q118 — syndication matrix (who copies from whom)
@@ -476,21 +464,17 @@ object CurationQueries {
     * source-aware. Pair sources are order-normalized (least, greatest) so
     * the matrix is upper-triangular.
     *
-    * Scale shape: q29's banded candidates (linear) + two doc_id-keyed
-    * joins to attach sources + one matrix-sized agg. */
-  def syndicationMatrix(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = TextQueries.lshNearDupPairsAnd(spark, sfDir)._1
-    val src = Inputs.documents(spark, sfDir).select(col("doc_id"), col("source"))
-    pairs
-      .join(src.as("a"), col("d1") === col("a.doc_id"))
-      .join(src.as("b"), col("d2") === col("b.doc_id"))
-      .select(least(col("a.source"), col("b.source")).as("src_a"),
-        greatest(col("a.source"), col("b.source")).as("src_b"), col("jac_m"))
+    * Scale shape: q29's pair core carrying each doc's source through the
+    * band join (no join back to `documents`) + one matrix-sized agg. */
+  def syndicationMatrix(spark: SparkSession, sfDir: String): DataFrame =
+    TextQueries.minhashPairs(spark, sfDir, TextQueries.LshFamily, TextQueries.NearDupJacM,
+        "source")
+      .select(least(col("source1"), col("source2")).as("src_a"),
+        greatest(col("source1"), col("source2")).as("src_b"), col("jac_m"))
       .groupBy(col("src_a"), col("src_b"))
       .agg(count(lit(1)).as("n_pairs"), min(col("jac_m")).as("min_jac"),
         max(col("jac_m")).as("max_jac"))
       .orderBy(col("src_a"), col("src_b"))
-  }
 
   // -------------------------------------------------------------------------
   // q119 — dedup-rate timeline (crawl-health monitoring)

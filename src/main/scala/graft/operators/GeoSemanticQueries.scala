@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.SimilarityQueries.vecSum
 import graft.sources.Pages
 
 /** Geo × embedding fusion operators — the axis the brief crosses
@@ -14,9 +14,10 @@ import graft.sources.Pages
   *  - q99 `cellCentroids`: per-cell semantic centroid — the elementwise
   *    integer mean of the (milli-quantized) embeddings of every page in
   *    a spatial cell. ONE map-side-combinable vector-sum shuffle
-  *    ([[VecSumAgg]], a typed Aggregator over long[64] state) — never a
-  *    64× dim-explode (which would inflate the shuffle 64-fold) and
-  *    never a collect: the result is ≤ 4^level rows by construction.
+  *    ([[SimilarityQueries.VecSumAgg]], a typed Aggregator over
+  *    long[64] state) — never a 64× dim-explode (which would inflate
+  *    the shuffle 64-fold) and never a collect: the result is ≤ 4^level
+  *    rows by construction.
   *  - q100 `geoOutliers`: geographically anomalous content — the top-k
   *    documents per cell by squared L2 distance from their own cell's
   *    centroid (mis-geotagged pages, geo-spam, boilerplate injected
@@ -41,24 +42,6 @@ object GeoSemanticQueries {
   final val Level = 2
   final val OutlierK = 3
 
-  /** Elementwise sum of long vectors — map-side combinable, O(dims)
-    * state per group. Empty zero adapts to the first vector's length so
-    * the aggregator is dimension-agnostic. */
-  class VecSumAgg extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
-    override def zero: Array[Long] = Array.emptyLongArray
-    private def add(a: Array[Long], b: IndexedSeq[Long]): Array[Long] =
-      if (a.isEmpty) b.toArray
-      else { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
-    override def reduce(buf: Array[Long], v: Seq[Long]): Array[Long] =
-      add(buf, v.toIndexedSeq)
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] =
-      add(a, scala.collection.immutable.ArraySeq.unsafeWrapArray(b))
-    override def finish(r: Array[Long]): Seq[Long] =
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(r)
-    override def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
-  }
-
   /** (cell, vec_id, qv, ts_sec): embeddings milli-quantized and located
     * via the pages equi-join on doc_id (vec_id ≡ doc_id in the fixture).
     * Column pruning keeps the pages side at (doc_id, ilat, ilon, ts). */
@@ -74,7 +57,6 @@ object GeoSemanticQueries {
   /** Internal: (cell, n_docs, centroid) — the one-shuffle aggregate both
     * q99 and q100 build on. */
   private[operators] def centroids(spark: SparkSession, sfDir: String, level: Int): DataFrame = {
-    val vecSum = udaf(new VecSumAgg, ExpressionEncoder[Seq[Long]]())
     embCells(spark, sfDir, level)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_docs"), vecSum(col("qv")).as("sv"))
@@ -139,7 +121,6 @@ object GeoSemanticQueries {
   def semanticDrift(spark: SparkSession, sfDir: String, level: Int = Level): DataFrame = {
     val ec = embCells(spark, sfDir, level)
     val bounds = ec.agg(min(col("ts_sec")).as("mn"), max(col("ts_sec")).as("mx"))
-    val vecSum = udaf(new VecSumAgg, ExpressionEncoder[Seq[Long]]())
     // r6: the early/late branches below both read this corpus-wide agg —
     // persist the GRID-sized (≤ 2·4^L rows) result so the corpus scans
     // once for it, not once per branch (guide §2.4; released via CacheBag)
@@ -161,6 +142,12 @@ object GeoSemanticQueries {
       .orderBy(col("cell"))
   }
 
+  /** Schema of q103's stored per-cell (n, vector-sum) aggregate
+    * (`agg/s1`): the refresh reads it under this schema, so building the
+    * query runs no schema-inference job (`InputsSpec` gates it against
+    * the files). */
+  private[graft] final val StoredAggDdl = "cell BIGINT, n BIGINT, sv ARRAY<BIGINT>"
+
   /** q103 — incrementally-maintained regional centroids (A9's IVM pattern
     * lifted to VECTOR state): a snapshot table stores the per-cell
     * (n, vector-sum) aggregate next to snapshot 1; when snapshot 2
@@ -176,7 +163,6 @@ object GeoSemanticQueries {
       level: Int = Level): DataFrame = {
     import graft.sources.SnapshotTable
     import graft.sources.SnapshotTable.{PartitionEntry, Snapshot}
-    val vecSum = udaf(new VecSumAgg, ExpressionEncoder[Seq[Long]]())
     val ec = embCells(spark, sfDir, level).select(col("cell"), col("vec_id"), col("qv"))
     val root = graft.jobs.IngestJob.cachedTable("graft-incr-vec", sfDir, 2L, ver = 2) {
       stage =>
@@ -196,7 +182,7 @@ object GeoSemanticQueries {
     val snap2 = SnapshotTable.requireSnapshot(root, 2)
     val newParts =
       SnapshotTable.addedBetween(Some(SnapshotTable.requireSnapshot(root, 1)), snap2)
-    val stored = spark.read.parquet(s"$root/agg/s1")
+    val stored = spark.read.schema(StoredAggDdl).parquet(s"$root/agg/s1")
     val delta = SnapshotTable
       .applyDeletes(spark, newParts, SnapshotTable.readSchema(spark, snap2))
       .groupBy(col("cell"))
@@ -230,7 +216,6 @@ object GeoSemanticQueries {
     // (4^6 = 4096 cells × 64 dims) switch to the row-identical
     // distributed twin instead of silently collecting an unbounded grid.
     if (level > 6) return centroidPyramidDistributed(spark, sfDir, level)
-    val vecSum = udaf(new VecSumAgg, ExpressionEncoder[Seq[Long]]())
     val base = embCells(spark, sfDir, level)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n"), vecSum(col("qv")).as("sv"))
@@ -268,13 +253,13 @@ object GeoSemanticQueries {
     * level ≥ 8): the identical pyramid computed with every rollup
     * DISTRIBUTED — one corpus shuffle to the finest (n, vector-sum)
     * grid, then K grid-sized parent-arithmetic aggregations (sums merge
-    * associatively through [[VecSumAgg]]). Output is row-identical to
-    * [[centroidPyramid]] (`GeoSemanticSpec` gates the equality), so the
-    * driver-assembled variant stays the low-latency choice at toy grids
-    * and this one takes over when 4^L outgrows the driver. */
+    * associatively through [[SimilarityQueries.VecSumAgg]]). Output is
+    * row-identical to [[centroidPyramid]] (`GeoSemanticSpec` gates the
+    * equality), so the driver-assembled variant stays the low-latency
+    * choice at toy grids and this one takes over when 4^L outgrows the
+    * driver. */
   def centroidPyramidDistributed(spark: SparkSession, sfDir: String,
       level: Int = Level): DataFrame = {
-    val vecSum = udaf(new VecSumAgg, ExpressionEncoder[Seq[Long]]())
     var cur = embCells(spark, sfDir, level)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n"), vecSum(col("qv")).as("sv"))

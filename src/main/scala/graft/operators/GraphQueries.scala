@@ -130,7 +130,8 @@ object GraphQueries {
     * pair-to-cluster dedup pipeline, oracle-gated against a DuckDB
     * recursive-CTE transitive closure. */
   def nearDupComponents(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = TextQueries.lshNearDupPairsAnd(spark, sfDir)._1
+    val pairs = TextQueries.minhashPairs(spark, sfDir, TextQueries.LshFamily,
+        TextQueries.NearDupJacM)
       .select(col("d1").as("src"), col("d2").as("dst"))
     connectedComponents(pairs)
       .groupBy(col("comp"))
@@ -148,9 +149,9 @@ object GraphQueries {
     * Scale shape: q29 candidates + CC (edge-proportional, bounded driver
     * fast path) + one broadcast-able component join + one report agg. */
   def leakageSafeSplit(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = TextQueries.lshNearDupPairsAnd(spark, sfDir)._1
     val comps = connectedComponents(
-      pairs.select(col("d1").as("src"), col("d2").as("dst")))
+      TextQueries.minhashPairs(spark, sfDir, TextQueries.LshFamily, TextQueries.NearDupJacM)
+        .select(col("d1").as("src"), col("d2").as("dst")))
     val d = Inputs.documents(spark, sfDir).select(col("doc_id"))
     val hpm = TextQueries.tokHash(col("comp").cast("string"), "split") % 1000
     d.join(comps, col("doc_id") === col("node"), "left")

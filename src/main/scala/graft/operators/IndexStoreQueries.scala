@@ -52,6 +52,15 @@ object IndexStoreQueries {
   private def isHoldout = holdout(col("vec_id"))
   private def isDocHoldout = holdout(col("doc_id"))
 
+  /** Schema of the stored centroid artifact (`artifacts/centroids`,
+    * `SimilarityQueries.kmeansCentroids`' (cid, cv)): every read is under
+    * it, so building q127/q128 runs no schema-inference job (`InputsSpec`
+    * gates it against the files). */
+  private[graft] final val CentroidsDdl = "cid INT, cv ARRAY<BIGINT>"
+
+  private def storedCentroids(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(CentroidsDdl).parquet(s"$root/artifacts/centroids")
+
   /** Build-once persisted IVF index table for `sfDir`; returns its root. */
   private def indexRoot(spark: SparkSession, sfDir: String): String =
     graft.jobs.IngestJob.cachedTable("graft-ivf-store", sfDir, 2L, ver = 2) {
@@ -72,7 +81,7 @@ object IndexStoreQueries {
           // the build-time refresh: holdout vectors assigned to the
           // STORED centroids (read back from the artifact — the lineage
           // a production append would have)
-          val stored = spark.read.parquet(s"$stage/artifacts/centroids")
+          val stored = storedCentroids(spark, stage)
           val deltaLists = SimilarityQueries.assignToCentroids(e.filter(isHoldout), stored)
           val b = part(2, deltaLists, "delta")
           SnapshotTable.commitSnapshot(stage,
@@ -88,7 +97,7 @@ object IndexStoreQueries {
       nQueries: Int = 10): DataFrame = {
     val root = indexRoot(spark, sfDir)
     val lists = SnapshotTable.readAt(spark, root, 2)._1
-    val cents = spark.read.parquet(s"$root/artifacts/centroids")
+    val cents = storedCentroids(spark, root)
     val q = SimilarityQueries.normalizedEmb(spark, sfDir)
       .filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("qv").as("qnorm"),
@@ -104,7 +113,7 @@ object IndexStoreQueries {
     val root = indexRoot(spark, sfDir)
     val base = SnapshotTable.readAt(spark, root, 1)._1
       .groupBy(col("cid")).agg(count(lit(1)).as("n_base"))
-    val cents = spark.read.parquet(s"$root/artifacts/centroids")
+    val cents = storedCentroids(spark, root)
     val added = SimilarityQueries.assignToCentroids(
       SimilarityQueries.normalizedEmb(spark, sfDir).filter(isHoldout), cents)
       .groupBy(col("cid")).agg(count(lit(1)).as("n_added"))

@@ -108,6 +108,33 @@ object SimilarityQueries {
     private[SimilarityQueries] val pair: Encoder[TopPair] = Encoders.product[TopPair]
   }
 
+  /** Elementwise sum of long vectors — map-side combinable, O(dims)
+    * state per group; the one vector-sum aggregate (k-means updates,
+    * GeoSemanticQueries' cell centroids). Empty zero adapts to the first
+    * vector's length so the aggregator is dimension-agnostic. */
+  class VecSumAgg extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
+    override def zero: Array[Long] = Array.emptyLongArray
+    private def add(a: Array[Long], b: IndexedSeq[Long]): Array[Long] =
+      if (a.isEmpty) b.toArray
+      else { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
+    override def reduce(buf: Array[Long], v: Seq[Long]): Array[Long] =
+      add(buf, v.toIndexedSeq)
+    override def merge(a: Array[Long], b: Array[Long]): Array[Long] =
+      add(a, scala.collection.immutable.ArraySeq.unsafeWrapArray(b))
+    override def finish(r: Array[Long]): Seq[Long] =
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(r)
+    override def bufferEncoder: Encoder[Array[Long]] = VecSumAgg.buffer
+    override def outputEncoder: Encoder[Seq[Long]] = VecSumAgg.vec
+  }
+
+  object VecSumAgg {
+    private val buffer: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    private[SimilarityQueries] val vec: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
+  }
+
+  /** Elementwise sum of the BIGINT-array column `v` per group ([[VecSumAgg]]). */
+  private[operators] def vecSum(v: Column): Column = udaf(new VecSumAgg, VecSumAgg.vec)(v)
+
   /** groupBy(gid).agg(top-k of (a, b)) -> exploded (gid, rnk, a, b): the
     * one per-group top-k — every ranking here, q97's TF-IDF pairs
     * (TextQueries) and q100's per-cell outliers (GeoSemanticQueries). */
@@ -397,16 +424,6 @@ object SimilarityQueries {
     * (1..16) never collide with the unrefined key (0). */
   final val KeyStride: Long = (1L << RefinePlanes) * 2
 
-  /** Deterministic hyperplane family for the banded tables. The q32 family
-    * `((i*31 + b*17) % 7) - 3` has only SEVEN distinct planes (coefficients
-    * cycle mod 7) — fine for its 4 planes, useless for 8 tables. The i·b
-    * cross term here breaks that cyclic structure; coefficients span
-    * [-48, 48]. All indices are >= 100 so the two families never alias. */
-  private val bandPlaneIdx: Seq[Int] =
-    for (t <- 0 until NumTables; i <- 0 until BandPlanes) yield 100 + t * BandPlanes + i
-  private val subPlaneIdx: Seq[Int] =
-    for (t <- 0 until NumTables; i <- 0 until RefinePlanes) yield 1000 + t * RefinePlanes + i
-
   /** (vec_id, tbl, band, sub, cnt, key) — one row per (vector, table).
     *
     * Shape note (evolution): a per-plane `aggregate(transform(...))`
@@ -491,10 +508,10 @@ object SimilarityQueries {
   /** Deterministic distributed k-means over the quantized vectors: seeded
     * from the first `c` vectors, `iters` Lloyd iterations. Assignment is
     * an argmin AGGREGATION (map-side combinable — a window would shuffle
-    * corpus x C rows); the centroid update is a per-(cid, dim) sum/count
-    * agg re-assembled into integer arrays (floor of the mean keeps the
-    * arithmetic exact and DuckDB-mirrorable). Empty clusters drop out
-    * identically in both engines. */
+    * corpus x C rows); the centroid update is a per-cid count and
+    * vector-sum agg whose mean is floored on the driver (floor of the
+    * mean keeps the arithmetic exact and DuckDB-mirrorable). Empty
+    * clusters drop out identically in both engines. */
   def kmeansCentroids(e: DataFrame, c: Int, iters: Int): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
@@ -521,25 +538,26 @@ object SimilarityQueries {
   /** Lloyd iterations with the centroids held DRIVER-SIDE between
     * iterations (metadata-sized BY DESIGN, c = sqrt(n) — the documented
     * trainer exception): each iteration is ONE distributed job whose only
-    * exchange is the map-side-combinable (cid, pos) mean over ≤ c×dims
-    * keys; the assignment itself is the zero-shuffle [[nearestCid]]
-    * projection. Same seed/tie/update rules as ever (seed = first c
-    * vectors, argmin ties to the lowest cid, floor mean, empty clusters
-    * drop) — oracle-mirrored via the q46/q98 iterated CTEs. */
+    * exchange is the map-side-combinable per-cid (count, [[vecSum]])
+    * aggregate over ≤ c keys, each vector grouped once; the assignment
+    * itself is the zero-shuffle [[nearestCid]] projection and the floor
+    * mean is taken on the driver. Same seed/tie/update rules as ever
+    * (seed = first c vectors, argmin ties to the lowest cid, floor mean,
+    * empty clusters drop) — oracle-mirrored via the q46/q98 iterated
+    * CTEs. */
   private def kmeansLocalDist(e: DataFrame, c: Int, iters: Int): Seq[(Int, Seq[Long])] = {
     var cents: Seq[(Int, Seq[Long])] = e.filter(col("vec_id") < c)
       .select(col("vec_id").cast("int").as("cid"), col("qv").as("cv"))
       .collect().map(r => (r.getInt(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
     for (_ <- 1 to iters) {
-      val rows = e
-        .select(nearestCid(col("qv"), cents).as("cid"),
-          posexplode(col("qv")).as(Seq("pos", "v")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(floor(lit(1.0) * sum(col("v")) / count(lit(1))).cast("long").as("m"))
+      cents = e.groupBy(nearestCid(col("qv"), cents).as("cid"))
+        .agg(count(lit(1)).as("n"), vecSum(col("qv")).as("sv"))
         .collect()
-      cents = rows.map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (cid, ms) => (cid, ms.sortBy(_._2).map(_._3).toSeq) }
+        .map { r =>
+          val n = r.getLong(1)
+          (r.getInt(0), r.getSeq[Long](2).map(x => math.floor(x.toDouble / n).toLong))
+        }
+        .sortBy(_._1).toSeq
     }
     cents
   }

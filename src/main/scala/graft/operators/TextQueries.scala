@@ -88,109 +88,112 @@ object TextQueries {
         (count(lit(1)) - countDistinct(col("h"))).as("n_dups"))
       .orderBy(col("lang"))
 
-  /** 3-gram shingles of the token list (docs with >= 3 tokens). */
-  private def withShingles(d: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
-    d.withColumn("n_tok", size(toks))
-      .filter(col("n_tok") >= 3)
-      .withColumn("sh", transform(sequence(lit(0), col("n_tok") - 3),
-        j => concat_ws(" ", slice(toks, j + 1, lit(3)))))
+  /** Raw 60-bit shingle hashes per doc (`h0raw`, empty for docs with
+    * fewer than 3 tokens): ONE codegen'd kernel call per document
+    * (`shingle_hashes`) instead of a per-shingle md5->hex->conv Column
+    * chain — identical values (the kernel replicates the
+    * conv(substring(md5 ..)) arithmetic bit-exactly, oracle-gated through
+    * q28/q29/q44/q47). */
+  private def shingleHashes(spark: SparkSession, sfDir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    Inputs.documents(spark, sfDir)
+      .withColumn("h0raw", graft.functions.GraftFunctions.shingle_hashes(col("text")))
   }
 
-  /** Raw 60-bit shingle hashes per doc (`h0raw`, docs with >= 3 tokens):
-    * ONE codegen'd kernel call per document (`shingle_hashes`) instead of
-    * a per-shingle md5->hex->conv Column chain — identical values (the
-    * kernel replicates the conv(substring(md5 ..)) arithmetic bit-exactly,
-    * oracle-gated through q28/q29/q44/q47). */
-  private[operators] def withShingleHashes(d: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(d.sparkSession)
-    d.withColumn("h0raw", graft.functions.GraftFunctions.shingle_hashes(col("text")))
-      .filter(size(col("h0raw")) > 0)
-  }
+  /** (doc_id, carry..., shd): each document's DISTINCT 3-gram shingle
+    * hashes — the one shingle-set builder of the near-dup family
+    * ([[minhashPairs]], q78's decontamination). A doc with fewer than 3
+    * tokens keeps an EMPTY set instead of being filtered out: the filter
+    * would be pushed below the projection and evaluate the kernel a
+    * second time per document, while an empty set shares no shingle and
+    * no band (its MinHash is NULL), so no consumer sees it. */
+  private[operators] def shingleSets(spark: SparkSession, sfDir: String,
+      carry: String*): DataFrame =
+    shingleHashes(spark, sfDir)
+      .select((col("doc_id") +: carry.map(col)) :+ array_distinct(col("h0raw")).as("shd"): _*)
 
-  /** 8 signatures -> 4 bands x 2 rows. The banding s-curve at the 0.2
-    * Jaccard verify threshold: P(candidate | j) = 1 - (1 - j^2)^4, i.e.
-    * 0.59 at j=0.45 and 0.92 at j=0.7 (round 1 shipped 2 bands x 2 rows —
-    * demo-grade 0.36/0.76; more bands sharpen recall at the cost of one
-    * extra shuffle row per band per doc). */
-  private val NumSigs = 8
-  final val NumBands = NumSigs / 2
-  /** Universal-hash MinHash families over ONE base md5 hash per shingle:
-    * h_i(x) = (A(i) * (h0(x) mod P) + B(i)) mod P. One md5 per shingle
-    * total (not per family) — the md5 is the cost driver at scale. */
+  /** A universal-hash MinHash family over ONE base md5 hash per shingle:
+    * h_i(x) = (a(i) * (h0(x) mod P) + b(i)) mod P. One md5 per shingle
+    * total (not per family) — the md5 is the cost driver at scale. Each
+    * consecutive pair of signatures forms one LSH band. */
+  private[operators] final case class MinHashFamily(a: Seq[Long], b: Seq[Long]) {
+    def bands: Int = a.length / 2
+  }
   private val P = 1000000007L
-  private val HashA = Array(131L, 137L, 139L, 149L, 163L, 167L, 173L, 179L)
-  private val HashB = Array(17L, 19L, 23L, 29L, 41L, 43L, 47L, 53L)
+
+  /** The q28/q29 family: 8 signatures -> 4 bands x 2 rows. The banding
+    * s-curve at the 0.2 Jaccard verify threshold: P(candidate | j) =
+    * 1 - (1 - j^2)^4, i.e. 0.59 at j=0.45 and 0.92 at j=0.7 (round 1
+    * shipped 2 bands x 2 rows — demo-grade 0.36/0.76; more bands sharpen
+    * recall at the cost of one extra shuffle row per band per doc). */
+  private[operators] val LshFamily = MinHashFamily(
+    Seq(131L, 137L, 139L, 149L, 163L, 167L, 173L, 179L),
+    Seq(17L, 19L, 23L, 29L, 41L, 43L, 47L, 53L))
+  /** q44's one blocking band — disjoint from [[LshFamily]] so the two
+    * dedup paths stay independent. */
+  private val BlockFamily = MinHashFamily(Seq(151L, 157L), Seq(31L, 37L))
+  /** The near-dup Jaccard floor (permille) of q29 and its consumers. */
+  private[operators] final val NearDupJacM = 200
+
+  /** Signature `i` of family `f` over the shingle hashes `h`. */
+  private def minhash(f: MinHashFamily, i: Int, h: Column): Column =
+    array_min(transform(h, x => ((x % P) * f.a(i) + f.b(i)) % P))
 
   /** MinHash signatures (8 hash families) over 3-gram shingles. */
   def minhashSigs(spark: SparkSession, sfDir: String): DataFrame =
-    minhashSigsUnsorted(spark, sfDir).orderBy(col("doc_id"))
+    shingleHashes(spark, sfDir)
+      .filter(size(col("h0raw")) > 0)
+      .select(col("doc_id") +:
+        LshFamily.a.indices.map(i => minhash(LshFamily, i, col("h0raw")).as(s"s$i")): _*)
+      .orderBy(col("doc_id"))
 
-  private def minhashSigsUnsorted(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = withShingleHashes(Inputs.documents(spark, sfDir))
-      .withColumn("h0", transform(col("h0raw"), h => h % P))
-    val sigs = (0 until NumSigs).map(i =>
-      array_min(transform(col("h0"), h => (h * HashA(i) + HashB(i)) % P)).as(s"s$i"))
-    base.select(col("doc_id") +: sigs: _*)
-  }
-
-  /** MinHash + LSH banding (4 bands x 2 rows) -> candidate pairs ->
-    * exact Jaccard verification over shingle sets. The full near-dup
-    * pipeline: at scale the band self-join is an equi-join on the band
-    * hash (shuffle on band key), never an all-pairs product.
+  /** The one MinHash near-dup pair core (q29/q44/q116/q118, and q58/q120
+    * through q29's pairs): candidate pairs from the LSH bands of `f`,
+    * verified by exact Jaccard over the shingle sets. Returns the pairs
+    * (d1 < d2, jac_m, inter, n1, n2, and c1/c2 for every carried column
+    * c) with jac_m = floor(1000 * inter / (n1 + n2 - inter)) >= `minJacM`,
+    * where inter = |A ∩ B| and n1/n2 = |A|/|B| — each pair once,
+    * unsorted. The pairs are materialized and CacheBag-registered: their
+    * count is data-dependent, so they stay DISTRIBUTED.
     *
-    * q29's declared output orders by (d1, d2); the aggregate consumers
-    * (q58/q116/q118/q120) take the UNSORTED verified pairs via
-    * [[lshNearDupPairsAnd]] — they re-key immediately, so the r5 sort
-    * before the pair cache was a dead range exchange + sampling job on
-    * their paths (guide §2.4: an orderBy used only for presentation). */
-  def lshNearDupPairs(spark: SparkSession, sfDir: String, minJacM: Int = 200): DataFrame =
-    lshNearDupPairsAnd(spark, sfDir, minJacM)._1.orderBy(col("d1"), col("d2"))
-
-  /** (unsorted verified pairs, shingle-set frame) — both persisted and
-    * CacheBag-registered. `keepSh` callers (q116) reuse the shingle sets
-    * for their own verification stage instead of re-running the
-    * shingle+hash kernel over the corpus a second time; others get the
-    * cache dropped as soon as the pairs are materialized. */
-  private[operators] def lshNearDupPairsAnd(spark: SparkSession, sfDir: String,
-      minJacM: Int = 200, keepSh: Boolean = false): (DataFrame, DataFrame) = {
-    // sig and shingle frames are reused in multiple plan branches (four
-    // bands, two pair sides) — persist so the shingle+hash pipeline runs
-    // once, not once per branch.
-    val sig = (0 until NumBands).foldLeft(minhashSigsUnsorted(spark, sfDir)) { (df, b) =>
-      df.withColumn(s"b$b", md5(concat(
-        col(s"s${2 * b}").cast("string"), lit(":"), col(s"s${2 * b + 1}").cast("string"))))
-    }.persist()
-    // one scan of the cached sigs per join side (posexplode of the band
-    // array) instead of an r5 4-way union — same (doc_id, bi, band) rows
-    val bands = sig.select(col("doc_id"), posexplode(
-        array((0 until NumBands).map(b => col(s"b$b")): _*)).as(Seq("bi", "band")))
-    val pairs = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bi") === col("y.bi") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
-    val sh = withShingleHashes(Inputs.documents(spark, sfDir))
-      .select(col("doc_id"), array_distinct(col("h0raw")).as("shd"))
-      .persist()
-    val inter = size(array_intersect(col("x.shd"), col("y.shd")))
-    val uni = size(col("x.shd")) + size(col("y.shd")) - inter
-    val out = pairs
-      .join(sh.as("x"), col("d1") === col("x.doc_id"))
-      .join(sh.as("y"), col("d2") === col("y.doc_id"))
-      .withColumn("jac_m", floor(inter.cast("long") * 1000 / uni).cast("long"))
+    * Scale shape: ONE shingle pass yields (doc_id, carry..., shd, bands),
+    * persisted once and released after the materialize; the posexploded
+    * bands self-equi-join on (bi, band) — never an all-pairs product —
+    * carrying each side's shingle set, so the verify is a projection with
+    * no join back to the corpus. A pair sharing several bands is kept
+    * only at the FIRST band where the two band arrays agree, which drops
+    * the repeats without a `distinct` exchange. */
+  private[operators] def minhashPairs(spark: SparkSession, sfDir: String, f: MinHashFamily,
+      minJacM: Int, carry: String*): DataFrame = {
+    val bands = array((0 until f.bands).map(b => md5(concat(
+      minhash(f, 2 * b, col("shd")).cast("string"), lit(":"),
+      minhash(f, 2 * b + 1, col("shd")).cast("string")))): _*)
+    val sets = shingleSets(spark, sfDir, carry: _*).withColumn("bands", bands).persist()
+    val side = sets.select(col("*"), posexplode(col("bands")).as(Seq("bi", "band")))
+    def agree(b: Int): Column =
+      element_at(col("x.bands"), b + 1) === element_at(col("y.bands"), b + 1)
+    val firstAgree = (1 until f.bands).foldLeft(when(agree(0), 0))((w, b) => w.when(agree(b), b))
+    val out = side.as("x").join(side.as("y"),
+        col("x.bi") === col("y.bi") && col("x.band") === col("y.band") &&
+          col("x.doc_id") < col("y.doc_id") && firstAgree === col("x.bi"))
+      .select(Seq(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
+          size(array_intersect(col("x.shd"), col("y.shd"))).cast("long").as("inter"),
+          size(col("x.shd")).cast("long").as("n1"), size(col("y.shd")).cast("long").as("n2")) ++
+        carry.flatMap(c => Seq(col(s"x.$c").as(s"${c}1"), col(s"y.$c").as(s"${c}2"))): _*)
+      .withColumn("jac_m",
+        floor(col("inter") * 1000 / (col("n1") + col("n2") - col("inter"))).cast("long"))
       .filter(col("jac_m") >= minJacM)
-      .select(col("d1"), col("d2"), col("jac_m"))
-    // Materialize the pair result (stays DISTRIBUTED — its size is
-    // data-dependent and must not be collected to the driver), then
-    // release the big shingle/signature caches. Only the far smaller pair
-    // cache outlives the call, registered with CacheBag — the driver's
-    // per-query release point (note: q29's public return is an orderBy
-    // WRAPPER over this cache, so unpersisting the returned frame would
-    // NOT release it; CacheBag is the release path).
-    if (keepSh) graft.util.CacheBag.register(sh)
-    (graft.util.CacheBag.materialize(out, (if (keepSh) Seq(sig) else Seq(sig, sh)): _*), sh)
+    graft.util.CacheBag.materialize(out, sets)
   }
+
+  /** q29 — MinHash + LSH near-dup pairs (4 bands x 2 rows) verified by
+    * exact Jaccard, ordered by (d1, d2) for presentation; the aggregate
+    * consumers (q58/q116/q118/q120) take [[minhashPairs]] unsorted, as
+    * they re-key immediately. */
+  def lshNearDupPairs(spark: SparkSession, sfDir: String, minJacM: Int = NearDupJacM): DataFrame =
+    minhashPairs(spark, sfDir, LshFamily, minJacM)
+      .select(col("d1"), col("d2"), col("jac_m"))
+      .orderBy(col("d1"), col("d2"))
 
   /** 16-bit SimHash over token hashes (majority vote per bit). */
   def simhash(spark: SparkSession, sfDir: String): DataFrame = {
@@ -208,14 +211,11 @@ object TextQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** Minhash families for the q44 blocking band — disjoint from the
-    * q28/q29 families so the two dedup paths stay independent. */
-  private val BlockA = Array(151L, 157L)
-  private val BlockB = Array(31L, 37L)
-
-  /** Band-blocked n-gram Jaccard dedup: the single cheapest candidate
-    * generator — ONE MinHash band (2 rows) as the blocking key, all pairs
-    * within a block, exact Jaccard verify at a low threshold (0.15).
+  /** q44 — band-blocked n-gram Jaccard dedup: the single cheapest
+    * candidate generator — ONE MinHash band (2 rows) as the blocking key,
+    * all pairs within a block, exact Jaccard verify at a low threshold
+    * (0.15); with one band the first-band rule of [[minhashPairs]] always
+    * holds.
     *
     * The round-1 version blocked on (lang, source): that key has FIXED
     * cardinality, so block size grows with the corpus and the within-block
@@ -224,31 +224,10 @@ object TextQueries {
     * cardinality grows with content diversity: block count measured 479 →
     * 4710 from sf0.01 → sf0.1 (max block 7 rows), and near-dup recall of
     * true jac>=0.15 pairs is 0.84/0.95 — blocking work is ~linear in n. */
-  def blockedJaccard(spark: SparkSession, sfDir: String, minJacM: Int = 150): DataFrame = {
-    val base = withShingleHashes(Inputs.documents(spark, sfDir))
-      .withColumn("h0", col("h0raw"))
-    val sigs = (0 until BlockA.length).map(i =>
-      array_min(transform(col("h0"), h => ((h % P) * BlockA(i) + BlockB(i)) % P)).as(s"s$i"))
-    // blocked frame reused on both join sides — persist so shingling and
-    // hashing run once, not once per branch
-    val blocked = base
-      .select(Seq(col("doc_id"), col("lang"),
-        array_distinct(col("h0")).as("shd")) ++ sigs: _*)
-      .withColumn("band",
-        md5(concat(col("s0").cast("string"), lit(":"), col("s1").cast("string"))))
-      .persist()
-    val inter = size(array_intersect(col("x.shd"), col("y.shd")))
-    val uni = size(col("x.shd")) + size(col("y.shd")) - inter
-    val out = blocked.as("x").join(blocked.as("y"),
-        col("x.band") === col("y.band") && col("x.doc_id") < col("y.doc_id"))
-      .withColumn("jac_m", floor(inter.cast("long") * 1000 / uni).cast("long"))
-      .filter(col("jac_m") >= minJacM)
-      .select(col("x.lang").as("lang"), col("x.doc_id").as("d1"),
-        col("y.doc_id").as("d2"), col("jac_m"))
+  def blockedJaccard(spark: SparkSession, sfDir: String, minJacM: Int = 150): DataFrame =
+    minhashPairs(spark, sfDir, BlockFamily, minJacM, "lang")
+      .select(col("lang1").as("lang"), col("d1"), col("d2"), col("jac_m"))
       .orderBy(col("lang"), col("d1"), col("d2"))
-    // materialize (distributed) before releasing the block cache
-    graft.util.CacheBag.materialize(out, blocked)
-  }
 
   final val WinnowWindow = 4
 
@@ -266,7 +245,7 @@ object TextQueries {
     val hExpr = transform(col("h0raw"), h => h % P)
     val printsExpr = array_distinct(flatten(transform(array(hExpr), hh =>
       transform(sequence(lit(0), size(hh) - w), i => array_min(slice(hh, i + 1, lit(w)))))))
-    val base = withShingleHashes(Inputs.documents(spark, sfDir))
+    val base = shingleHashes(spark, sfDir)
       .filter(size(col("h0raw")) >= w) // n shingles >= window
       .withColumn("prints", printsExpr)
     base
@@ -483,15 +462,15 @@ object TextQueries {
       "j -> array_to_string(list_slice(toks, j + 1, j + 3), ' ')) AS sh FROM t WHERE len(toks) >= 3)"
 
   private def sqlSig(i: Int): String =
-    s"list_min(list_transform(sh, x -> ((${sqlTokHash("x")} % $P) * ${HashA(i)} + ${HashB(i)}) % $P)) AS s$i"
+    s"list_min(list_transform(sh, x -> ((${sqlTokHash("x")} % $P) * ${LshFamily.a(i)} + ${LshFamily.b(i)}) % $P)) AS s$i"
 
   /** Shared CTE chain producing the verified near-dup pair table `j`
     * (d1, d2, jac_m) — the oracle twin of `lshNearDupPairs`, reused by
     * q29 and by the connected-components oracle (GraphQueries). */
   private[operators] val lshPairsCte: String =
     s"$shCte, m AS (SELECT doc_id, list_distinct(list_transform(sh, x -> ${sqlTokHash("x")})) AS shd, " +
-      s"${(0 until NumSigs).map(sqlSig).mkString(", ")} FROM s), " +
-      "b AS (" + (0 until NumBands).map(b =>
+      s"${LshFamily.a.indices.map(sqlSig).mkString(", ")} FROM s), " +
+      "b AS (" + (0 until LshFamily.bands).map(b =>
         s"SELECT doc_id, md5(CAST(s${2 * b} AS VARCHAR) || ':' || CAST(s${2 * b + 1} AS VARCHAR)) AS band, $b AS bi FROM m")
         .mkString(" UNION ALL ") + "), " +
       "pairs AS (SELECT DISTINCT b1.doc_id AS d1, b2.doc_id AS d2 FROM b b1 " +
@@ -558,7 +537,7 @@ object TextQueries {
       ("SELECT lang, count(*) AS n_docs, count(DISTINCT md5(text)) AS n_distinct, " +
         "count(*) - count(DISTINCT md5(text)) AS n_dups FROM documents GROUP BY lang ORDER BY lang"),
     "q28_minhash_sigs" ->
-      (s"WITH $shCte SELECT doc_id, ${(0 until NumSigs).map(sqlSig).mkString(", ")} " +
+      (s"WITH $shCte SELECT doc_id, ${LshFamily.a.indices.map(sqlSig).mkString(", ")} " +
         "FROM s ORDER BY doc_id"),
     "q29_lsh_neardup" ->
       (s"WITH $lshPairsCte SELECT d1, d2, jac_m FROM j WHERE jac_m >= 200 ORDER BY d1, d2"),
@@ -573,8 +552,8 @@ object TextQueries {
     "q44_blocked_jaccard" ->
       (s"WITH $shCte, " +
         s"m AS (SELECT doc_id, lang, list_distinct(list_transform(sh, x -> ${sqlTokHash("x")})) AS shd, " +
-        (0 until BlockA.length).map(i =>
-          s"list_min(list_transform(sh, x -> ((${sqlTokHash("x")} % $P) * ${BlockA(i)} + ${BlockB(i)}) % $P)) AS s$i")
+        BlockFamily.a.indices.map(i =>
+          s"list_min(list_transform(sh, x -> ((${sqlTokHash("x")} % $P) * ${BlockFamily.a(i)} + ${BlockFamily.b(i)}) % $P)) AS s$i")
           .mkString(", ") + " FROM s), " +
         "b AS (SELECT doc_id, lang, shd, md5(CAST(s0 AS VARCHAR) || ':' || CAST(s1 AS VARCHAR)) AS band FROM m), " +
         "p AS (SELECT x.lang AS lang, x.doc_id AS d1, y.doc_id AS d2, " +

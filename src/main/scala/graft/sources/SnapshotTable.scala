@@ -601,7 +601,7 @@ object SnapshotTable {
     readSnapshot(spark, requireSnapshot(root, seq), p, migrations)
 
   private def readSnapshot(spark: SparkSession, snap: Snapshot,
-      p: Pruning, migrations: Migrations = Map.empty): (DataFrame, Int, Int) = {
+      p: Pruning, migrations: Migrations): (DataFrame, Int, Int) = {
     val keep = prunedParts(snap, p)
     val schema = readSchema(spark, snap)
     // zero kept entries (an empty snapshot, or stats pruned every entry):

@@ -265,7 +265,7 @@ object StreamingJobs {
         (source: String, rows: Iterator[(String, Long, Long, Int)],
             state: GroupState[DwellState]) =>
           val events = fenceEvents(rows)
-          var st = state.getOption.getOrElse(DwellState(Long.MinValue, Nil, Map.empty))
+          val st = state.getOption.getOrElse(DwellState(Long.MinValue, Nil, Map.empty))
           var dwell = st.dwell
           var lastTs = st.lastTs
           var lastFps = st.fps.toSet

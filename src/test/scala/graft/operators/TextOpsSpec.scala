@@ -35,6 +35,23 @@ class TextOpsSpec extends SparkTestBase {
     assert(dupPairs.subsetOf(found), s"missing exact dups: ${dupPairs -- found}")
   }
 
+  test("minhash pair core: at minJacM = 0 the pairs are the doc pairs sharing a band, each once") {
+    val pairs = TextQueries.minhashPairs(spark, sf001, TextQueries.LshFamily, 0)
+      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    graft.util.CacheBag.release()
+    // brute force over q28's signatures: band b of a doc is its signature
+    // pair (s2b, s2b+1), and two docs are candidates iff any band agrees
+    val bands = TextQueries.minhashSigs(spark, sf001).collect()
+      .map(r => r.getLong(0) -> (1 to 8).map(r.getLong).grouped(2).toSeq)
+    val want = (for {
+      (d1, b1) <- bands.iterator; (d2, b2) <- bands.iterator
+      if d1 < d2 && b1.zip(b2).exists { case (x, y) => x == y }
+    } yield (d1, d2)).toSet
+    assert(want.nonEmpty)
+    assert(pairs.distinct.length === pairs.length, "a pair was emitted more than once")
+    assert(pairs.toSet === want)
+  }
+
   test("simhash: exact-dup docs have identical simhash") {
     import spark.implicits._
     val sf01 = "/root/testdata/sf0.1"
