@@ -7,7 +7,10 @@ import org.apache.spark.sql.SparkSession
   * main build their session here, with the core count from
   * `SPARK_GRAFT_CPUS` (default 4).
   * Bench.scala and Verify.scala keep their own builders with the same
-  * settings — those files are the harness contract and stay untouched. */
+  * settings — those files are the harness contract and stay untouched.
+  * The `file:` binding to [[LocalFs]] is not a session setting: Hadoop
+  * loads it from `core-site.xml` on the classpath into every
+  * `Configuration`, so those builders get it too. */
 object GraftSession {
   def build(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
