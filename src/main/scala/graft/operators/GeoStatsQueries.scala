@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -13,8 +13,96 @@ import graft.sources.{Footprints, Pages}
   * Determinism: the deci-degree integer grid end to end (FIXTURES.md §3);
   * cells are reported in the row-major surrogate (cy·2^L + cx), the same
   * convention the oracles mirror everywhere else.
+  *
+  * Every per-cell grid comes from [[cellGrid]] (points aggregate to the
+  * ≤ 4^L occupied cells BEFORE any neighbourhood step), every
+  * neighbourhood sum from [[stencil]] or [[rookTerms]], so all work after
+  * the first shuffle is grid-bounded.
   */
 object GeoStatsQueries {
+
+  // -------------------------------------------------------------------------
+  // the cell-grid core
+  // -------------------------------------------------------------------------
+
+  /** `pages` aggregated per level-`level` cell and `keys`:
+    * (cy, cx, keys…, aggs…), `aggs` defaulting to `count → c`. */
+  private def cellGrid(pages: DataFrame, level: Int, keys: Column*)(aggs: Column*): DataFrame = {
+    val a = if (aggs.isEmpty) Seq(count(lit(1)).as("c")) else aggs
+    val axes = Seq(("cy", "ilat", GridH), ("cx", "ilon", GridW))
+      .map { case (n, c, extent) => Pages.cellAxis(col(c), extent, level).as(n) }
+    pages.groupBy(axes ++ keys: _*).agg(a.head, a.tail: _*)
+  }
+
+  /** A (cy, cx, c) grid rolled up `k` levels: the grids nest exactly
+    * (floor(floor(a/b)/c) = floor(a/(b·c)), operands non-negative), so the
+    * parent cell is cy div 2^k and the rollup shuffles grid rows only. */
+  private def coarsen(grid: DataFrame, k: Int): DataFrame =
+    if (k == 0) grid
+    else grid.groupBy(expr(s"cy div ${1L << k}").as("cy"), expr(s"cx div ${1L << k}").as("cx"))
+      .agg(sum(col("c")).as("c"))
+
+  /** Kernel taps (dy, dx, w0, w1, …). [[1 2 1] [2 4 2] [1 2 1]]: the
+    * binomial (Gaussian) smoothing kernel, w0 = (2 − |dy|)·(2 − |dx|). */
+  private val Binomial3x3: Seq[Seq[Long]] =
+    for (dy <- -1L to 1L; dx <- -1L to 1L) yield Seq(dy, dx, (2 - dy.abs) * (2 - dx.abs))
+
+  /** The Sobel pair: w0 = [[−1 0 1] [−2 0 2] [−1 0 1]] (x), w1 its transpose (y). */
+  private val Sobel3x3: Seq[Seq[Long]] =
+    for (dy <- -1L to 1L; dx <- -1L to 1L) yield Seq(dy, dx, dx * (2 - dy.abs), dy * (2 - dx.abs))
+
+  /** The 4 rook (edge-sharing) neighbours, unweighted. */
+  private val Rook4: Seq[Seq[Long]] = Seq(Seq(-1L, 0L), Seq(1L, 0L), Seq(0L, -1L), Seq(0L, 1L))
+
+  /** Scatters each (cy, cx, …) grid row along every kernel tap
+    * (dy, dx, w0, w1, …) to (cy + dy, cx + dx), clips to the `side × side`
+    * grid and sums per target: (ty, tx, sums…, n_contrib), each of `sums`
+    * (name → value, which may use the tap's w0, w1, …) summed, n_contrib
+    * the taps that landed. The kernel is a literal array exploded in place
+    * (`inline`): no offset table, no join. */
+  private def stencil(grid: DataFrame, side: Long, kernel: Seq[Seq[Long]],
+      sums: (String, Column)*): DataFrame = {
+    val taps = array(kernel.map { t =>
+      struct(lit(t(0)).as("dy") +: lit(t(1)).as("dx") +:
+        t.drop(2).zipWithIndex.map { case (w, i) => lit(w).as(s"w$i") }: _*)
+    }: _*)
+    val aggs = sums.map { case (n, _) => sum(col(n)).as(n) } :+ count(lit(1)).as("n_contrib")
+    grid.select(col("*"), inline(taps))
+      .select((col("cy") + col("dy")).as("ty") +: (col("cx") + col("dx")).as("tx") +:
+        sums.map { case (n, v) => v.as(n) }: _*)
+      .filter(col("ty") >= 0 && col("ty") < side && col("tx") >= 0 && col("tx") < side)
+      .groupBy(col("ty"), col("tx")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Rook-neighbour deviation terms of a (cy, cx, c) grid on `side × side`
+    * cells, per OCCUPIED cell: (cy, cx, c, d, nt, s, nocc, sum_dnbr, no)
+    * with d = N·c − S (N = side², S = Σc, nocc occupied cells), nt the
+    * border-aware rook-neighbour total, and sum_dnbr/no the d-sum and count
+    * of the OCCUPIED rook neighbours — the nt − no empty ones each have
+    * d = −S, so callers add them in closed form. Reads the grid three
+    * times: callers persist it. */
+  private[graft] def rookTerms(grid: DataFrame, side: Long): DataFrame = {
+    val tot = grid.groupBy().agg(sum(col("c")).as("s"), count(lit(1)).as("nocc"))
+    val o = grid.crossJoin(broadcast(tot))
+      .withColumn("d", lit(side * side) * col("c") - col("s"))
+      .withColumn("nt",
+        lit(4L) - when(col("cy") === 0, 1L).otherwise(0L)
+          - when(col("cy") === side - 1, 1L).otherwise(0L)
+          - when(col("cx") === 0, 1L).otherwise(0L)
+          - when(col("cx") === side - 1, 1L).otherwise(0L))
+    val adj = stencil(o, side, Rook4, "sum_dnbr" -> col("d"))
+    o.join(adj, col("cy") === col("ty") && col("cx") === col("tx"), "left")
+      .select(col("cy"), col("cx"), col("c"), col("d"), col("nt"), col("s"), col("nocc"),
+        coalesce(col("sum_dnbr"), lit(0L)).as("sum_dnbr"),
+        coalesce(col("n_contrib"), lit(0L)).as("no"))
+  }
+
+  /** (ccy, ccx): the footprint center's cell on the `p × p` grid; the
+    * +900/+1800 shift comes BEFORE the halving so every div sees
+    * non-negative operands (Spark div truncates, DuckDB // floors). */
+  private def centerCell(p: Long): Seq[Column] = Seq(
+    expr(s"((ilat0 + ilat1 + 1800) div 2) * $p div 1800").as("ccy"),
+    expr(s"((ilon0 + ilon1 + 3600) div 2) * $p div 3600").as("ccx"))
 
   // -------------------------------------------------------------------------
   // q111 — kernel-smoothed density heatmap (KDE on the cell grid)
@@ -28,32 +116,17 @@ object GeoStatsQueries {
     * raw counts — the crawl-density hotspot surface.
     *
     * Scale shape: ONE partial-agg shuffle builds the per-cell counts
-    * (output ≤ 4^L rows by construction); the convolution is a 9-row
-    * broadcast cross join scattering each occupied cell into its
-    * neighbors followed by a second grid-sized agg — never a corpus-sized
-    * explode (points aggregate BEFORE the kernel scatter). */
+    * (output ≤ 4^L rows by construction); the convolution is the inline
+    * 9-tap kernel scattering each occupied cell into its neighbors
+    * followed by a second grid-sized agg — never a corpus-sized explode
+    * (points aggregate BEFORE the kernel scatter). */
   def kdeHeatmap(spark: SparkSession, sfDir: String, topK: Int = 15): DataFrame = {
     val p = 1L << KdeLevel
-    val cy = Pages.cellAxis(col("ilat"), GridH, KdeLevel)
-    val cx = Pages.cellAxis(col("ilon"), GridW, KdeLevel)
     // grid-sized but corpus-scan-derived; feeds the kernel scatter AND the
     // raw-count join back — persist once (released via CacheBag)
-    val occ = Pages.fromDocuments(spark, sfDir)
-      .select(cy.as("cy"), cx.as("cx"))
-      .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
-      .persist()
+    val occ = cellGrid(Pages.fromDocuments(spark, sfDir), KdeLevel)().persist()
     graft.util.CacheBag.register(occ)
-    val offsets = Seq(
-      (-1L, -1L, 1L), (-1L, 0L, 2L), (-1L, 1L, 1L),
-      (0L, -1L, 2L), (0L, 0L, 4L), (0L, 1L, 2L),
-      (1L, -1L, 1L), (1L, 0L, 2L), (1L, 1L, 1L))
-    import spark.implicits._
-    val off = offsets.toDF("dy", "dx", "w")
-    val sm = occ.crossJoin(broadcast(off))
-      .select((col("cy") + col("dy")).as("ty"), (col("cx") + col("dx")).as("tx"),
-        (col("w") * col("c")).as("contrib"))
-      .filter(col("ty") >= 0 && col("ty") < p && col("tx") >= 0 && col("tx") < p)
-      .groupBy(col("ty"), col("tx")).agg(sum(col("contrib")).as("sm"))
+    val sm = stencil(occ, p, Binomial3x3, "sm" -> col("w0") * col("c"))
     sm.join(occ, col("ty") === col("cy") && col("tx") === col("cx"), "left")
       .select((col("ty") * p + col("tx")).as("cell6"), col("sm"),
         coalesce(col("c"), lit(0L)).as("n_own"))
@@ -141,79 +214,47 @@ object GeoStatsQueries {
     * Spark's truncating `div` with DuckDB's flooring `//` on negatives is
     * the FIXTURES §3 trap, so no engine ever divides).
     *
-    * Empty cells participate (D_empty = −S): their contributions are
-    * reconstructed arithmetically from the occupied side — per occupied
-    * cell the border-aware neighbor total vs the occupied-neighbor count
-    * gives the occupied↔empty pair sum, and the remaining rook pairs are
-    * empty↔empty with the constant product S². So the distributed work
-    * stays ∝ OCCUPIED cells (≤ 4^L by construction): one grid-sized agg,
-    * one 4-offset scatter join, one final reduce.
+    * Empty cells (D = −S) enter in closed form: [[rookTerms]] gives each
+    * occupied cell's occupied↔empty pair sum, and the remaining rook pairs
+    * are empty↔empty with the constant product S², so the work stays ∝
+    * OCCUPIED cells (≤ 4^L by construction).
     *
-    * Range: products are ≤ W·(4^L·max_cell)² — exact in BIGINT up to
-    * ~10^9 pages at these levels; beyond that, pre-scale the per-cell
-    * counts (e.g. counts-per-million) before the deviation step — the
-    * formula is homogeneous, so the REPORTED ratio num/den is unchanged. */
+    * Range: the largest term is the one-cell Σd² ≈ (4^L·S)², so every
+    * product and sum is exact in BIGINT while 4^L·S < 3.03·10^9 (√2^63):
+    * S < 2.95·10^6 pages at level 5 (this query's fine level, and q122's),
+    * 1.18·10^7 at level 4. Past it ANSI arithmetic throws
+    * ArithmeticException — the query fails, it never wraps (GeoStatsSpec
+    * pins both sides). Beyond that scale, pre-scale the per-cell counts
+    * (e.g. counts-per-million) before the deviation step — the formula is
+    * homogeneous, so the REPORTED ratio num/den is unchanged. */
   def moranComponents(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val pg = Pages.fromDocuments(spark, sfDir)
-    // r6 (guide §2.3/§2.4): ONE corpus scan + grid agg at the FINEST
-    // level; coarser levels roll up from it arithmetically. The grids
-    // nest exactly — floor(floor(a/b)/c) = floor(a/(b·c)) makes
-    // cy_l = cy_fine div 2^(fine−l) (operands non-negative) — so the
-    // rollup shuffles ≤ 4^fine grid rows where r5 re-scanned and
-    // re-shuffled the corpus per level.
+    // ONE corpus scan + grid agg at the FINEST level; coarser levels roll
+    // up from it (grid rows only) — the fine grid feeds every level, so
+    // persist it once (released via CacheBag)
     val fineL = MoranLevels.max
-    val fineCy = Pages.cellAxis(col("ilat"), GridH, fineL)
-    val fineCx = Pages.cellAxis(col("ilon"), GridW, fineL)
-    val occFine = pg.select(fineCy.as("cy"), fineCx.as("cx"))
-      .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
-      .persist()
+    val occFine = cellGrid(Pages.fromDocuments(spark, sfDir), fineL)().persist()
     graft.util.CacheBag.register(occFine)
-    val perLevel = MoranLevels.map { l =>
-      val side = 1L << l
-      val nc = side * side
-      // grid-sized (≤4^L rows); feeds the totals, the deviation frame AND
-      // the scatter join — the fine level is the persisted scan product,
-      // coarser levels a cheap grid-sized rollup of it
-      val shift = fineL - l
-      val occ =
-        if (shift == 0) occFine
-        else occFine.select(expr(s"cy div ${1L << shift}").as("cy"),
-            expr(s"cx div ${1L << shift}").as("cx"), col("c"))
-          .groupBy(col("cy"), col("cx")).agg(sum(col("c")).as("c"))
-      val tot = occ.groupBy().agg(sum(col("c")).as("s"), count(lit(1)).as("nocc"))
-      val o = occ.crossJoin(broadcast(tot))
-        .withColumn("d", lit(nc) * col("c") - col("s"))
-        .withColumn("nt",
-          lit(4L) - when(col("cy") === 0, 1L).otherwise(0L)
-            - when(col("cy") === side - 1, 1L).otherwise(0L)
-            - when(col("cx") === 0, 1L).otherwise(0L)
-            - when(col("cx") === side - 1, 1L).otherwise(0L))
-      val off = Seq((-1L, 0L), (1L, 0L), (0L, -1L), (0L, 1L)).toDF("dy", "dx")
-      val scattered = o.crossJoin(broadcast(off))
-        .select((col("cy") + col("dy")).as("ty"), (col("cx") + col("dx")).as("tx"),
-          col("d").as("dn"))
-        .filter(col("ty") >= 0 && col("ty") < side && col("tx") >= 0 && col("tx") < side)
-      val adj = scattered.groupBy(col("ty"), col("tx"))
-        .agg(sum(col("dn")).as("sum_dnbr"), count(lit(1)).as("no"))
-      val per = o.join(adj, col("cy") === col("ty") && col("cx") === col("tx"), "left")
-        .select(col("d"), col("nt"), col("s"), col("nocc"),
-          coalesce(col("sum_dnbr"), lit(0L)).as("sum_dnbr"),
-          coalesce(col("no"), lit(0L)).as("no"))
-      val w = 4 * side * (side - 1)
-      per.groupBy()
-        .agg(sum(col("d") * col("sum_dnbr")).as("num_occ"),
-          sum(col("d") * (col("nt") - col("no"))).as("d_edge"),
-          sum(col("no")).as("docc"), sum(col("nt") - col("no")).as("oe"),
-          sum(col("d") * col("d")).as("dd"),
-          max(col("s")).as("s"), max(col("nocc")).as("nocc"))
-        .select(lit(l).as("level"), lit(nc).as("n_cells"), col("nocc").as("n_occ"),
-          lit(w).as("w_pairs"),
-          (col("num_occ") - lit(2L) * col("s") * col("d_edge")
-            + (lit(w) - col("docc") - lit(2L) * col("oe")) * col("s") * col("s")).as("num"),
-          (col("dd") + (lit(nc) - col("nocc")) * col("s") * col("s")).as("den"))
-    }
-    perLevel.reduce(_.unionByName(_)).orderBy(col("level"))
+    MoranLevels.map(l => moranLevel(rookTerms(coarsen(occFine, fineL - l), 1L << l), l))
+      .reduce(_.unionByName(_)).orderBy(col("level"))
+  }
+
+  /** q117's one-row report for level `level` from its [[rookTerms]]: the
+    * occupied-cell sums plus the empty-cell terms in closed form. */
+  private[graft] def moranLevel(terms: DataFrame, level: Int): DataFrame = {
+    val side = 1L << level
+    val nc = side * side
+    val w = 4 * side * (side - 1)
+    terms.groupBy()
+      .agg(sum(col("d") * col("sum_dnbr")).as("num_occ"),
+        sum(col("d") * (col("nt") - col("no"))).as("d_edge"),
+        sum(col("no")).as("docc"), sum(col("nt") - col("no")).as("oe"),
+        sum(col("d") * col("d")).as("dd"),
+        max(col("s")).as("s"), max(col("nocc")).as("nocc"))
+      .select(lit(level).as("level"), lit(nc).as("n_cells"), col("nocc").as("n_occ"),
+        lit(w).as("w_pairs"),
+        (col("num_occ") - lit(2L) * col("s") * col("d_edge")
+          + (lit(w) - col("docc") - lit(2L) * col("oe")) * col("s") * col("s")).as("num"),
+        (col("dd") + (lit(nc) - col("nocc")) * col("s") * col("s")).as("den"))
   }
 
   // -------------------------------------------------------------------------
@@ -227,49 +268,24 @@ object GeoStatsQueries {
     * Moran), division-free like q117: per occupied cell the local
     * statistic's NUMERATOR is D_i · Σ_{j∈rook(i)} D_j (positive = the
     * cell sits in a cluster of like values — a hotspot when D_i > 0;
-    * negative = a spatial outlier). Empty rook neighbors contribute
-    * D_empty = −S each, reconstructed arithmetically from the
-    * border-aware neighbor count, so the distributed work stays ∝
-    * OCCUPIED cells. Report: top cells by |local|, with the sign and the
-    * hot/outlier class — the per-region drill-down of q117's single
-    * global number.
+    * negative = a spatial outlier); empty rook neighbours enter as
+    * D = −S each through [[rookTerms]]. Report: top cells by |local|,
+    * with the sign and the hot/outlier class — the per-region drill-down
+    * of q117's single global number.
     *
     * Determinism: |local| and the tiebreak are pure integer; no division
     * anywhere (the conventional z-standardization divides by corpus
     * moments — monotone per fixed corpus, so ranking by the raw
-    * numerator picks the same cells). */
+    * numerator picks the same cells). Range: q117's bound at the same
+    * level. */
   def lisaHotspots(spark: SparkSession, sfDir: String, topK: Int = LisaTopK): DataFrame = {
-    import spark.implicits._
     val side = 1L << LisaLevel
-    val nc = side * side
-    val cy = Pages.cellAxis(col("ilat"), GridH, LisaLevel)
-    val cx = Pages.cellAxis(col("ilon"), GridW, LisaLevel)
     // grid-sized but corpus-scan-derived; feeds totals, deviations and the
     // scatter join — persist once (released via CacheBag)
-    val occ = Pages.fromDocuments(spark, sfDir)
-      .select(cy.as("cy"), cx.as("cx"))
-      .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
-      .persist()
+    val occ = cellGrid(Pages.fromDocuments(spark, sfDir), LisaLevel)().persist()
     graft.util.CacheBag.register(occ)
-    val tot = occ.groupBy().agg(sum(col("c")).as("s"))
-    val o = occ.crossJoin(broadcast(tot))
-      .withColumn("d", lit(nc) * col("c") - col("s"))
-      .withColumn("nt",
-        lit(4L) - when(col("cy") === 0, 1L).otherwise(0L)
-          - when(col("cy") === side - 1, 1L).otherwise(0L)
-          - when(col("cx") === 0, 1L).otherwise(0L)
-          - when(col("cx") === side - 1, 1L).otherwise(0L))
-    val off = Seq((-1L, 0L), (1L, 0L), (0L, -1L), (0L, 1L)).toDF("dy", "dx")
-    val scattered = o.crossJoin(broadcast(off))
-      .select((col("cy") + col("dy")).as("ty"), (col("cx") + col("dx")).as("tx"),
-        col("d").as("dn"))
-      .filter(col("ty") >= 0 && col("ty") < side && col("tx") >= 0 && col("tx") < side)
-    val adj = scattered.groupBy(col("ty"), col("tx"))
-      .agg(sum(col("dn")).as("sum_dnbr"), count(lit(1)).as("no"))
-    o.join(adj, col("cy") === col("ty") && col("cx") === col("tx"), "left")
-      .select(col("cy"), col("cx"), col("c"), col("d"), col("s"),
-        (coalesce(col("sum_dnbr"), lit(0L))
-          - (col("nt") - coalesce(col("no"), lit(0L))) * col("s")).as("nbr_d"))
+    rookTerms(occ, side)
+      .withColumn("nbr_d", col("sum_dnbr") - (col("nt") - col("no")) * col("s"))
       .select((col("cy") * side + col("cx")).as("cell5"), col("c").as("n_pages"),
         (col("d") * col("nbr_d")).as("local"),
         when(col("d") * col("nbr_d") < 0, "outlier")
@@ -337,27 +353,13 @@ object GeoStatsQueries {
     * true weighted mean of raw values, not a mean of means.
     *
     * Scale shape: exactly q111's — one partial-agg corpus shuffle to the
-    * ≤4^L per-cell (n, sum) frame, a 9-row broadcast scatter, one
+    * ≤4^L per-cell (n, sum) frame, the inline 9-tap kernel scatter, one
     * grid-sized agg. */
   def idwSurface(spark: SparkSession, sfDir: String): DataFrame = {
     val p = 1L << KdeLevel
-    val occ = Pages.fromDocuments(spark, sfDir)
-      .select(Pages.cellAxis(col("ilat"), GridH, KdeLevel).as("cy"),
-        Pages.cellAxis(col("ilon"), GridW, KdeLevel).as("cx"), col("n_chars"))
-      .groupBy(col("cy"), col("cx"))
-      .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("s"))
-    val offsets = Seq(
-      (-1L, -1L, 1L), (-1L, 0L, 2L), (-1L, 1L, 1L),
-      (0L, -1L, 2L), (0L, 0L, 4L), (0L, 1L, 2L),
-      (1L, -1L, 1L), (1L, 0L, 2L), (1L, 1L, 1L))
-    import spark.implicits._
-    val off = offsets.toDF("dy", "dx", "w")
-    occ.crossJoin(broadcast(off))
-      .select((col("cy") + col("dy")).as("ty"), (col("cx") + col("dx")).as("tx"),
-        (col("w") * col("s")).as("ws"), (col("w") * col("n")).as("wn"))
-      .filter(col("ty") >= 0 && col("ty") < p && col("tx") >= 0 && col("tx") < p)
-      .groupBy(col("ty"), col("tx"))
-      .agg(sum(col("ws")).as("sws"), sum(col("wn")).as("swn"), count(lit(1)).as("n_contrib"))
+    val occ = cellGrid(Pages.fromDocuments(spark, sfDir), KdeLevel)(
+      count(lit(1)).as("n"), sum(col("n_chars")).as("s"))
+    stencil(occ, p, Binomial3x3, "sws" -> col("w0") * col("s"), "swn" -> col("w0") * col("n"))
       .select((col("ty") * p + col("tx")).as("cell6"),
         expr("sws div swn").as("est_chars"), col("n_contrib"))
       .orderBy(col("cell6"))
@@ -378,17 +380,8 @@ object GeoStatsQueries {
     * ONE broadcast join of the 16-row center table against the per-cell
     * count frame (points aggregate BEFORE the distance test). */
   def ringDecay(spark: SparkSession, sfDir: String, maxD: Int = DecayMaxD): DataFrame = {
-    val p = 1L << KdeLevel
-    // center via the +900/+1800 shift BEFORE the halving so every div sees
-    // non-negative operands (Spark div truncates, DuckDB // floors)
-    val centers = Footprints.boxesDf(spark).select(col("fp_id"),
-      expr(s"((ilat0 + ilat1 + 1800) div 2) * $p div 1800").as("ccy"),
-      expr(s"((ilon0 + ilon1 + 3600) div 2) * $p div 3600").as("ccx"))
-    val occ = Pages.fromDocuments(spark, sfDir)
-      .select(Pages.cellAxis(col("ilat"), GridH, KdeLevel).as("cy"),
-        Pages.cellAxis(col("ilon"), GridW, KdeLevel).as("cx"))
-      .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
-    occ.crossJoin(broadcast(centers))
+    val centers = Footprints.boxesDf(spark).select(col("fp_id") +: centerCell(1L << KdeLevel): _*)
+    cellGrid(Pages.fromDocuments(spark, sfDir), KdeLevel)().crossJoin(broadcast(centers))
       .withColumn("d", greatest(abs(col("cy") - col("ccy")), abs(col("cx") - col("ccx"))))
       .filter(col("d") <= maxD)
       .groupBy(col("fp_id"), col("d"))
@@ -539,10 +532,7 @@ object GeoStatsQueries {
     // the corpus agg per level while AQE stage latency dominated; at
     // maxLevel ≥ 8 use [[adaptiveGridDistributed]], the identical-output
     // scale path below, gated equal by GeoStatsSpec).
-    val fine = Pages.fromDocuments(spark, sfDir)
-      .select(Pages.cellAxis(col("ilat"), GridH, maxLevel).as("cy"),
-        Pages.cellAxis(col("ilon"), GridW, maxLevel).as("cx"))
-      .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("n"))
+    val fine = cellGrid(Pages.fromDocuments(spark, sfDir), maxLevel)()
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val counts = new Array[Map[(Long, Long), Long]](maxLevel + 1)
     counts(maxLevel) = fine
@@ -572,30 +562,23 @@ object GeoStatsQueries {
     * row-identity with the driver-assembled default). */
   def adaptiveGridDistributed(spark: SparkSession, sfDir: String,
       maxLevel: Int = AdaptLevel, split: Long = AdaptSplit): DataFrame = {
-    val fine = Pages.fromDocuments(spark, sfDir)
-      .select(Pages.cellAxis(col("ilat"), GridH, maxLevel).as("cy"),
-        Pages.cellAxis(col("ilon"), GridW, maxLevel).as("cx"))
-      .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("n"))
     val counts = new Array[DataFrame](maxLevel + 1)
-    counts(maxLevel) = fine
-    for (l <- maxLevel - 1 to 0 by -1)
-      counts(l) = counts(l + 1)
-        .groupBy(expr("cy div 2").as("cy"), expr("cx div 2").as("cx"))
-        .agg(sum(col("n")).as("n"))
-    var refined = counts(0).filter(col("n") > split)
-    var leaves = counts(0).filter(col("n") <= split)
-      .select(lit(0).as("level"), (col("cy") * 1 + col("cx")).as("cell"), col("n"))
+    counts(maxLevel) = cellGrid(Pages.fromDocuments(spark, sfDir), maxLevel)()
+    for (l <- maxLevel - 1 to 0 by -1) counts(l) = coarsen(counts(l + 1), 1)
+    var refined = counts(0).filter(col("c") > split)
+    var leaves = counts(0).filter(col("c") <= split)
+      .select(lit(0).as("level"), (col("cy") * 1 + col("cx")).as("cell"), col("c"))
     for (l <- 1 to maxLevel) {
       val side = 1L << l
       val open = counts(l).join(
         refined.select(col("cy").as("py"), col("cx").as("px")),
         expr("cy div 2") === col("py") && expr("cx div 2") === col("px"), "left_semi")
-      val emit = if (l == maxLevel) open else open.filter(col("n") <= split)
+      val emit = if (l == maxLevel) open else open.filter(col("c") <= split)
       leaves = leaves.unionByName(
-        emit.select(lit(l).as("level"), (col("cy") * side + col("cx")).as("cell"), col("n")))
-      refined = if (l == maxLevel) refined else open.filter(col("n") > split)
+        emit.select(lit(l).as("level"), (col("cy") * side + col("cx")).as("cell"), col("c")))
+      refined = if (l == maxLevel) refined else open.filter(col("c") > split)
     }
-    leaves.withColumnRenamed("n", "n_pages").orderBy(col("level"), col("cell"))
+    leaves.withColumnRenamed("c", "n_pages").orderBy(col("level"), col("cell"))
   }
 
   // -------------------------------------------------------------------------
@@ -615,23 +598,19 @@ object GeoStatsQueries {
     * can't answer: not "where is it hot" but "where is it heating".
     *
     * Scale shape: one corpus shuffle to the (cell, bucket) counts; the
-    * zero-fill is a grid × [[MkBuckets]] broadcast expansion; the pair
-    * scoring is a (cell)-keyed self-join over ≤ MkBuckets rows per cell
-    * — grid-bounded everywhere after the first agg. Time bounds ride the
-    * lazy one-row broadcast (the q102 scalar shape). */
+    * zero-fill explodes each occupied cell into its [[MkBuckets]]
+    * buckets; the pair scoring is a (cell)-keyed self-join over
+    * ≤ MkBuckets rows per cell — grid-bounded everywhere after the first
+    * agg. Time bounds ride the lazy one-row broadcast (the q102 scalar
+    * shape). */
   def emergingHotspots(spark: SparkSession, sfDir: String): DataFrame = {
     val p = 1L << MkLevel
     val pg = Pages.fromDocuments(spark, sfDir)
     val bounds = pg.agg(min(col("ts_sec")).as("mn"), max(col("ts_sec")).as("mx"))
-    val counts = pg.crossJoin(broadcast(bounds))
-      .select(Pages.cellAxis(col("ilat"), GridH, MkLevel).as("cy"),
-        Pages.cellAxis(col("ilon"), GridW, MkLevel).as("cx"),
-        expr(s"(ts_sec - mn) * $MkBuckets div (mx - mn + 1)").as("b"))
-      .groupBy(col("cy"), col("cx"), col("b")).agg(count(lit(1)).as("c"))
-    import spark.implicits._
-    val buckets = (0L until MkBuckets.toLong).toDF("b")
+    val counts = cellGrid(pg.crossJoin(broadcast(bounds)), MkLevel,
+      expr(s"(ts_sec - mn) * $MkBuckets div (mx - mn + 1)").as("b"))()
     val zfill = counts.select(col("cy"), col("cx")).distinct()
-      .crossJoin(broadcast(buckets))
+      .withColumn("b", explode(lit((0L until MkBuckets.toLong).toArray)))
       .join(counts, Seq("cy", "cx", "b"), "left")
       .select(col("cy"), col("cx"), col("b"), coalesce(col("c"), lit(0L)).as("c"))
     val s = zfill.as("x").join(zfill.as("y"),
@@ -665,15 +644,8 @@ object GeoStatsQueries {
     * cell (map-side combinable — never a per-cell window over the
     * corpus), one territory-sized agg. */
   def territoryAssign(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = 1L << TerrLevel
-    val centers = Footprints.boxesDf(spark).select(col("fp_id"),
-      expr(s"((ilat0 + ilat1 + 1800) div 2) * $p div 1800").as("ccy"),
-      expr(s"((ilon0 + ilon1 + 3600) div 2) * $p div 3600").as("ccx"))
-    val occ = Pages.fromDocuments(spark, sfDir)
-      .select(Pages.cellAxis(col("ilat"), GridH, TerrLevel).as("cy"),
-        Pages.cellAxis(col("ilon"), GridW, TerrLevel).as("cx"))
-      .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
-    occ.crossJoin(broadcast(centers))
+    val centers = Footprints.boxesDf(spark).select(col("fp_id") +: centerCell(1L << TerrLevel): _*)
+    cellGrid(Pages.fromDocuments(spark, sfDir), TerrLevel)().crossJoin(broadcast(centers))
       .withColumn("d2",
         (col("cy") - col("ccy")) * (col("cy") - col("ccy")) +
           (col("cx") - col("ccx")) * (col("cx") - col("ccx")))
@@ -700,27 +672,12 @@ object GeoStatsQueries {
     * Top-[[GradTopK]] cells by (magnitude desc, cell).
     *
     * Scale shape: q111's — one corpus partial-agg shuffle to the grid,
-    * a 9-row broadcast kernel scatter carrying BOTH kernels per offset,
-    * one grid-sized agg. */
+    * the inline 9-tap kernel scatter carrying BOTH kernels per tap, one
+    * grid-sized agg. */
   def densityGradient(spark: SparkSession, sfDir: String, topK: Int = GradTopK): DataFrame = {
     val p = 1L << KdeLevel
-    val occ = Pages.fromDocuments(spark, sfDir)
-      .select(Pages.cellAxis(col("ilat"), GridH, KdeLevel).as("cy"),
-        Pages.cellAxis(col("ilon"), GridW, KdeLevel).as("cx"))
-      .groupBy(col("cy"), col("cx")).agg(count(lit(1)).as("c"))
-    // (dy, dx, wx, wy): Sobel-x weights and Sobel-y weights per offset
-    val offsets = Seq(
-      (-1L, -1L, -1L, -1L), (-1L, 0L, 0L, -2L), (-1L, 1L, 1L, -1L),
-      (0L, -1L, -2L, 0L), (0L, 0L, 0L, 0L), (0L, 1L, 2L, 0L),
-      (1L, -1L, -1L, 1L), (1L, 0L, 0L, 2L), (1L, 1L, 1L, 1L))
-    import spark.implicits._
-    val off = offsets.toDF("dy", "dx", "wx", "wy")
-    occ.crossJoin(broadcast(off))
-      .select((col("cy") + col("dy")).as("ty"), (col("cx") + col("dx")).as("tx"),
-        (col("wx") * col("c")).as("cx_contrib"), (col("wy") * col("c")).as("cy_contrib"))
-      .filter(col("ty") >= 0 && col("ty") < p && col("tx") >= 0 && col("tx") < p)
-      .groupBy(col("ty"), col("tx"))
-      .agg(sum(col("cx_contrib")).as("gx"), sum(col("cy_contrib")).as("gy"))
+    val occ = cellGrid(Pages.fromDocuments(spark, sfDir), KdeLevel)()
+    stencil(occ, p, Sobel3x3, "gx" -> col("w0") * col("c"), "gy" -> col("w1") * col("c"))
       .select((col("ty") * p + col("tx")).as("cell6"), col("gx"), col("gy"),
         (abs(col("gx")) + abs(col("gy"))).as("mag"),
         when(abs(col("gx")) > abs(col("gy")) * 2,
@@ -749,12 +706,7 @@ object GeoStatsQueries {
     * regional-specialization statistic (LQ ≫ 1000 = this language
     * concentrates here). Cells with fewer than [[LqMinPages]] pages of
     * the language are suppressed (small-sample LQ is noise). All
-    * integer; the numerator n_cell_lang · total · 1000 is ≤ 1e3·corpus²,
-    * exact in BIGINT only while the corpus holds ≲ 3e7 pages (ADVICE r5 —
-    * the earlier "far below 2^63" note was wrong). Production at 100 TB
-    * pre-scales both counts (e.g. per-million) before the multiply; the
-    * LQ ratio is homogeneous in the pair, so the reported permille is
-    * unchanged up to the documented floor-rounding of the scaled counts.
+    * integer, exact at any corpus size ([[lqPermille]]).
     *
     * Scale shape: one corpus partial-agg shuffle to the (cell, lang)
     * counts; cell totals and language totals are grid- and
@@ -762,24 +714,28 @@ object GeoStatsQueries {
     * factor-join shape). */
   def locationQuotient(spark: SparkSession, sfDir: String): DataFrame = {
     val p = 1L << LqLevel
-    val cl = Pages.fromDocuments(spark, sfDir)
-      .select(Pages.cellAxis(col("ilat"), GridH, LqLevel).as("cy"),
-        Pages.cellAxis(col("ilon"), GridW, LqLevel).as("cx"), col("lang"))
-      .groupBy(col("cy"), col("cx"), col("lang"))
-      .agg(count(lit(1)).as("n"))
-      .persist()
+    val cl = cellGrid(Pages.fromDocuments(spark, sfDir), LqLevel, col("lang"))().persist()
     graft.util.CacheBag.register(cl)
-    val cellTot = cl.groupBy(col("cy"), col("cx")).agg(sum(col("n")).as("n_cell"))
-    val langTot = cl.groupBy(col("lang")).agg(sum(col("n")).as("n_lang"))
-    val total = cl.agg(sum(col("n")).as("total"))
-    cl.filter(col("n") >= LqMinPages)
+    val cellTot = cl.groupBy(col("cy"), col("cx")).agg(sum(col("c")).as("n_cell"))
+    val langTot = cl.groupBy(col("lang")).agg(sum(col("c")).as("n_lang"))
+    val total = cl.agg(sum(col("c")).as("total"))
+    cl.filter(col("c") >= LqMinPages)
       .join(cellTot, Seq("cy", "cx"))
       .join(broadcast(langTot), Seq("lang"))
       .crossJoin(broadcast(total))
       .select((col("cy") * p + col("cx")).as("cell3"), col("lang"),
-        col("n").as("n_pages"),
-        expr("(n * total * 1000) div (n_cell * n_lang)").as("lq_pm"))
+        col("c").as("n_pages"),
+        lqPermille(col("c"), col("n_cell"), col("n_lang"), col("total")).as("lq_pm"))
       .orderBy(col("cell3"), col("lang"))
+  }
+
+  /** q141's LQ in permille, (n · total · 1000) div (nCell · nLang), in
+    * DECIMAL(38,0): in BIGINT the numerator passes 2^63 near 3·10^7
+    * pages, in DECIMAL(38,0) only near 3·10^17. `div` returns BIGINT;
+    * the quotient is ≤ 1000 · total. */
+  private[graft] def lqPermille(n: Column, nCell: Column, nLang: Column, total: Column): Column = {
+    def wide(c: Column) = c.cast("decimal(38,0)")
+    call_function("div", wide(n) * wide(total) * 1000, wide(nCell) * wide(nLang))
   }
 
   // ---- oracle twins -------------------------------------------------------

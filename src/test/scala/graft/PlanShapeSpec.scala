@@ -229,15 +229,12 @@ class PlanShapeSpec extends SparkTestBase {
     //    lazy-construction contract for no gain)
     //  - q106/q115: the shared link-graph edge generator cross-joins the
     //    ONE-row broadcast node count N (the q102 lazy-scalar shape)
-    //  - q111: the kernel scatter cross-joins the 9-row broadcast offset
-    //    table against the GRID-sized (≤4^L) count agg — never the corpus
     //  - q117: the deviation step cross-joins the ONE-row broadcast (S,
-    //    n_occ) totals and the 4-row rook-offset table against the
-    //    grid-sized count agg (the q111 shape)
+    //    n_occ) totals against the GRID-sized (≤4^L) count agg
     val allowed = Set("q31_ann_l2", "q07_knn", "q42_knn_exact", "q46_ann_ivf",
       "q63_ann_pq", "q67_knn_table", "q70_nearest_footprint", "q93_ann_sq8",
       "q96_cosine_topk", "q98_cosine_ann", "q102_semantic_drift",
-      "q106_page_rank", "q111_kde_heatmap", "q115_webgraph_audit",
+      "q106_page_rank", "q115_webgraph_audit",
       "q117_moran_components", "q122_lisa_hotspots", // q122 = the q117 shape
       // q121/q124: the q31/q96 brute scan shape (small query set broadcast
       // against the corpus) with a label/lang filter; ranking is the
@@ -250,25 +247,19 @@ class PlanShapeSpec extends SparkTestBase {
       // stored-centroid artifact against queries/delta rows — the q46/q98
       // coarse-quantizer shape, served from the persisted index
       "q127_served_ann", "q128_index_delta",
-      // q129: the q111 kernel shape — 9-row broadcast offset table
-      // crossed against the GRID-sized (≤4^L) value agg, never the corpus
       // q130: 16-row broadcast footprint-center table crossed against the
       // grid-sized count agg (distance test, no ring materialization)
       // q132: nLangs+1-row broadcast smoothing-denominator table crossed
       // against the per-doc agg (every doc scores every class)
       // q134: footprint boxes (16 rows, broadcast) × their bounded cell
       // cover — the allocation explode, grid-bounded per box
-      "q129_idw_surface", "q130_ring_decay", "q132_nb_confusion",
-      "q134_areal_interp",
+      "q130_ring_decay", "q132_nb_confusion", "q134_areal_interp",
       // q136: the ONE-row broadcast (mn, mx) ts bounds (q102 lazy-scalar
-      // shape) + the 8-row broadcast bucket table against the grid agg
+      // shape) against the pages
       "q136_emerging_hotspots",
       // q138: the 16-row broadcast footprint-center table crossed against
       // the grid-sized count agg (argmin aggregation — the q130 shape)
       "q138_territory",
-      // q140: the 9-row broadcast Sobel kernel crossed against the
-      // grid-sized count agg (the q111/q129 scatter shape)
-      "q140_density_gradient",
       // q141/q142: ONE-row broadcast corpus totals (q102 lazy-scalar
       // shape) + a ≤6-row k-ladder crossed against the vocab/grid aggs
       "q141_location_quotient", "q142_vocab_coverage",

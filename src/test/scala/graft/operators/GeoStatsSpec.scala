@@ -2,6 +2,8 @@ package graft.operators
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.functions.lit
+
 import graft.sources.{Footprints, Pages}
 import graft.testutil.SparkTestBase
 
@@ -10,6 +12,10 @@ import graft.testutil.SparkTestBase
   * dissolve is pinned against a brute point-set rasterization (exact on
   * the integer deci-degree grid). */
 class GeoStatsSpec extends SparkTestBase {
+
+  /** The 3×3 binomial kernel (dy, dx, w), typed out. */
+  private val binomial = Seq((-1, -1, 1L), (-1, 0, 2L), (-1, 1, 1L), (0, -1, 2L),
+    (0, 0, 4L), (0, 1, 2L), (1, -1, 1L), (1, 0, 2L), (1, 1, 1L))
 
   test("q111 KDE heatmap == brute 3x3 kernel convolution over the cell grid") {
     import spark.implicits._
@@ -22,10 +28,8 @@ class GeoStatsSpec extends SparkTestBase {
       val cx = (ilon + 1800).toLong * p / 3600
       counts((cy, cx)) += 1
     }
-    val kernel = Seq((-1, -1, 1L), (-1, 0, 2L), (-1, 1, 1L), (0, -1, 2L),
-      (0, 0, 4L), (0, 1, 2L), (1, -1, 1L), (1, 0, 2L), (1, 1, 1L))
     val sm = mutable.Map.empty[(Long, Long), Long].withDefaultValue(0L)
-    for (((cy, cx), c) <- counts; (dy, dx, w) <- kernel) {
+    for (((cy, cx), c) <- counts; (dy, dx, w) <- binomial) {
       val (ty, tx) = (cy + dy, cx + dx)
       if (ty >= 0 && ty < p && tx >= 0 && tx < p) sm((ty, tx)) += w * c
     }
@@ -137,6 +141,18 @@ class GeoStatsSpec extends SparkTestBase {
       val means = neigh.map { case (n, s) => s.toDouble / n }
       assert(r.getLong(1) >= means.min.floor.toLong - 1 && r.getLong(1) <= means.max.ceil.toLong)
     }
+    // exact: brute 3×3 weighted Σw·s div Σw·n and the landed taps per target
+    val acc = mutable.Map.empty[(Long, Long), (Long, Long, Long)].withDefaultValue((0L, 0L, 0L))
+    for (((cy, cx), (n, s)) <- perCell; (dy, dx, w) <- binomial) {
+      val (ty, tx) = (cy + dy, cx + dx)
+      if (ty >= 0 && ty < p && tx >= 0 && tx < p) {
+        val (sws, swn, k) = acc((ty, tx))
+        acc((ty, tx)) = (sws + w * s, swn + w * n, k + 1)
+      }
+    }
+    val expect = acc.toSeq.map { case ((ty, tx), (sws, swn, k)) => (ty * p + tx, sws / swn, k) }
+      .sortBy(_._1)
+    assert(got.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq === expect)
   }
 
   test("q130 ring decay: d=0 equals the center cell count; ring cells bounded by shell size") {
@@ -149,6 +165,21 @@ class GeoStatsSpec extends SparkTestBase {
       val cap = if (d == 0) 1L else 8L * d
       assert(cells <= cap, s"ring $d reported $cells occupied cells > $cap")
     }
+    // exact: brute Chebyshev distance from each footprint's center cell
+    val p = 1L << GeoStatsQueries.KdeLevel
+    val occ = Pages.fromDocuments(spark, sf0001).select("ilat", "ilon").collect()
+      .map(r => ((r.getInt(0) + 900).toLong * p / 1800, (r.getInt(1) + 1800).toLong * p / 3600))
+      .groupBy(identity).view.mapValues(_.length.toLong).toMap
+    val expect = (for {
+      b <- Footprints.boxes
+      ccy = ((b.ilat0 + b.ilat1 + 1800).toLong / 2) * p / 1800
+      ccx = ((b.ilon0 + b.ilon1 + 3600).toLong / 2) * p / 3600
+      ((cy, cx), c) <- occ.toSeq
+      d = math.max(math.abs(cy - ccy), math.abs(cx - ccx))
+      if d <= GeoStatsQueries.DecayMaxD
+    } yield ((b.fpId, d), c)).groupBy(_._1)
+      .map { case (k, xs) => k -> ((xs.map(_._2).sum, xs.length.toLong)) }
+    assert(rows === expect)
   }
 
   test("q131 trajectory: bucket decomposition == single-pass brute; net <= total") {
@@ -337,6 +368,47 @@ class GeoStatsSpec extends SparkTestBase {
     }
     // top-k really is the magnitude order
     assert(rows.map(_._4).toSeq === rows.map(_._4).sortBy(-_).toSeq)
+  }
+
+  test("q117/q122 rook terms: exact below the stated BIGINT bound, ArithmeticException past it") {
+    import spark.implicits._
+    val level = GeoStatsQueries.LisaLevel // q117's fine level too
+    val side = 1 << level
+    // one interior cell holding all S pages: the one-cell Σd² ≈ (4^L·S)²
+    // is the largest term, exact while 4^L·S < 3.03e9
+    def report(s: Long) = GeoStatsQueries.moranLevel(
+      GeoStatsQueries.rookTerms(Seq((3L, 4L, s)).toDF("cy", "cx", "c"), side), level).head()
+    def brute(s: Long): (BigInt, BigInt) = {
+      val nc = BigInt(side) * side
+      def d(y: Int, x: Int) = if ((y, x) == ((3, 4))) nc * s - s else -BigInt(s)
+      var num = BigInt(0); var den = BigInt(0)
+      for (y <- 0 until side; x <- 0 until side) {
+        den += d(y, x) * d(y, x)
+        for ((dy, dx) <- Seq((-1, 0), (1, 0), (0, -1), (0, 1));
+             ty = y + dy; tx = x + dx
+             if ty >= 0 && ty < side && tx >= 0 && tx < side) num += d(y, x) * d(ty, tx)
+      }
+      (num, den)
+    }
+    val below = 2950000L
+    assert(BigInt(side) * side * below < BigInt(3030000000L))
+    val r = report(below)
+    assert((BigInt(r.getLong(4)), BigInt(r.getLong(5))) === brute(below))
+    // just past it d² = ((4^L − 1)·S)² leaves BIGINT: ANSI throws, never wraps
+    val past = 2969000L
+    assert(BigInt(side * side - 1) * past * (BigInt(side * side - 1) * past) > BigInt(Long.MaxValue))
+    val e = intercept[Exception](report(past))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e)
+  }
+
+  test("q141 LQ permille is exact past the BIGINT range of n · total · 1000") {
+    // counts past 3e7 pages: the numerator 1.12e19 is beyond 2^63
+    val (n, nCell, nLang, total) = (35000000L, 40000000L, 310000000L, 320000000L)
+    assert(BigInt(n) * total * 1000 > BigInt(Long.MaxValue))
+    val got = spark.range(1).select(GeoStatsQueries.lqPermille(
+      lit(n), lit(nCell), lit(nLang), lit(total))).head().getLong(0)
+    assert(BigInt(got) === BigInt(n) * total * 1000 / (BigInt(nCell) * nLang))
   }
 
   test("q141 location quotient == brute share-ratio recompute; suppression respected") {
