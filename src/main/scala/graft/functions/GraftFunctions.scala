@@ -380,8 +380,8 @@ object expressions {
     * replaces the per-shingle md5→hex-string→conv Column chain (hex
     * string allocation per shingle was the measured cost driver of the
     * MinHash family at scale). Docs with fewer than 3 tokens yield an
-    * empty array (callers filter on size > 0, mirroring the n_tok >= 3
-    * shingle filter). */
+    * empty array (a filter on the token count, size(split(text, ' '))
+    * >= 3, selects the same documents without a kernel call). */
   case class ShingleHashesExpr(child: Expression) extends GraftUnary {
     override def inputTypes: Seq[DataType] = Seq(StringType)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)

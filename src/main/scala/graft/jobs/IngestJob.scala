@@ -474,7 +474,7 @@ object IngestJob {
       SnapshotTable.addedBetween(Some(SnapshotTable.requireSnapshot(root, 1)), snap2)
     val storedInv = spark.read.schema(StoredInvDdl).parquet(s"$root/inv/s1")
     val deltaInv = SnapshotTable
-      .applyDeletes(spark, newParts, SnapshotTable.readSchema(spark, snap2))
+      .readDated(spark, newParts, SnapshotTable.readSchema(spark, snap2)).drop("p_date")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
     storedInv.unionByName(deltaInv)
@@ -539,9 +539,9 @@ object IngestJob {
     * actually written, under a pinned (p_cell, p_date) schema with no
     * listing or inference job (data columns — dir keys are type-inference
     * hazards). The pc=/pd= layout under ONE commit dir is load-bearing:
-    * `applyDeletes` scopes delete sequencing by the commit dir (the ref's
-    * parent), while per-entry refs point at the pc/pd leaf. Shared by
-    * [[deleteWhere]] and [[mergeUpsertMor]]. */
+    * a read's `scope` partition value (`SnapshotTable.readDated`) is an
+    * entry's set of commit dirs, while its refs point at pc/pd leaves.
+    * Shared by [[deleteWhere]] and [[mergeUpsertMor]]. */
   private def writeDeleteVectors(spark: SparkSession, root: String,
       hits: DataFrame, jobId: String): (String, Set[(Long, String)]) = {
     val dir = s"$root/data/deletes/$jobId-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -622,17 +622,18 @@ object IngestJob {
     * docs per partition must not rewrite every touched partition the way
     * the COW merges do.
     *
-    * Correctness leans on delete SEQUENCING (`SnapshotTable.applyDeletes`):
+    * Correctness leans on delete SEQUENCING (`SnapshotTable.readDated`):
     * the vectors attach only to the PRE-EXISTING entries, so the appended
     * rows — reusing the same doc_ids — are never masked by them. Reads pay
-    * one anti-join per delete layer until `compact` materializes. Conflict
+    * one keyed anti-join against the layered vectors until `compact`
+    * materializes. Conflict
     * surface mirrors `deleteWhere`: a touched partition rewritten,
     * delete-layered, or created concurrently aborts the commit. */
   def mergeUpsertMor(spark: SparkSession, root: String, updates0: DataFrame,
       jobId: String, key: String = "doc_id",
       beforeCommit: () => Unit = () => ()): Snapshot = {
     // delete vectors ARE doc_id sets: writeDeleteVectors persists the hit
-    // keys under the merge key's column name, but applyDeletes anti-joins
+    // keys under the merge key's column name, but readDated anti-joins
     // every layered vector on doc_id. A non-doc_id MOR upsert would
     // therefore COMMIT vectors that every subsequent read of the table
     // fails (or worse, mis-masks) on — refuse up front instead of
@@ -640,7 +641,7 @@ object IngestJob {
     // rewrite rows and stay key-generic.
     require(key == "doc_id",
       s"mergeUpsertMor requires key=doc_id (got '$key'): delete vectors are " +
-        "doc_id row-identity sets (SnapshotTable.applyDeletes). Use " +
+        "doc_id row-identity sets (SnapshotTable.readDated). Use " +
         "mergeIntoGlobal for non-doc_id merge keys (copy-on-write, key-generic).")
     val current = SnapshotTable.requireCurrent(root)
     val updates = updates0.persist()

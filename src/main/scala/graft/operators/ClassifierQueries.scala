@@ -179,12 +179,11 @@ object ClassifierQueries {
     * token axis). Pairs under [[CollMinPairs]] occurrences are
     * suppressed; top-[[CollTopK]] by (lift desc, pair). The phrase-
     * discovery pass a tokenizer/quality pipeline runs to find
-    * multi-word units worth preserving. Range caveat (ADVICE r5): the
-    * numerator n_pair · total · 1000 overflows BIGINT once the corpus
-    * token mass nears ~3e7 for the hottest pair; at production scale
-    * pre-scale the counts (per-million) before the multiply — lift is
-    * homogeneous, so the ranking and the permille survive the scaling
-    * up to the documented floor rounding.
+    * multi-word units worth preserving. Range: lift is computed by
+    * q141's `GeoStatsQueries.lqPermille`, exact in DECIMAL(38,0) — the
+    * numerator n_pair · total · 1000 stays exact to ~3·10^17 tokens (in
+    * BIGINT it passed 2^63 near 3·10^7); past that ANSI decimal overflow
+    * throws.
     *
     * Scale shape: one bigram partial agg (Heaps-ish in the pair space) +
     * two vocab-keyed equi-joins to attach unigram counts + the lazy
@@ -217,7 +216,8 @@ object ClassifierQueries {
       .join(uni.select(col("t").as("b"), col("n").as("n_b")), Seq("b"))
       .crossJoin(broadcast(total))
       .select(col("a"), col("b"), col("n_pair"),
-        expr("(n_pair * total * 1000) div (n_a * n_b)").as("lift_m"))
+        GeoStatsQueries.lqPermille(col("n_pair"), col("n_a"), col("n_b"), col("total"))
+          .as("lift_m"))
       .orderBy(col("lift_m").desc, col("a"), col("b"))
       .limit(CollTopK)
   }

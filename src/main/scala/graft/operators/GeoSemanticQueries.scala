@@ -184,7 +184,7 @@ object GeoSemanticQueries {
       SnapshotTable.addedBetween(Some(SnapshotTable.requireSnapshot(root, 1)), snap2)
     val stored = spark.read.schema(StoredAggDdl).parquet(s"$root/agg/s1")
     val delta = SnapshotTable
-      .applyDeletes(spark, newParts, SnapshotTable.readSchema(spark, snap2))
+      .readDated(spark, newParts, SnapshotTable.readSchema(spark, snap2)).drop("p_date")
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n"), vecSum(col("qv")).as("sv"))
     stored.unionByName(delta)

@@ -139,10 +139,12 @@ object TextQueries {
   private def minhash(f: MinHashFamily, i: Int, h: Column): Column =
     array_min(transform(h, x => ((x % P) * f.a(i) + f.b(i)) % P))
 
-  /** MinHash signatures (8 hash families) over 3-gram shingles. */
+  /** MinHash signatures (8 hash families) over 3-gram shingles of docs
+    * with ≥ 3 tokens, counted as the kernel splits: a filter on `h0raw`
+    * would be pushed below the projection and run the kernel twice. */
   def minhashSigs(spark: SparkSession, sfDir: String): DataFrame =
     shingleHashes(spark, sfDir)
-      .filter(size(col("h0raw")) > 0)
+      .filter(size(split(col("text"), " ")) >= 3)
       .select(col("doc_id") +:
         LshFamily.a.indices.map(i => minhash(LshFamily, i, col("h0raw")).as(s"s$i")): _*)
       .orderBy(col("doc_id"))

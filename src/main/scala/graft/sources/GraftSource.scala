@@ -32,9 +32,9 @@ import graft.sources.SnapshotTable.Pruning
   * filtering).
   *
   * `p_date` is a directory key in the layout (not stored in files); the
-  * scan reads through [[SnapshotTable.readDated]], which takes it from
-  * each manifest entry, so it is both a queryable column and an exact
-  * prune key. */
+  * scan reads through [[SnapshotTable.readDated]], one parquet scan whose
+  * partition values carry each manifest entry's `p_date`, so it is both a
+  * queryable column and an exact prune key. */
 class GraftSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft"
 
@@ -379,7 +379,7 @@ private[sources] class GraftScan(snap: SnapshotTable.Snapshot,
     val rows = keep.map(_.rows).sum
     val bytes = keep.map { e =>
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(e.path)))
-        new org.apache.spark.sql.graft.ManifestFileIndex(Seq(e.path)).sizeInBytes
+        org.apache.spark.sql.graft.ManifestFileIndex.sizeInBytes(e.path)
       else e.rows * math.max(1L, required.defaultSize.toLong)
     }.sum
     new org.apache.spark.sql.connector.read.Statistics {
@@ -393,9 +393,9 @@ private[sources] class GraftScan(snap: SnapshotTable.Snapshot,
 }
 
 /** V1 execution bridge: reads exactly the manifest-pruned file set
-  * through [[SnapshotTable.readDated]] (delete vectors applied, `p_date`
-  * from each entry, one multi-path scan per DATE — never one per
-  * partition), then projects the required columns. */
+  * through [[SnapshotTable.readDated]] (one scan for every entry, `p_date`
+  * a partition value, deletes one keyed anti-join), then projects the
+  * required columns. */
 private[sources] class GraftRelation(ctx: SQLContext, snap: SnapshotTable.Snapshot,
     required: StructType, pruning: Pruning) extends BaseRelation with TableScan {
   override def sqlContext: SQLContext = ctx

@@ -34,12 +34,14 @@ import org.apache.spark.sql.types.StructType
   * older files. Only a snapshot that records no DDL (legacy files,
   * hand-built snapshots) infers its schema, once, from its first entry.
   *
-  * `p_date` is a directory key, not a file column. Every frame that
-  * carries it — merge and delete writers, `changesBetween`, the DSv2
-  * scan, the file-level stream — comes from one reader, [[readDated]]:
-  * delete vectors applied, one scan per date, the key taken from each
-  * entry, and the same typed shape when no entry is left. "Entries added
-  * between two snapshots" has one definition too, [[addedBetween]].
+  * `p_date` is a directory key, not a file column. Every snapshot read —
+  * `read`/`readAt`, merge and delete writers, `changesBetween`,
+  * `changelogBetween`, `compact`, the DSv2 scan, the file-level stream —
+  * comes from one reader, [[readDated]]: one parquet scan over the kept
+  * entries with each entry's `p_date` as a partition value, delete
+  * vectors applied by one keyed anti-join; readers without the key drop
+  * it. "Entries added between two snapshots" has one definition too,
+  * [[addedBetween]].
   *
   * Write path: every writer turns written rows into manifest entries
   * through [[writePartitioned]] (frames carrying `p_cell`/`p_date`) or
@@ -603,12 +605,7 @@ object SnapshotTable {
   private def readSnapshot(spark: SparkSession, snap: Snapshot,
       p: Pruning, migrations: Migrations): (DataFrame, Int, Int) = {
     val keep = prunedParts(snap, p)
-    val schema = readSchema(spark, snap)
-    // zero kept entries (an empty snapshot, or stats pruned every entry):
-    // the typed empty frame, a scan of no files under the table schema
-    val df =
-      if (keep.isEmpty) ManifestFileIndex.scan(spark, Nil, schema)
-      else applyDeletes(spark, keep, schema)
+    val df = readDated(spark, keep, readSchema(spark, snap)).drop("p_date")
     (migrate(df, snap.schemaVer, migrations), keep.length, snap.parts.length)
   }
 
@@ -625,60 +622,44 @@ object SnapshotTable {
   /** Row identity read from delete vectors and changed files. */
   private val DocIdSchema = StructType.fromDDL("doc_id BIGINT")
 
-  /** Merge-on-read read path with Iceberg-v2 delete SEQUENCING: a delete
-    * ref masks ONLY the entries that carry it — a data file appended
-    * AFTER a delete was committed (e.g. a MOR upsert's new rows reusing
-    * the same doc_ids) is never masked by that earlier delete, because
-    * only the PRE-EXISTING entries had the ref layered onto them.
-    * doc_id is the row identity within a scope: ids absent from an entry
-    * simply don't match. Entries sharing an identical delete set (the
-    * overwhelmingly common no-deletes case) read in ONE multi-path scan,
-    * so the fast path stays a single parquet read; delete sets are
-    * commit-bounded and broadcast.
-    *
-    * Every scan reads the manifest's own file list under `schema`
-    * (normally [[readSchema]] of the snapshot the entries came from)
-    * through [[ManifestFileIndex]]: no listing or footer-inference job
-    * runs before the frame is acted on. */
-  def applyDeletes(spark: SparkSession, entries: Seq[PartitionEntry],
-      schema: StructType): DataFrame = {
-    require(entries.nonEmpty, "applyDeletes needs at least one entry")
-    // Scope granularity is the delete COMMIT (the vector dir), not the
-    // individual per-partition vector file: one delete commit writes one
-    // vector file per touched partition, and grouping on the exact ref
-    // lists would explode the plan into per-entry scan branches
-    // (O(partitions) — a measured 16x q87 regression). Entries touched by
-    // the same commit SET share sequencing scope by construction, and
-    // doc_id is globally unique per snapshot, so anti-joining a commit's
-    // full vector union can never mask a foreign partition's rows.
-    def commitDirs(e: PartitionEntry): Seq[String] =
-      e.deletes.map(p => Paths.get(p).getParent.getParent.toString).distinct.sorted
-    entries.groupBy(commitDirs).toSeq
-      .sortBy(_._2.map(_.path).min) // deterministic group order
-      .map { case (_, es) =>
-        val df = ManifestFileIndex.scan(spark, es.map(_.path), schema)
-        val dels = es.flatMap(_.deletes).distinct
-        if (dels.isEmpty) df
-        else {
-          require(df.columns.contains("doc_id"),
-            "merge-on-read deletes need the doc_id row-identity column")
-          val ids = ManifestFileIndex.scan(spark, dels, DocIdSchema).distinct()
-          df.join(org.apache.spark.sql.functions.broadcast(ids), Seq("doc_id"), "left_anti")
-        }
-      }.reduce(_.unionByName(_))
-  }
+  private val DatedKeys = StructType.fromDDL("p_date STRING, scope INT")
+  private val ScopeKey = StructType.fromDDL("scope INT")
 
-  /** The one reader of rows with their `p_date` directory key: the live
-    * rows of `entries` read under `schema` ([[applyDeletes]], one scan per
-    * date), `p_date` set from each entry's manifest key. No entries: the
-    * typed empty frame of the same shape. */
+  /** The one reader of snapshot rows: the live rows of `entries` under
+    * `schema` (normally the [[readSchema]] of their snapshot), each with
+    * its entry's `p_date`; no entries read as no files, same shape. ONE
+    * parquet scan planned from the manifest alone ([[ManifestFileIndex]]),
+    * each entry directory carrying (p_date, scope) as partition values,
+    * so a filter or a pruning join on `p_date` drops whole entries.
+    *
+    * Merge-on-read deletes follow Iceberg-v2 SEQUENCING: a delete masks
+    * ONLY the entries that carry it, never a file appended after it (a
+    * MOR upsert's rows reusing the doc_ids). An entry's `scope` is its
+    * set of delete COMMITS (vector dirs); each vector file is listed
+    * under every scope whose entries carry it, and the data anti-joins
+    * that broadcast (scope, doc_id) set: one keyed join however many
+    * scopes and dates, where a scan-and-join branch per group would plan
+    * O(groups) branches (per-entry groups were a measured 16x q87
+    * regression). No delete ref: no vector scan, no join. */
   def readDated(spark: SparkSession, entries: Seq[PartitionEntry],
       schema: StructType): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    entries.groupBy(_.pDate).toSeq.sortBy(_._1)
-      .map { case (d, es) => applyDeletes(spark, es, schema).withColumn("p_date", lit(d)) }
-      .reduceOption(_.unionByName(_))
-      .getOrElse(ManifestFileIndex.scan(spark, Nil, schema).withColumn("p_date", lit("")))
+    def commits(e: PartitionEntry): Seq[String] =
+      e.deletes.map(p => Paths.get(p).getParent.getParent.toString).distinct.sorted
+    val scopeOf = entries.map(commits).distinct.zipWithIndex.toMap
+    def scope(e: PartitionEntry): Int = scopeOf(commits(e))
+    val data = ManifestFileIndex.scan(spark,
+      entries.map(e => e.path -> Row(e.pDate, scope(e))), DatedKeys, schema)
+    val vectors = entries.flatMap(e => e.deletes.map(_ -> Row(scope(e)))).distinct
+    val live =
+      if (vectors.isEmpty) data
+      else {
+        require(schema.fieldNames.contains("doc_id"),
+          "merge-on-read deletes need the doc_id row-identity column")
+        val ids = ManifestFileIndex.scan(spark, vectors, ScopeKey, DocIdSchema).distinct()
+        data.join(org.apache.spark.sql.functions.broadcast(ids),
+          data("scope") === ids("scope") && data("doc_id") === ids("doc_id"), "left_anti")
+      }
+    live.drop("scope")
   }
 
   /** Entries `to` references that `from` does not — the files appended or
@@ -771,20 +752,15 @@ object SnapshotTable {
         val (fromKept, toKept) = (prune(from.parts), prune(to.parts))
         changelogEndpointParts.set(
           (fromKept.length + toKept.length, from.parts.length + to.parts.length))
-        def live(snap: Snapshot, kept: Seq[PartitionEntry]): Option[DataFrame] =
-          if (kept.isEmpty) None else Some(applyDeletes(spark, kept, readSchema(spark, snap)))
+        def live(snap: Snapshot, kept: Seq[PartitionEntry]): DataFrame =
+          readDated(spark, kept, readSchema(spark, snap)).drop("p_date")
         val (oAll, nAll) = (live(from, fromKept), live(to, toKept))
         // generic over the table shape: only doc_id is required; content
         // equality is an md5 over ALL shared columns (sorted for a
         // deterministic JSON rendering), so an update to ANY column —
         // not just text — surfaces as U. Payload columns are reported
         // when the schema has them.
-        val shared: Seq[String] = ((oAll, nAll) match {
-          case (Some(o), Some(n)) => o.columns.intersect(n.columns).toSeq
-          case (Some(o), None) => o.columns.toSeq
-          case (None, Some(n)) => n.columns.toSeq
-          case _ => Seq("doc_id")
-        }).sorted
+        val shared: Seq[String] = oAll.columns.intersect(nAll.columns).toSeq.sorted
         require(shared.contains("doc_id"),
           "changelog needs the doc_id row-identity column")
         val pay = payload.filter(shared.contains)
@@ -799,13 +775,7 @@ object SnapshotTable {
             .select(Seq(col("doc_id"),
               md5(to_json(struct(fields: _*))).as("h")) ++ pay.map(col): _*)
         }
-        val (o, n) = (oAll, nAll) match {
-          case (Some(of), Some(nf)) => (st(of), st(nf))
-          case (Some(of), None) => val s = st(of); (s, s.limit(0))
-          case (None, Some(nf)) => val s = st(nf); (s.limit(0), s)
-          case _ => val e = spark.range(0).selectExpr("id AS doc_id",
-            "CAST('' AS STRING) AS h"); (e, e)
-        }
+        val (o, n) = (st(oAll), st(nAll))
         o.select(Seq(col("doc_id"), col("h").as("o_h")) ++
             pay.map(p => col(p).as(s"o_$p")): _*)
           .join(n.select(Seq(col("doc_id"), col("h").as("n_h")) ++
@@ -851,12 +821,7 @@ object SnapshotTable {
     val (from, to) = (requireSnapshot(root, fromSeq), requireSnapshot(root, toSeq))
     val old = from.parts.flatMap(_.deletes).toSet
     val fresh = to.parts.flatMap(_.deletes).distinct.filterNot(old)
-    if (fresh.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-    else ManifestFileIndex.scan(spark, fresh, DocIdSchema).distinct()
+    ManifestFileIndex.scan(spark, fresh, DocIdSchema).distinct()
   }
 
   // ---- named refs (Iceberg tag analog) -------------------------------------
@@ -1207,7 +1172,7 @@ object SnapshotTable {
     val entries = merge.groupBy(_.pDate).toSeq.sortBy(_._1).map { case (date, g) =>
       // compaction APPLIES merge-on-read deletes: the rewritten files hold
       // only live rows and the merged entry carries no delete refs
-      writeEntry(applyDeletes(spark, g, schema)
+      writeEntry(readDated(spark, g, schema).drop("p_date")
         .coalesce(math.max(1, (g.map(_.rows).sum / 1000000L).toInt)),
         s"$out/p_date=${escapePathName(date)}", g.map(_.pCell).min, date)
     }

@@ -4,13 +4,14 @@ import org.apache.spark.sql.catalyst.expressions.{Divide, Floor}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, LocalTableScanExec, RangeExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, LocalTableScanExec, RangeExec, UnionExec}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
-import graft.jobs.JobCounts
+import graft.functions.expressions.ShingleHashesExpr
+import graft.jobs.{IngestJob, JobCounts}
 import graft.operators.{GeoQueries, SimilarityQueries, Tiling}
-import graft.sources.Pages
+import graft.sources.{Pages, SnapshotTable}
 import graft.testutil.SparkTestBase
 import graft.tools.Profile.planNodes
 
@@ -557,5 +558,36 @@ class PlanShapeSpec extends SparkTestBase {
     }.filter(_._2 > 0).toMap
     assert(got === eager, s"\nmeasured: ${got.toSeq.sorted.mkString(", ")}")
     assert(eager.values.sum <= 136)
+  }
+
+  test("snapshot read: one data scan, one vector scan and no Union over 30 dates and 2 delete scopes") {
+    val root = java.nio.file.Files.createTempDirectory("one-scan").toString
+    val pages = IngestJob.pagesWithPartitions(spark, sf0001)
+      .withColumn("p_date", concat(lit("d"), (col("doc_id") % 30).cast("string")))
+    IngestJob.runPages(spark, pages, root, "dates")
+    // two delete commits touching overlapping entries: entries carry
+    // {del1}, {del2}, both or neither
+    IngestJob.deleteWhere(spark, root, col("doc_id") % 7 === 2, "del1")
+    IngestJob.deleteWhere(spark, root, col("doc_id") % 5 === 1, "del2")
+    val snap = SnapshotTable.requireCurrent(root)
+    assert(snap.parts.map(_.pDate).distinct.size >= 30)
+    val scopes = snap.parts.map(_.deletes.map(d =>
+      java.nio.file.Paths.get(d).getParent.getParent).distinct.sorted).distinct
+    assert(scopes.count(_.nonEmpty) >= 2, scopes)
+    val nodes = planNodes(SnapshotTable.readDated(spark, snap.parts,
+      SnapshotTable.readSchema(spark, snap)).queryExecution.executedPlan)
+    val (data, vectors) = nodes.collect { case s: FileSourceScanExec => s }
+      .partition(_.relation.partitionSchema.fieldNames.contains("p_date"))
+    // the deletes are layered, so the one vector scan must be there
+    assert((data.length, vectors.length) === ((1, 1)), nodes.mkString("\n"))
+    assert(nodes.collect { case u: UnionExec => u }.isEmpty, nodes.mkString("\n"))
+    SnapshotTable.recursiveDelete(java.nio.file.Paths.get(root))
+  }
+
+  test("q28 evaluates the shingle_hashes kernel once per document") {
+    val nodes = planNodes(SparkEntry.queries("q28_minhash_sigs")(spark, sf0001)
+      .queryExecution.executedPlan)
+    val calls = nodes.flatMap(_.expressions.flatMap(_.collect { case e: ShingleHashesExpr => e }))
+    assert(calls.length === 1, nodes.mkString("\n"))
   }
 }

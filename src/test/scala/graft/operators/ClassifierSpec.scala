@@ -77,7 +77,7 @@ class ClassifierSpec extends SparkTestBase {
     }).groupBy(identity).view.mapValues(_.length.toLong)
       .filter(_._2 >= ClassifierQueries.CollMinPairs)
     val expect = pairCounts.toSeq.map { case ((a, b), n) =>
-      (a, b, n, n * total * 1000 / (uni(a) * uni(b)))
+      (a, b, n, (BigInt(n) * total * 1000 / (BigInt(uni(a)) * uni(b))).toLong)
     }.sortBy { case (a, b, _, l) => (-l, a, b) }.take(ClassifierQueries.CollTopK)
     val got = ClassifierQueries.collocations(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq

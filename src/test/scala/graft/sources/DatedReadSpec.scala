@@ -13,10 +13,13 @@ import org.apache.spark.sql.types.StructType
 import graft.jobs.IngestJob
 import graft.testutil.SparkTestBase
 
-/** Rows carrying their `p_date` directory key come from one reader,
-  * `SnapshotTable.readDated`: `changesBetween`, the file-level stream and
-  * the DSv2 scan each return every live row with its own entry's
-  * `p_date`, and the same schema when nothing is left to read. */
+/** Snapshot rows come from one reader, `SnapshotTable.readDated`: one
+  * scan whose partition values are each entry's `p_date` (and delete
+  * scope), deletes applied by one keyed anti-join. `changesBetween`, the
+  * file-level stream and the DSv2 scan each return every live row with
+  * its own entry's `p_date`, and the same schema when nothing is left to
+  * read; a filter or a pruning join on `p_date` returns exactly the live
+  * rows of the dates it keeps. */
 class DatedReadSpec extends SparkTestBase {
 
   private def pairs(df: DataFrame): Set[(Long, String)] =
@@ -39,10 +42,12 @@ class DatedReadSpec extends SparkTestBase {
     out.asScala.toSeq
   }
 
-  test("changesBetween, the stream source and a DSv2 read carry each entry's p_date") {
+  /** The 6-date, delete-layered table: snapshot 1 holds even docs on
+    * dates a0..a2, snapshot 2 adds odd docs on b0..b2, snapshot 3 layers
+    * a delete vector over both. Returns the root and the live
+    * (doc_id, p_date) pairs snapshot 2 added and snapshot 3 holds. */
+  private def layeredTable(): (String, Set[(Long, String)], Set[(Long, String)]) = {
     val root = Files.createTempDirectory("dated-read").toString
-    // snapshot 1: even docs on dates a0..a2; snapshot 2 adds odd docs on
-    // b0..b2; snapshot 3 layers a delete vector over both
     val pages = IngestJob.pagesWithPartitions(spark, sf0001)
     def dated(prefix: String) =
       pages.withColumn("p_date", concat(lit(prefix), (col("doc_id") % 3).cast("string")))
@@ -59,7 +64,12 @@ class DatedReadSpec extends SparkTestBase {
     def want(df: DataFrame, prefix: String) =
       pairs(df.withColumn("p_date", concat(lit(prefix), (col("doc_id") % 3).cast("string"))))
     val wantAdded = want(live.filter(col("doc_id") % 2 === 1), "b")
-    val wantAll = want(live.filter(col("doc_id") % 2 === 0), "a") ++ wantAdded
+    (root, wantAdded, want(live.filter(col("doc_id") % 2 === 0), "a") ++ wantAdded)
+  }
+
+  test("changesBetween, the stream source and a DSv2 read carry each entry's p_date") {
+    val (root, wantAdded, wantAll) = layeredTable()
+    val snap3 = SnapshotTable.requireSnapshot(root, 3)
 
     val (changes, deltaParts, _) = SnapshotTable.changesBetween(spark, root, 1L, 3L)
     assert(deltaParts === SnapshotTable.addedBetween(
@@ -92,6 +102,28 @@ class DatedReadSpec extends SparkTestBase {
     val schema = SnapshotTable.readSchema(spark, snap3)
     assert(SnapshotTable.readDated(spark, Nil, schema).schema ===
       SnapshotTable.readDated(spark, snap3.parts, schema).schema)
+    SnapshotTable.recursiveDelete(Paths.get(root))
+  }
+
+  test("a p_date filter or a pruning join on p_date reads exactly the live rows of its dates") {
+    val (root, _, wantAll) = layeredTable()
+    val snap = SnapshotTable.requireSnapshot(root, 3)
+    val read = SnapshotTable.readDated(spark, snap.parts, SnapshotTable.readSchema(spark, snap))
+    def on(dates: String*): Set[(Long, String)] = wantAll.filter(p => dates.contains(p._2))
+    assert(pairs(read.filter(col("p_date") === "a1")) === on("a1"))
+    assert(pairs(read.filter(col("p_date").isin("a0", "b2"))) === on("a0", "b2"))
+    assert(read.filter(col("p_date") === "c0").count() === 0)
+
+    // a join on p_date against a small filtered dated frame: dynamic
+    // partition pruning filters the entry directories at run time
+    val picked = spark.range(6).filter(col("id") =!= 1 && col("id") < 3) // b0, b2
+      .select(concat(lit("b"), (col("id") % 3).cast("string")).as("p_date"))
+    val joined = read.join(picked, Seq("p_date"))
+    assert(pairs(joined) === on("b0", "b2"))
+    val dpp = graft.tools.Profile.planNodes(joined.queryExecution.executedPlan).collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.partitionFilters
+    }.flatten.collect { case d: org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression => d }
+    assert(dpp.nonEmpty, joined.queryExecution.executedPlan.toString)
     SnapshotTable.recursiveDelete(Paths.get(root))
   }
 }

@@ -67,7 +67,7 @@ class ManifestScanSpec extends SparkTestBase {
         l.relation match {
           case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
             assert(f.location.isInstanceOf[org.apache.spark.sql.graft.ManifestFileIndex])
-            assert(f.partitionSchema === new StructType())
+            assert(f.partitionSchema === StructType.fromDDL("p_date STRING, scope INT"))
             f.location.rootPaths.map(r => new java.io.File(r.toUri).getPath)
           case _ => Nil
         }
